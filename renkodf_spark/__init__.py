@@ -11,9 +11,25 @@ Core surface:
   training-data pipeline operators (SURVEY.md §2 Part B + north star)
 """
 
-from renkodf_spark.live import RenkoLive
-from renkodf_spark.operators.renko import renko, renko_df, renko_pandas, to_rws
-from renkodf_spark.schema import MODES
+import importlib
 
-__all__ = ["renko", "renko_df", "renko_pandas", "to_rws", "RenkoLive", "MODES"]
+# public name -> defining module, imported on first use.  Spark's Python
+# worker daemon (`renkodf_spark.worker_daemon`) imports this package;
+# eager imports would preload pandas into the daemon and every worker it
+# forks, where pyspark's own daemon does not load it
+_EXPORTS = {
+    "renko": "renkodf_spark.operators.renko",
+    "renko_df": "renkodf_spark.operators.renko",
+    "renko_pandas": "renkodf_spark.operators.renko",
+    "to_rws": "renkodf_spark.operators.renko",
+    "RenkoLive": "renkodf_spark.live",
+    "MODES": "renkodf_spark.schema",
+}
+__all__ = list(_EXPORTS)
 __version__ = "0.1.0"
+
+
+def __getattr__(name):
+    if name not in _EXPORTS:
+        raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
+    return getattr(importlib.import_module(_EXPORTS[name]), name)

@@ -561,8 +561,12 @@ def make_repair_runner(
                     acc_kernel.add(time.perf_counter() - tk)
                 if acc_repair_ticks is not None:
                     acc_repair_ticks.add(stop - pos)
-                arrs = output_arrays(out)
-                tticks, tclose, tdir, trev, _ = _emission_sync(arrs, n_prev, len(arrs["close"]))
+                # the views over `out` must not outlive this call: the next
+                # block appends to `out`, which cannot resize a buffer that
+                # still exports views (_emission_sync returns copies)
+                tticks, tclose, tdir, trev, _ = _emission_sync(
+                    output_arrays(out), n_prev, len(out["close"])
+                )
                 if len(tticks):
                     common, ti, si = np.intersect1d(
                         tticks, s_ticks, assume_unique=True, return_indices=True
@@ -583,10 +587,10 @@ def make_repair_runner(
                 blk = min(blk * 8, 262144)
                 if pos > horizon:
                     horizon = -1  # past the spec sync horizon: no splice possible
-            arrs = output_arrays(out)
             if jstar >= 0:
                 if acc_converged is not None:
                     acc_converged.add(1)
+                arrs = output_arrays(out)
                 # keep true bricks through j*, then adopt the spec tail
                 n_true = int(np.searchsorted(arrs["tick_index_close"], jstar, side="right"))
                 final_state = [

@@ -12,6 +12,16 @@ encodes the settings we tune for:
   small local runs; on a real cluster size it to 2-3x total cores).
 - Arrow batch size bounded: grouped-map kernels stream symbol histories
   through fixed-size Arrow batches instead of one giant allocation.
+- Python workers forked from `renkodf_spark.worker_daemon`
+  (``spark.python.daemon.module``, always set, no option): pyspark's
+  worker calls ``importlib.invalidate_caches()`` on every task, and
+  before Python 3.13 that re-reads the whole directory of
+  ``pyspark.zip`` (1,328 entries) once per package imported from it,
+  0.10 s a task (4 cores, Python 3.11).  The daemon re-reads an archive only when its
+  mtime, size or inode changed, then runs ``pyspark.daemon`` as is; on
+  Python >= 3.13 it patches nothing.  Workers must be able to import
+  `renkodf_spark`, which every Renko UDF needs anyway.  Sessions not
+  built here (the driver gate passes its own) keep pyspark's daemon.
 """
 
 from __future__ import annotations
@@ -19,6 +29,11 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+from renkodf_spark import worker_daemon
+
+# every session's Python worker daemon; conf key and module in one place
+WORKER_DAEMON = ("spark.python.daemon.module", worker_daemon.__name__)
 
 
 def build_session(
@@ -52,6 +67,7 @@ def build_session(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
         .config("spark.driver.memory", driver_memory)
         .config("spark.ui.enabled", "false")
+        .config(*WORKER_DAEMON)
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)

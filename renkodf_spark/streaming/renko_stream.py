@@ -27,6 +27,7 @@ operator.
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -93,7 +94,7 @@ def renko_stream(
         if len(prices) == 0:
             return
 
-        rows_head: list[dict] = []
+        head = None
         if state.exists:
             last_close, last_dir, wick_min, wick_max, volume, seq = state.get
             kstate = [last_close, last_dir, wick_min, wick_max, volume, 0]
@@ -106,9 +107,7 @@ def renko_stream(
             anchor = grid_anchor(prices[0], brick_size)
             seq = 0
             if emit_seed:
-                seed = seed_row(times[0], anchor)
-                seed["brick_seq"] = seq
-                rows_head.append(seed)
+                head = seed_row(times[0], anchor)
                 seq += 1
             # reference cold start: state mirrors the seed row (dir=1)
             kstate = [anchor, 1, anchor, anchor, 1, 0]
@@ -120,31 +119,9 @@ def renko_stream(
         n = len(out["event_time"])
         state.update((kstate[0], kstate[1], kstate[2], kstate[3], int(kstate[4]), int(seq + n)))
 
-        if n == 0 and not rows_head:
+        if n == 0 and head is None:
             return
-        arrs = output_arrays(out)
-        frame = {
-            "symbol": symbol,
-            "brick_seq": range(seq, seq + n),
-            "event_time": out["event_time"],
-        }
-        for c in _VALUE_COLUMNS:
-            frame[c] = arrs[c]
-        res = pd.DataFrame(frame)
-        if rows_head:
-            head = pd.DataFrame(
-                [
-                    {
-                        "symbol": symbol,
-                        "brick_seq": r["brick_seq"],
-                        "event_time": r["event_time"],
-                        **{c: r[c] for c in _VALUE_COLUMNS},
-                    }
-                    for r in rows_head
-                ]
-            )
-            res = pd.concat([head, res], ignore_index=True)
-        yield res[_OUT_COLUMNS]
+        yield _batch_frame(symbol, seq, head, out)
 
     slim = _clean_input(ticks, symbol_col, time_col, price_col)
     return slim.groupBy(symbol_col).applyInPandasWithState(
@@ -154,6 +131,32 @@ def renko_stream(
         outputMode="append",
         timeoutConf="NoTimeout",
     )
+
+
+def _batch_frame(symbol: str, seq: int, head: dict | None, out: dict) -> pd.DataFrame:
+    """One micro-batch's rows for ``symbol``: the kernel's bricks in
+    ``out``, numbered from ``seq``, led by the cold-start `seed_row`
+    ``head`` (numbered ``seq - 1``) when there is one.  The seed is
+    prepended to the column arrays, in their dtypes, rather than
+    concatenated as a frame: a batch that closes no brick would make
+    that an empty-frame concat."""
+    arrs = output_arrays(out)
+    event_time = out["event_time"]
+    if head is not None:
+        seq -= 1
+        event_time = [head["event_time"], *event_time]
+        arrs = {
+            c: np.concatenate((np.array([head[c]], dtype=arrs[c].dtype), arrs[c]))
+            for c in _VALUE_COLUMNS
+        }
+    frame = {
+        "symbol": symbol,
+        "brick_seq": range(seq, seq + len(event_time)),
+        "event_time": event_time,
+    }
+    for c in _VALUE_COLUMNS:
+        frame[c] = arrs[c]
+    return pd.DataFrame(frame, columns=_OUT_COLUMNS)
 
 
 def _clean_input(ticks: DataFrame, symbol_col: str, time_col: str, price_col: str) -> DataFrame:

@@ -12,6 +12,8 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_TEST", "/root/testdata/sf0.001")
 def spark():
     from pyspark.sql import SparkSession
 
+    from renkodf_spark.session import WORKER_DAEMON
+
     s = (
         SparkSession.builder.master("local[4]")
         .appName("renkodf-spark-tests")
@@ -21,6 +23,7 @@ def spark():
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", "4g")
         .config("spark.sql.warehouse.dir", "/tmp/renkodf-spark-test-warehouse")
+        .config(*WORKER_DAEMON)
         .getOrCreate()
     )
     yield s

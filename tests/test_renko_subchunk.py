@@ -147,6 +147,39 @@ def test_subchunk_sparse_random_walk(spark):
     _assert_bitexact(oneshot, chunked, "sparse")
 
 
+def test_subchunk_sparse_repair_spans_blocks(spark):
+    """Sparse hot symbol (eighth-point walk, ~1 brick per 2,000 ticks,
+    rare multi-brick jumps) whose repair scans do not converge in their
+    first block: later blocks append to the output buffers the previous
+    block's sync read looked at, which once raised BufferError."""
+    rng = np.random.default_rng(1)
+    k = 40000
+    steps = np.rint(rng.normal(0.0, 0.6, k))
+    jumps = rng.random(k) < 2e-4
+    steps[jumps] += rng.choice([-1, 1], jumps.sum()) * 128
+    steps[0] = 0
+    prices = (272_000 + np.cumsum(steps)) * 0.125
+    times = pd.Timestamp("2024-01-01") + pd.to_timedelta(np.arange(k), unit="s")
+    pdf = pd.DataFrame(
+        {"symbol": "HOT", "event_time": times.astype("datetime64[us]"), "close": prices}
+    )
+    ticks = spark.createDataFrame(pdf)
+    oneshot = renko(ticks, 4.0).orderBy("brick_seq").toPandas()
+    inst: dict = {}
+    chunked = (
+        renko_chunked(
+            ticks, 4.0, window="1 day", subchunk_threshold=10_000, subchunk_target=5_000,
+            instrument=inst,
+        )
+        .orderBy("brick_seq")
+        .toPandas()
+    )
+    _assert_bitexact(oneshot, chunked, "sparse-blocks")
+    (hot,) = [w["hot"] for w in inst["windows"] if "hot" in w]
+    # more repair ticks than one 1,024-tick block per repaired chunk
+    assert hot["repair_ticks"] > (hot["chunks"] - 1) * 1024
+
+
 def test_subchunk_multi_window_warm_state(spark):
     """Hot in several consecutive windows: the repair pass's final state
     must chain across windows exactly (seq, wick, volume, tick offsets)."""

@@ -156,3 +156,54 @@ def test_stream_many_symbols(spark, tmp_path):
         got = out[out["symbol"] == sym].reset_index(drop=True)
         assert len(got) == len(want), sym
         np.testing.assert_array_equal(got["close"].to_numpy(), want["close"].to_numpy(), err_msg=sym)
+
+
+def _old_batch_frame(symbol, seq, head, out):
+    """The frame-concat build the operator used before `_batch_frame`."""
+    from renkodf_spark.kernel import output_arrays
+    from renkodf_spark.streaming.renko_stream import _OUT_COLUMNS, _VALUE_COLUMNS
+
+    arrs = output_arrays(out)
+    n = len(out["event_time"])
+    frame = {"symbol": symbol, "brick_seq": range(seq, seq + n), "event_time": out["event_time"]}
+    for c in _VALUE_COLUMNS:
+        frame[c] = arrs[c]
+    res = pd.DataFrame(frame)
+    if head is not None:
+        row = {"symbol": symbol, "brick_seq": seq - 1, "event_time": head["event_time"],
+               **{c: head[c] for c in _VALUE_COLUMNS}}
+        res = pd.concat([pd.DataFrame([row]), res], ignore_index=True)
+    return res[_OUT_COLUMNS]
+
+
+def _cold_batch(prices, unit):
+    """Kernel output of a cold-start symbol's first micro-batch."""
+    from renkodf_spark.kernel import grid_anchor, new_output, scan_ticks, seed_row
+
+    times = np.datetime64("2024-01-01T00:00:00", unit) + np.arange(len(prices)) * np.timedelta64(1, "s")
+    anchor = grid_anchor(prices[0], BRICK)
+    out = new_output()
+    scan_ticks(times, prices, 1, BRICK, [anchor, 1, anchor, anchor, 1, 0], out)
+    return seed_row(times[0], anchor), out
+
+
+@pytest.mark.parametrize("unit", ["ns", "us"])
+def test_stream_cold_start_frame_without_bricks(unit):
+    """A cold-start symbol whose first micro-batch closes no brick emits
+    its seed row alone.  Building it must not warn (an empty-frame concat
+    raised a pandas FutureWarning per symbol), and the seed row must keep
+    the values and dtypes it has in a batch that does close bricks."""
+    import warnings
+
+    from renkodf_spark.streaming.renko_stream import _batch_frame
+
+    quiet_head, quiet_out = _cold_batch([100.2, 100.4, 100.1, 100.3, 100.5, 100.6], unit)
+    busy_head, busy_out = _cold_batch([100.2, 101.4, 102.6, 100.3, 98.1, 97.6], unit)
+    assert len(quiet_out["event_time"]) == 0 and len(busy_out["event_time"]) > 0
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", FutureWarning)
+        quiet = _batch_frame("AAA", 1, quiet_head, quiet_out)
+        busy = _batch_frame("AAA", 1, busy_head, busy_out)
+    pd.testing.assert_frame_equal(busy, _old_batch_frame("AAA", 1, busy_head, busy_out))
+    pd.testing.assert_frame_equal(quiet, busy.iloc[:1])
+    assert quiet["brick_seq"].tolist() == [0] and quiet["direction"].tolist() == [1]
