@@ -227,13 +227,7 @@ def kernel_throughput() -> dict:
     picks the vectorized skip-scan) and dense (scalar loop) regimes."""
     import numpy as np
 
-    from renkodf_spark.kernel import (
-        choose_scan,
-        new_output,
-        new_state,
-        scan_ticks,
-        scan_ticks_vectorized,
-    )
+    from renkodf_spark.kernel import new_output, new_state, scan
 
     rng = np.random.default_rng(42)
     n = 2_000_000
@@ -249,10 +243,7 @@ def kernel_throughput() -> dict:
             state = new_state(float(prices[0]), brick)
             out = new_output()
             t0 = time.perf_counter()
-            if choose_scan(prices, brick):
-                scan_ticks_vectorized(times, prices, 1, brick, state, out)
-            else:
-                scan_ticks(times, prices.tolist(), 1, brick, state, out)
+            scan(times, prices, 1, brick, state, out)
             samples.append(round(n / (time.perf_counter() - t0) / 1e6, 3))
         results["samples"][label] = samples
         results[label] = max(samples) * 1e6

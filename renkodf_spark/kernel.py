@@ -1,6 +1,7 @@
-"""Sequential Renko compression kernel, shared by the batch operator
-(`renkodf_spark.operators.renko`) and the streaming operator
-(`renkodf_spark.streaming`).
+"""Sequential Renko compression kernel, shared by the batch host
+(`renkodf_spark.operators.renko`), the streaming operator
+(`renkodf_spark.streaming`) and `RenkoLive`. `scan` is the one place
+that picks between the two bit-identical loop variants.
 
 Semantics reproduce srlcarlg/renkodf (reference at
 ``/root/reference/src/renkodf/renkodf.py``):
@@ -280,8 +281,8 @@ def scan_ticks_vectorized(times, prices_np, start: int, brick: float, state: lis
     `scan_ticks` step, so results are bit-identical to the plain loop.
 
     ~20-40x faster than the scalar loop when emission density is low;
-    slower when nearly every tick emits — callers pick via
-    `choose_scan` (renko_pandas does)."""
+    slower when nearly every tick emits — `scan` picks the variant via
+    `choose_scan`."""
     import numpy as np
 
     emitted = 0
@@ -347,3 +348,13 @@ def choose_scan(prices_np, brick: float) -> bool:
     # vectorized wins ~10x below this; the scalar loop wins above it
     # (measured: 0.013 -> 70 vs 7 M ticks/s; 0.04 -> 7.1 vs 8.5)
     return density < 0.02
+
+
+def scan(times, prices_np, start: int, brick: float, state: list, out: dict) -> int:
+    """Run the recurrence over ``prices_np[start:]`` (a float64 array)
+    with the variant `choose_scan` picks — the one dispatch every host
+    uses. Both variants are bit-identical; only the speed differs."""
+    if choose_scan(prices_np, brick):
+        return scan_ticks_vectorized(times, prices_np, start, brick, state, out)
+    # python-list indexing is ~2x faster than numpy scalar access
+    return scan_ticks(times, prices_np.tolist(), start, brick, state, out)

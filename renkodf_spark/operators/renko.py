@@ -1,14 +1,39 @@
-"""Batch Renko operator: ticks DataFrame -> wide brick DataFrame -> mode
-projections.
+"""Batch Renko operator, and the one Arrow host every Spark batch path
+runs the kernel in.
 
 Spark-first layout (SURVEY.md §1.4 / §2 O-5): the brick-ification
 recurrence is non-associative (every brick depends on the running
 `last_close` over the whole prefix), so it cannot be a join/window
-composition. It runs as a grouped-map Pandas UDF — parallel across
+composition. It runs as a grouped-map Arrow UDF — parallel across
 symbols, sequential within a symbol, exactly the reference's
 parallelism model (the reference is single-threaded per instrument).
 Everything around the kernel (projection, export, slicing) is plain
 DataFrame API so Catalyst prunes/pushes as usual.
+
+The host (shared by `renko`, `renko_chunked` and its sub-chunk passes):
+
+- `slim_ticks`: the input guard — eager validation, the slim
+  ``(symbol, __time, __price, __seq)`` projection and the null/NaN
+  filter.
+- `sorted_ticks`: one group's ticks in the canonical stable
+  ``(__time, __seq)`` order.
+- `scan_group`: seed or resume, `kernel.scan`, first-brick label drop;
+  returns the surviving brick columns and the next carry.
+- `bricks_table` / `carry_table` / `read_carry`: Arrow output in any
+  schema built on `PACKED_SCHEMA`, null-padding what a row lacks.
+
+Carry protocol. A *carry* (`Carry`) is the per-symbol state handed
+between consecutive tick ranges of one symbol (event-time windows,
+sub-chunks): the kernel vector ``last_close, last_dir, wick_min,
+wick_max, volume, tick_open`` plus ``next_seq`` (the next brick_seq),
+``tick_offset`` (ticks consumed before the range) and ``first_ts`` (the
+first brick's close time, for the label drop; None until a brick
+closes). ``tick_open`` is stored global; the kernel runs on
+range-local indexes ``tick_open - tick_offset``. A carry travels as one
+Arrow/Spark row of ``__st_<field>`` columns (`CARRY_COLS`), written by
+`carry_table` and read by `read_carry`. The full scalar state crosses
+every boundary, so resuming is bit-identical to one scan over the
+concatenated ranges.
 
 Reference semantics reproduced: `Renko.__init__` validation
 (renkodf.py:42-49), `_create_renko` (renkodf.py:71-252), first-brick
@@ -18,30 +43,63 @@ label drop (renkodf.py:69), `renko_df` projection (renkodf.py:291-387),
 
 from __future__ import annotations
 
+import inspect
+import time
+from collections import namedtuple
+
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from renkodf_spark.kernel import (
     WIDE_VALUE_COLUMNS,
-    choose_scan,
     new_output,
     new_state,
     output_arrays,
-    scan_ticks,
-    scan_ticks_vectorized,
+    scan,
 )
 from renkodf_spark.schema import (
     MODE_SOURCES,
     MODES,
     UTILS_COLUMNS,
-    WIDE_COLUMN_NAMES,
     WIDE_SCHEMA,
 )
 
-_SEQ_COL = "__tick_seq"
+CARRY_FIELDS = (
+    ("last_close", T.DoubleType()),
+    ("last_dir", T.LongType()),
+    ("wick_min", T.DoubleType()),
+    ("wick_max", T.DoubleType()),
+    ("volume", T.LongType()),
+    ("tick_open", T.LongType()),
+    ("next_seq", T.LongType()),
+    ("tick_offset", T.LongType()),
+    ("first_ts", T.TimestampType()),
+)
+CARRY_COLS = tuple(f"__st_{name}" for name, _ in CARRY_FIELDS)
+Carry = namedtuple("Carry", [name for name, _ in CARRY_FIELDS])
+
+# __row_kind of a brick row and of a carry row
+KIND_BRICK = 0
+KIND_CARRY = 1
+
+# a carry-aware group's output: its bricks plus one carry row
+PACKED_SCHEMA = T.StructType(
+    list(WIDE_SCHEMA.fields)
+    + [T.StructField("__row_kind", T.IntegerType())]
+    + [T.StructField(c, dtype) for c, (_, dtype) in zip(CARRY_COLS, CARRY_FIELDS)]
+)
+
+_ARROW_TYPES = {
+    T.StringType: pa.string(),
+    T.LongType: pa.int64(),
+    T.DoubleType: pa.float64(),
+    T.IntegerType: pa.int32(),
+    T.BinaryType: pa.binary(),
+}
 
 
 def renko_pandas(
@@ -54,20 +112,15 @@ def renko_pandas(
 ) -> pd.DataFrame:
     """Run the Renko kernel over one already-sorted pandas tick frame.
 
-    Returns the wide brick table (without `symbol`/`brick_seq`; the
-    Spark wrapper adds those). Used inside `applyInPandas` and directly
-    by unit tests.
+    Returns the wide brick table (without `symbol`/`brick_seq`). The
+    single-process reference that tests and benchmarks compare `renko()`
+    against, so it keeps its own pandas label drop.
     """
     times = pdf[time_col].to_numpy()
     prices_np = pdf[price_col].to_numpy()
     out = new_output()
     if len(prices_np) > 0:
-        state = new_state(float(prices_np[0]), brick_size)
-        if choose_scan(prices_np, brick_size):
-            scan_ticks_vectorized(times, prices_np, 1, brick_size, state, out)
-        else:
-            # python-list indexing is ~2x faster than numpy scalar access
-            scan_ticks(times, prices_np.tolist(), 1, brick_size, state, out)
+        scan(times, prices_np, 1, brick_size, new_state(float(prices_np[0]), brick_size), out)
 
     arrs = output_arrays(out)
     # a brick's close time is its closing tick's timestamp: fancy-index
@@ -111,116 +164,192 @@ def renko(
     travels out (Catalyst cannot prune through a grouped-map UDF's
     output schema, so callers that want one mode pass just its columns
     — `renko_mode` does this automatically)."""
-    if brick_size is None or brick_size <= 0:
-        raise ValueError("brick_size cannot be 'None' or '<= 0'")
-    if price_col not in ticks.columns:
-        raise ValueError(f"Column '{price_col}' doesn't exist!")
-
-    if symbol_col not in ticks.columns:
-        ticks = ticks.withColumn(symbol_col, F.lit("0"))
-    if time_col not in ticks.columns:
-        raise ValueError(f"Column '{time_col}' doesn't exist!")
-
-    if value_columns is None:
-        out_schema = WIDE_SCHEMA
-        out_columns = list(WIDE_COLUMN_NAMES)
-    else:
+    slim = slim_ticks(ticks, brick_size, symbol_col, time_col, price_col)
+    out_schema = WIDE_SCHEMA
+    if value_columns is not None:
         unknown = set(value_columns) - set(WIDE_VALUE_COLUMNS)
         if unknown:
             raise ValueError(f"unknown wide columns: {sorted(unknown)}")
         keep = {"symbol", "brick_seq", "event_time", *value_columns}
         out_schema = T.StructType([f for f in WIDE_SCHEMA.fields if f.name in keep])
-        out_columns = [f.name for f in out_schema.fields]
 
-    # Deterministic intra-timestamp order: capture input order before the
-    # shuffle so equal-timestamp ticks replay in file order. Null/NaN
-    # prices or timestamps are dropped up front — the recurrence would
-    # otherwise silently absorb NaN into the wick state (the reference
-    # has no guard and corrupts); the filter sits on the scan so it
-    # pushes down.
-    slim = ticks.select(
-        F.col(symbol_col).cast("string").alias("symbol"),
-        F.col(time_col).alias("__time"),
-        F.col(price_col).cast("double").alias("__price"),
-        F.monotonically_increasing_id().alias(_SEQ_COL),
-    ).filter(
-        F.col("__time").isNotNull() & F.col("__price").isNotNull() & ~F.isnan("__price")
-    )
-
-    # Arrow-native kernel host (r8): the old applyInPandas run paid,
-    # per group, a pandas mergesort (5x slower than lexsort+take at
-    # 10M rows), a BlockManager-consolidating DataFrame build, a
-    # boolean-mask first-drop copy, and a column-reorder copy — then
-    # Spark converted the frame back to Arrow anyway. applyInArrow
-    # hands the group in as a pa.Table (primitive columns view as
-    # numpy zero-copy) and takes arrays back zero-copy: measured 5x
-    # end-to-end on a 10M-tick group at ~0.15 bricks/tick.
-    def run_arrow(tbl: "pa.Table") -> "pa.Table":
-        import pyarrow as pa
-
-        tbl = tbl.combine_chunks()
-        ts_type = tbl.schema.field("__time").type
-        t = tbl.column("__time").to_numpy(zero_copy_only=False)
-        p = tbl.column("__price").to_numpy(zero_copy_only=False)
-        s = tbl.column(_SEQ_COL).to_numpy(zero_copy_only=False)
-        # stable total order (__seq is unique) == the old mergesort
-        order = np.lexsort((s, t.view("int64")))
-        t = t[order]
-        p = p[order]
-        ev, arrs = _scan_sorted(t, p, brick_size)
-        # reference drops by index label (renkodf.py:69): every brick
-        # sharing the first brick's close timestamp goes away — ev is
-        # nondecreasing, so that's a prefix slice, not a mask copy
-        cut = (
-            int(np.searchsorted(ev, ev[0], side="right"))
-            if (drop_first and len(ev))
-            else 0
-        )
-        m = len(ev) - cut
-        sym = tbl.column("symbol")[0].as_py() if tbl.num_rows else ""
-        cols: dict[str, pa.Array] = {
-            "symbol": _const_str_array(sym, m),
-            "brick_seq": pa.array(np.arange(m, dtype=np.int64)),
-            "event_time": pa.array(ev[cut:]).cast(ts_type),
-        }
-        for name in WIDE_VALUE_COLUMNS:
-            cols[name] = pa.array(arrs[name][cut:])
-        return pa.table({c: cols[c] for c in out_columns})
+    # Arrow-native kernel host (r8): applyInArrow hands the group in as
+    # a pa.Table (primitive columns view as numpy zero-copy) and takes
+    # arrays back zero-copy — measured 5x end-to-end over the old
+    # applyInPandas body on a 10M-tick group at ~0.15 bricks/tick.
+    def run_arrow(tbl: pa.Table) -> pa.Table:
+        times, prices = sorted_ticks(tbl)
+        bricks, _ = scan_group(times, prices, brick_size, drop_first)
+        sym = tbl.column("symbol")[0].as_py()
+        return bricks_table(out_schema, sym, bricks, tbl.schema.field("__time").type)
 
     return slim.groupBy("symbol").applyInArrow(run_arrow, out_schema)
 
 
-def _scan_sorted(times: np.ndarray, prices: np.ndarray, brick_size: float):
-    """Kernel over already-sorted tick arrays: returns (event_time
-    array, wide value arrays) — the shared numpy core of the Arrow
-    hosts (no pandas, no copies beyond the kernel's own buffers)."""
-    out = new_output()
-    if len(prices) > 0:
-        state = new_state(float(prices[0]), brick_size)
-        if choose_scan(prices, brick_size):
-            scan_ticks_vectorized(times, prices, 1, brick_size, state, out)
-        else:
-            # python-list indexing is ~2x faster than numpy scalar access
-            scan_ticks(times, prices.tolist(), 1, brick_size, state, out)
-    arrs = output_arrays(out)
-    ev = (
-        times[arrs["tick_index_close"]]
-        if len(times)
-        else np.empty(0, dtype="datetime64[us]")
+def slim_ticks(
+    ticks: DataFrame, brick_size: float, symbol_col: str, time_col: str, price_col: str, *extra
+) -> DataFrame:
+    """The batch hosts' input guard: validate eagerly (before any job
+    runs), project ``(symbol, __time, __price, __seq, *extra)``
+    and drop null/NaN prices and null timestamps.
+
+    A table without ``symbol_col`` is one symbol, ``"0"``. ``__seq``
+    captures input order before the shuffle so equal-timestamp ticks
+    replay in file order. The filter sits on the scan so it pushes down;
+    without it the recurrence would absorb NaN into the wick state (the
+    reference has no guard and corrupts)."""
+    if brick_size is None or brick_size <= 0:
+        raise ValueError("brick_size cannot be 'None' or '<= 0'")
+    for col in (price_col, time_col):
+        if col not in ticks.columns:
+            raise ValueError(f"Column '{col}' doesn't exist!")
+    symbol = F.col(symbol_col) if symbol_col in ticks.columns else F.lit("0")
+    return ticks.select(
+        symbol.cast("string").alias("symbol"),
+        F.col(time_col).alias("__time"),
+        F.col(price_col).cast("double").alias("__price"),
+        F.monotonically_increasing_id().alias("__seq"),
+        *extra,
+    ).filter(
+        F.col("__time").isNotNull() & F.col("__price").isNotNull() & ~F.isnan("__price")
     )
-    return ev, arrs
 
 
-def _const_str_array(value: str, n: int):
-    """Length-``n`` constant string column without an O(n) Python-object
-    pass: a dictionary array over one value, cast to plain string."""
-    import pyarrow as pa
+def sorted_ticks(tbl: pa.Table) -> tuple[np.ndarray, np.ndarray]:
+    """(times, prices) of one group in the canonical stable
+    ``(__time, __seq)`` order (``__seq`` is unique, so the order is
+    total and every host replays ticks identically)."""
+    tbl = tbl.combine_chunks()
+    t = tbl.column("__time").to_numpy(zero_copy_only=False)
+    p = tbl.column("__price").to_numpy(zero_copy_only=False)
+    s = tbl.column("__seq").to_numpy(zero_copy_only=False)
+    order = np.lexsort((s, t.view("int64")))
+    return t[order], p[order]
 
-    if n == 0:
-        return pa.array([], pa.string())
-    return pa.DictionaryArray.from_arrays(
-        pa.array(np.zeros(n, dtype=np.int32)), pa.array([value], pa.string())
-    ).cast(pa.string())
+
+def scan_group(
+    times: np.ndarray,
+    prices: np.ndarray,
+    brick: float,
+    drop_first: bool,
+    carry: Carry | None = None,
+) -> tuple[dict, Carry]:
+    """Run the kernel over one symbol's sorted tick range.
+
+    ``carry=None`` seeds a cold start (grid anchor, tick 0 consumed);
+    otherwise the range resumes from ``carry``. Returns the surviving
+    bricks as columns (`emit`) and the carry after the range."""
+    if carry is None:
+        state, start, seq, offset, first_ts = new_state(float(prices[0]), brick), 1, 0, 0, None
+    else:
+        state = [*carry[:5], carry.tick_open - carry.tick_offset]
+        start, seq, offset, first_ts = 0, carry.next_seq, carry.tick_offset, carry.first_ts
+    out = new_output()
+    scan(times, prices, start, brick, state, out)
+    arrs = output_arrays(out)
+    tic = arrs["tick_index_close"]
+    if first_ts is None and len(tic):
+        first_ts = times[tic[0]].astype("datetime64[us]")
+    cut = 0
+    if drop_first and first_ts is not None:
+        # reference drops by index label (renkodf.py:69): every brick
+        # closing at first_ts goes. No brick closes before it and
+        # bricks close in tick order, so that run is a prefix — a slice
+        # (zero-copy), not a mask
+        cut = int(np.searchsorted(tic, np.searchsorted(times, first_ts, side="right")))
+    m = len(tic) - cut
+    next_carry = Carry(*state[:5], state[5] + offset, seq + m, offset + len(prices), first_ts)
+    return emit(times, arrs, cut, len(tic), seq, offset), next_carry
+
+
+def emit(times: np.ndarray, arrs: dict, lo: int, hi: int, seq0: int, shift: int) -> dict:
+    """Bricks ``[lo:hi)`` of a kernel output (`output_arrays`) as brick
+    columns: event_time is the closing tick's time (``arrs`` tick
+    indexes index ``times``), brick_seq counts from ``seq0`` and the
+    tick indexes move by ``shift`` (range-local -> global)."""
+    bricks = {name: arrs[name][lo:hi] for name in WIDE_VALUE_COLUMNS}
+    bricks["event_time"] = times[bricks["tick_index_close"]]
+    bricks["brick_seq"] = np.arange(seq0, seq0 + hi - lo, dtype=np.int64)
+    if shift:
+        for name in ("tick_index_open", "tick_index_close"):
+            bricks[name] = bricks[name] + shift
+    return bricks
+
+
+def bricks_table(
+    schema: T.StructType, sym: str, bricks: dict, ts_type, cols: dict | None = None
+) -> pa.Table:
+    """One symbol's bricks (`emit` columns) plus constant ``cols`` as a
+    ``schema``-shaped table; ``ts_type`` is the session's Arrow
+    timestamp type (the input ``__time`` column's)."""
+    row = {**(cols or {}), **bricks, "symbol": sym}
+    return padded_table(schema, ts_type, len(bricks["brick_seq"]), row)
+
+
+def carry_table(
+    carry: Carry, sym: str, ts_type, schema: T.StructType = PACKED_SCHEMA, cols: dict | None = None
+) -> pa.Table:
+    """``carry`` as one ``schema`` row of `CARRY_COLS` (a KIND_CARRY row
+    unless ``cols`` says otherwise)."""
+    row = {"__row_kind": KIND_CARRY, **(cols or {}), **dict(zip(CARRY_COLS, carry)), "symbol": sym}
+    return padded_table(schema, ts_type, 1, row)
+
+
+def read_carry(tbl: pa.Table, i: int = 0) -> Carry:
+    """The carry in row ``i`` of any table holding `CARRY_COLS`.
+    ``first_ts`` is read as its raw microseconds: ``as_py`` would hand
+    back a session-timezone datetime."""
+    *vals, first_ts = (tbl.column(c)[i] for c in CARRY_COLS)
+    us = first_ts.value
+    return Carry(*(v.as_py() for v in vals), None if us is None else np.datetime64(us, "us"))
+
+
+def timed(fn, acc):
+    """``fn``, adding its wall seconds to the Spark accumulator ``acc``
+    (``fn`` itself when ``acc`` is None)."""
+    if acc is None:
+        return fn
+
+    def run(*args):
+        t0 = time.perf_counter()
+        try:
+            return fn(*args)
+        finally:
+            acc.add(time.perf_counter() - t0)
+
+    # Spark reads a UDF body's arity from its signature
+    run.__signature__ = inspect.signature(fn)
+    return run
+
+
+def padded_table(schema: T.StructType, ts_type, m: int, cols: dict) -> pa.Table:
+    """An ``m``-row ``schema``-shaped table: ``cols`` maps column names
+    to numpy arrays or to constants; every other column (and a None) is
+    typed nulls. applyInArrow validates types strictly, and timestamps
+    must carry the session timezone of ``ts_type``."""
+    arrays = []
+    for f in schema.fields:
+        at = ts_type if isinstance(f.dataType, T.TimestampType) else _ARROW_TYPES[type(f.dataType)]
+        v = cols.get(f.name)
+        if v is None:
+            arrays.append(pa.nulls(m, at))
+        elif isinstance(v, np.ndarray):
+            arrays.append(pa.array(v).cast(at))
+        else:
+            arrays.append(_const_array(v, m).cast(at))
+    return pa.table(arrays, names=schema.names)
+
+
+def _const_array(value, m: int) -> pa.Array:
+    """Length-``m`` constant column. Strings go through a one-value
+    dictionary (no O(m) Python-object pass), numbers through numpy."""
+    if isinstance(value, str):
+        return pa.DictionaryArray.from_arrays(
+            pa.array(np.zeros(m, dtype=np.int32)), pa.array([value], pa.string())
+        ).cast(pa.string())
+    if isinstance(value, (bytes, np.datetime64)):
+        return pa.array([value] * m)
+    return pa.array(np.full(m, value))
 
 
 def renko_df(

@@ -38,16 +38,22 @@ Scale posture (the reason this operator exists):
 On a real cluster pass ``staging_dir`` on a shared filesystem (S3/HDFS);
 the default is a driver-local temp dir, correct for local mode.
 
-Fault-tolerance caveat (ADVICE r3): the default ``localCheckpoint``
-stores each window's bricks/state as executor-local blocks with lineage
+Fault-tolerance caveat (ADVICE r3): by default each window's bricks and
+carries are ``localCheckpoint``'d — executor-local blocks with lineage
 severed, and the staged parquet is deleted before the caller
 materializes the union — so on a multi-executor cluster, losing an
 executor mid-run or before materialization loses those blocks with NO
 recompute path ("checkpoint block not found"). Local mode (one JVM) is
-unaffected. For cluster deployments pass ``reliable_checkpoint=True``:
-each window is then checkpointed to ``spark.sparkContext
-.setCheckpointDir(...)`` (a fault-tolerant filesystem), surviving
-executor loss at the cost of one filesystem write per window.
+unaffected. Cluster deployments set ``spark.renkodf.persist.reliable``
+(or pass ``reliable_checkpoint=True``): each window then goes through
+``persist_block`` to ``spark.sparkContext.setCheckpointDir(...)`` (a
+fault-tolerant filesystem), surviving executor loss at the cost of one
+filesystem write per window.
+
+The window body is the shared Arrow host of ``operators/renko.py``:
+`scan_group` resumes each symbol from its carry (see the carry protocol
+there) and its output packs the bricks and the next carry into one
+table (`PACKED_SCHEMA`, split on ``__row_kind``).
 
 Output is bit-identical to the one-shot `renko()` (asserted in tests).
 """
@@ -58,118 +64,26 @@ import tempfile
 import time
 import uuid
 
-import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from renkodf_spark.kernel import (
-    WIDE_VALUE_COLUMNS,
-    choose_scan,
-    grid_anchor,
-    new_output,
-    output_arrays,
-    scan_ticks,
-    scan_ticks_vectorized,
+from renkodf_spark.kernel import WIDE_VALUE_COLUMNS
+from renkodf_spark.operators.renko import (
+    CARRY_COLS,
+    KIND_BRICK,
+    KIND_CARRY,
+    PACKED_SCHEMA,
+    bricks_table,
+    carry_table,
+    read_carry,
+    scan_group,
+    slim_ticks,
+    sorted_ticks,
+    timed,
 )
-from renkodf_spark.operators.renko import _const_str_array
+from renkodf_spark.plans.persist import persist_block, resolve_reliable
 from renkodf_spark.schema import WIDE_COLUMN_NAMES, WIDE_SCHEMA
-
-# per-symbol state carried between windows:
-#   kernel vector [last_close, last_dir, wick_min, wick_max, volume,
-#   tick_open(global)] + next_seq, tick_offset, first_ts (label-drop)
-_STATE_FIELDS = [
-    ("last_close", T.DoubleType()),
-    ("last_dir", T.LongType()),
-    ("wick_min", T.DoubleType()),
-    ("wick_max", T.DoubleType()),
-    ("volume", T.LongType()),
-    ("tick_open", T.LongType()),
-    ("next_seq", T.LongType()),
-    ("tick_offset", T.LongType()),
-    ("first_ts", T.TimestampType()),
-]
-
-_STATE_COLS = [f"__st_{name}" for name, _ in _STATE_FIELDS]
-
-_STATE_SCHEMA = T.StructType(
-    [T.StructField("symbol", T.StringType())]
-    + [T.StructField(f"__st_{name}", dtype) for name, dtype in _STATE_FIELDS]
-)
-
-# bricks and the one state row share the applyInArrow output table;
-# __is_state flags the state row.
-_PACKED_SCHEMA = T.StructType(
-    list(WIDE_SCHEMA.fields)
-    + [T.StructField("__is_state", T.IntegerType())]
-    + [T.StructField(f"__st_{name}", dtype) for name, dtype in _STATE_FIELDS]
-)
-
-_SLIM_SCHEMA = T.StructType(
-    [
-        T.StructField("symbol", T.StringType()),
-        T.StructField("__time", T.TimestampType()),
-        T.StructField("__price", T.DoubleType()),
-        T.StructField("__seq", T.LongType()),
-        T.StructField("__win", T.LongType()),
-    ]
-)
-
-
-def _arrow_type(dt, ts_type):
-    """Spark type -> exact arrow type for the packed cogroup output
-    (applyInArrow validates strictly; timestamps must carry the session
-    timezone the input columns arrive with)."""
-    import pyarrow as pa
-
-    if isinstance(dt, T.StringType):
-        return pa.string()
-    if isinstance(dt, T.LongType):
-        return pa.int64()
-    if isinstance(dt, T.DoubleType):
-        return pa.float64()
-    if isinstance(dt, T.IntegerType):
-        return pa.int32()
-    if isinstance(dt, T.TimestampType):
-        return ts_type
-    raise TypeError(f"unmapped spark type {dt}")
-
-
-def _packed_table(ts_type, cols: dict, m: int):
-    """A ``_PACKED_SCHEMA``-shaped arrow table: ``cols`` supplies the
-    present columns, everything else becomes ``m`` typed nulls."""
-    import pyarrow as pa
-
-    names, arrays = [], []
-    for f in _PACKED_SCHEMA.fields:
-        names.append(f.name)
-        arrays.append(
-            cols[f.name]
-            if f.name in cols
-            else pa.nulls(m, _arrow_type(f.dataType, ts_type))
-        )
-    return pa.table(arrays, names=names)
-
-
-def _state_row_table(ts_type, sym: str, st: dict):
-    """The one carry-state row as a packed arrow table (brick columns
-    null). Values may be python scalars, numpy datetime64, tz-aware
-    datetimes, or None — each lands as its field's exact arrow type."""
-    import pyarrow as pa
-
-    cols = {
-        "symbol": pa.array([sym], pa.string()),
-        "__is_state": pa.array([1], pa.int32()),
-    }
-    for name, dtype in _STATE_FIELDS:
-        c = f"__st_{name}"
-        v = st.get(c)
-        at = _arrow_type(dtype, ts_type)
-        if v is None or (isinstance(v, float) and np.isnan(v)):
-            cols[c] = pa.nulls(1, at)
-        else:
-            cols[c] = pa.array([v]).cast(at)
-    return _packed_table(ts_type, cols, 1)
 
 
 def renko_chunked(
@@ -182,7 +96,7 @@ def renko_chunked(
     price_col: str = "close",
     drop_first: bool = True,
     staging_dir: str | None = None,
-    reliable_checkpoint: bool = False,
+    reliable_checkpoint: bool | None = None,
     instrument: dict | None = None,
     subchunk_threshold: int | None = 3_000_000,
     subchunk_target: int = 500_000,
@@ -193,7 +107,8 @@ def renko_chunked(
     enumeration), and per-window rows ``{win, wall_sec, py_sec,
     kernel_sec, state_ck_sec}`` where ``py_sec``/``kernel_sec`` are
     worker-side accumulator sums over the window's cogroup tasks (total
-    Python-UDF body time and the kernel-scan share of it) — wall minus
+    Python-UDF body time and the share of it spent in `scan_group`, or
+    in the repair pass's kernel calls) — wall minus
     py/parallelism attributes the remainder to the pruned read, the
     symbol shuffle, Arrow transfer, and the checkpoint write. Added for
     the ×100-skew variance investigation (NOTES r8).
@@ -207,29 +122,18 @@ def renko_chunked(
     the one-shot scan in all regimes — when speculative convergence
     can't be verified (non-dyadic brick arithmetic) the repair pass
     degrades to the previous serial scan for that chunk. Pass
-    ``subchunk_threshold=None`` to disable."""
-    if brick_size is None or brick_size <= 0:
-        raise ValueError("brick_size cannot be 'None' or '<= 0'")
-    spark = ticks.sparkSession
-    if reliable_checkpoint and spark.sparkContext.getCheckpointDir() is None:
-        raise ValueError(
-            "reliable_checkpoint=True requires "
-            "spark.sparkContext.setCheckpointDir(<fault-tolerant path>) "
-            "— the per-window checkpoints must survive executor loss"
-        )
+    ``subchunk_threshold=None`` to disable.
 
-    # same null/NaN guard as renko(): the recurrence would silently
-    # absorb NaN into the wick state (int(abs_moved) raises on the
-    # scalar path); the filter sits on the scan so it pushes down.
-    slim = ticks.select(
-        F.col(symbol_col).cast("string").alias("symbol"),
-        F.col(time_col).alias("__time"),
-        F.col(price_col).cast("double").alias("__price"),
-        F.monotonically_increasing_id().alias("__seq"),
+    ``reliable_checkpoint``: None reads ``spark.renkodf.persist.reliable``
+    like every other persist point; True/False overrides it (see the
+    module docstring's fault-tolerance caveat)."""
+    slim = slim_ticks(
+        ticks, brick_size, symbol_col, time_col, price_col,
         F.unix_micros(F.window(F.col(time_col), window).start).alias("__win"),
-    ).filter(
-        F.col("__time").isNotNull() & F.col("__price").isNotNull() & ~F.isnan("__price")
     )
+    spark = ticks.sparkSession
+    # resolved once, up front: a missing checkpoint dir fails before any job
+    reliable = resolve_reliable(spark, reliable_checkpoint)
 
     own_tmp = staging_dir is None
     if own_tmp:
@@ -244,7 +148,7 @@ def renko_chunked(
         instrument["stage_write_sec"] = round(time.perf_counter() - t0, 3)
     try:
         t0 = time.perf_counter()
-        staged = spark.read.schema(_SLIM_SCHEMA).parquet(stage_path)
+        staged = spark.read.schema(slim.schema).parquet(stage_path)
         windows = sorted(r[0] for r in staged.select("__win").distinct().collect())
         if instrument is not None:
             instrument["discover_sec"] = round(time.perf_counter() - t0, 3)
@@ -259,7 +163,7 @@ def renko_chunked(
                 instrument["hot_plan_sec"] = round(time.perf_counter() - t0, 3)
                 instrument["hot_pairs"] = len(hot_plan)
         return _run_windows(
-            spark, staged, windows, brick_size, drop_first, reliable_checkpoint,
+            spark, staged, windows, brick_size, drop_first, reliable,
             instrument=instrument, hot_plan=hot_plan,
         )
     finally:
@@ -370,143 +274,29 @@ def _hot_plan(spark, staged, threshold: int, target: int) -> dict:
 
 def _run_windows(
     spark, staged, windows, brick_size: float, drop_first: bool,
-    reliable: bool = False, instrument: dict | None = None,
+    reliable: bool, instrument: dict | None = None,
     hot_plan: dict | None = None,
 ) -> DataFrame:
     # worker-side phase accumulators (only wired when instrumenting —
     # the closure must not capture driver-only objects otherwise)
     acc_py = spark.sparkContext.accumulator(0.0) if instrument is not None else None
     acc_kernel = spark.sparkContext.accumulator(0.0) if instrument is not None else None
+    scan_k = timed(scan_group, acc_kernel)
 
-    def run(tick_tbl, state_tbl):
-        t_run0 = time.perf_counter() if acc_py is not None else 0.0
-        try:
-            return _run_body(tick_tbl, state_tbl)
-        finally:
-            if acc_py is not None:
-                acc_py.add(time.perf_counter() - t_run0)
-
-    # Arrow-native cogroup body (r8): same recurrence as the old
-    # applyInPandas version, minus its per-group pandas costs (mergesort
-    # 5x slower than lexsort+take, BlockManager-consolidating frame
-    # build, mask-copy first-drop, column-reorder copy, 9 object-dtype
-    # None columns, pd.concat) — measured 5x end-to-end at the x100
-    # HOT-task scale, which IS this operator's critical path (NOTES r8).
-    def _run_body(tick_tbl, state_tbl):
-        import pyarrow as pa
-
-        tick_tbl = tick_tbl.combine_chunks()
+    # cogroup body: one symbol's window ticks x its carry row (absent on
+    # the symbol's first window; no ticks = idle, the carry passes on)
+    def body(tick_tbl, state_tbl):
         ts_type = tick_tbl.schema.field("__time").type
-        have_state = state_tbl.num_rows > 0
+        carry = read_carry(state_tbl) if state_tbl.num_rows else None
+        sym = (tick_tbl if tick_tbl.num_rows else state_tbl).column("symbol")[0].as_py()
+        times, prices = sorted_ticks(tick_tbl)
+        bricks, carry = scan_k(times, prices, brick_size, drop_first, carry)
+        return pa.concat_tables([
+            bricks_table(PACKED_SCHEMA, sym, bricks, ts_type, {"__row_kind": KIND_BRICK}),
+            carry_table(carry, sym, ts_type),
+        ])
 
-        if tick_tbl.num_rows == 0:
-            if not have_state:
-                return _packed_table(ts_type, {}, 0)
-            # symbol idle this window: re-emit carried state unchanged
-            return _state_row_table(
-                ts_type,
-                state_tbl.column("symbol")[0].as_py(),
-                {c: state_tbl.column(c)[0].as_py() for c in _STATE_COLS},
-            )
-
-        sym = tick_tbl.column("symbol")[0].as_py()
-        t = tick_tbl.column("__time").to_numpy(zero_copy_only=False)
-        p = tick_tbl.column("__price").to_numpy(zero_copy_only=False)
-        s = tick_tbl.column("__seq").to_numpy(zero_copy_only=False)
-        # stable total order (__seq unique) == the old mergesort
-        order = np.lexsort((s, t.view("int64")))
-        times = t[order]
-        prices = p[order]
-
-        if not have_state:
-            anchor = grid_anchor(float(prices[0]), brick_size)
-            kstate = [anchor, 0, anchor, anchor, 1, 1]  # tick_open: global idx 1
-            next_seq, offset, first_ts = 0, 0, None
-            start = 1
-        else:
-            st = {
-                c: state_tbl.column(c)[0].as_py()
-                for c in _STATE_COLS
-                if c != "__st_first_ts"
-            }
-            offset = int(st["__st_tick_offset"])
-            next_seq = int(st["__st_next_seq"])
-            # read as datetime64[us] (UTC instants, same basis as `ev`
-            # below) — as_py would hand back a session-tz datetime
-            ft = state_tbl.column("__st_first_ts").to_numpy(zero_copy_only=False)[0]
-            first_ts = None if np.isnat(ft) else ft.astype("datetime64[us]")
-            # kernel works in window-local indexes; state keeps global
-            kstate = [
-                float(st["__st_last_close"]),
-                int(st["__st_last_dir"]),
-                float(st["__st_wick_min"]),
-                float(st["__st_wick_max"]),
-                int(st["__st_volume"]),
-                int(st["__st_tick_open"]) - offset,
-            ]
-            start = 0
-
-        out = new_output()
-        t_k0 = time.perf_counter() if acc_kernel is not None else 0.0
-        if choose_scan(prices, brick_size):
-            scan_ticks_vectorized(times, prices, start, brick_size, kstate, out)
-        else:
-            scan_ticks(times, prices.tolist(), start, brick_size, kstate, out)
-        if acc_kernel is not None:
-            acc_kernel.add(time.perf_counter() - t_k0)
-
-        arrs = output_arrays(out)
-        # close time = closing tick's timestamp (indexes still local here)
-        ev = (
-            times[arrs["tick_index_close"]].astype("datetime64[us]")
-            if len(times)
-            else np.empty(0, dtype="datetime64[us]")
-        )
-        if offset:
-            arrs["tick_index_open"] += offset
-            arrs["tick_index_close"] += offset
-
-        if len(ev) and first_ts is None:
-            first_ts = ev[0]
-        lo = hi = 0
-        if drop_first and first_ts is not None:
-            # ev is nondecreasing, so label-equality is a contiguous run
-            lo = int(np.searchsorted(ev, first_ts, side="left"))
-            hi = int(np.searchsorted(ev, first_ts, side="right"))
-
-        def cutv(a):
-            return np.concatenate([a[:lo], a[hi:]]) if hi > lo else a
-
-        ev = cutv(ev)
-        m = len(ev)
-        cols = {
-            "symbol": _const_str_array(sym, m),
-            "brick_seq": pa.array(
-                np.arange(int(next_seq), int(next_seq) + m, dtype=np.int64)
-            ),
-            "event_time": pa.array(ev).cast(ts_type),
-            "__is_state": pa.array(np.zeros(m, dtype=np.int32)),
-        }
-        for name in WIDE_VALUE_COLUMNS:
-            cols[name] = pa.array(cutv(arrs[name]))
-        bricks = _packed_table(ts_type, cols, m)
-
-        state_row = _state_row_table(
-            ts_type,
-            sym,
-            {
-                "__st_last_close": kstate[0],
-                "__st_last_dir": kstate[1],
-                "__st_wick_min": kstate[2],
-                "__st_wick_max": kstate[3],
-                "__st_volume": kstate[4],
-                "__st_tick_open": kstate[5] + offset,  # back to global
-                "__st_next_seq": int(next_seq) + m,
-                "__st_tick_offset": offset + len(times),
-                "__st_first_ts": first_ts,
-            },
-        )
-        return pa.concat_tables([bricks, state_row])
+    run = timed(body, acc_py)
 
     # skew-aware sub-chunking machinery (only paid when a hot (window,
     # symbol) pair exists — see module renko_subchunk for the design)
@@ -519,7 +309,17 @@ def _run_windows(
             "repair_ticks": spark.sparkContext.accumulator(0),
         }
 
-    state_df = spark.createDataFrame([], _STATE_SCHEMA)
+    # Checkpoint materializes bricks + carry state (computing the
+    # cogroup exactly once, from the persisted `part`) and severs their
+    # lineage from both the cogroup and the staged files — so the
+    # window's cache is released right here and the staged copy can be
+    # deleted before the caller ever materializes the union. local =
+    # executor blocks (fast, not executor-loss-safe); reliable = the
+    # SparkContext checkpoint dir (see module docstring caveat).
+    def ck(df):
+        return persist_block(df, reliable=reliable, eager=True)
+
+    state_df = spark.createDataFrame([], PACKED_SCHEMA).select("symbol", *CARRY_COLS)
     chunks: list[DataFrame] = []
     if instrument is not None:
         instrument["windows"] = []
@@ -530,30 +330,16 @@ def _run_windows(
         wticks = staged.filter(F.col("__win") == F.lit(win)).drop("__win")
         hot_syms = sorted(s for (w, s) in hot_plan if w == win)
 
-        # Checkpoint materializes bricks + carry state (computing the
-        # cogroup exactly once, from the persisted `part`) and severs their
-        # lineage from both the cogroup and the staged files — so the
-        # window's cache is released right here and the staged copy can be
-        # deleted before the caller ever materializes the union. local =
-        # executor blocks (fast, not executor-loss-safe); reliable = the
-        # SparkContext checkpoint dir (see module docstring caveat).
-        def ck(df):
-            return df.checkpoint(eager=True) if reliable else df.localCheckpoint(eager=True)
-
         if not hot_syms:
             part = (
                 wticks.groupBy("symbol")
                 .cogroup(state_df.groupBy("symbol"))
-                .applyInArrow(run, _PACKED_SCHEMA)
+                .applyInArrow(run, PACKED_SCHEMA)
                 .persist()
             )
-            bricks = ck(
-                part.filter(F.col("__is_state") == 0).select(*WIDE_COLUMN_NAMES)
-            )
+            bricks = ck(_bricks_of(part))
             t_bricks = time.perf_counter()
-            state_df = ck(
-                part.filter(F.col("__is_state") == 1).select("symbol", *_STATE_COLS)
-            )
+            state_df = ck(_carries_of(part))
             part.unpersist()
             hot_stats = None
         else:
@@ -585,23 +371,12 @@ def _run_windows(
     return out
 
 
-def _states_as_sub(state_df: DataFrame) -> DataFrame:
-    """Carry-state rows reshaped into the sub-chunk passes' shared
-    output schema (KIND_STATE rows, everything else typed null) so they
-    can ride the same cogroup side as the spec summaries."""
-    from renkodf_spark.operators.renko_subchunk import KIND_STATE, SUB_SCHEMA
+def _bricks_of(packed: DataFrame) -> DataFrame:
+    return packed.filter(F.col("__row_kind") == KIND_BRICK).select(*WIDE_COLUMN_NAMES)
 
-    cols = []
-    for f in SUB_SCHEMA.fields:
-        if f.name == "symbol":
-            cols.append(F.col("symbol"))
-        elif f.name == "__row_kind":
-            cols.append(F.lit(KIND_STATE).cast("int").alias("__row_kind"))
-        elif f.name in _STATE_COLS:
-            cols.append(F.col(f.name))
-        else:
-            cols.append(F.lit(None).cast(f.dataType).alias(f.name))
-    return state_df.select(*cols)
+
+def _carries_of(packed: DataFrame) -> DataFrame:
+    return packed.filter(F.col("__row_kind") == KIND_CARRY).select("symbol", *CARRY_COLS)
 
 
 def _run_hot_window(
@@ -620,9 +395,7 @@ def _run_hot_window(
     own reducer (see _hot_plan) — an explicit N also keeps AQE from
     coalescing this deliberately wide, bytes-small/CPU-heavy exchange."""
     from renkodf_spark.operators.renko_subchunk import (
-        KIND_BRICK,
         KIND_DECISION,
-        KIND_STATE,
         KIND_SUMMARY,
         SUB_SCHEMA,
         make_repair_runner,
@@ -641,7 +414,7 @@ def _run_hot_window(
         wticks.filter(~is_hot)
         .groupBy("symbol")
         .cogroup(state_df.filter(~is_hot).groupBy("symbol"))
-        .applyInArrow(run, _PACKED_SCHEMA)
+        .applyInArrow(run, PACKED_SCHEMA)
         .persist()
     )
 
@@ -679,7 +452,7 @@ def _run_hot_window(
     )
 
     side2 = spec.filter(F.col("__row_kind") == KIND_SUMMARY).unionByName(
-        _states_as_sub(hot_state)
+        hot_state.withColumn("__row_kind", F.lit(KIND_CARRY)), allowMissingColumns=True
     )
     repair_run = make_repair_runner(
         brick_size,
@@ -723,22 +496,9 @@ def _run_hot_window(
         .select(*WIDE_COLUMN_NAMES)
     )
 
-    bricks = ck(
-        part.filter(F.col("__is_state") == 0)
-        .select(*WIDE_COLUMN_NAMES)
-        .unionByName(
-            rep.filter(F.col("__row_kind") == KIND_BRICK).select(*WIDE_COLUMN_NAMES)
-        )
-        .unionByName(spec_kept)
-    )
+    bricks = ck(_bricks_of(part).unionByName(_bricks_of(rep)).unionByName(spec_kept))
     t_bricks = time.perf_counter()
-    new_state = ck(
-        part.filter(F.col("__is_state") == 1)
-        .select("symbol", *_STATE_COLS)
-        .unionByName(
-            rep.filter(F.col("__row_kind") == KIND_STATE).select("symbol", *_STATE_COLS)
-        )
-    )
+    new_state = ck(_carries_of(part).unionByName(_carries_of(rep)))
     part.unpersist()
     spec.unpersist()
     rep.unpersist()

@@ -35,6 +35,11 @@ stitch, while keeping the output bit-identical to the one-shot scan:
    on (symbol, sub), drop ``local_seq < keep_from``, and shift their
    brick_seq / tick indexes; union with the repair bricks.
 
+Both passes run on the shared Arrow host of ``operators/renko.py``: the
+spec scans are `scan_group` calls, and summaries, incoming and outgoing
+states are carries (its carry protocol) in rows of ``SUB_SCHEMA`` — the
+host's ``PACKED_SCHEMA`` plus the sub-chunk fields below.
+
 Why bitwise convergence is the right test: grid levels are built by the
 reference's own sequential FP accumulation ``L += (dir*mult)*brick``
 (renkodf.py:131), so two scans agree forever iff their states are
@@ -66,22 +71,33 @@ changes spec-task granularity, not the repair bound.
 
 from __future__ import annotations
 
-import time
-
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import types as T
 
 from renkodf_spark.kernel import (
-    WIDE_VALUE_COLUMNS,
     choose_scan,
-    grid_anchor,
     new_output,
+    new_state,
     output_arrays,
+    scan,
     scan_ticks,
     scan_ticks_vectorized,
 )
-from renkodf_spark.operators.renko import _const_str_array
-from renkodf_spark.schema import WIDE_SCHEMA
+from renkodf_spark.operators.renko import (
+    KIND_BRICK,
+    KIND_CARRY,
+    PACKED_SCHEMA,
+    Carry,
+    bricks_table,
+    carry_table,
+    emit,
+    padded_table,
+    read_carry,
+    scan_group,
+    sorted_ticks,
+    timed,
+)
 
 # sync-candidate horizon: emitting ticks recorded per speculative chunk
 # (~34 B each -> <=560 KB per chunk). Convergence normally lands within
@@ -89,104 +105,21 @@ from renkodf_spark.schema import WIDE_SCHEMA
 # falls back to a full serial scan of that one chunk.
 SYNC_CAP = 16384
 
-# per-symbol carry state fields (mirrors renko_chunked._STATE_FIELDS)
-_STATE_FIELDS = [
-    ("last_close", T.DoubleType()),
-    ("last_dir", T.LongType()),
-    ("wick_min", T.DoubleType()),
-    ("wick_max", T.DoubleType()),
-    ("volume", T.LongType()),
-    ("tick_open", T.LongType()),
-    ("next_seq", T.LongType()),
-    ("tick_offset", T.LongType()),
-    ("first_ts", T.TimestampType()),
-]
-_STATE_COLS = [f"__st_{name}" for name, _ in _STATE_FIELDS]
-
-# row kinds in the shared spec/repair output schema
-KIND_BRICK = 0
-KIND_STATE = 1
+# row kinds beyond the host's KIND_BRICK / KIND_CARRY
 KIND_DECISION = 2
 KIND_SUMMARY = 3
 
-_EXTRA_FIELDS = (
-    [T.StructField("__row_kind", T.IntegerType()), T.StructField("__sub", T.LongType())]
-    + [T.StructField(f"__st_{name}", dtype) for name, dtype in _STATE_FIELDS]
-    + [
-        T.StructField("__n_bricks", T.LongType()),
-        T.StructField("__keep_from", T.LongType()),
-        T.StructField("__seq_base", T.LongType()),
-        T.StructField("__tick_shift", T.LongType()),
-        T.StructField("__sync_ticks", T.BinaryType()),
-        T.StructField("__sync_close", T.BinaryType()),
-        T.StructField("__sync_dir", T.BinaryType()),
-        T.StructField("__sync_rev", T.BinaryType()),
-        T.StructField("__sync_cum", T.BinaryType()),
-    ]
+_SYNC_COLS = ("__sync_ticks", "__sync_close", "__sync_dir", "__sync_rev", "__sync_cum")
+_DECISION_COLS = ("__sub", "__keep_from", "__seq_base", "__tick_shift")
+
+# one shared output schema for both passes: brick rows, summary rows
+# (a chunk's final carry; its next_seq is the chunk's brick count),
+# decision rows and carry rows null-pad whatever they don't carry
+SUB_SCHEMA = T.StructType(
+    list(PACKED_SCHEMA.fields)
+    + [T.StructField(c, T.LongType()) for c in _DECISION_COLS]
+    + [T.StructField(c, T.BinaryType()) for c in _SYNC_COLS]
 )
-
-# one shared output schema for both passes: brick rows, summary rows,
-# decision rows and state rows null-pad whatever they don't carry
-SUB_SCHEMA = T.StructType(list(WIDE_SCHEMA.fields) + _EXTRA_FIELDS)
-
-
-def _arrow_type(dt, ts_type):
-    import pyarrow as pa
-
-    if isinstance(dt, T.StringType):
-        return pa.string()
-    if isinstance(dt, T.LongType):
-        return pa.int64()
-    if isinstance(dt, T.DoubleType):
-        return pa.float64()
-    if isinstance(dt, T.IntegerType):
-        return pa.int32()
-    if isinstance(dt, T.TimestampType):
-        return ts_type
-    if isinstance(dt, T.BinaryType):
-        return pa.binary()
-    raise TypeError(f"unmapped spark type {dt}")
-
-
-def _sub_table(ts_type, cols: dict, m: int):
-    """A SUB_SCHEMA-shaped arrow table; absent columns become typed nulls."""
-    import pyarrow as pa
-
-    names, arrays = [], []
-    for f in SUB_SCHEMA.fields:
-        names.append(f.name)
-        arrays.append(
-            cols[f.name] if f.name in cols else pa.nulls(m, _arrow_type(f.dataType, ts_type))
-        )
-    return pa.table(arrays, names=names)
-
-
-def _state_cols(ts_type, st: dict):
-    """__st_* columns (length-1 arrays) from a python state dict."""
-    import pyarrow as pa
-
-    cols = {}
-    for name, dtype in _STATE_FIELDS:
-        c = f"__st_{name}"
-        v = st.get(c)
-        at = _arrow_type(dtype, ts_type)
-        if v is None or (isinstance(v, float) and np.isnan(v)):
-            cols[c] = pa.nulls(1, at)
-        else:
-            cols[c] = pa.array([v]).cast(at)
-    return cols
-
-
-def _sorted_group(tick_tbl):
-    """(symbol, times[datetime64], prices, n) in the canonical stable
-    (__time, __seq) order — identical to the one-shot operator's sort."""
-    tick_tbl = tick_tbl.combine_chunks()
-    sym = tick_tbl.column("symbol")[0].as_py()
-    t = tick_tbl.column("__time").to_numpy(zero_copy_only=False)
-    p = tick_tbl.column("__price").to_numpy(zero_copy_only=False)
-    s = tick_tbl.column("__seq").to_numpy(zero_copy_only=False)
-    order = np.lexsort((s, t.view("int64")))
-    return sym, t[order], p[order], len(p)
 
 
 def _emission_sync(arrs, n_prev: int, n_now: int):
@@ -209,50 +142,20 @@ def _emission_sync(arrs, n_prev: int, n_now: int):
     )
 
 
-def _pack_sync(ticks, close, dirs, rev, cum):
-    k = min(len(ticks), SYNC_CAP)
+_SYNC_DTYPES = (np.int64, np.float64, np.int8, np.int8, np.int64)
+
+
+def _pack_sync(*sync) -> dict:
     return {
-        "__sync_ticks": ticks[:k].astype(np.int64).tobytes(),
-        "__sync_close": close[:k].astype(np.float64).tobytes(),
-        "__sync_dir": dirs[:k].astype(np.int8).tobytes(),
-        "__sync_rev": rev[:k].astype(np.int8).tobytes(),
-        "__sync_cum": cum[:k].astype(np.int64).tobytes(),
+        c: a[:SYNC_CAP].astype(dt).tobytes() for c, a, dt in zip(_SYNC_COLS, sync, _SYNC_DTYPES)
     }
 
 
-def _unpack_sync(row: dict):
-    return (
-        np.frombuffer(row["__sync_ticks"] or b"", dtype=np.int64),
-        np.frombuffer(row["__sync_close"] or b"", dtype=np.float64),
-        np.frombuffer(row["__sync_dir"] or b"", dtype=np.int8),
-        np.frombuffer(row["__sync_rev"] or b"", dtype=np.int8),
-        np.frombuffer(row["__sync_cum"] or b"", dtype=np.int64),
+def _unpack_sync(tbl, i: int):
+    return tuple(
+        np.frombuffer(tbl.column(c)[i].as_py() or b"", dtype=dt)
+        for c, dt in zip(_SYNC_COLS, _SYNC_DTYPES)
     )
-
-
-def _brick_cols(sym, arrs, lo, hi, times_local, ts_type, seq0: int):
-    """WIDE brick columns for bricks [lo:hi) of an output-array dict,
-    tick indexes left chunk-local, brick_seq starting at seq0."""
-    import pyarrow as pa
-
-    m = hi - lo
-    ev = times_local[arrs["tick_index_close"][lo:hi]].astype("datetime64[us]")
-    cols = {
-        "symbol": _const_str_array(sym, m),
-        "brick_seq": pa.array(np.arange(seq0, seq0 + m, dtype=np.int64)),
-        "event_time": pa.array(ev).cast(ts_type),
-        "__row_kind": pa.array(np.full(m, KIND_BRICK, dtype=np.int32)),
-    }
-    for name in WIDE_VALUE_COLUMNS:
-        cols[name] = pa.array(arrs[name][lo:hi])
-    return cols, ev
-
-
-def _scan_full(times, prices, start, brick, kstate, out):
-    """Exact full scan with the density-appropriate kernel."""
-    if choose_scan(prices, brick):
-        return scan_ticks_vectorized(times, prices, start, brick, kstate, out)
-    return scan_ticks(times, prices.tolist(), start, brick, kstate, out)
 
 
 def make_spec_runner(
@@ -262,149 +165,46 @@ def make_spec_runner(
 
     The first chunk (``first_ids[symbol]`` — sub-chunk ids are chosen
     for collision-free shuffle placement, see renko_chunked._hot_plan —
-    cogrouped with the carry-state row) runs the exact scan: the same
-    recurrence as renko_chunked._run_body, emitting chunk-LOCAL
-    brick_seq / tick indexes plus a KIND_SUMMARY row with its exact
-    final state.  Later chunks run speculatively from a cold grid
-    anchor and additionally pack the sync blob.
+    cogrouped with the carry row) is the exact `scan_group` resume,
+    rebased to chunk-LOCAL brick_seq / tick indexes (seq 0, offset 0;
+    the repair pass renumbers). Later chunks run speculatively from a
+    cold grid anchor and additionally pack the sync blob. Each chunk
+    emits its bricks plus a KIND_SUMMARY row holding its final carry.
     """
+    scan_k = timed(scan_group, acc_kernel)
 
     def run(tick_tbl, state_tbl):
-        t0 = time.perf_counter() if acc_py is not None else 0.0
-        try:
-            return _run(tick_tbl, state_tbl)
-        finally:
-            if acc_py is not None:
-                acc_py.add(time.perf_counter() - t0)
-
-    def _run(tick_tbl, state_tbl):
-        import pyarrow as pa
-
         ts_type = tick_tbl.schema.field("__time").type
         if tick_tbl.num_rows == 0:
-            # state row for a sub-chunk with no ticks can't happen for
-            # hot symbols (hot => ticks present); return empty
-            return _sub_table(ts_type, {}, 0)
-
-        sub = int(tick_tbl.column("__sub")[0].as_py())
-        sym, times, prices, n = _sorted_group(tick_tbl)
-        have_state = state_tbl.num_rows > 0
-
+            # the first chunk of a warm symbol can be empty (quantile
+            # boundary tie): its carry row arrives alone; the repair
+            # pass reads the carry itself
+            return padded_table(SUB_SCHEMA, ts_type, 0, {})
+        sub = tick_tbl.column("__sub")[0].as_py()
+        sym = tick_tbl.column("symbol")[0].as_py()
+        times, prices = sorted_ticks(tick_tbl)
+        summary = {"__row_kind": KIND_SUMMARY, "__sub": sub}
         if sub == first_ids.get(sym, 0):
-            # ---- exact chunk-0 scan (bit-for-bit _run_body semantics,
-            # local indexing; offset handling moves to the repair pass)
-            if not have_state:
-                anchor = grid_anchor(float(prices[0]), brick)
-                kstate = [anchor, 0, anchor, anchor, 1, 1]
-                next_seq, first_ts = 0, None
-                start = 1
-            else:
-                st = {c: state_tbl.column(c)[0].as_py() for c in _STATE_COLS if c != "__st_first_ts"}
-                offset = int(st["__st_tick_offset"])
-                next_seq = int(st["__st_next_seq"])
-                ft = state_tbl.column("__st_first_ts").to_numpy(zero_copy_only=False)[0]
-                first_ts = None if np.isnat(ft) else ft.astype("datetime64[us]")
-                kstate = [
-                    float(st["__st_last_close"]),
-                    int(st["__st_last_dir"]),
-                    float(st["__st_wick_min"]),
-                    float(st["__st_wick_max"]),
-                    int(st["__st_volume"]),
-                    int(st["__st_tick_open"]) - offset,  # window-local == chunk-local (chunk 0)
-                ]
-                start = 0
-            out = new_output()
-            tk = time.perf_counter() if acc_kernel is not None else 0.0
-            _scan_full(times, prices, start, brick, kstate, out)
-            if acc_kernel is not None:
-                acc_kernel.add(time.perf_counter() - tk)
-            arrs = output_arrays(out)
-            m_all = len(arrs["close"])
-            ev = (
-                times[arrs["tick_index_close"]].astype("datetime64[us]")
-                if m_all
-                else np.empty(0, dtype="datetime64[us]")
-            )
-            if m_all and first_ts is None:
-                first_ts = ev[0]
-            lo = hi = 0
-            if drop_first and first_ts is not None:
-                lo = int(np.searchsorted(ev, first_ts, side="left"))
-                hi = int(np.searchsorted(ev, first_ts, side="right"))
-            keep = np.concatenate([np.arange(0, lo), np.arange(hi, m_all)])
-            cut = {k: v[keep] for k, v in output_arrays(out).items() if k != "event_time"}
-            cols, _ = _brick_cols(sym, cut, 0, len(keep), times, ts_type, 0)
-            cols["__sub"] = pa.array(np.full(len(keep), sub, dtype=np.int64))
-            bricks = _sub_table(ts_type, cols, len(keep))
-
-            scols = {
-                "symbol": pa.array([sym], pa.string()),
-                "__row_kind": pa.array([KIND_SUMMARY], pa.int32()),
-                "__sub": pa.array([sub], pa.int64()),
-                "__n_bricks": pa.array([len(keep)], pa.int64()),
-            }
-            scols.update(
-                _state_cols(
-                    ts_type,
-                    {
-                        "__st_last_close": kstate[0],
-                        "__st_last_dir": kstate[1],
-                        "__st_wick_min": kstate[2],
-                        "__st_wick_max": kstate[3],
-                        "__st_volume": kstate[4],
-                        "__st_tick_open": kstate[5],  # chunk-local
-                        "__st_next_seq": int(next_seq),  # incoming; repair renumbers
-                        "__st_tick_offset": 0,
-                        "__st_first_ts": first_ts,
-                    },
+            carry = read_carry(state_tbl) if state_tbl.num_rows else None
+            if carry is not None:
+                carry = carry._replace(
+                    tick_open=carry.tick_open - carry.tick_offset, next_seq=0, tick_offset=0
                 )
-            )
-            return pa.concat_tables([bricks, _sub_table(ts_type, scols, 1)])
+            bricks, carry = scan_k(times, prices, brick, drop_first, carry)
+        else:
+            # speculative: in exact FP regimes this lattice is
+            # bit-identical to the true one, so the repair pass can
+            # verify convergence bitwise
+            cold = new_state(float(prices[0]), brick)
+            bricks, carry = scan_k(times, prices, brick, False, Carry(*cold[:5], 0, 0, 0, None))
+            summary.update(_pack_sync(*_emission_sync(bricks, 0, len(bricks["brick_seq"]))))
+        brick_cols = {"__row_kind": KIND_BRICK, "__sub": sub}
+        return pa.concat_tables([
+            bricks_table(SUB_SCHEMA, sym, bricks, ts_type, brick_cols),
+            carry_table(carry, sym, ts_type, SUB_SCHEMA, summary),
+        ])
 
-        # ---- speculative sub>0 scan from a cold grid anchor; in exact
-        # FP regimes this lattice is bit-identical to the true one, so
-        # the repair pass can verify convergence bitwise
-        anchor = grid_anchor(float(prices[0]), brick)
-        kstate = [anchor, 0, anchor, anchor, 1, 0]
-        out = new_output()
-        tk = time.perf_counter() if acc_kernel is not None else 0.0
-        _scan_full(times, prices, 0, brick, kstate, out)
-        if acc_kernel is not None:
-            acc_kernel.add(time.perf_counter() - tk)
-        arrs = output_arrays(out)
-        m = len(arrs["close"])
-        cols, _ = _brick_cols(sym, arrs, 0, m, times, ts_type, 0)
-        cols["__sub"] = pa.array(np.full(m, sub, dtype=np.int64))
-        bricks = _sub_table(ts_type, cols, m)
-
-        sync = _emission_sync(arrs, 0, m)
-        scols = {
-            "symbol": pa.array([sym], pa.string()),
-            "__row_kind": pa.array([KIND_SUMMARY], pa.int32()),
-            "__sub": pa.array([sub], pa.int64()),
-            "__n_bricks": pa.array([m], pa.int64()),
-        }
-        for k, v in _pack_sync(*sync).items():
-            scols[k] = pa.array([v], pa.binary())
-        scols.update(
-            _state_cols(
-                ts_type,
-                {
-                    "__st_last_close": kstate[0],
-                    "__st_last_dir": kstate[1],
-                    "__st_wick_min": kstate[2],
-                    "__st_wick_max": kstate[3],
-                    "__st_volume": kstate[4],
-                    "__st_tick_open": kstate[5],  # chunk-local
-                    "__st_next_seq": 0,
-                    "__st_tick_offset": 0,
-                    "__st_first_ts": None,
-                },
-            )
-        )
-        return pa.concat_tables([bricks, _sub_table(ts_type, scols, 1)])
-
-    return run
+    return timed(run, acc_py)
 
 
 def make_repair_runner(
@@ -419,7 +219,7 @@ def make_repair_runner(
 ):
     """Cogroup body for the sequential stitch: left = the hot symbol's
     FULL window tick group (the universal exact fallback), right = the
-    spec summaries plus the incoming carry-state row.
+    spec summaries plus the incoming carry row.
 
     ``plans_by_symbol``: {symbol: {"bnds": [boundary micros...],
     "ids": [chunk ids...]}} — the same quantile cuts and chosen chunk
@@ -430,22 +230,17 @@ def make_repair_runner(
         s: ([int(b) for b in p["bnds"]], [int(i) for i in p["ids"]])
         for s, p in plans_by_symbol.items()
     }
+    scan_k = timed(scan, acc_kernel)
+    scan_ticks_k = timed(scan_ticks, acc_kernel)
+    scan_vec_k = timed(scan_ticks_vectorized, acc_kernel)
 
     def run(tick_tbl, side_tbl):
-        t0 = time.perf_counter() if acc_py is not None else 0.0
-        try:
-            return _run(tick_tbl, side_tbl)
-        finally:
-            if acc_py is not None:
-                acc_py.add(time.perf_counter() - t0)
-
-    def _run(tick_tbl, side_tbl):
-        import pyarrow as pa
-
         ts_type = tick_tbl.schema.field("__time").type
         if tick_tbl.num_rows == 0:
-            return _sub_table(ts_type, {}, 0)
-        sym, times, prices, n = _sorted_group(tick_tbl)
+            return padded_table(SUB_SCHEMA, ts_type, 0, {})
+        sym = tick_tbl.column("symbol")[0].as_py()
+        times, prices = sorted_ticks(tick_tbl)
+        n = len(prices)
         bnds_l, ids = plans_plain.get(sym, ([], [0]))
         bnds = np.asarray(bnds_l, dtype=np.int64)
         t_us = times.astype("datetime64[us]").view("int64")
@@ -454,72 +249,45 @@ def make_repair_runner(
         cuts = [0] + [int(np.searchsorted(t_us, b, side="left")) for b in bnds] + [n]
 
         side = side_tbl.combine_chunks()
-        kind = side.column("__row_kind").to_numpy(zero_copy_only=False)
-        # timestamps must be read as datetime64 UTC instants — as_py
-        # would hand back session-tz datetimes (same pitfall as
-        # renko_chunked._run_body)
-        fts_np = side.column("__st_first_ts").to_numpy(zero_copy_only=False)
         summaries = {}
-        state_row = None
-        for i in range(side.num_rows):
-            row = {
-                f.name: side.column(f.name)[i].as_py()
-                for f in SUB_SCHEMA.fields
-                if not isinstance(f.dataType, T.TimestampType)
-            }
-            ft = fts_np[i]
-            row["__st_first_ts"] = None if np.isnat(ft) else ft.astype("datetime64[us]")
-            if kind[i] == KIND_SUMMARY:
-                summaries[int(row["__sub"])] = row
-            elif kind[i] == KIND_STATE:
-                state_row = row
+        incoming = None
+        for i, kind in enumerate(side.column("__row_kind").to_pylist()):
+            if kind == KIND_SUMMARY:
+                sub_id = side.column("__sub")[i].as_py()
+                summaries[sub_id] = (read_carry(side, i), _unpack_sync(side, i))
+            elif kind == KIND_CARRY:
+                incoming = read_carry(side, i)
 
-        # incoming window state (globals)
-        if state_row is not None:
-            win_offset = int(state_row["__st_tick_offset"])
-            running_seq = int(state_row["__st_next_seq"])
-            first_ts = state_row["__st_first_ts"]
-            cur = [
-                float(state_row["__st_last_close"]),
-                int(state_row["__st_last_dir"]),
-                float(state_row["__st_wick_min"]),
-                float(state_row["__st_wick_max"]),
-                int(state_row["__st_volume"]),
-                int(state_row["__st_tick_open"]),  # global
-            ]
+        # the true state entering each chunk: kernel vector, tick_open global
+        if incoming is not None:
+            win_offset, running_seq = incoming.tick_offset, incoming.next_seq
+            first_ts, cur = incoming.first_ts, list(incoming[:6])
         else:
             win_offset, running_seq, first_ts, cur = 0, 0, None, None
 
         brick_tables = []
-        dec = {"sub": [], "keep_from": [], "seq_base": [], "tick_shift": []}
+        decisions = []  # one _DECISION_COLS tuple per non-empty chunk
 
         for sub in range(len(cuts) - 1):
             lo, hi = cuts[sub], cuts[sub + 1]
             if hi <= lo:
                 continue
             sub_id = ids[sub]
-            summ = summaries.get(sub_id)
-            assert summ is not None, f"missing spec summary for {sym} sub={sub_id}"
+            assert sub_id in summaries, f"missing spec summary for {sym} sub={sub_id}"
+            summ, (s_ticks, s_close, s_dir, s_rev, s_cum) = summaries[sub_id]
             shift = win_offset + lo
-            n_spec = int(summ["__n_bricks"])
+            # spec scans number from 0 and index ticks chunk-locally, so
+            # the summary's next_seq is the chunk's spec brick count
+            n_spec = summ.next_seq
+            spec_final = [*summ[:5], summ.tick_open + shift]  # -> global
 
             if sub == 0:
                 # chunk 0 ran exactly in the spec pass: adopt its output
-                dec["sub"].append(sub_id)
-                dec["keep_from"].append(0)
-                dec["seq_base"].append(running_seq)
-                dec["tick_shift"].append(shift)
+                decisions.append((sub_id, 0, running_seq, shift))
                 running_seq += n_spec
-                cur = [
-                    float(summ["__st_last_close"]),
-                    int(summ["__st_last_dir"]),
-                    float(summ["__st_wick_min"]),
-                    float(summ["__st_wick_max"]),
-                    int(summ["__st_volume"]),
-                    int(summ["__st_tick_open"]) + shift,  # -> global
-                ]
-                if first_ts is None and summ["__st_first_ts"] is not None:
-                    first_ts = summ["__st_first_ts"]
+                cur = spec_final
+                if first_ts is None:
+                    first_ts = summ.first_ts
                 continue
 
             # ---- repair scan of chunk `sub` from the true state
@@ -528,15 +296,11 @@ def make_repair_runner(
             if cur is None:
                 # cold symbol whose sub-0 span was empty (boundary tie at
                 # the min timestamp): this chunk IS the cold start — same
-                # anchor/start=1 seeding as the one-shot scan; the spec
-                # scan of this chunk remains splice-able via convergence
-                anchor = grid_anchor(float(cp[0]), brick)
-                kstate = [anchor, 0, anchor, anchor, 1, 1]
-                pos0 = 1
+                # seeding as the one-shot scan; the spec scan of this
+                # chunk remains splice-able via convergence
+                kstate, pos0 = new_state(float(cp[0]), brick), 1
             else:
-                kstate = [cur[0], cur[1], cur[2], cur[3], cur[4], cur[5] - shift]
-                pos0 = 0
-            s_ticks, s_close, s_dir, s_rev, s_cum = _unpack_sync(summ)
+                kstate, pos0 = [*cur[:5], cur[5] - shift], 0
             horizon = int(s_ticks[-1]) if len(s_ticks) else -1
 
             out = new_output()
@@ -549,16 +313,13 @@ def make_repair_runner(
             while pos < m and horizon >= 0:
                 stop = min(pos + blk, m)
                 n_prev = len(out["close"])
-                tk = time.perf_counter() if acc_kernel is not None else 0.0
                 if vec:
                     # sliced views keep tick indexes chunk-local
-                    scan_ticks_vectorized(ct[:stop], cp[:stop], pos, brick, kstate, out)
+                    scan_vec_k(ct[:stop], cp[:stop], pos, brick, kstate, out)
                 else:
                     if len(cp_list) < stop:
                         cp_list.extend(cp[len(cp_list) : stop].tolist())
-                    scan_ticks(ct, cp_list, pos, brick, kstate, out, stop=stop)
-                if acc_kernel is not None:
-                    acc_kernel.add(time.perf_counter() - tk)
+                    scan_ticks_k(ct, cp_list, pos, brick, kstate, out, stop)
                 if acc_repair_ticks is not None:
                     acc_repair_ticks.add(stop - pos)
                 # the views over `out` must not outlive this call: the next
@@ -593,35 +354,20 @@ def make_repair_runner(
                 arrs = output_arrays(out)
                 # keep true bricks through j*, then adopt the spec tail
                 n_true = int(np.searchsorted(arrs["tick_index_close"], jstar, side="right"))
-                final_state = [
-                    float(summ["__st_last_close"]),
-                    int(summ["__st_last_dir"]),
-                    float(summ["__st_wick_min"]),
-                    float(summ["__st_wick_max"]),
-                    int(summ["__st_volume"]),
-                    int(summ["__st_tick_open"]) + shift,
-                ]
+                final_state = spec_final
             else:
                 if acc_fallback is not None:
                     acc_fallback.add(1)
                 # no convergence possible: finish the chunk with the
-                # full-speed exact scan (vectorized or list-backed)
+                # full-speed exact scan
                 if pos < m:
-                    tk = time.perf_counter() if acc_kernel is not None else 0.0
-                    if choose_scan(cp, brick):
-                        scan_ticks_vectorized(ct, cp, pos, brick, kstate, out)
-                    else:
-                        if len(cp_list) < m:
-                            cp_list.extend(cp[len(cp_list) :].tolist())
-                        scan_ticks(ct, cp_list, pos, brick, kstate, out)
-                    if acc_kernel is not None:
-                        acc_kernel.add(time.perf_counter() - tk)
+                    scan_k(ct, cp, pos, brick, kstate, out)
                     if acc_repair_ticks is not None:
                         acc_repair_ticks.add(m - pos)
                 arrs = output_arrays(out)
                 n_true = len(arrs["close"])
                 keep_from = n_spec
-                final_state = [kstate[0], kstate[1], kstate[2], kstate[3], kstate[4], kstate[5] + shift]
+                final_state = [*kstate[:5], kstate[5] + shift]
 
             # first-brick label drop can reach into this chunk only when
             # nothing earlier in the symbol's history emitted (first_ts
@@ -643,53 +389,24 @@ def make_repair_runner(
                             pos_k += 1
 
             if n_true - drop_lo > 0:
-                cols, _ = _brick_cols(sym, arrs, drop_lo, n_true, ct, ts_type, running_seq)
-                # globalize tick indexes
-                cols["tick_index_open"] = pa.array(arrs["tick_index_open"][drop_lo:n_true] + shift)
-                cols["tick_index_close"] = pa.array(arrs["tick_index_close"][drop_lo:n_true] + shift)
-                brick_tables.append(_sub_table(ts_type, cols, n_true - drop_lo))
+                bricks = emit(ct, arrs, drop_lo, n_true, running_seq, shift)
+                brick_tables.append(
+                    bricks_table(SUB_SCHEMA, sym, bricks, ts_type, {"__row_kind": KIND_BRICK})
+                )
             running_seq += n_true - drop_lo
 
-            dec["sub"].append(sub_id)
-            dec["keep_from"].append(keep_from + drop_spec)
-            dec["seq_base"].append(running_seq)
-            dec["tick_shift"].append(shift)
+            decisions.append((sub_id, keep_from + drop_spec, running_seq, shift))
             running_seq += n_spec - keep_from - drop_spec
             cur = final_state
 
-        # ---- decisions + final state
-        nd = len(dec["sub"])
-        dcols = {
-            "symbol": _const_str_array(sym, nd),
-            "__row_kind": pa.array(np.full(nd, KIND_DECISION, dtype=np.int32)),
-            "__sub": pa.array(np.asarray(dec["sub"], dtype=np.int64)),
-            "__keep_from": pa.array(np.asarray(dec["keep_from"], dtype=np.int64)),
-            "__seq_base": pa.array(np.asarray(dec["seq_base"], dtype=np.int64)),
-            "__tick_shift": pa.array(np.asarray(dec["tick_shift"], dtype=np.int64)),
-        }
-        tables = brick_tables + [_sub_table(ts_type, dcols, nd)]
+        # ---- decisions + final carry
+        dcols = {c: np.asarray(v, dtype=np.int64) for c, v in zip(_DECISION_COLS, zip(*decisions))}
+        dcols |= {"symbol": sym, "__row_kind": KIND_DECISION}
+        carry = Carry(*cur, running_seq, win_offset + n, first_ts)
+        return pa.concat_tables([
+            *brick_tables,
+            padded_table(SUB_SCHEMA, ts_type, len(decisions), dcols),
+            carry_table(carry, sym, ts_type, SUB_SCHEMA),
+        ])
 
-        scols = {
-            "symbol": pa.array([sym], pa.string()),
-            "__row_kind": pa.array([KIND_STATE], pa.int32()),
-        }
-        scols.update(
-            _state_cols(
-                ts_type,
-                {
-                    "__st_last_close": cur[0],
-                    "__st_last_dir": cur[1],
-                    "__st_wick_min": cur[2],
-                    "__st_wick_max": cur[3],
-                    "__st_volume": cur[4],
-                    "__st_tick_open": cur[5],
-                    "__st_next_seq": running_seq,
-                    "__st_tick_offset": win_offset + n,
-                    "__st_first_ts": first_ts,
-                },
-            )
-        )
-        tables.append(_sub_table(ts_type, scols, 1))
-        return pa.concat_tables(tables)
-
-    return run
+    return timed(run, acc_py)

@@ -58,18 +58,22 @@ def persist_block(
     reliable=True: ``checkpoint`` to the SparkContext checkpoint dir —
     survives executor loss; requires ``setCheckpointDir``.
     """
+    if resolve_reliable(df.sparkSession, reliable):
+        return df.checkpoint(eager=eager)
+    return df.localCheckpoint(eager=eager)
+
+
+def resolve_reliable(spark, reliable: bool | None) -> bool:
+    """``reliable``, or the session conf when it is None; True only
+    with a checkpoint directory set (raises otherwise). Callers that
+    persist many blocks resolve once, before their first job."""
     if reliable is None:
-        reliable = (
-            str(df.sparkSession.conf.get(RELIABLE_CONF, "false")).lower() == "true"
-        )
-    if not reliable:
-        return df.localCheckpoint(eager=eager)
-    sc = df.sparkSession.sparkContext
-    if sc.getCheckpointDir() is None:
+        reliable = str(spark.conf.get(RELIABLE_CONF, "false")).lower() == "true"
+    if reliable and spark.sparkContext.getCheckpointDir() is None:
         raise ValueError(
             "reliable=True requires a checkpoint directory: call "
             "spark.sparkContext.setCheckpointDir(<fault-tolerant path>) "
             "first (HDFS/object storage on a cluster; any local path in "
             "local mode)"
         )
-    return df.checkpoint(eager=eager)
+    return reliable

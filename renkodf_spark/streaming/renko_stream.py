@@ -1,13 +1,16 @@
 """Structured Streaming Renko operator: the incremental twin of the
 batch `renko()` (reference `RenkoWS.add_prices`, renkodf.py:513-690),
-hosted in `applyInPandasWithState`.
+hosted in `applyInPandasWithState` — the one streaming host.
 
 Per-key value state is exactly the reference's scalar state
 (renkodf.py:504-511): (last_close, last_direction, wick_min, wick_max,
 volume) plus our explicit `brick_seq` counter. Completed bricks are
-emitted in append mode; the forming bar (reference `renko_animate`) is
-a client-side read over (last bricks + state), provided by
-`forming_bar_from_state` below.
+emitted in append mode. The forming bar (reference `renko_animate`)
+comes either from `renko_stream_animate` (update mode, one forming row
+per key per micro-batch) or client-side from (last bricks + state) via
+`forming_bar_from_state` below. Both operators share one warm-start
+parse (`_warm_states`), one event sort and resume/seed step
+(`_scan_batch`) and one brick-row build (`_batch_frame`).
 
 Semantics notes, matching the reference and `renkodf_spark.live`:
 - cold start seeds one synthetic brick at the grid anchor with
@@ -34,7 +37,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from renkodf_spark.kernel import grid_anchor, new_output, output_arrays, scan_ticks, seed_row
-from renkodf_spark.schema import STREAM_SCHEMA
+from renkodf_spark.schema import MODE_SOURCES, MODES, STREAM_SCHEMA
 
 _STATE_SCHEMA = (
     "last_close double, last_dir long, wick_min double, wick_max double, "
@@ -65,63 +68,18 @@ def renko_stream(
     """
     if brick_size is None or brick_size <= 0:
         raise ValueError("brick_size cannot be 'None' or '<= 0'")
-
-    warm: dict[str, tuple] = {}
-    if initial_state is not None:
-        tail = (
-            initial_state.sort_values("brick_seq").groupby("symbol", sort=False).tail(1)
-        )
-        for row in tail.itertuples(index=False):
-            warm[str(row.symbol)] = (
-                float(row.close),
-                int(row.direction),
-                float(row.close),
-                float(row.close),
-                int(row.volume),
-                int(row.brick_seq) + 1,
-            )
+    warm = _warm_states(initial_state)
 
     def process(key, pdfs, state):
-        symbol = key[0]
-        chunks = [
-            pdf[[time_col, price_col]].rename(columns={time_col: "t", price_col: "p"})
-            for pdf in pdfs
-        ]
-        events = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else chunks[0]
-        events = events.sort_values("t", kind="mergesort")
-        times = events["t"].to_numpy()
-        prices = events["p"].to_numpy().tolist()
-        if len(prices) == 0:
+        stored = state.get if state.exists else warm.get(key[0])
+        batch = _scan_batch(pdfs, stored, brick_size, time_col, price_col, emit_seed)
+        if batch is None:
             return
-
-        head = None
-        if state.exists:
-            last_close, last_dir, wick_min, wick_max, volume, seq = state.get
-            kstate = [last_close, last_dir, wick_min, wick_max, volume, 0]
-            start = 0
-        elif symbol in warm:
-            last_close, last_dir, wick_min, wick_max, volume, seq = warm[symbol]
-            kstate = [last_close, last_dir, wick_min, wick_max, volume, 0]
-            start = 0
-        else:
-            anchor = grid_anchor(prices[0], brick_size)
-            seq = 0
-            if emit_seed:
-                head = seed_row(times[0], anchor)
-                seq += 1
-            # reference cold start: state mirrors the seed row (dir=1)
-            kstate = [anchor, 1, anchor, anchor, 1, 0]
-            start = 1
-
-        out = new_output()
-        scan_ticks(times, prices, start, brick_size, kstate, out)
-
+        _times, _prices, kstate, seq, head, out = batch
         n = len(out["event_time"])
-        state.update((kstate[0], kstate[1], kstate[2], kstate[3], int(kstate[4]), int(seq + n)))
-
-        if n == 0 and head is None:
-            return
-        yield _batch_frame(symbol, seq, head, out)
+        state.update((*kstate[:4], int(kstate[4]), int(seq + n)))
+        if n or head is not None:
+            yield _batch_frame(key[0], seq, head, out)
 
     slim = _clean_input(ticks, symbol_col, time_col, price_col)
     return slim.groupBy(symbol_col).applyInPandasWithState(
@@ -131,6 +89,54 @@ def renko_stream(
         outputMode="append",
         timeoutConf="NoTimeout",
     )
+
+
+def _warm_states(initial_state: pd.DataFrame | None, open_src: str | None = None) -> dict:
+    """``to_rws()`` export -> {symbol: stored-state tuple}: each key
+    resumes from its last exported brick (plus that brick's ``open_src``
+    value when given, for the forming bar)."""
+    warm: dict[str, tuple] = {}
+    if initial_state is None:
+        return warm
+    tail = initial_state.sort_values("brick_seq").groupby("symbol", sort=False).tail(1)
+    for row in tail.to_dict("records"):
+        close = float(row["close"])
+        seq = int(row["brick_seq"]) + 1
+        st = (close, int(row["direction"]), close, close, int(row["volume"]), seq)
+        warm[str(row["symbol"])] = st + (float(row[open_src]),) if open_src else st
+    return warm
+
+
+def _scan_batch(
+    pdfs, stored: tuple | None, brick: float, time_col: str, price_col: str, emit_seed: bool
+):
+    """One key's micro-batch through the kernel: events replayed in
+    event-time order (stable), resumed from ``stored`` (the key's state
+    or its warm start), else a cold start. Returns ``(times, prices,
+    kstate, seq, head, out)`` — ``seq`` numbers the first brick in
+    ``out``, ``head`` is the cold-start seed row (or None) — or None for
+    an empty batch. Stored fields after ``seq`` are the caller's."""
+    chunks = [pdf[[time_col, price_col]] for pdf in pdfs]
+    events = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else chunks[0]
+    events = events.sort_values(time_col, kind="mergesort")
+    times = events[time_col].to_numpy()
+    prices = events[price_col].to_numpy().tolist()
+    if not prices:
+        return None
+    head = None
+    if stored is not None:
+        kstate, seq, start = [*stored[:5], 0], stored[5], 0
+    else:
+        anchor = grid_anchor(prices[0], brick)
+        seq = 0
+        if emit_seed:
+            head = seed_row(times[0], anchor)
+            seq = 1
+        # reference cold start: state mirrors the seed row (dir=1)
+        kstate, start = [anchor, 1, anchor, anchor, 1, 0], 1
+    out = new_output()
+    scan_ticks(times, prices, start, brick, kstate, out)
+    return times, prices, kstate, seq, head, out
 
 
 def _batch_frame(symbol: str, seq: int, head: dict | None, out: dict) -> pd.DataFrame:
@@ -173,6 +179,7 @@ def _clean_input(ticks: DataFrame, symbol_col: str, time_col: str, price_col: st
 _FORMING_SCHEMA = T.StructType(
     list(STREAM_SCHEMA.fields) + [T.StructField("is_forming", T.IntegerType())]
 )
+_FORMING_COLUMNS = [f.name for f in _FORMING_SCHEMA.fields]
 
 # extended state: + the last brick's mode-projected open (the forming
 # bar's retrace branches need the previous brick's open AND close)
@@ -202,86 +209,27 @@ def renko_stream_animate(
     """
     if brick_size is None or brick_size <= 0:
         raise ValueError("brick_size cannot be 'None' or '<= 0'")
-    from renkodf_spark.schema import MODE_SOURCES, MODES
-
     if mode not in MODES:
         raise ValueError(f"Only {list(MODES)} options are valid.")
     open_src, _high_src, _low_src = MODE_SOURCES[mode]
     nongap_rule = mode in ("nongap", "reverse-nongap", "fake-r-nongap")
-
-    warm: dict[str, tuple] = {}
-    if initial_state is not None:
-        tail = initial_state.sort_values("brick_seq").groupby("symbol", sort=False).tail(1)
-        for row in tail.itertuples(index=False):
-            d = row._asdict() if hasattr(row, "_asdict") else dict(zip(initial_state.columns, row))
-            warm[str(d["symbol"])] = (
-                float(d["close"]),
-                int(d["direction"]),
-                float(d["close"]),
-                float(d["close"]),
-                int(d["volume"]),
-                int(d["brick_seq"]) + 1,
-                float(d[open_src]),
-            )
+    warm = _warm_states(initial_state, open_src)
 
     def process(key, pdfs, state):
         symbol = key[0]
-        chunks = [
-            pdf[[time_col, price_col]].rename(columns={time_col: "t", price_col: "p"})
-            for pdf in pdfs
-        ]
-        events = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else chunks[0]
-        events = events.sort_values("t", kind="mergesort")
-        times = events["t"].to_numpy()
-        prices = events["p"].to_numpy().tolist()
-        if len(prices) == 0:
+        stored = state.get if state.exists else warm.get(symbol)
+        batch = _scan_batch(pdfs, stored, brick_size, time_col, price_col, True)
+        if batch is None:
             return
-
-        rows_head: list[dict] = []
-        if state.exists:
-            *kvals, seq, last_open = state.get
-            kstate = list(kvals) + [0]
-            start = 0
-        elif symbol in warm:
-            *kvals, seq, last_open = warm[symbol]
-            kstate = list(kvals) + [0]
-            start = 0
-        else:
-            anchor = grid_anchor(prices[0], brick_size)
-            seq = 0
-            seed = seed_row(times[0], anchor)
-            seed["brick_seq"] = seq
-            seed["is_forming"] = 0
-            rows_head.append(seed)
-            seq += 1
-            kstate = [anchor, 1, anchor, anchor, 1, 0]
-            last_open = anchor
-            start = 1
-
-        out = new_output()
-        scan_ticks(times, prices, start, brick_size, kstate, out)
+        times, prices, kstate, seq, head, out = batch
         n = len(out["event_time"])
-        arrs = output_arrays(out)
         if n:
-            last_open = float(arrs[open_src][-1])
+            last_open = float(output_arrays(out)[open_src][-1])
+        else:
+            last_open = stored[-1] if stored is not None else kstate[0]  # cold: the anchor
         state.update(
             (kstate[0], kstate[1], kstate[2], kstate[3], int(kstate[4]), int(seq + n), last_open)
         )
-
-        frames = []
-        if rows_head:
-            frames.append(pd.DataFrame(
-                [{"symbol": symbol, "brick_seq": r["brick_seq"], "event_time": r["event_time"],
-                  **{c: r[c] for c in _VALUE_COLUMNS}, "is_forming": 0}
-                 for r in rows_head]
-            ))
-        if n:
-            frame = {"symbol": symbol, "brick_seq": range(seq, seq + n), "event_time": out["event_time"]}
-            for c in _VALUE_COLUMNS:
-                frame[c] = arrs[c]
-            bricks = pd.DataFrame(frame)
-            bricks["is_forming"] = 0
-            frames.append(bricks)
 
         # forming bar (reference renko_animate branching, renkodf.py:817-849)
         price = float(prices[-1])
@@ -330,9 +278,10 @@ def renko_stream_animate(
             "fake_high": h,
             "fake_low": lo,
         }
-        frames.append(pd.DataFrame([forming]))
-        res = pd.concat(frames, ignore_index=True)
-        yield res[[f.name for f in _FORMING_SCHEMA.fields]]
+        frames = [pd.DataFrame([forming])]
+        if n or head is not None:
+            frames.insert(0, _batch_frame(symbol, seq, head, out).assign(is_forming=0))
+        yield pd.concat(frames, ignore_index=True)[_FORMING_COLUMNS]
 
     slim = _clean_input(ticks, symbol_col, time_col, price_col)
     return slim.groupBy(symbol_col).applyInPandasWithState(
