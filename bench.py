@@ -250,101 +250,6 @@ def kernel_throughput() -> dict:
     return results
 
 
-def _kernel_fingerprint() -> str:
-    """sha256 of the kernel source — the guard that lets kernel samples
-    min-aggregate across a round's bench runs (VERDICT r10 item 2)
-    without ever carrying numbers across a kernel code change."""
-    import hashlib
-
-    path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "renkodf_spark", "kernel.py"
-    )
-    with open(path, "rb") as f:
-        return hashlib.sha256(f.read()).hexdigest()[:16]
-
-
-def merge_kernel_runs(tput: dict, full_path: str) -> dict:
-    """Fold this run's kernel throughput samples together with every
-    prior run of the SAME kernel source recorded in bench_full.json
-    (VERDICT r10 item 2: the committed artifact recorded the round's
-    worst co-tenant run — 3.57 M t/s dense while the same code measured
-    6.39 in a quieter run the same day; best-across-runs makes the
-    committed number robust to CPU steal, exactly the min-aggregation
-    the query timings already apply across interleaved passes). The
-    fingerprint guard means a kernel edit always restarts the sample
-    pool — stale numbers can never outlive the code they measured."""
-    fp = _kernel_fingerprint()
-    merged = {
-        "fingerprint": fp,
-        "samples": {k: list(v) for k, v in tput["samples"].items()},
-        "runs_merged": 1,
-    }
-    try:
-        with open(full_path) as f:
-            prior = json.load(f).get("kernel", {})
-        if prior.get("fingerprint") == fp:
-            for lbl, vals in prior.get("samples", {}).items():
-                merged["samples"].setdefault(lbl, []).extend(vals)
-            merged["runs_merged"] = prior.get("runs_merged", 1) + 1
-    except (OSError, ValueError):
-        pass
-    for lbl in ("sparse", "dense"):
-        merged[f"{lbl}_mticks"] = max(merged["samples"].get(lbl, [0.0]))
-    return merged
-
-
-def _bench_fingerprint() -> str:
-    """sha256 over every renkodf_spark source file plus the headline
-    list, SF dir, and core count — the guard that lets per-query
-    samples min-aggregate across a round's bench runs (VERDICT r11
-    "What's wrong" #1: the committed artifact carried two phantom
-    3-4x regressions on UNCHANGED code because one co-tenant run's
-    numbers stood alone; the kernel block got cross-run min-merging in
-    r11, the per-query table now gets the same). Any source edit, SF
-    change, or core-count change restarts the sample pool — stale
-    numbers can never outlive the code/configuration they measured."""
-    import hashlib
-
-    h = hashlib.sha256()
-    pkg = os.path.join(os.path.dirname(os.path.abspath(__file__)), "renkodf_spark")
-    for root, dirs, files in os.walk(pkg):
-        dirs[:] = sorted(d for d in dirs if d != "__pycache__")
-        for fn in sorted(files):
-            if fn.endswith(".py"):
-                p = os.path.join(root, fn)
-                h.update(os.path.relpath(p, pkg).encode())
-                with open(p, "rb") as f:
-                    h.update(f.read())
-    h.update(json.dumps([HEADLINE, SF_DIR, CPUS]).encode())
-    return h.hexdigest()[:16]
-
-
-def merge_query_runs(samples: dict[str, list], full_path: str) -> dict:
-    """Fold this run's per-query wall-time samples together with every
-    prior bench run of the SAME package source (and SF/core config)
-    recorded in bench_full.json, exactly like merge_kernel_runs. The
-    committed number per query is the min over the merged pool, so one
-    co-tenant burst during the final run can no longer print a phantom
-    regression for a query whose code did not change."""
-    fp = _bench_fingerprint()
-    merged = {
-        "fingerprint": fp,
-        "samples": {k: [round(v, 3) for v in vs] for k, vs in samples.items()},
-        "runs_merged": 1,
-    }
-    try:
-        with open(full_path) as f:
-            prior = json.load(f).get("query_runs", {})
-        if prior.get("fingerprint") == fp:
-            for name, vals in prior.get("samples", {}).items():
-                if name in merged["samples"]:
-                    merged["samples"][name].extend(vals)
-            merged["runs_merged"] = prior.get("runs_merged", 1) + 1
-    except (OSError, ValueError):
-        pass
-    return merged
-
-
 def materialize(df) -> int:
     """Pruning-proof full materialization (VERDICT r2 item 3): under a
     bare count() Catalyst prunes every unreferenced output column, so
@@ -1141,18 +1046,11 @@ def main():
         if timings[name] < 1.0:
             visit(name)
 
-    # cross-run min-merge (VERDICT r11 "What's wrong" #1): fold this
-    # run's samples with prior same-source runs from bench_full.json;
-    # the committed per-query number is the min over the merged pool
-    full_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "bench_full.json"
-    )
-    query_runs = merge_query_runs(qsamples, full_path)
+    # this run's numbers only: the min over its own interleaved visits
     for name in HEADLINE:
-        timings[name] = round(min(query_runs["samples"][name]), 3)
+        timings[name] = round(timings[name], 3)
         print(
-            f"# {name}: {timings[name]}s ({rows[name]} rows, {visits[name]} visits, "
-            f"{len(query_runs['samples'][name])} merged samples)",
+            f"# {name}: {timings[name]}s ({rows[name]} rows, {visits[name]} visits)",
             file=sys.stderr,
         )
 
@@ -1204,11 +1102,12 @@ def main():
         # best-of-2, headline-only gate. r01/r02: single rep, count()
         # materialization — not comparable.
         "methodology": {
-            "version": 6,
-            # v6 (r12): per-query samples cross-run min-merged under a
-            # package-source fingerprint (query_runs block), quiet-gate
+            "version": 7,
+            # v7: this run's samples only (the v6 cross-run min-merge
+            # pool is gone). v6 (r12): per-query samples cross-run
+            # min-merged under a package-source fingerprint, quiet-gate
             # threshold 4 -> 2
-            "reps": "2 interleaved passes (3rd visit if best < 1s) x cross-run merge; scale entries 2 interleaved samples",
+            "reps": "2 interleaved passes (3rd visit if best < 1s); scale entries 2 interleaved samples",
             "agg": "min",
             "materialize": "full_width_row_hash",
             # the gates only control WHEN each section starts (bounded
@@ -1225,6 +1124,8 @@ def main():
         # postmortem); a high load average here means absolute numbers
         # are inflated and only intra-run ratios are meaningful
         "loadavg": [round(x, 2) for x in os.getloadavg()],
+        # this run's raw samples behind the minima above
+        "samples": {"queries": qsamples, "kernel": tput["samples"]},
     }
     if scale is not None:
         payload["scale"] = scale
@@ -1233,20 +1134,10 @@ def main():
     # Artifact layout (VERDICT r7 item 2): the full payload became one
     # giant stdout line that overflowed the driver's capture buffer —
     # BENCH_r07.json stored only its tail ("parsed": null, no headline
-    # total). The FULL payload now goes to bench_full.json + stderr;
-    # stdout ends with a compact always-fits summary line carrying the
-    # driver contract (metric/value/unit/queries/sf) plus the headline
-    # numbers a round-over-round comparison needs.
-    # kernel numbers min-aggregate (throughput: max) across the round's
-    # runs of the same kernel source — samples[] + best committed, like
-    # every scale entry (VERDICT r10 item 2)
-    kernel_block = merge_kernel_runs(tput, full_path)
-    for lbl in ("sparse", "dense"):
-        timings[f"kernel_mticks_per_sec_{lbl}"] = kernel_block[f"{lbl}_mticks"]
-    payload["kernel"] = kernel_block
-    payload["query_runs"] = query_runs
-    with open(full_path, "w") as f:
-        json.dump(payload, f)
+    # total). The FULL payload goes to stderr only (a run leaves the
+    # tree clean); stdout ends with a compact always-fits summary line
+    # carrying the output contract (metric/value/unit/queries/sf) plus
+    # the headline numbers a round-over-round comparison needs.
     print(json.dumps(payload), file=sys.stderr)
 
     compact = {
@@ -1255,7 +1146,7 @@ def main():
         "unit": "sec",
         "queries": timings,
         "sf": payload["sf"],
-        "methodology_version": 6,
+        "methodology_version": 7,
         "probes": {
             **{
                 sect: {"spin": g["spin_miters"], "bw": g["bw_gbps"]}
@@ -1267,7 +1158,7 @@ def main():
             },
         },
         "loadavg": payload["loadavg"],
-        "full_payload": "bench_full.json",
+        "full_payload": "stderr",
     }
     if scale is not None:
         cs = {
@@ -1353,7 +1244,7 @@ def main():
         "n_queries": len([k for k in timings if not k.startswith("kernel_mticks")]),
         "kernel_dense_mticks": timings["kernel_mticks_per_sec_dense"],
         "kernel_sparse_mticks": timings["kernel_mticks_per_sec_sparse"],
-        "full_payload": "bench_full.json",
+        "full_payload": "stderr",
     }
     print(json.dumps(micro))
     spark.stop()

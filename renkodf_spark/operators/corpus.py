@@ -666,7 +666,6 @@ def decontaminate(
     eval_id_col: str = "eval_id",
     broadcast_report: bool = False,
     persist_report: bool = False,
-    reliable: bool | None = None,
 ) -> DataFrame:
     """Drop training documents contaminated by the evaluation set: any
     doc with at least ``min_hit_grams`` distinct overlapping normalized
@@ -699,7 +698,7 @@ def decontaminate(
     ).filter(F.col("n_hit_grams") >= min_hit_grams)
     ids = flagged.select(id_col)
     if persist_report:
-        ids = persist_block(ids, reliable=reliable)
+        ids = persist_block(ids)
     if broadcast_report:
         ids = F.broadcast(ids)
     return train.join(ids, id_col, "left_anti")
@@ -771,7 +770,6 @@ def temperature_sample(
     salt: str = "sample",
     broadcast_rates: bool = False,
     persist_rates: bool = False,
-    reliable: bool | None = None,
 ) -> DataFrame:
     """Apply :func:`temperature_rates` with the deterministic hash
     threshold of :func:`rate_sample`: a row is kept iff its 48-bit
@@ -802,7 +800,7 @@ def temperature_sample(
         # one row per group; lineage truncation for composed DAGs
         # (guide §3.3) — the rates' upstream corpus chain is not
         # re-stamped into the probe side's plan. Identical rows.
-        rel = persist_block(rel, reliable=reliable)
+        rel = persist_block(rel)
     if broadcast_rates:
         rel = F.broadcast(rel)
     return (
@@ -963,7 +961,6 @@ def dsir_weights(
     target_text_col: str = "text",
     n_buckets: int = 16384,
     alpha: int = 1,
-    reliable: bool | None = None,
 ) -> DataFrame:
     """DSIR (Xie et al. 2023) importance weights: score every raw
     document by how target-like its hashed n-gram bag is —
@@ -1003,15 +1000,13 @@ def dsir_weights(
     # executed once for the model fit. The documented two-scan contract
     # (model fit + scoring) is unchanged; rows identical.
     raw_counts = persist_block(
-        doc_grams.groupBy("bucket").agg(F.count(F.lit(1)).alias("cr")),
-        reliable=reliable,
+        doc_grams.groupBy("bucket").agg(F.count(F.lit(1)).alias("cr"))
     )
     tgt_counts = persist_block(
         target.select(_norm_gram_tokens(target_text_col).alias("__t"))
         .select(F.explode(_hashed_bucket_grams(F.col("__t"), n_buckets)).alias("bucket"))
         .groupBy("bucket")
-        .agg(F.count(F.lit(1)).alias("ct")),
-        reliable=reliable,
+        .agg(F.count(F.lit(1)).alias("ct"))
     )
     raw_tot = raw_counts.agg(F.sum("cr").alias("__Tr"))
     tgt_tot = tgt_counts.agg(F.sum("ct").alias("__Tt"))
@@ -1027,8 +1022,7 @@ def dsir_weights(
         raw_counts.join(tgt_counts, "bucket", "left")
         .crossJoin(F.broadcast(raw_tot))
         .crossJoin(F.broadcast(tgt_tot))
-        .select("bucket", lr_micros.alias("__lr")),
-        reliable=reliable,
+        .select("bucket", lr_micros.alias("__lr"))
     )
     scored = (
         doc_grams.join(F.broadcast(model), "bucket")

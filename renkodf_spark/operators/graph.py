@@ -65,7 +65,6 @@ def pagerank(
     weight_col: str | None = None,
     checkpoint_every: int | None = None,
     teleport_n: int | None = None,
-    reliable: bool | None = None,
 ) -> DataFrame:
     """Fixed-point PageRank over a directed edge list.
 
@@ -107,14 +106,6 @@ def pagerank(
     ``teleport_n = 0`` short-circuits to all-zero ranks (the n == 0
     convention). Callers are responsible for passing the true global
     count; per-node results are then identical to the full-graph run.
-
-    ``reliable=True`` routes the internal materialize-once blocks (the
-    flagged node set, plus ``checkpoint_every`` iterates) through the
-    SparkContext checkpoint directory instead of executor-local
-    storage, so a lost executor mid-fixpoint does not silently force a
-    full rerun of the call — the escape hatch for long-lived chains at
-    cluster scale (VERDICT r13 item 4; results are bit-identical, see
-    plans/persist.py for the trade).
     """
     if iterations < 0:
         raise ValueError(f"iterations must be >= 0, got {iterations}")
@@ -154,8 +145,8 @@ def pagerank(
     # the first action, so laziness changes nothing here — it just
     # avoids the eager-barrier cost class measured on setsim. Trade:
     # blocks are not recomputable after executor loss (rerun the call)
-    # — unless reliable=True routes them through the checkpoint dir.
-    nodes = persist_block(nodes, reliable=reliable)
+    # — unless the session conf routes them through the checkpoint dir.
+    nodes = persist_block(nodes)
     if teleport_n is not None:
         if teleport_n < 0:
             raise ValueError(f"teleport_n must be >= 0, got {teleport_n}")
@@ -197,7 +188,7 @@ def pagerank(
             .alias("pr"),
         )
         if checkpoint_every and (t + 1) % checkpoint_every == 0 and t + 1 < iterations:
-            pr = persist_block(pr, reliable=reliable, eager=True)
+            pr = persist_block(pr, eager=True)
     return pr
 
 
@@ -318,7 +309,6 @@ def label_propagation(
     src_col: str = "src",
     dst_col: str = "dst",
     checkpoint_every: int | None = None,
-    reliable: bool | None = None,
 ) -> DataFrame:
     """Deterministic synchronous label propagation (Raghavan et al.
     2007) — community detection one level finer than connected
@@ -363,9 +353,7 @@ def label_propagation(
     # no-CacheManager-leak rule).
     e = edges.select(F.col(src_col).alias("__s"), F.col(dst_col).alias("__d"))
     if iterations > 1:
-        # reliable=True -> checkpoint-dir blocks (executor-loss-safe);
-        # see pagerank's reliable= note / plans/persist.py
-        e = persist_block(e, reliable=reliable)
+        e = persist_block(e)
     lbl = nodes.select(
         F.col(id_col), F.col(id_col).cast("long").alias("lbl")
     )
@@ -385,7 +373,7 @@ def label_propagation(
             id_col, F.coalesce("__new", "lbl").alias("lbl")
         )
         if checkpoint_every and (t + 1) % checkpoint_every == 0 and t + 1 < iterations:
-            lbl = persist_block(lbl, reliable=reliable, eager=True)
+            lbl = persist_block(lbl, eager=True)
         elif t + 1 < iterations:
             # r14 (guide §3.3): each round references lbl TWICE (the
             # vote join and the carry-forward left join), so an inline
@@ -393,12 +381,12 @@ def label_propagation(
             # stamped the node relation 8x and planning dominated the
             # fixpoint. A LAZY per-round localCheckpoint keeps the plan
             # linear in rounds with no barrier job; rows identical.
-            # Deliberately reliable=False (ADVICE r14): routing EVERY
-            # round through the reliable store would write the node
-            # relation to the checkpoint dir once per iteration,
-            # making the checkpoint_every cadence meaningless;
-            # reliable writes stay on the configured cadence above,
-            # and a lost executor between them replays at most
-            # checkpoint_every rounds of narrow (id, label) work.
-            lbl = persist_block(lbl, reliable=False)
+            # Deliberately local, whatever the session conf (ADVICE
+            # r14): routing EVERY round through the reliable store
+            # would write the node relation to the checkpoint dir once
+            # per iteration, making the checkpoint_every cadence
+            # meaningless; reliable writes stay on the configured
+            # cadence above, and a lost executor between them replays
+            # at most checkpoint_every rounds of narrow (id, label) work.
+            lbl = lbl.localCheckpoint(eager=False)
     return lbl.select(id_col, F.col("lbl").alias("community"))

@@ -44,11 +44,11 @@ severed, and the staged parquet is deleted before the caller
 materializes the union — so on a multi-executor cluster, losing an
 executor mid-run or before materialization loses those blocks with NO
 recompute path ("checkpoint block not found"). Local mode (one JVM) is
-unaffected. Cluster deployments set ``spark.renkodf.persist.reliable``
-(or pass ``reliable_checkpoint=True``): each window then goes through
-``persist_block`` to ``spark.sparkContext.setCheckpointDir(...)`` (a
-fault-tolerant filesystem), surviving executor loss at the cost of one
-filesystem write per window.
+unaffected. Cluster deployments set ``spark.renkodf.persist.reliable``:
+each window then goes through ``persist_block`` to
+``spark.sparkContext.setCheckpointDir(...)`` (a fault-tolerant
+filesystem), surviving executor loss at the cost of one filesystem
+write per window.
 
 The window body is the shared Arrow host of ``operators/renko.py``:
 `scan_group` resumes each symbol from its carry (see the carry protocol
@@ -96,7 +96,6 @@ def renko_chunked(
     price_col: str = "close",
     drop_first: bool = True,
     staging_dir: str | None = None,
-    reliable_checkpoint: bool | None = None,
     instrument: dict | None = None,
     subchunk_threshold: int | None = 3_000_000,
     subchunk_target: int = 500_000,
@@ -122,18 +121,15 @@ def renko_chunked(
     the one-shot scan in all regimes — when speculative convergence
     can't be verified (non-dyadic brick arithmetic) the repair pass
     degrades to the previous serial scan for that chunk. Pass
-    ``subchunk_threshold=None`` to disable.
-
-    ``reliable_checkpoint``: None reads ``spark.renkodf.persist.reliable``
-    like every other persist point; True/False overrides it (see the
-    module docstring's fault-tolerance caveat)."""
+    ``subchunk_threshold=None`` to disable."""
     slim = slim_ticks(
         ticks, brick_size, symbol_col, time_col, price_col,
         F.unix_micros(F.window(F.col(time_col), window).start).alias("__win"),
     )
     spark = ticks.sparkSession
-    # resolved once, up front: a missing checkpoint dir fails before any job
-    reliable = resolve_reliable(spark, reliable_checkpoint)
+    # the window checkpoints' store, checked up front: with the reliable
+    # conf on, a missing checkpoint dir fails before any job
+    resolve_reliable(spark)
 
     own_tmp = staging_dir is None
     if own_tmp:
@@ -163,7 +159,7 @@ def renko_chunked(
                 instrument["hot_plan_sec"] = round(time.perf_counter() - t0, 3)
                 instrument["hot_pairs"] = len(hot_plan)
         return _run_windows(
-            spark, staged, windows, brick_size, drop_first, reliable,
+            spark, staged, windows, brick_size, drop_first,
             instrument=instrument, hot_plan=hot_plan,
         )
     finally:
@@ -274,8 +270,7 @@ def _hot_plan(spark, staged, threshold: int, target: int) -> dict:
 
 def _run_windows(
     spark, staged, windows, brick_size: float, drop_first: bool,
-    reliable: bool, instrument: dict | None = None,
-    hot_plan: dict | None = None,
+    instrument: dict | None = None, hot_plan: dict | None = None,
 ) -> DataFrame:
     # worker-side phase accumulators (only wired when instrumenting —
     # the closure must not capture driver-only objects otherwise)
@@ -309,16 +304,6 @@ def _run_windows(
             "repair_ticks": spark.sparkContext.accumulator(0),
         }
 
-    # Checkpoint materializes bricks + carry state (computing the
-    # cogroup exactly once, from the persisted `part`) and severs their
-    # lineage from both the cogroup and the staged files — so the
-    # window's cache is released right here and the staged copy can be
-    # deleted before the caller ever materializes the union. local =
-    # executor blocks (fast, not executor-loss-safe); reliable = the
-    # SparkContext checkpoint dir (see module docstring caveat).
-    def ck(df):
-        return persist_block(df, reliable=reliable, eager=True)
-
     state_df = spark.createDataFrame([], PACKED_SCHEMA).select("symbol", *CARRY_COLS)
     chunks: list[DataFrame] = []
     if instrument is not None:
@@ -337,15 +322,23 @@ def _run_windows(
                 .applyInArrow(run, PACKED_SCHEMA)
                 .persist()
             )
-            bricks = ck(_bricks_of(part))
+            # The eager checkpoint materializes bricks + carry state
+            # (computing the cogroup exactly once, from the persisted
+            # `part`) and severs their lineage from both the cogroup and
+            # the staged files — so the window's cache is released right
+            # here and the staged copy can be deleted before the caller
+            # ever materializes the union. local = executor blocks
+            # (fast, not executor-loss-safe); reliable = the SparkContext
+            # checkpoint dir (see module docstring caveat).
+            bricks = persist_block(_bricks_of(part), eager=True)
             t_bricks = time.perf_counter()
-            state_df = ck(_carries_of(part))
+            state_df = persist_block(_carries_of(part), eager=True)
             part.unpersist()
             hot_stats = None
         else:
             bricks, state_df, t_bricks, hot_stats = _run_hot_window(
                 spark, wticks, state_df, win, hot_syms, hot_plan, brick_size,
-                drop_first, run, rep_accs, acc_py, acc_kernel, ck,
+                drop_first, run, rep_accs, acc_py, acc_kernel,
             )
         chunks.append(bricks)
         if instrument is not None:
@@ -381,7 +374,7 @@ def _carries_of(packed: DataFrame) -> DataFrame:
 
 def _run_hot_window(
     spark, wticks, state_df, win, hot_syms, hot_plan, brick_size,
-    drop_first, run, rep_accs, acc_py, acc_kernel, ck,
+    drop_first, run, rep_accs, acc_py, acc_kernel,
 ):
     """One window with sub-chunked hot symbols: the normal cogroup runs
     unchanged for everyone else; hot symbols take the three-step
@@ -496,9 +489,11 @@ def _run_hot_window(
         .select(*WIDE_COLUMN_NAMES)
     )
 
-    bricks = ck(_bricks_of(part).unionByName(_bricks_of(rep)).unionByName(spec_kept))
+    bricks = _bricks_of(part).unionByName(_bricks_of(rep)).unionByName(spec_kept)
+    bricks = persist_block(bricks, eager=True)
     t_bricks = time.perf_counter()
-    new_state = ck(_carries_of(part).unionByName(_carries_of(rep)))
+    new_state = _carries_of(part).unionByName(_carries_of(rep))
+    new_state = persist_block(new_state, eager=True)
     part.unpersist()
     spec.unpersist()
     rep.unpersist()

@@ -262,17 +262,12 @@ def setsim_join(
     t_num: int = 1,
     t_den: int = 2,
     round_digits: int = 4,
-    reliable: bool | None = None,
 ) -> DataFrame:
     """All pairs with shingle-set Jaccard >= t_num/t_den — EXACT
     (100% recall, 100% precision; the filters only prune cost).
 
     Output: ``(id_a, id_b, inter, sz_a, sz_b, jaccard)`` with
     id_a < id_b, jaccard rounded to ``round_digits``.
-
-    ``reliable=True`` checkpoints the internal element table to the
-    SparkContext checkpoint dir instead of executor-local blocks — the
-    executor-loss escape hatch for long-lived chains (plans/persist.py).
     """
     _validate_threshold(t_num, t_den)
     e = element_table(df, text_col=text_col, id_col=id_col, shingle_n=shingle_n)
@@ -284,14 +279,12 @@ def setsim_join(
     # its own serial job before the query and measured 1.96x on
     # setsim_exact_join at sf0.1; the lazy form persists on first use
     # inside the query's own parallel job, like cache() did.
-    e = persist_block(e, reliable=reliable)
+    e = persist_block(e)
     # r14 (guide §3.3): the prefix table feeds BOTH candidate sides and
     # the sorted-set table both verify sides — persist each narrow
     # relation so the freq-join + rank window (resp. the per-doc
     # collect_set) is planned and executed once instead of twice.
-    pref = persist_block(
-        prefix_index(e, t_num=t_num, t_den=t_den), reliable=reliable
-    )
+    pref = persist_block(prefix_index(e, t_num=t_num, t_den=t_den))
     cand = _filtered_candidates(
         _prefix_side(pref, "a"),
         _prefix_side(pref, "b"),
@@ -301,7 +294,7 @@ def setsim_join(
     )
     return _verify(
         cand,
-        persist_block(element_sets(e), reliable=reliable),
+        persist_block(element_sets(e)),
         t_num=t_num,
         t_den=t_den,
         round_digits=round_digits,
@@ -316,7 +309,6 @@ def setsim_index(
     shingle_n: int = 3,
     t_num: int = 1,
     t_den: int = 2,
-    reliable: bool | None = None,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """The three persistable index tables of the production protocol:
     ``(freq, prefix, sets)`` — element frequencies (the frozen order
@@ -324,10 +316,9 @@ def setsim_index(
     three once per corpus snapshot (bucket prefix by ``h``, sets by
     ``id``) and run increments through
     :func:`incremental_setsim_pairs` — the historical text is never
-    re-read. ``reliable=`` as in :func:`setsim_join`."""
+    re-read."""
     e = persist_block(
-        element_table(df, text_col=text_col, id_col=id_col, shingle_n=shingle_n),
-        reliable=reliable,
+        element_table(df, text_col=text_col, id_col=id_col, shingle_n=shingle_n)
     )
     freq = element_frequencies(e)
     return freq, prefix_index(e, t_num=t_num, t_den=t_den), element_sets(e)
@@ -347,7 +338,6 @@ def incremental_setsim_pairs(
     round_digits: int = 4,
     include_within_new: bool = True,
     new_elements: DataFrame | None = None,
-    reliable: bool | None = None,
 ) -> DataFrame:
     """Exact set-similarity pairs TOUCHING an increment: new-vs-baseline
     plus (optionally) new-vs-new, against a persisted
@@ -376,8 +366,7 @@ def incremental_setsim_pairs(
         else persist_block(
             element_table(
                 new_df, text_col=text_col, id_col=id_col, shingle_n=shingle_n
-            ),
-            reliable=reliable,
+            )
         )
     )
     pref_new = prefix_index(e_new, t_num=t_num, t_den=t_den, freq=freq)
@@ -414,7 +403,6 @@ def containment_join(
     t_den: int = 5,
     round_digits: int = 4,
     repartition_input: bool | str = "auto",
-    reliable: bool | None = None,
 ) -> DataFrame:
     """Exact CONTAINMENT join: all ORDERED pairs (a, b), a != b, with
     ``|a ∩ b| >= t * |a|`` — "most of a's shingles appear in b", the
@@ -446,8 +434,7 @@ def containment_join(
             id_col=id_col,
             shingle_n=shingle_n,
             repartition_input=repartition_input,
-        ),
-        reliable=reliable,
+        )
     )
     pref = prefix_index(e, t_num=t_num, t_den=t_den)
     a = pref.select("h", F.col("id").alias("id_a"), F.col("sz").alias("sz_a"))

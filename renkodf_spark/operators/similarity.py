@@ -178,7 +178,6 @@ def train_ivf_centroids(
     n_planes: int = 4,
     iters: int = 2,
     round_digits: int = 6,
-    reliable: bool | None = None,
 ) -> DataFrame:
     """IVF training WITHOUT labels — the real-corpus shape (real
     embedding columns carry no cluster/label column to seed from).
@@ -215,11 +214,9 @@ def train_ivf_centroids(
         # previous step's whole routing chain — inline, the plan (and
         # the per-iteration recompute) grows with iteration depth.
         # Lazily localCheckpoint the <= 2^n_planes-row centroid state
-        # between iterations; rows identical. ``reliable=`` /
-        # spark.renkodf.persist.reliable routes the state through the
-        # fault-tolerant checkpoint store (plans/persist.py).
+        # between iterations; rows identical.
         if t > 0:
-            cents = persist_block(cents, reliable=reliable)
+            cents = persist_block(cents)
         assigned = nearest_centroid(
             emb, cents, id_col=id_col, vec_col=vec_col, round_digits=round_digits
         )
@@ -648,7 +645,6 @@ def semantic_dedup(
     threshold: float = 0.9,
     round_digits: int = 6,
     max_cell_size: int | None = None,
-    reliable: bool | None = None,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023): route
     every embedding to its nearest centroid cell, compare pairs only
@@ -696,8 +692,7 @@ def semantic_dedup(
     routed = persist_block(
         nearest_centroid(
             emb, centroids, id_col=id_col, vec_col=vec_col, round_digits=round_digits
-        ).select("id", "vec", "cell"),
-        reliable=reliable,
+        ).select("id", "vec", "cell")
     )
     routed, pair_keys = _cap_cells(routed, max_cell_size)
     capped = routed.withColumn("__nrm", _norm(F.col("vec")))
@@ -774,7 +769,6 @@ def knn_edges_from_routed(
     round_digits: int = 6,
     max_cell_size: int | None = None,
     keep_cell: bool = False,
-    reliable: bool | None = None,
 ) -> DataFrame:
     """The pair/rank stage of :func:`knn_graph` over an ALREADY-ROUTED
     ``(id, vec, cell)`` relation — shared with the streaming graph
@@ -808,7 +802,7 @@ def knn_edges_from_routed(
     per id first."""
     from pyspark.sql import Window
 
-    routed = persist_block(routed, reliable=reliable)
+    routed = persist_block(routed)
     routed, pair_keys = _cap_cells(routed, max_cell_size)
     routed = routed.withColumn("__nrm", _norm(F.col("vec")))
     a, b = routed.alias("a"), routed.alias("b")

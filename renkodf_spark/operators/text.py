@@ -1019,7 +1019,6 @@ def derive_bigram_model(
     bcounts: DataFrame,
     *,
     alpha: int = 1,
-    reliable: bool | None = None,
 ) -> tuple[DataFrame, DataFrame, int]:
     """Shared smoothing/rounding derivation from the raw count tables
     — the single definition of the model arithmetic, so batch-trained
@@ -1035,7 +1034,7 @@ def derive_bigram_model(
     # carried 18 copies of the docs scan; the signed-quantile family
     # 140). Lazily localCheckpoint the two bounded model relations so
     # training is planned and executed once. Rows identical.
-    counts = persist_block(counts, reliable=reliable)
+    counts = persist_block(counts)
     totals = counts.agg(
         F.sum("cnt").alias("__T"), F.count(F.lit(1)).alias("__V")
     )
@@ -1045,8 +1044,7 @@ def derive_bigram_model(
     unigrams = persist_block(
         counts.crossJoin(F.broadcast(totals)).select(
             "term", "cnt", lp.alias("lp_micros")
-        ),
-        reliable=reliable,
+        )
     )
     bigrams = bcounts.join(
         unigrams.select(F.col("term").alias("w1"), F.col("cnt").alias("__c1")), "w1"

@@ -21,7 +21,8 @@ sf0.1 (r15). The right strategy is a per-deployment decision, so it is a
 conf, not a constant (the round rule: scale-dependent settings stay
 parameterised with local defaults):
 
-``spark.renkodf.join.broadcastVerdictSets`` (default ``true``)
+``spark.renkodf.join.broadcastVerdictSets`` (``true``/``false``, default
+``true``; any other value raises ValueError)
     ``true`` — hint the verdict sets for broadcast. Correct whenever
     the corpus is bounded enough that a distinct doc-id set fits the
     broadcast cap (every gate/bench scale; corpora to ~10^8 docs).
@@ -37,14 +38,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from renkodf_spark.plans import bool_conf
+
 VERDICT_BROADCAST_CONF = "spark.renkodf.join.broadcastVerdictSets"
 
 
 def maybe_broadcast_verdict(df: DataFrame) -> DataFrame:
     """``F.broadcast(df)`` iff the session allows broadcasting
     unbounded verdict id sets (see module docstring)."""
-    allow = (
-        str(df.sparkSession.conf.get(VERDICT_BROADCAST_CONF, "true")).lower()
-        == "true"
-    )
+    allow = bool_conf(df.sparkSession, VERDICT_BROADCAST_CONF, True)
     return F.broadcast(df) if allow else df

@@ -4,15 +4,13 @@ exposed as a named (spark builder, duckdb oracle SQL) pair consumed by
 
 Importing this package populates the registry.
 
-Ordering matters: the driver's correctness gate covers a bounded prefix
-of the registry (round 1 recorded exactly the first 50 entries), so
-registration is re-ordered below with a priority list — queries that
-have never had a gate row (the LLM-pipeline family, the renko
-state/summary/time-bar/chunked queries) and queries whose round-1 rows
-need re-proving after fixes (user_sessions, sketch_value_quantiles) come
-first; queries already hash-matched green in CORRECTNESS_r01 fill the
-remaining slots and, if the window is still bounded, are the ones that
-fall outside it (their round-1 rows stand as evidence).
+The correctness gate run over ``__spark_entry__.py`` covers a bounded
+prefix of the registry, so ``_PRIORITY`` moves a short list to the
+front: at most 50 names, written fresh for each change, first the
+queries whose builders reach the code that change touched, then the
+``renko_*`` surface. Every other query keeps its module registration
+order; ``scripts/sweep.sh`` proves the whole registry against its
+oracles at sf0.001 and sf0.01.
 """
 
 from renkodf_spark.queries.registry import REGISTRY, oracle_sql, queries  # noqa: F401
@@ -32,349 +30,60 @@ from renkodf_spark.queries import pipeline9  # noqa: F401
 from renkodf_spark.queries import pipeline10  # noqa: F401
 from renkodf_spark.queries import pipeline11  # noqa: F401
 
-# Gate-window priority (see module docstring). Rotation policy (ADVICE
-# r2, applied every round): queries that never had a gate row, plus
-# queries whose operator or oracle changed this round, come first; the
-# queries rotated out all have green rows in the immediately-previous
-# round. Full-registry freshness comes from the committed sweep
-# artifact: `scripts/sweep.sh <round>` replays every registered query
-# against its oracle at sf0.001 AND sf0.01 and writes
-# SWEEP_r{N}_{sf}.json (committed for r5, r7, and r10 onward — r6, r8
-# and r9 relied on the judge's own sweep; the script makes the step
-# mechanical so the artifact no longer depends on habit).
-# Names not listed keep their module registration order after these.
+# Rotation rule: first the queries whose builders reach code the latest
+# change touched (here: the operators with persist points, and the strict
+# session-conf reader), then the renko_* product surface.
 _PRIORITY = [
-    # -- round-15 OPTIMIZATION pass, first: queries whose PHYSICAL
-    #    PLANS changed this round (doc-local winnowing/gram/line
-    #    dedup, hash-carrying Hamming bands, per-video in-row verify,
-    #    IVF-PQ shared training aggregate, corpus-sized broadcast-hint
-    #    removal in the curation DAGs). Values are pinned
-    #    bit-identical; the gate re-proves it.
-    "winnow_fingerprints",
-    "winnow_candidate_pairs",
-    "substring_dup_pairs",
-    "substring_span_removal",
-    "decontamination_report",
     "decontaminated_corpus",
-    "boilerplate_line_removal",
-    "multimodal_dhash_neardup_pairs",
-    "multimodal_video_neardup_pairs",
-    "multimodal_dedup_keep",
-    "multimodal_curation_end_to_end",
-    "multimodal_video_curation_end_to_end",
-    "similarity_ivfpq_topk",
+    "pretrain_end_to_end",
     "curation_end_to_end",
-    "pretrain_end_to_end",
-    # -- VERDICT r14 item 6: the plan-changed-in-r14 queries whose
-    #    correctness evidence was builder-sweep-only (outside the
-    #    50-slot gate window last round) — sweep the remainder through
-    #    the driver gate. (substring/boilerplate/decontamination
-    #    already above.)
-    "dedup_minhash_lsh",
-    "hamming_topk",
-    "pq_adc_topk",
-    "vocab_encoded_docs",
-    "hybrid_search_rerank",
-    "packed_bins",
-    "phrase_search_table_table",
-    "gopher_quality_filter",
-    "dedup_ngram_jaccard",
-    "quantile_outlier_trim",
-    # -- round-14 OPTIMIZATION pass: queries whose PHYSICAL PLANS
-    #    changed this round (lineage truncation of narrow verdict/model
-    #    relations, per-row norm precompute in every pair stage, the
-    #    kNN top-k window riding the pair join's partitioning, LPA
-    #    per-round state persistence, quantile-probe broadcast hints).
-    #    Values are pinned bit-identical; the gate re-proves it.
-    "pretrain_end_to_end",
     "knn_graph_edges",
     "knn_communities_indexed",
     "signed_lm_score_quantiles",
     "signed_weighted_quantiles",
     "semantic_dedup_keep",
     "setsim_exact_join",
-    "winnow_candidate_pairs",
-    "similarity_ivfpq_topk",
-    "similarity_ivf_topk",
-    "similarity_cosine_topk",
-    "similarity_lsh_ann_topk",
-    "jl_projected_topk",
     "ivf_train_unlabeled",
-    "hard_negative_pairs_ann",
-    "hard_negative_pairs_ann_shuffle",
     "dsir_weights_en",
     "dsir_top_sample",
-    "quantile_sketch_estimates",
-    "quantile_outlier_trim",
-    "curation_end_to_end",
-    "multimodal_curation_end_to_end",
-    "multimodal_video_curation_end_to_end",
     "bigram_lm_doc_quality",
     "bigram_perplexity_buckets",
     "mutual_knn_cluster_labels",
     "knn_pagerank",
     "knn_communities",
-    # -- new in round 14 (never had a gate row), plus the queries whose
-    #    operator or oracle changed this round: the signed sketch floor
-    #    reassociation (signed_lm_score_quantiles), the shared graph
-    #    state dir + reliable= threading (indexed centrality, setsim,
-    #    pagerank/LPA consumers), and the broadcast hints on
-    #    decontaminate/temperature_sample
-    "pretrain_end_to_end",
-    "knn_communities_indexed",
-    "signed_weighted_quantiles",
     "signed_score_trim",
-    "decontaminated_corpus",
     "lang_temperature_sample",
-    # -- round 14, second wave: new rankers/analytics plus the queries
-    #    whose plans changed (the pretrain ingest spread is covered
-    #    above; the kNN consumers now read the shared edge memo)
-    "ql_search_spark_vector",
-    "vocab_growth_curve",
-    "mutual_knn_cluster_labels",
-    "knn_pagerank",
     "knn_trustrank",
     "knn_pagerank_weighted",
     "knn_triangle_counts",
     "knn_density_tiers",
-    # -- round 13 batch (rotating out as they green)
-    "signed_lm_score_quantiles",
     "knn_pagerank_indexed",
     "knn_trustrank_indexed",
-    "knn_communities",
-    "quantile_sketch_estimates",
-    "quantile_outlier_trim",
-    "weighted_quantile_lengths",
-    "multimodal_resize_thumbs",
-    # -- new in round 12 (never had a gate row), plus the queries whose
-    #    shared cluster_labels stage switched to large-star/small-star
-    #    contraction this round and need re-proving
-    "setsim_prefix_index",
-    "setsim_exact_join",
-    "quantile_sketch_buckets",
-    "quantile_sketch_estimates",
-    "knn_pagerank",
-    "knn_trustrank",
     "setsim_incremental_join",
-    "quantile_outlier_trim",
-    "knn_pagerank_weighted",
     "setsim_cluster_labels",
     "setsim_containment_join",
-    "weighted_quantile_lengths",
-    "knn_triangle_counts",
-    "multimodal_video_curation_end_to_end",
-    "leakage_safe_splits",
-    "winnow_fingerprints",
-    "winnow_candidate_pairs",
-    "multimodal_resize_thumbs",
-    "dedup_cluster_labels",
-    "corpus_dedup_filter",
-    "dedup_keep_best",
-    # -- new in round 11 (never had a gate row)
-    "knn_graph_edges",
-    "mutual_knn_cluster_labels",
-    "knn_density_tiers",
-    "dedup_idf_weighted_jaccard",
     "bigram_lm_transitions",
-    "bigram_lm_doc_quality",
-    "bigram_perplexity_buckets",
-    "nb_classifier_model",
-    "nb_classifier_scores",
-    "nb_classifier_eval",
-    "multimodal_curation_end_to_end",
     "semantic_dedup_capped",
-    "multimodal_video_dhash",
-    "multimodal_video_neardup_pairs",
-    # -- new in round 10 (never had a gate row)
-    "renko_subchunked_wide",
-    "hard_negative_pairs_ann_shuffle",
-    "multimodal_pixel_decode",
-    "multimodal_frame_sample",
-    "multimodal_audio_meta",
-    "multimodal_audio_energy",
-    "multimodal_video_frames",
-    "multimodal_jpeg_decode",
-    "multimodal_image_dhash",
-    "multimodal_dhash_neardup_pairs",
-    "multimodal_dedup_keep",
-    "multimodal_audio_fingerprint",
-    # -- new in round 9 (gate rows green r9)
-    "hard_negative_pairs_ann",
-    "bpe_merges_batched",
-    # -- new in round 8: distributed BPE training (gate rows green r8)
-    "bpe_merges_learned",
-    "bpe_encoded_docs",
-    "hard_negative_pairs",
-    # -- new in round 7 phase 5: bin-bucketed range joins, funnel,
-    #    cohort retention, snapshot diff, count-min sketch (never had
-    #    a gate row)
-    "bm25_search_spark_vector",
-    "hybrid_search_rerank",
-    "epoch_shuffle_order",
-    "countmin_heavy_users",
-    "hybrid_rrf_fusion",
-    "purchase_window_concurrency",
-    "purchase_window_peak",
-    "event_value_anomalies",
-    "events_user_skew_report",
-    "customer_7day_order_sum",
-    "orders_merge_upsert",
-    "orders_profile",
-    "binary_quantize_codes",
-    "hamming_topk",
-    "salted_join_orders_customers",
-    "lang_weighted_sample",
-    "lang_token_budget_sample",
-    "scd2_user_status",
-    "scd2_point_in_time_purchases",
-    "inverted_term_stats",
-    "inverted_postings_spark",
-    "boolean_and_search",
-    "phrase_search_table_table",
-    "range_clicks_in_purchase_windows",
-    "interval_overlap_daily_spans",
-    "funnel_signup_view_click_purchase",
-    "funnel_view_click_purchase_2h",
-    "cohort_retention_weekly",
-    "orders_snapshot_diff",
-    "countmin_sketch_users",
-    "countmin_user_estimates",
-    # -- new in round 7 phase 4: quality-aware dedup keep, CCNet
-    #    perplexity buckets, Bloom membership sketch, DSIR weights,
-    #    per-source curation stats (never had a gate row)
-    "dedup_keep_best",
-    "perplexity_buckets",
-    "bloom_membership",
-    "bloom_fill_stats",
-    "dsir_weights_en",
-    "dsir_top_sample",
-    "source_quality_report",
-    "jl_projection",
-    "jl_projected_topk",
-    "jl_recall_report",
-    "uniform_sample_200",
-    "substring_dup_pairs",
-    "substring_span_removal",
-    "curation_end_to_end",
-    "order_value_distribution",
-    # -- new in round 7 phase 3: Gopher rules, boilerplate line
-    #    removal, vocab build + encode (never had a gate row)
-    "gopher_quality_filter",
-    "boilerplate_line_removal",
-    "vocab_top_terms",
-    "vocab_encoded_docs",
-    "similarity_ivfpq_topk",
-    # -- new in round 7: decontamination, semantic dedup, unigram-LM
-    #    quality, z-order layout (never had a gate row)
-    "decontamination_report",
-    "decontaminated_corpus",
-    "unigram_doc_quality",
-    "semantic_dedup_keep",
-    "zorder_events_hist",
-    "lang_temperature_sample",
-    "pq_codebooks",
-    "pq_code_hist",
-    "pq_adc_topk",
-    # -- new in round 5: materialized packed bins, unlabeled IVF
-    #    training, as-of tolerance (never had a gate row), plus
-    #    re-proving the queries whose operators changed this round
-    #    (quota pre-filter, deterministic salt)
-    "packed_bins",
-    "ivf_train_unlabeled",
     "ann_recall_planted_unlabeled",
-    "asof_tolerance_purchase",
-    "lang_rate_sample",
-    "lang_quota_sample",
-    "salted_event_type_stats",
-    # -- new in round 4, phase 2: IVF ANN, repetition filters, sample
-    #    packing, int8 quantized similarity (never had a gate row)
-    "ivf_centroids",
-    "similarity_ivf_topk",
-    "similarity_ivf_probe2_topk",
-    "text_repetition",
-    "sequence_packing",
-    "quantized_cosine_topk",
-    "asof_next_purchase_after_click",
-    "asof_nearest_purchase",
-    "ivf_cell_stats",
-    "tfidf_top_terms",
-    "dedup_edit_distance",
-    "dedup_incremental_lsh",
-    "ann_recall_report",
-    "ann_recall_planted",
-    "renko_direction_runs",
-    "curation_split_quality",
-    # -- new this round: corpus-curation apply stage (dedup filter,
-    #    chunking, PII redaction, hash split, quota sampling)
-    "corpus_dedup_filter",
-    "corpus_chunks",
-    "pii_redaction",
-    "train_test_split",
-    # -- changed this round: new invariant/tolerance oracles (VERDICT r3
-    #    item 3), the b25 fold oracle (item 9), conditional repartition +
-    #    shared pairs + opt-in cap (items 1-2 / ADVICE), time_bars
-    #    tiebreak (item 4), multimodal sniff gate (ADVICE)
-    "renko_small_brick_smoke",
-    "renko_wide_bricks_b25",
-    "approx_distinct_users",
-    "sketch_value_quantiles",
-    "hll_sketch_rollup",
-    "dedup_minhash_lsh",
-    "dedup_ngram_jaccard",
-    "dedup_cluster_labels",
-    "time_bars_hourly",
-    # changed again late round 4: window ordering gained the payload
-    # tiebreak when asof.py grew direction= — re-prove the backward path
-    "asof_purchase_before_click",
-    "multimodal_image_meta",
-    "multimodal_real_headers",
-    # -- 16 queries whose only recent green rows are from round 2
-    "customers_without_orders",
-    "nation_full_outer_activity",
-    "intersect_buyers_positive_bal",
-    "props_json_extract",
-    "lineitem_top20_price",
-    "events_time_slice",
-    "event_value_percentiles",
-    "dedup_exact",
-    "dedup_simhash",
-    "similarity_cosine_topk",
-    "similarity_blocked_neardup",
-    "similarity_lsh_ann_topk",
-    "text_lang_id",
-    "text_quality",
-    "text_token_counts",
-    "text_fingerprint",
-    # -- the core renko surface (kept in-window: it's the product)
-    "renko_wide_bricks",
-    "renko_wicks_projected",
-    "renko_normal",
+    "renko_chunked_wide",
+    "renko_subchunked_wide",
     "renko_wicks",
+    "renko_normal",
     "renko_nongap",
     "renko_reverse_wicks",
     "renko_reverse_nongap",
     "renko_fake_r_wicks",
     "renko_fake_r_nongap",
+    "renko_wide_bricks",
+    "renko_wide_bricks_b25",
+    "renko_wicks_projected",
+    "renko_small_brick_smoke",
     "renko_state_export",
     "renko_summary_stats",
-    "renko_chunked_wide",
-    # -- relational/category representatives (green r3, kept fresh)
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    "q5_region_revenue",
-    "tumbling_event_windows",
-    "session_window_events",
-    "user_sessions",
-    "running_order_total",
-    "top3_orders_per_customer",
-    "event_gaps",
-    "ts_conversions",
+    "renko_direction_runs",
 ]
 
-_rest = [n for n in REGISTRY if n not in set(_PRIORITY)]
-_ordered = {n: REGISTRY[n] for n in _PRIORITY if n in REGISTRY}
-_ordered.update({n: REGISTRY[n] for n in _rest})
-missing = [n for n in _PRIORITY if n not in REGISTRY]
-assert not missing, f"priority list names unknown queries: {missing}"
+_ordered = {n: REGISTRY[n] for n in _PRIORITY}
+_ordered.update(REGISTRY)
 REGISTRY.clear()
 REGISTRY.update(_ordered)

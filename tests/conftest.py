@@ -1,3 +1,4 @@
+import contextlib
 import os
 import sys
 
@@ -28,6 +29,37 @@ def spark():
     )
     yield s
     s.stop()
+
+
+@pytest.fixture
+def spark_conf(spark):
+    """``with spark_conf({key: value, ...}, checkpoint_dir=path):`` sets
+    session confs and the SparkContext checkpoint dir (None: no dir at
+    all); restores them all on exit."""
+    jsc = spark.sparkContext._jsc.sc()
+    set_dir = getattr(jsc, "checkpointDir_$eq")  # takes an Option[String]
+
+    @contextlib.contextmanager
+    def scoped(confs, checkpoint_dir):
+        old_confs = {k: spark.conf.get(k, None) for k in confs}
+        old_dir = jsc.checkpointDir()
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        if checkpoint_dir is None:
+            set_dir(spark._jvm.scala.Option.empty())
+        else:
+            spark.sparkContext.setCheckpointDir(str(checkpoint_dir))
+        try:
+            yield
+        finally:
+            set_dir(old_dir)
+            for k, v in old_confs.items():
+                if v is None:
+                    spark.conf.unset(k)
+                else:
+                    spark.conf.set(k, v)
+
+    return scoped
 
 
 @pytest.fixture(scope="session")

@@ -5,6 +5,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from renkodf_spark.operators import graph
+from renkodf_spark.plans.persist import RELIABLE_CONF
+
+RELIABLE = {RELIABLE_CONF: "true"}
 
 
 def _py_pagerank(edges, nodes, *, iterations=3, d_num=85, d_den=100, scale=10**12):
@@ -55,47 +58,69 @@ def test_pagerank_checkpoint_parity(spark):
     assert ck == base
 
 
-def test_reliable_checkpoint_requires_dir(spark):
-    """reliable=True without a SparkContext checkpoint dir must fail
-    eagerly with instructions, not mid-job (plans/persist.py)."""
-    if spark.sparkContext.getCheckpointDir() is not None:
-        pytest.skip("checkpoint dir already set on the shared session")
-    e = spark.createDataFrame(EDGES, "src long, dst long")
-    n = spark.createDataFrame([(v,) for v in NODES], "id long")
-    with pytest.raises(ValueError, match="setCheckpointDir"):
-        graph.pagerank(e, n, iterations=2, reliable=True)
+def _checkpoint_rdds(ckpt_dir):
+    """Reliable checkpoint RDDs written under ``ckpt_dir``."""
+    return [d for d in ckpt_dir.glob("*/rdd-*") if d.is_dir()]
 
 
-def test_reliable_checkpoint_parity(spark, tmp_path):
-    """VERDICT r13 item 4: the reliable= escape hatch (checkpoint-dir
-    blocks that survive executor loss) must produce bit-identical
-    results for pagerank, label_propagation, and setsim_join."""
+def test_reliable_checkpoint_requires_dir(spark, spark_conf):
+    """spark.renkodf.persist.reliable=true without a SparkContext
+    checkpoint dir must fail eagerly with instructions, before any job
+    runs, not mid-job (plans/persist.py)."""
     from renkodf_spark.operators import setsim
 
-    spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
+    e = spark.createDataFrame(EDGES, "src long, dst long")
+    n = spark.createDataFrame([(v,) for v in NODES], "id long")
+    docs = spark.createDataFrame([(1, "a b c d")], "doc_id long, text string")
+    sc = spark.sparkContext
+    sc.setJobGroup("reliable-no-dir", "reliable conf without a checkpoint dir")
+    try:
+        with spark_conf(RELIABLE, checkpoint_dir=None):
+            with pytest.raises(ValueError, match="setCheckpointDir"):
+                graph.pagerank(e, n, iterations=2)
+            with pytest.raises(ValueError, match="setCheckpointDir"):
+                graph.label_propagation(e, n, iterations=2)
+            with pytest.raises(ValueError, match="setCheckpointDir"):
+                setsim.setsim_join(docs)
+        assert sc.statusTracker().getJobIdsForGroup("reliable-no-dir") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def test_reliable_checkpoint_parity(spark, tmp_path, spark_conf):
+    """VERDICT r13 item 4: the reliable session conf (checkpoint-dir
+    blocks that survive executor loss) must produce bit-identical
+    results for pagerank, label_propagation, and setsim_join, and must
+    really write to the checkpoint dir."""
+    from renkodf_spark.operators import setsim
+
     e = spark.createDataFrame(EDGES, "src long, dst long")
     n = spark.createDataFrame([(v,) for v in NODES], "id long")
     base = {r.id: r.pr for r in graph.pagerank(e, n, iterations=5).collect()}
-    rel = {
-        r.id: r.pr
-        for r in graph.pagerank(
-            e, n, iterations=5, checkpoint_every=2, reliable=True
-        ).collect()
-    }
+    with spark_conf(RELIABLE, checkpoint_dir=tmp_path / "pr"):
+        rel = {
+            r.id: r.pr
+            for r in graph.pagerank(e, n, iterations=5, checkpoint_every=2).collect()
+        }
     assert rel == base
+    assert _checkpoint_rdds(tmp_path / "pr")
 
     und = e.unionByName(e.selectExpr("dst as src", "src as dst"))
     lb = {
         r.id: r.community
         for r in graph.label_propagation(und, n, iterations=4).collect()
     }
-    lr = {
-        r.id: r.community
-        for r in graph.label_propagation(
-            und, n, iterations=4, checkpoint_every=2, reliable=True
-        ).collect()
-    }
+    with spark_conf(RELIABLE, checkpoint_dir=tmp_path / "lp"):
+        lr = {
+            r.id: r.community
+            for r in graph.label_propagation(
+                und, n, iterations=4, checkpoint_every=2
+            ).collect()
+        }
     assert lr == lb
+    # the edge relation plus the one checkpoint_every round (t=2 of 4);
+    # the other per-round persists stay local whatever the conf
+    assert len(_checkpoint_rdds(tmp_path / "lp")) == 2
 
     docs = spark.createDataFrame(
         [(i, "the quick brown fox " * 3 + ("jumps" if i % 2 else "sleeps"))
@@ -105,9 +130,10 @@ def test_reliable_checkpoint_parity(spark, tmp_path):
     key = lambda df: {  # noqa: E731
         (r.id_a, r.id_b): (r.inter, r.jaccard) for r in df.collect()
     }
-    assert key(setsim.setsim_join(docs, reliable=True)) == key(
-        setsim.setsim_join(docs)
-    )
+    with spark_conf(RELIABLE, checkpoint_dir=tmp_path / "ss"):
+        rel_pairs = key(setsim.setsim_join(docs))
+    assert rel_pairs == key(setsim.setsim_join(docs))
+    assert _checkpoint_rdds(tmp_path / "ss")
 
 
 def test_pagerank_star_hub_ranks_highest(spark):

@@ -14,7 +14,11 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from renkodf_spark.operators import dedup, multimodal, similarity, text
+from renkodf_spark.operators import corpus, dedup, multimodal, setsim, similarity, text
+from renkodf_spark.plans.hints import VERDICT_BROADCAST_CONF
+from renkodf_spark.plans.persist import RELIABLE_CONF
+
+RELIABLE = {RELIABLE_CONF: "true"}
 
 # ---------------------------------------------------------------- fixtures
 
@@ -1693,12 +1697,13 @@ def test_cluster_labels_shuffled_id_path_logarithmic(spark):
     assert got == {(i, 0) for i in range(256)}
 
 
-def test_reliable_session_conf_through_pretrain_end_to_end(spark, sf_dir, tmp_path):
+def test_reliable_session_conf_through_pretrain_end_to_end(
+    spark, sf_dir, tmp_path, spark_conf
+):
     """VERDICT r14 item 2: the persist_block reliability choice must
-    reach every call site. Rather than thread reliable= through every
-    query-level composition, persist_block(reliable=None) now resolves
-    the session conf spark.renkodf.persist.reliable — one switch routes
-    ALL lineage-truncation points of a DAG through the fault-tolerant
+    reach every call site. persist_block resolves the session conf
+    spark.renkodf.persist.reliable — one switch routes ALL
+    lineage-truncation points of a DAG through the fault-tolerant
     checkpoint store. Prove it end-to-end on the deepest composed DAG
     (pretrain_end_to_end: 5+ persist sites across dedup/gopher/decon/
     temperature stages) with identical rows, and prove the conf is
@@ -1710,15 +1715,8 @@ def test_reliable_session_conf_through_pretrain_end_to_end(spark, sf_dir, tmp_pa
     base = sorted(map(tuple, builder(spark, sf_dir).collect()))
 
     ckpt = tmp_path / "reliable-ckpt"
-    had_dir = spark.sparkContext.getCheckpointDir()
-    spark.sparkContext.setCheckpointDir(str(ckpt))
-    spark.conf.set("spark.renkodf.persist.reliable", "true")
-    try:
+    with spark_conf(RELIABLE, checkpoint_dir=ckpt):
         rel = sorted(map(tuple, builder(spark, sf_dir).collect()))
-    finally:
-        spark.conf.unset("spark.renkodf.persist.reliable")
-        if had_dir is not None:
-            spark.sparkContext.setCheckpointDir(had_dir)
     assert rel == base
     # the reliable path really ran: checkpoint RDD dirs were written
     import os as _os
@@ -1729,20 +1727,101 @@ def test_reliable_session_conf_through_pretrain_end_to_end(spark, sf_dir, tmp_pa
     assert written, "reliable=true session conf produced no checkpoint files"
 
 
-def test_persist_block_conf_default_resolution(spark, tmp_path):
-    """persist_block(reliable=None) consults spark.renkodf.persist.
-    reliable; an explicit argument always wins over the conf."""
+def _rows(*dfs):
+    return [sorted(map(repr, df.collect())) for df in dfs]
+
+
+def _docs_df(spark):
+    return spark.createDataFrame(DOCS, "doc_id long, text string")
+
+
+def _setsim_incremental(spark):
+    docs = _docs_df(spark)
+    index = setsim.setsim_index(docs.filter("doc_id < 4"))
+    return _rows(setsim.incremental_setsim_pairs(docs.filter("doc_id >= 4"), *index))
+
+
+def _bigram_lm(spark):
+    uni, bi, oov = text.bigram_lm_train(_docs_df(spark))
+    return _rows(uni, bi), oov
+
+
+# the operators whose persist points no other test runs with
+# spark.renkodf.persist.reliable on, each on a small input
+_RELIABLE_OPS = {
+    "setsim_index": lambda spark: _rows(*setsim.setsim_index(_docs_df(spark))),
+    "incremental_setsim_pairs": _setsim_incremental,
+    "containment_join": lambda spark: _rows(setsim.containment_join(_docs_df(spark))),
+    "dsir_weights": lambda spark: _rows(corpus.dsir_weights(
+        _docs_df(spark), _docs_df(spark).filter("doc_id < 3"), n_buckets=64
+    )),
+    "train_ivf_centroids": lambda spark: _rows(similarity.train_ivf_centroids(
+        spark.createDataFrame(VECS, "vec_id long, embedding array<double>, label string"),
+        dim=4, n_planes=2, iters=2,
+    )),
+    "semantic_dedup": lambda spark: _rows(
+        similarity.semantic_dedup(*_sem_fixture(spark), threshold=0.95)
+    ),
+    "knn_edges_from_routed": lambda spark: _rows(
+        similarity.knn_graph(*_sem_fixture(spark), k=2)
+    ),
+    "derive_bigram_model": _bigram_lm,
+}
+
+
+@pytest.mark.parametrize("op", sorted(_RELIABLE_OPS))
+def test_reliable_conf_parity_per_operator(spark, tmp_path, spark_conf, op):
+    """With spark.renkodf.persist.reliable on, each operator returns the
+    same rows and its persist points write to the checkpoint dir."""
+    base = _RELIABLE_OPS[op](spark)
+    with spark_conf(RELIABLE, checkpoint_dir=tmp_path):
+        rel = _RELIABLE_OPS[op](spark)
+    assert rel == base
+    assert list(tmp_path.glob("*/rdd-*")), "no checkpoint reached the dir"
+
+
+def test_persist_block_conf_default_resolution(spark, tmp_path, spark_conf):
+    """persist_block consults spark.renkodf.persist.reliable: local
+    blocks by default, checkpoint-dir blocks when it is true, and an
+    eager error when it is true with no checkpoint dir."""
     from renkodf_spark.plans.persist import persist_block
 
     df = spark.range(10)
     # conf unset -> local (no checkpoint dir needed)
-    assert persist_block(df).count() == 10
-    spark.conf.set("spark.renkodf.persist.reliable", "true")
-    try:
-        if spark.sparkContext.getCheckpointDir() is None:
-            with pytest.raises(ValueError, match="setCheckpointDir"):
-                persist_block(df)
-        # explicit False overrides the conf: no checkpoint dir required
-        assert persist_block(df, reliable=False).count() == 10
-    finally:
-        spark.conf.unset("spark.renkodf.persist.reliable")
+    with spark_conf({}, checkpoint_dir=None):
+        assert persist_block(df).count() == 10
+    with spark_conf(RELIABLE, checkpoint_dir=None):
+        with pytest.raises(ValueError, match="setCheckpointDir"):
+            persist_block(df)
+    with spark_conf(RELIABLE, checkpoint_dir=tmp_path / "ck"):
+        assert persist_block(df).count() == 10
+    assert list((tmp_path / "ck").glob("*/rdd-*"))
+
+
+@pytest.mark.parametrize(
+    "key,default", [(RELIABLE_CONF, False), (VERDICT_BROADCAST_CONF, True)]
+)
+def test_session_confs_parse_strictly(spark, tmp_path, spark_conf, key, default):
+    """Both boolean session confs accept true/false in any case and
+    reject anything else, naming the key and the value: "1" or "yes"
+    must not silently read as false (local, non-loss-safe checkpoints;
+    a dropped verdict broadcast)."""
+    from renkodf_spark.plans.hints import maybe_broadcast_verdict
+    from renkodf_spark.plans.persist import resolve_reliable
+
+    df = spark.range(3)
+    read = {
+        RELIABLE_CONF: lambda: resolve_reliable(spark),
+        VERDICT_BROADCAST_CONF: lambda: maybe_broadcast_verdict(df) is not df,
+    }[key]
+    assert spark.conf.get(key, None) is None and read() is default
+    for value, want in [
+        ("TRUE", True), ("true", True), ("False", False), ("false", False),
+        ("1", None), ("yes", None), ("0", None), ("no", None), ("", None),
+    ]:
+        with spark_conf({key: value}, checkpoint_dir=tmp_path):
+            if want is None:
+                with pytest.raises(ValueError, match=re.escape(key) + f".*'{value}'"):
+                    read()
+            else:
+                assert read() is want, value

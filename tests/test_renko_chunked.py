@@ -6,7 +6,10 @@ import numpy as np
 
 from renkodf_spark.operators.renko import renko
 from renkodf_spark.operators.renko_chunked import renko_chunked
+from renkodf_spark.plans.persist import RELIABLE_CONF
 from tests.test_spark_renko import _multi_symbol_ticks
+
+RELIABLE = {RELIABLE_CONF: "true"}
 
 
 def test_chunked_equals_oneshot(spark):
@@ -205,29 +208,34 @@ def test_chunked_multibrick_first_tick_drop(spark):
     assert chunked["brick_seq"].tolist() == list(range(len(chunked)))
 
 
-def test_chunked_reliable_checkpoint(spark, tmp_path):
-    """ADVICE r3: reliable_checkpoint=True survives executor loss by
-    checkpointing each window to the SparkContext checkpoint dir; it
-    must be bit-identical to the default path, and must refuse to run
-    without a checkpoint dir configured."""
+def test_chunked_reliable_checkpoint(spark, tmp_path, spark_conf):
+    """ADVICE r3: with spark.renkodf.persist.reliable=true each window is
+    checkpointed to the SparkContext checkpoint dir, which survives
+    executor loss; it must be bit-identical to the default path, and must
+    refuse to run, before any job, without a checkpoint dir configured."""
     import pytest
 
     pdf = _multi_symbol_ticks()
     ticks = spark.createDataFrame(pdf)
 
     sc = spark.sparkContext
-    assert sc.getCheckpointDir() is None or True  # dir may persist across tests
-    if sc.getCheckpointDir() is None:
-        with pytest.raises(ValueError, match="setCheckpointDir"):
-            renko_chunked(ticks, 1.0, window="2 minutes", reliable_checkpoint=True)
-    sc.setCheckpointDir(str(tmp_path / "ck"))
+    sc.setJobGroup("chunked-no-dir", "reliable conf without a checkpoint dir")
+    try:
+        with spark_conf(RELIABLE, checkpoint_dir=None):
+            with pytest.raises(ValueError, match="setCheckpointDir"):
+                renko_chunked(ticks, 1.0, window="2 minutes")
+        assert sc.statusTracker().getJobIdsForGroup("chunked-no-dir") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
 
     base = renko_chunked(ticks, 1.0, window="2 minutes").orderBy("symbol", "brick_seq").toPandas()
-    rel = (
-        renko_chunked(ticks, 1.0, window="2 minutes", reliable_checkpoint=True)
-        .orderBy("symbol", "brick_seq")
-        .toPandas()
-    )
+    with spark_conf(RELIABLE, checkpoint_dir=tmp_path / "ck"):
+        rel = (
+            renko_chunked(ticks, 1.0, window="2 minutes")
+            .orderBy("symbol", "brick_seq")
+            .toPandas()
+        )
+    assert list((tmp_path / "ck").glob("*/rdd-*")), "no window reached the checkpoint dir"
     assert len(base) == len(rel)
     for col in base.columns:
         np.testing.assert_array_equal(base[col].to_numpy(), rel[col].to_numpy(), err_msg=col)

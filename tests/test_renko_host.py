@@ -21,7 +21,9 @@ from renkodf_spark.operators.renko import (
     scan_group,
 )
 from renkodf_spark.operators.renko_chunked import renko_chunked
+from renkodf_spark.plans.persist import RELIABLE_CONF
 
+RELIABLE = {RELIABLE_CONF: "true"}
 UTC = pa.timestamp("us", tz="UTC")
 
 
@@ -133,7 +135,7 @@ def test_chunked_shares_renko_input_guard(spark):
             op(ticks, 1.0, price_col="price")
 
 
-def test_chunked_reliable_session_conf(spark, tmp_path):
+def test_chunked_reliable_session_conf(spark, tmp_path, spark_conf):
     """spark.renkodf.persist.reliable reaches renko_chunked's window
     checkpoints, like every other persist point: they land in the
     checkpoint dir, and the output is unchanged."""
@@ -142,12 +144,8 @@ def test_chunked_reliable_session_conf(spark, tmp_path):
     ticks = spark.createDataFrame(_multi_symbol_ticks())
     base = renko_chunked(ticks, 1.0, window="2 minutes")
     ckpt = tmp_path / "reliable-ckpt"
-    spark.sparkContext.setCheckpointDir(str(ckpt))
-    spark.conf.set("spark.renkodf.persist.reliable", "true")
-    try:
+    with spark_conf(RELIABLE, checkpoint_dir=ckpt):
         rel = renko_chunked(ticks, 1.0, window="2 minutes")
         written = [f for _r, _d, fs in os.walk(ckpt) for f in fs]
         assert written, "the session conf did not reach the window checkpoints"
         _frames_equal(base, rel)
-    finally:
-        spark.conf.unset("spark.renkodf.persist.reliable")
