@@ -84,6 +84,7 @@ from renkodf_spark.operators.renko import (
 )
 from renkodf_spark.plans.persist import persist_block, resolve_reliable
 from renkodf_spark.schema import WIDE_COLUMN_NAMES, WIDE_SCHEMA
+from renkodf_spark.sources.lakehouse import hadoop_fs
 
 
 def renko_chunked(
@@ -171,9 +172,8 @@ def renko_chunked(
 def _delete_path(spark, path: str) -> None:
     """Recursive delete through the Hadoop FileSystem API, so cleanup
     works for any scheme (local, HDFS, S3A) the staging dir lives on."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    hpath.getFileSystem(spark._jsc.hadoopConfiguration()).delete(hpath, True)
+    fs, Path = hadoop_fs(spark, path)
+    fs.delete(Path(path), True)
 
 
 def _hot_plan(spark, staged, threshold: int, target: int) -> dict:

@@ -31,40 +31,10 @@ from renkodf_spark.queries import pipeline10  # noqa: F401
 from renkodf_spark.queries import pipeline11  # noqa: F401
 
 # Rotation rule: first the queries whose builders reach code the latest
-# change touched (here: the operators with persist points, and the strict
-# session-conf reader), then the renko_* product surface.
+# change touched (here: renko_chunked's staging cleanup, now through the
+# shared Hadoop FileSystem handle; no query reaches a streaming writer),
+# then the renko_* product surface.
 _PRIORITY = [
-    "decontaminated_corpus",
-    "pretrain_end_to_end",
-    "curation_end_to_end",
-    "knn_graph_edges",
-    "knn_communities_indexed",
-    "signed_lm_score_quantiles",
-    "signed_weighted_quantiles",
-    "semantic_dedup_keep",
-    "setsim_exact_join",
-    "ivf_train_unlabeled",
-    "dsir_weights_en",
-    "dsir_top_sample",
-    "bigram_lm_doc_quality",
-    "bigram_perplexity_buckets",
-    "mutual_knn_cluster_labels",
-    "knn_pagerank",
-    "knn_communities",
-    "signed_score_trim",
-    "lang_temperature_sample",
-    "knn_trustrank",
-    "knn_pagerank_weighted",
-    "knn_triangle_counts",
-    "knn_density_tiers",
-    "knn_pagerank_indexed",
-    "knn_trustrank_indexed",
-    "setsim_incremental_join",
-    "setsim_cluster_labels",
-    "setsim_containment_join",
-    "bigram_lm_transitions",
-    "semantic_dedup_capped",
-    "ann_recall_planted_unlabeled",
     "renko_chunked_wide",
     "renko_subchunked_wide",
     "renko_wicks",

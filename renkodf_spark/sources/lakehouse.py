@@ -25,11 +25,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 
-def _fs(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return fs, hpath, jvm
+def hadoop_fs(spark: SparkSession, path: str):
+    """``(fs, Path)``: the Hadoop FileSystem holding ``path`` and the JVM
+    ``Path`` class. The one place a FileSystem handle is built, so every
+    list, rename and delete works on any scheme (local, HDFS, S3A)."""
+    Path = spark._jvm.org.apache.hadoop.fs.Path
+    return Path(path).getFileSystem(spark._jsc.hadoopConfiguration()), Path
 
 
 class VersionedTable:
@@ -47,7 +48,8 @@ class VersionedTable:
     # ------------------------------------------------------------ catalog
 
     def _version_dirs(self, committed_only: bool) -> list[int]:
-        fs, root, jvm = _fs(self.spark, self.path)
+        fs, Path = hadoop_fs(self.spark, self.path)
+        root = Path(self.path)
         if not fs.exists(root):
             return []
         out = []
@@ -58,7 +60,7 @@ class VersionedTable:
                     n = int(name[2:])
                 except ValueError:
                     continue
-                marker = jvm.org.apache.hadoop.fs.Path(status.getPath(), "_SUCCESS")
+                marker = Path(status.getPath(), "_SUCCESS")
                 if not committed_only or fs.exists(marker):
                     out.append(n)
         return sorted(out)
@@ -149,9 +151,9 @@ class VersionedTable:
             doomed.update(v for v in orphans if v < oldest_kept)
         elif orphans:
             doomed.update(orphans[:-1])
-        fs, _, jvm = _fs(self.spark, self.path)
+        fs, Path = hadoop_fs(self.spark, self.path)
         for v in sorted(doomed):
-            fs.delete(jvm.org.apache.hadoop.fs.Path(self._version_path(v)), True)
+            fs.delete(Path(self._version_path(v)), True)
         return sorted(doomed)
 
 

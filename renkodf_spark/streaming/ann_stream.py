@@ -24,9 +24,9 @@ append-only-generation protocol to the vector index:
   routing, and intra-batch duplicate ids collapse deterministically
   (smallest vector digest wins) so at-least-once replays index the
   same row;
-* writes are partition overwrites keyed by batch_id → replays are
-  idempotent; ``compact_every=K`` folds old generations via
-  :func:`~renkodf_spark.streaming.merge_stream.compact_index_generations`
+* ``data`` is a delta store of :mod:`renkodf_spark.streaming.
+  generations` (replay-idempotent generation overwrites);
+  ``compact_every=K`` folds old generations with its compactor
   (keeping the ``cell=`` sub-partitioning, so pruning survives),
   bounding the directory count on a long-lived stream.
 
@@ -46,7 +46,8 @@ import posixpath
 
 from pyspark.sql import DataFrame, functions as F
 
-from renkodf_spark.streaming.curation_stream import _is_missing_path
+from renkodf_spark.sources.lakehouse import hadoop_fs
+from renkodf_spark.streaming import generations as gens
 
 
 def ivf_index_writer(
@@ -58,7 +59,6 @@ def ivf_index_writer(
     carry: tuple = (),
     enforce_append_only: bool = True,
     compact_every: int | None = None,
-    compact_target_files: int = 4,
 ):
     """``foreachBatch`` writer maintaining an IVF vector index from an
     embedding stream — the incremental counterpart of
@@ -88,12 +88,16 @@ def ivf_index_writer(
     cent_rows = centroids.select("cell", "centroid").collect()
     cent_schema = centroids.select("cell", "centroid").schema
 
+    data_dir = posixpath.join(state_path, "data")
+    cent_path = posixpath.join(state_path, "centroids")
+
     def write_batch(batch: DataFrame, batch_id: int) -> None:
         from pyspark.sql.window import Window
 
         spark = batch.sparkSession
+        if gens.compaction_due(compact_every, batch_id):
+            gens.compact_index_generations(spark, data_dir, batch_id, partition_by="cell")
         cents = spark.createDataFrame(cent_rows, cent_schema)
-        data_dir = posixpath.join(state_path, "data")
 
         # intra-batch duplicate ids collapse deterministically
         digest = F.md5(F.to_json(F.struct(F.col(vec_col))))
@@ -103,31 +107,14 @@ def ivf_index_writer(
             .filter(F.col("__rn") == 1)
             .drop("__rn")
         )
-        if enforce_append_only:
-            # drop ids already indexed by a PRIOR generation (batch N
-            # probes only generations < N, so replays of N are
-            # idempotent); cost documented in the docstring
-            try:
-                seen = (
-                    spark.read.parquet(data_dir)
-                    .filter(F.col("batch_id") < batch_id)
-                    .select(F.col("id").alias(id_col))
-                    .distinct()
-                )
-                batch = batch.join(seen, id_col, "left_anti")
-            except Exception as exc:
-                # first trigger: the dir doesn't exist; an EMPTY first
-                # generation (all-duplicate or empty batch) leaves only
-                # _SUCCESS markers, which fails schema inference rather
-                # than the path check — both mean "nothing indexed yet"
-                if not (_is_missing_path(exc) or "UNABLE_TO_INFER_SCHEMA" in str(exc)):
-                    raise
+        if enforce_append_only:  # cost documented in the docstring
+            batch = gens.drop_seen(batch, data_dir, batch_id, id_col)
         routed = nearest_centroid(
             batch, cents, id_col=id_col, vec_col=vec_col, carry=carry
         )
-        routed.select("id", "vec", "cell", *carry).write.mode("overwrite").partitionBy(
-            "cell"
-        ).parquet(posixpath.join(data_dir, f"batch_id={batch_id}"))
+        gens.write_gen(
+            routed.select("id", "vec", "cell", *carry), data_dir, batch_id, partition_by="cell"
+        )
         # the centroid table is frozen per index: write it once (a
         # per-trigger overwrite would briefly delete the directory a
         # concurrent ivf_topk_indexed reader is resolving). The skip is
@@ -136,26 +123,19 @@ def ivf_index_writer(
         # crashed mid-write leaves a partial dir without _SUCCESS, and
         # the foreachBatch replay must repair it with a fresh overwrite
         # rather than route every later reader against a corrupt table.
-        cent_path = posixpath.join(state_path, "centroids")
-        jvm = spark._jvm
-        success = jvm.org.apache.hadoop.fs.Path(
-            posixpath.join(cent_path, "_SUCCESS")
-        )
-        if not success.getFileSystem(spark._jsc.hadoopConfiguration()).exists(success):
+        fs, Path = hadoop_fs(spark, cent_path)
+        if not fs.exists(Path(posixpath.join(cent_path, "_SUCCESS"))):
             cents.write.mode("overwrite").parquet(cent_path)
 
-        if compact_every is not None and (batch_id + 1) % compact_every == 0:
-            from renkodf_spark.streaming.merge_stream import compact_index_generations
-
-            compact_index_generations(
-                spark,
-                data_dir,
-                batch_id,
-                partition_by="cell",
-                target_files=compact_target_files,
-            )
-
     return write_batch
+
+
+def _affected_cells(spark, state_path: str, batch_id: int) -> list:
+    """The ``cell=`` partition values of the vector generation just
+    written (a replay re-derives the identical set); none for an
+    empty/all-duplicate batch, which writes no cell dirs."""
+    gen = gens.read_gen(spark, posixpath.join(state_path, "data"), batch_id)
+    return [] if gen is None else [r["cell"] for r in gen.select("cell").distinct().collect()]
 
 
 def read_ivf_index_stream(spark, state_path: str) -> DataFrame:
@@ -176,7 +156,6 @@ def knn_graph_writer(
     max_cell_size: int | None = None,
     enforce_append_only: bool = True,
     compact_every: int | None = None,
-    compact_target_files: int = 4,
 ):
     """``foreachBatch`` writer maintaining an approximate kNN graph
     from an embedding stream — the incremental counterpart of
@@ -235,30 +214,16 @@ def knn_graph_writer(
         vec_col=vec_col,
         enforce_append_only=enforce_append_only,
         compact_every=compact_every,
-        compact_target_files=compact_target_files,
     )
 
     def write_batch(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
         base_writer(batch, batch_id)
-        data_dir = posixpath.join(state_path, "data")
-        gen_dir = posixpath.join(data_dir, f"batch_id={batch_id}")
-        # affected cells from the generation just written: its cell=
-        # partition values (replay re-derives the identical set). An
-        # empty/all-duplicate batch writes no cell dirs -> no-op.
-        try:
-            affected = [
-                r["cell"]
-                for r in spark.read.parquet(gen_dir).select("cell").distinct().collect()
-            ]
-        except Exception as exc:
-            if _is_missing_path(exc) or "UNABLE_TO_INFER_SCHEMA" in str(exc):
-                return
-            raise
+        affected = _affected_cells(spark, state_path, batch_id)
         if not affected:
             return
         store = (
-            spark.read.parquet(data_dir)
+            spark.read.parquet(posixpath.join(state_path, "data"))
             .filter(F.col("cell").isin(affected))
             .select("id", "vec", "cell")
         )
@@ -368,21 +333,11 @@ def knn_centrality_writer(
     def write_batch(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
         inner(batch, batch_id)
-        data_dir = posixpath.join(state_path, "data")
-        gen_dir = posixpath.join(data_dir, f"batch_id={batch_id}")
-        try:
-            affected = [
-                r["cell"]
-                for r in spark.read.parquet(gen_dir).select("cell").distinct().collect()
-            ]
-        except Exception as exc:
-            if _is_missing_path(exc) or "UNABLE_TO_INFER_SCHEMA" in str(exc):
-                return
-            raise
+        affected = _affected_cells(spark, state_path, batch_id)
         if not affected:
             return
 
-        ids = spark.read.parquet(data_dir).select("id", "cell")
+        ids = spark.read.parquet(posixpath.join(state_path, "data")).select("id", "cell")
         if seed_ids is not None:
             seed_df = spark.createDataFrame([(s,) for s in seed_ids], "id long")
             n_seed = ids.join(F.broadcast(seed_df), "id").count()
@@ -390,19 +345,8 @@ def knn_centrality_writer(
             n_seed = ids.count()
 
         meta_dir = posixpath.join(state_path, "ranks_meta")
-        prev_n = None
-        try:
-            prev = (
-                spark.read.parquet(meta_dir)
-                .filter(F.col("batch_id") < batch_id)
-                .orderBy(F.col("batch_id").desc())
-                .limit(1)
-                .collect()
-            )
-            prev_n = prev[0]["n_seed"] if prev else None
-        except Exception as exc:
-            if not (_is_missing_path(exc) or "UNABLE_TO_INFER_SCHEMA" in str(exc)):
-                raise
+        prev = gens.read_latest(spark, meta_dir, before=batch_id)
+        prev_n = None if prev is None else prev.first()["n_seed"]
 
         if prev_n is not None and prev_n == n_seed:
             scope = ids.filter(F.col("cell").isin(affected))
@@ -410,14 +354,9 @@ def knn_centrality_writer(
             scope = ids  # |S| changed (or first trigger): full refixpoint
         scope = scope.select("id", "cell")
 
-        edges_dir = posixpath.join(state_path, "edges")
-        try:
-            edges = spark.read.parquet(edges_dir).select("src", "dst", "cell")
-        except Exception as exc:
-            if _is_missing_path(exc) or "UNABLE_TO_INFER_SCHEMA" in str(exc):
-                edges = spark.createDataFrame([], "src long, dst long, cell int")
-            else:
-                raise
+        edges = gens.read_store(
+            spark, posixpath.join(state_path, "edges"), schema="src long, dst long, cell int"
+        ).select("src", "dst", "cell")
         scope_cells = scope.select("cell").distinct()
         edges = edges.join(F.broadcast(scope_cells), "cell").select("src", "dst")
 
@@ -445,11 +384,7 @@ def knn_centrality_writer(
             .partitionBy("cell")
             .parquet(posixpath.join(state_path, "ranks"))
         )
-        spark.createDataFrame(
-            [(int(n_seed),)], "n_seed long"
-        ).write.mode("overwrite").parquet(
-            posixpath.join(meta_dir, f"batch_id={batch_id}")
-        )
+        gens.write_gen(spark.createDataFrame([(int(n_seed),)], "n_seed long"), meta_dir, batch_id)
 
     return write_batch
 
@@ -509,38 +444,23 @@ def knn_communities_writer(
     def write_batch(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
         inner(batch, batch_id)
-        data_dir = posixpath.join(state_path, "data")
-        gen_dir = posixpath.join(data_dir, f"batch_id={batch_id}")
-        try:
-            affected = [
-                r["cell"]
-                for r in spark.read.parquet(gen_dir).select("cell").distinct().collect()
-            ]
-        except Exception as exc:
-            if _is_missing_path(exc) or "UNABLE_TO_INFER_SCHEMA" in str(exc):
-                return
-            raise
+        affected = _affected_cells(spark, state_path, batch_id)
         if not affected:
             return
         nodes = (
-            spark.read.parquet(data_dir)
+            spark.read.parquet(posixpath.join(state_path, "data"))
             .filter(F.col("cell").isin(affected))
             .select("id", "cell")
         )
-        edges_dir = posixpath.join(state_path, "edges")
-        try:
-            g = (
-                spark.read.parquet(edges_dir)
-                .filter(F.col("cell").isin(affected))
-                .select("src", "dst", "cos_sim")
+        g = (
+            gens.read_store(
+                spark,
+                posixpath.join(state_path, "edges"),
+                schema="src long, dst long, cos_sim double, cell int",
             )
-        except Exception as exc:
-            if _is_missing_path(exc) or "UNABLE_TO_INFER_SCHEMA" in str(exc):
-                g = spark.createDataFrame(
-                    [], "src long, dst long, cos_sim double"
-                )
-            else:
-                raise
+            .filter(F.col("cell").isin(affected))
+            .select("src", "dst", "cos_sim")
+        )
         pairs = mutual_knn_edges(g)
         und = pairs.selectExpr("id_a as src", "id_b as dst").unionByName(
             pairs.selectExpr("id_b as src", "id_a as dst")

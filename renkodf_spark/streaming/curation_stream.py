@@ -19,33 +19,32 @@ they land in the lake. Structured Streaming expresses both directly:
 Scale: state lives in the state store keyed by digest, sized by
 (arrival rate x watermark horizon), not by corpus size; the quality
 filter is a narrow map. No Python in either path.
+
+The ``foreachBatch`` writers below (quota, Bloom, HLL, count-min,
+dHash, NB, bigram-LM and quantile-sketch state) keep their state in
+``batch_id=N`` generation stores; the read, write, compaction and
+replay protocol is described once in :mod:`renkodf_spark.streaming.
+generations`.
 """
 
 from __future__ import annotations
 
+import posixpath
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from renkodf_spark.streaming import generations as gens
 
-def _is_missing_path(exc: Exception) -> bool:
-    """True iff ``exc`` is Spark's nonexistent-read-path error —
-    AnalysisException with error class PATH_NOT_FOUND ("Path does not
-    exist" on older versions). The stateful writers below treat ONLY
-    that case as "first batch"; any other read failure must fail the
-    trigger."""
-    name = None
-    for attr in ("getCondition", "getErrorClass"):
-        fn = getattr(exc, attr, None)
-        if callable(fn):
-            try:
-                name = fn()
-            except Exception:
-                name = None
-            if name:
-                break
-    if name is not None:
-        return name == "PATH_NOT_FOUND"
-    return "Path does not exist" in str(exc)
+
+def _bucketed_delta(df: DataFrame, batch_id: int, key, n_buckets: int) -> DataFrame:
+    """A delta generation's rows: tagged with their ``src_batch`` and
+    hash-bucketed on ``key`` into ``tb`` (one key's rows co-located)."""
+    from renkodf_spark.operators.search import _term_bucket_expr
+
+    return df.withColumn("src_batch", F.lit(batch_id).cast("long")).withColumn(
+        "tb", _term_bucket_expr(key, n_buckets)
+    )
 
 
 def dedup_stream(
@@ -119,40 +118,29 @@ def quota_cap_writer(
     first-come (earlier triggers fill the quota first). A persisted
     per-group admitted-count table (two columns, one row per group —
     bytes) carries the state; both it and the admitted output are
-    written as ``batch_id=N`` partition overwrites, so a replayed batch
-    reproduces its own decisions instead of double-admitting under
-    foreachBatch's at-least-once contract.
+    delta stores (:mod:`renkodf_spark.streaming.generations`), so a
+    replayed batch reproduces its own decisions instead of
+    double-admitting under foreachBatch's at-least-once contract.
 
     Scale: the batch ranking shuffles one micro-batch keyed by group
     (bounded by trigger size, not corpus size); the counts state is a
     broadcast-sized aggregate of the output's (batch_id, group, n)
     partitions — nothing ever re-reads admitted document text.
     """
-    import posixpath
-
     from pyspark.sql import Window
 
     def write_batch(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
-        grp_schema = batch.select(F.col(group_col).alias("__grp")).schema
-        try:
-            prior = (
-                spark.read.parquet(counts_path)
-                .filter(F.col("batch_id") < batch_id)
-                .groupBy("__grp")
-                .agg(F.sum("admitted").alias("__prior"))
-            )
-        except Exception as exc:
-            # Treat ONLY a missing counts path as "first batch". Any other
-            # failure (corrupt footer, permissions, transient storage
-            # error) must fail the batch so foreachBatch retries it —
-            # proceeding with prior=0 would silently admit past the
-            # lifetime quota.
-            if not _is_missing_path(exc):
-                raise
-            prior = spark.createDataFrame([], grp_schema).withColumn(
-                "__prior", F.lit(0).cast("long")
-            )
+        # an unreadable counts store fails the trigger (the store's one
+        # rule): resuming from prior=0 would admit past the lifetime quota
+        counts_schema = batch.select(
+            F.col(group_col).alias("__grp"), F.lit(0).cast("long").alias("admitted")
+        ).schema
+        prior = (
+            gens.read_before(spark, counts_path, batch_id, schema=counts_schema)
+            .groupBy("__grp")
+            .agg(F.sum("admitted").alias("__prior"))
+        )
         key = F.md5(F.concat(F.lit(salt + ":"), F.col(id_col).cast("string")))
         w = Window.partitionBy(group_col).orderBy(key, F.col(id_col))
         ranked = batch.withColumn("__rk", F.row_number().over(w))
@@ -163,18 +151,13 @@ def quota_cap_writer(
             .filter(F.col("__rk") <= per_group - F.coalesce(F.col("__prior"), F.lit(0)))
             .select(*batch.columns)
         )
-        admitted.write.mode("overwrite").parquet(
-            posixpath.join(out_path, f"batch_id={batch_id}")
-        )
+        gens.write_gen(admitted, out_path, batch_id)
         counts = (
-            spark.read.parquet(out_path)
-            .filter(F.col("batch_id") == batch_id)
+            gens.read_gen(spark, out_path, batch_id)
             .groupBy(F.col(group_col).alias("__grp"))
             .agg(F.count(F.lit(1)).alias("admitted"))
         )
-        counts.write.mode("overwrite").parquet(
-            posixpath.join(counts_path, f"batch_id={batch_id}")
-        )
+        gens.write_gen(counts, counts_path, batch_id)
 
     return write_batch
 
@@ -203,49 +186,23 @@ def quota_select_writer(
     ``groups x per_group`` rows regardless of corpus size, and each
     trigger ranks only ``state + batch`` rows.
 
-    Layout & idempotence: each trigger writes the full selection as a
-    ``batch_id=N`` snapshot and reads the latest snapshot with
-    ``batch_id < N`` as its state, so a replayed micro-batch
-    (at-least-once) recomputes from the same inputs — the
-    ``dropDuplicates(id)`` makes re-unioning an already-folded batch a
-    no-op. Snapshots older than the one just consumed are deleted
-    (driver-side metadata ops); the latest prior snapshot always
-    survives so any replay can still find its state. Reading the
-    state back costs one bounded scan; only a genuinely missing
-    selection path means "first trigger" — any other read failure
-    propagates so the trigger retries (same contract as
-    :func:`quota_cap_writer`).
+    Layout & idempotence: a snapshot store (:mod:`renkodf_spark.
+    streaming.generations`) holding the full selection per trigger; the
+    ``dropDuplicates(id)`` makes re-unioning an already-folded batch on
+    replay a no-op. Snapshots older than the one just consumed are
+    pruned after each trigger, so the store holds two.
 
     The persisted ``sample_rank`` is the row's rank over the full
     concatenated history, not just the surviving rows: every discarded
     row's key exceeds its group's selection maximum, so ranks computed
     within ``state + batch`` coincide with global ranks.
     """
-    import posixpath
-
     from renkodf_spark.operators.corpus import quota_sample
 
     def write_batch(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
-        prev_id = None
-        try:
-            snaps = spark.read.parquet(selection_path)
-            prev_id = (
-                snaps.filter(F.col("batch_id") < batch_id)
-                .agg(F.max("batch_id").alias("m"))
-                .first()["m"]
-            )
-        except Exception as exc:
-            if not _is_missing_path(exc):
-                raise
-        if prev_id is not None:
-            state = (
-                spark.read.parquet(posixpath.join(selection_path, f"batch_id={prev_id}"))
-                .select(*batch.columns)
-            )
-            pool = state.unionByName(batch)
-        else:
-            pool = batch
+        state = gens.read_latest(spark, selection_path, before=batch_id)
+        pool = batch if state is None else state.select(*batch.columns).unionByName(batch)
         sel = quota_sample(
             pool.dropDuplicates([id_col]),
             group_col,
@@ -253,21 +210,8 @@ def quota_select_writer(
             id_col=id_col,
             salt=salt,
         )
-        sel.write.mode("overwrite").parquet(
-            posixpath.join(selection_path, f"batch_id={batch_id}")
-        )
-        # prune snapshots older than the one just consumed — a replay of
-        # THIS batch still finds prev_id, a replay of any older batch is
-        # impossible once this one's commit lands in the checkpoint
-        sc = spark.sparkContext
-        HPath = sc._jvm.org.apache.hadoop.fs.Path
-        fs = HPath(selection_path).getFileSystem(sc._jsc.hadoopConfiguration())
-        for st in fs.listStatus(HPath(selection_path)):
-            name = st.getPath().getName()
-            if name.startswith("batch_id="):
-                bid = int(name.split("=", 1)[1])
-                if bid != batch_id and (prev_id is None or bid != prev_id):
-                    fs.delete(st.getPath(), True)
+        gens.write_gen(sel, selection_path, batch_id)
+        gens.prune_before(spark, selection_path, batch_id)
 
     return write_batch
 
@@ -316,21 +260,16 @@ def bloom_dedup_writer(
     :func:`dedup_stream` is the precise (state-store) alternative when
     dropping new documents is unacceptable.
 
-    State layout: ONE cumulative sketch snapshot per trigger, written
-    as a ``batch_id=N`` partition overwrite; each trigger reads only
-    the LATEST prior snapshot (not a union of all), so the state read
-    is O(n_bits) regardless of trigger count, and a replayed batch
-    recomputes against the same immutable prior snapshot — idempotent
-    under foreachBatch's at-least-once contract. Building the new
-    snapshot from the ADMITTED keys only is lossless: a dropped row's
-    bits are already all set in the prior sketch, so OR-ing it in would
-    change nothing.
+    State layout: a snapshot store (:mod:`renkodf_spark.streaming.
+    generations`) holding ONE cumulative sketch per trigger, so the
+    state read is O(n_bits) regardless of trigger count. Building the
+    new snapshot from the ADMITTED keys only is lossless: a dropped
+    row's bits are already all set in the prior sketch, so OR-ing it in
+    would change nothing.
 
     Within a batch, the first occurrence of each digest (smallest
     ``id_col``) wins — deterministic, so replays reproduce decisions.
     """
-    import posixpath
-
     from pyspark.sql import Window
 
     from renkodf_spark.functions import bloom
@@ -344,20 +283,9 @@ def bloom_dedup_writer(
         firsts = keyed.withColumn("__rn", F.row_number().over(w)).filter(
             F.col("__rn") == 1
         )
-        try:
-            snaps = spark.read.parquet(sketch_path).filter(F.col("batch_id") < batch_id)
-            latest = snaps.agg(F.max("batch_id")).collect()[0][0]  # bounded scalar
-            prior = (
-                snaps.filter(F.col("batch_id") == latest).select("word_idx", "bits")
-                if latest is not None
-                else None
-            )
-        except Exception as exc:
-            if not _is_missing_path(exc):
-                raise
-            prior = None
-        if prior is None:
-            prior = spark.createDataFrame([], "word_idx long, bits long")
+        prior = gens.read_latest(
+            spark, sketch_path, before=batch_id, schema="word_idx long, bits long"
+        ).select("word_idx", "bits")
         admitted = (
             firsts.join(
                 bloom.bloom_might_contain(
@@ -367,14 +295,11 @@ def bloom_dedup_writer(
             )
             .select(*batch.columns, "__key")
         )
-        admitted.select(*batch.columns).write.mode("overwrite").parquet(
-            posixpath.join(out_path, f"batch_id={batch_id}")
-        )
+        gens.write_gen(admitted.select(*batch.columns), out_path, batch_id)
         new_sketch = (
             prior.union(
                 bloom.bloom_build(
-                    spark.read.parquet(out_path)
-                    .filter(F.col("batch_id") == batch_id)
+                    gens.read_gen(spark, out_path, batch_id)
                     .withColumn("__key", F.md5(F.lower(F.trim(F.col(text_col))))),
                     "__key",
                     n_bits=n_bits,
@@ -384,9 +309,7 @@ def bloom_dedup_writer(
             .groupBy("word_idx")
             .agg(F.bit_or("bits").alias("bits"))
         )
-        new_sketch.write.mode("overwrite").parquet(
-            posixpath.join(sketch_path, f"batch_id={batch_id}")
-        )
+        gens.write_gen(new_sketch, sketch_path, batch_id)
 
     return write_batch
 
@@ -406,12 +329,9 @@ def sketch_rollup_writer(
     persisted per-group state, so answering "how many distinct users /
     digests per group so far" never rescans or re-shuffles history).
 
-    State layout mirrors :func:`bloom_dedup_writer`: ONE cumulative
-    snapshot per trigger under ``batch_id=N`` (partition overwrite —
-    replay recomputes against the same immutable prior snapshot, so
-    at-least-once replays are idempotent), and each trigger reads only
-    the LATEST prior snapshot: the state read is O(groups), not
-    O(triggers). Merge is ``hll_union_agg`` — commutative and
+    State layout: a snapshot store (:mod:`renkodf_spark.streaming.
+    generations`), so the state read is O(groups), not O(triggers).
+    Merge is ``hll_union_agg`` — commutative and
     deterministic, so the lifetime sketch equals the batch sketch over
     the concatenated stream.
 
@@ -420,32 +340,21 @@ def sketch_rollup_writer(
     """
 
     def write_batch(batch: DataFrame, batch_id: int) -> None:
-        import posixpath
-
-        spark = batch.sparkSession
         cur = batch.groupBy(F.col(group_col).alias("__grp")).agg(
             F.hll_sketch_agg(value_col, F.lit(lg_config_k)).alias("sketch")
         )
-        try:
-            snaps = spark.read.parquet(sketch_path).filter(F.col("batch_id") < batch_id)
-            latest = snaps.agg(F.max("batch_id")).collect()[0][0]  # bounded scalar
-            prior = (
-                snaps.filter(F.col("batch_id") == latest).select("__grp", "sketch")
-                if latest is not None
-                else None
-            )
-        except Exception as exc:
-            if not _is_missing_path(exc):
-                raise
-            prior = None
+        prior = gens.read_latest(batch.sparkSession, sketch_path, before=batch_id)
         merged = cur if prior is None else (
-            prior.union(cur)
+            prior.select("__grp", "sketch")
+            .union(cur)
             .groupBy("__grp")
             .agg(F.hll_union_agg("sketch").alias("sketch"))
         )
-        merged.withColumn("estimate", F.hll_sketch_estimate("sketch")).write.mode(
-            "overwrite"
-        ).parquet(posixpath.join(sketch_path, f"batch_id={batch_id}"))
+        gens.write_gen(
+            merged.withColumn("estimate", F.hll_sketch_estimate("sketch")),
+            sketch_path,
+            batch_id,
+        )
 
     return write_batch
 
@@ -468,11 +377,8 @@ def cms_rollup_writer(
     stream — heavy-hitter estimates over all history with an
     O(width × depth) state read at any trigger count.
 
-    State layout mirrors :func:`bloom_dedup_writer` /
-    :func:`sketch_rollup_writer`: one cumulative snapshot per trigger
-    under ``batch_id=N`` (partition overwrite → at-least-once replays
-    are idempotent), each trigger reading only the LATEST prior
-    snapshot.
+    State layout: a snapshot store (:mod:`renkodf_spark.streaming.
+    generations`), one cumulative sketch per trigger.
 
     Probe the current state with ``functions.countmin.cms_estimate``
     against ``spark.read.parquet(path).filter(batch_id == latest)``.
@@ -480,28 +386,15 @@ def cms_rollup_writer(
     from renkodf_spark.functions import countmin
 
     def write_batch(batch: DataFrame, batch_id: int) -> None:
-        import posixpath
-
-        spark = batch.sparkSession
         cur = countmin.cms_build(
             batch, key_col, width=width, depth=depth, weight_col=weight_col
         )
-        try:
-            snaps = spark.read.parquet(sketch_path).filter(F.col("batch_id") < batch_id)
-            latest = snaps.agg(F.max("batch_id")).collect()[0][0]  # bounded scalar
-            prior = (
-                snaps.filter(F.col("batch_id") == latest).select("row", "col", "count")
-                if latest is not None
-                else None
-            )
-        except Exception as exc:
-            if not _is_missing_path(exc):
-                raise
-            prior = None
-        merged = cur if prior is None else countmin.cms_merge(prior, cur)
-        merged.write.mode("overwrite").parquet(
-            posixpath.join(sketch_path, f"batch_id={batch_id}")
+        prior = gens.read_latest(batch.sparkSession, sketch_path, before=batch_id)
+        merged = (
+            cur if prior is None
+            else countmin.cms_merge(prior.select("row", "col", "count"), cur)
         )
+        gens.write_gen(merged, sketch_path, batch_id)
 
     return write_batch
 
@@ -523,12 +416,9 @@ def dhash_dedup_writer(
     triggers equals the batch ``multimodal_dedup_keep`` election over
     the concatenated stream — pinned by test.
 
-    State layout mirrors :func:`bloom_dedup_writer` /
-    :func:`sketch_rollup_writer`: ONE cumulative election snapshot per
-    trigger under ``state_path/batch_id=N`` (partition overwrite — a
-    replayed batch recomputes against the same immutable prior
-    snapshot, idempotent under at-least-once), and each trigger reads
-    only the LATEST prior snapshot. Undecodable payloads elect under
+    State layout: a snapshot store (:mod:`renkodf_spark.streaming.
+    generations`) under ``state_path``, ONE cumulative election per
+    trigger. Undecodable payloads elect under
     their NULL hash group (status is carried in the snapshot), so no
     row is silently dropped.
 
@@ -544,8 +434,6 @@ def dhash_dedup_writer(
     elected keeper for that hash (smallest id) — first trigger, first
     occurrence wins, deterministic under replay.
     """
-    import posixpath
-
     from renkodf_spark.operators.multimodal import image_dhash
 
     def write_batch(batch: DataFrame, batch_id: int) -> None:
@@ -561,25 +449,10 @@ def dhash_dedup_writer(
             F.count(F.lit(1)).alias("n_dupes"),
             F.min("status").alias("status"),
         )
-        try:
-            snaps = spark.read.parquet(state_path).filter(F.col("batch_id") < batch_id)
-            latest = snaps.agg(F.max("batch_id")).collect()[0][0]  # bounded scalar
-            prior = (
-                snaps.filter(F.col("batch_id") == latest).select(
-                    "dhash_hi", "dhash_lo", "keeper_id", "n_dupes", "status"
-                )
-                if latest is not None
-                else None
-            )
-        except Exception as exc:
-            if not _is_missing_path(exc):
-                raise
-            prior = None
-        if prior is None:
-            prior = spark.createDataFrame(
-                [],
-                "dhash_hi long, dhash_lo long, keeper_id long, n_dupes long, status string",
-            )
+        prior = gens.read_latest(
+            spark, state_path, before=batch_id,
+            schema="dhash_hi long, dhash_lo long, keeper_id long, n_dupes long, status string",
+        )
         merged = (
             prior.unionByName(cur)
             .groupBy("dhash_hi", "dhash_lo")
@@ -589,9 +462,7 @@ def dhash_dedup_writer(
                 F.min("status").alias("status"),
             )
         )
-        merged.write.mode("overwrite").parquet(
-            posixpath.join(state_path, f"batch_id={batch_id}")
-        )
+        gens.write_gen(merged, state_path, batch_id)
         # admitted: the batch's elected keeper of each hash unseen by
         # the PRIOR snapshot (null-safe on the hash so undecodables
         # admit their first occurrence too)
@@ -606,9 +477,7 @@ def dhash_dedup_writer(
         admitted = batch.join(
             unseen.select(F.col("keeper_id").alias(id_col)), id_col
         )
-        admitted.select(*batch.columns).write.mode("overwrite").parquet(
-            posixpath.join(out_path, f"batch_id={batch_id}")
-        )
+        gens.write_gen(admitted.select(*batch.columns), out_path, batch_id)
 
     return write_batch
 
@@ -631,48 +500,38 @@ def nb_model_writer(
     model is exactly the batch :func:`classifier.nb_train` model of the
     concatenated stream (pinned by test).
 
-    State layout mirrors :func:`bloom_dedup_writer` /
-    :func:`cms_rollup_writer`: ONE cumulative snapshot per trigger
-    under ``batch_id=N`` (partition overwrite — at-least-once replays
-    recompute against the same immutable prior snapshot, idempotent),
-    each trigger reading only the LATEST prior snapshot: the state read
-    is O(vocabulary), not O(triggers).  Rows carry a ``kind`` column:
-    ``'term'`` rows hold token counts, the single ``'docs'`` row holds
-    the class document counts the prior derives from (kept apart from
-    term rows so no term string can collide with it).
+    State rows carry a ``kind`` column: ``'term'`` rows hold token
+    counts, the single ``'docs'`` row holds the class document counts
+    the prior derives from (kept apart from term rows so no term string
+    can collide with it).
 
     ``positive_col`` names a boolean column on the micro-batch (the
     labeling rule is applied upstream, e.g.
     ``df.withColumn("is_target", F.col("source") == "src0")``).
 
-    Cost honesty / the two state layouts:
+    Cost honesty / the two state layouts (both are generation stores,
+    :mod:`renkodf_spark.streaming.generations`):
 
-    * default (``n_buckets=None``): ONE cumulative snapshot per
-      trigger, REWRITTEN whole — O(vocabulary) per trigger, O(vocab)
-      latest-only reads.  Natural-language vocabularies plateau
+    * default (``n_buckets=None``): a snapshot store, ONE cumulative
+      snapshot per trigger REWRITTEN whole — O(vocabulary) per trigger,
+      O(vocab) latest-only reads.  Natural-language vocabularies plateau
       (Heaps' law) so the snapshot stays far smaller than the corpus.
-    * ``n_buckets=K``: the search-index generation protocol — each
-      trigger writes only its OWN counts as an append-only DELTA
-      generation under ``<path>/terms/batch_id=N/tb=...`` (term-hash
+    * ``n_buckets=K``: delta stores — each trigger writes only its OWN
+      counts under ``<path>/terms/batch_id=N/tb=...`` (term-hash
       sub-partitioned) + a one-row ``<path>/docs`` generation, so the
       trigger cost is O(batch vocabulary) no matter how large the
       lifetime vocabulary grows (high-cardinality term streams: URLs,
       ids).  Reads fold all generations with an exact sum;
-      ``compact_every=K`` bounds the generation count via
-      :func:`merge_stream.compact_index_generations` (delta rows carry
-      their ``src_batch``, so they are unique and the compactor's
-      crash-absorbing ``distinct`` — and the reader's — is exact, never
-      a count-collapsing dedup).
-
-    Both layouts are replay-idempotent (partition overwrite keyed by
-    batch_id; deltas are computed from the batch alone, the snapshot
-    recomputes against the immutable prior snapshot).
+      ``compact_every=K`` bounds the generation count via the shared
+      compactor.
 
     Derive the scoring model with :func:`read_nb_model` — it
     auto-detects the layout and yields identical (exact) models.
     """
     if compact_every is not None and n_buckets is None:
         raise ValueError("compact_every requires the bucketed layout (n_buckets)")
+    terms_path = posixpath.join(model_path, "terms")
+    docs_path = posixpath.join(model_path, "docs")
 
     def _batch_counts(batch: DataFrame):
         toks = F.split(F.trim(F.col(text_col)), r"\s+")
@@ -695,40 +554,25 @@ def nb_model_writer(
         return term_counts, doc_counts
 
     def write_batch_bucketed(batch: DataFrame, batch_id: int) -> None:
-        import posixpath
-
-        from renkodf_spark.operators.search import _term_bucket_expr
-        from renkodf_spark.streaming.merge_stream import compact_index_generations
-
-        spark = batch.sparkSession
+        if gens.compaction_due(compact_every, batch_id):
+            gens.compact_index_generations(
+                batch.sparkSession, terms_path, batch_id, partition_by="tb"
+            )
+            gens.compact_index_generations(batch.sparkSession, docs_path, batch_id)
         term_counts, doc_counts = _batch_counts(batch)
-        (
-            term_counts.withColumn("src_batch", F.lit(batch_id).cast("long"))
-            .withColumn("tb", _term_bucket_expr(F.col("term"), n_buckets))
-            .write.mode("overwrite")
-            .partitionBy("tb")
-            .parquet(posixpath.join(model_path, "terms", f"batch_id={batch_id}"))
+        gens.write_gen(
+            _bucketed_delta(term_counts, batch_id, F.col("term"), n_buckets),
+            terms_path,
+            batch_id,
+            partition_by="tb",
         )
-        doc_counts.withColumn(
-            "src_batch", F.lit(batch_id).cast("long")
-        ).write.mode("overwrite").parquet(
-            posixpath.join(model_path, "docs", f"batch_id={batch_id}")
+        gens.write_gen(
+            doc_counts.withColumn("src_batch", F.lit(batch_id).cast("long")),
+            docs_path,
+            batch_id,
         )
-        if compact_every is not None and (batch_id + 1) % compact_every == 0:
-            compact_index_generations(
-                spark,
-                posixpath.join(model_path, "terms"),
-                batch_id,
-                partition_by="tb",
-            )
-            compact_index_generations(
-                spark, posixpath.join(model_path, "docs"), batch_id
-            )
 
     def write_batch(batch: DataFrame, batch_id: int) -> None:
-        import posixpath
-
-        spark = batch.sparkSession
         term_counts, doc_counts = _batch_counts(batch)
         cur = term_counts.select(
             F.lit("term").alias("kind"), "term", "cnt_pos", "cnt_neg"
@@ -740,20 +584,7 @@ def nb_model_writer(
                 "cnt_neg",
             )
         )
-        try:
-            snaps = spark.read.parquet(model_path).filter(F.col("batch_id") < batch_id)
-            latest = snaps.agg(F.max("batch_id")).collect()[0][0]  # bounded scalar
-            prior = (
-                snaps.filter(F.col("batch_id") == latest).select(
-                    "kind", "term", "cnt_pos", "cnt_neg"
-                )
-                if latest is not None
-                else None
-            )
-        except Exception as exc:
-            if not _is_missing_path(exc):
-                raise
-            prior = None
+        prior = gens.read_latest(batch.sparkSession, model_path, before=batch_id)
         merged = cur if prior is None else (
             prior.unionByName(cur)
             .groupBy("kind", "term")
@@ -762,9 +593,7 @@ def nb_model_writer(
                 F.sum("cnt_neg").cast("long").alias("cnt_neg"),
             )
         )
-        merged.write.mode("overwrite").parquet(
-            posixpath.join(model_path, f"batch_id={batch_id}")
-        )
+        gens.write_gen(merged, model_path, batch_id)
 
     return write_batch_bucketed if n_buckets is not None else write_batch
 
@@ -779,48 +608,20 @@ def read_nb_model(spark, model_path: str, *, alpha: int = 1):
     ``round(ln(N_pos / N_neg) * 1e6)`` for
     ``classifier.nb_score(..., prior_micros=...)``.
 
-    Auto-detects the layout: the bucketed delta form (a ``terms/``
-    subdirectory) folds every generation with an exact sum — the
-    leading ``distinct`` absorbs a compaction crash-mid-delete leaving
-    a delta visible twice (rows carry ``src_batch``, so identical rows
-    ARE the same delta, never two real contributions) — while the
-    default form reads the latest cumulative snapshot only.
+    Auto-detects the layout: the bucketed delta form (a ``docs/``
+    store, which holds a row per trigger) folds every generation with
+    an exact sum, while the default form reads the latest cumulative
+    snapshot only.
     """
-    import posixpath
-
     if alpha <= 0:
         raise ValueError(f"alpha must be positive, got {alpha}")
-    try:
+    docs = gens.read_store(spark, posixpath.join(model_path, "docs"))
+    if docs is not None:
         terms = spark.read.parquet(posixpath.join(model_path, "terms"))
-        bucketed = True
-    except Exception as exc:
-        if not _is_missing_path(exc):
-            raise
-        bucketed = False
-    if bucketed:
-        counts = (
-            terms.select("term", "cnt_pos", "cnt_neg", "src_batch")
-            .distinct()
-            .groupBy("term")
-            .agg(
-                F.sum("cnt_pos").cast("long").alias("cnt_pos"),
-                F.sum("cnt_neg").cast("long").alias("cnt_neg"),
-            )
-        )
-        (drow,) = (
-            spark.read.parquet(posixpath.join(model_path, "docs"))
-            .select("cnt_pos", "cnt_neg", "src_batch")
-            .distinct()
-            .agg(
-                F.sum("cnt_pos").cast("long").alias("cnt_pos"),
-                F.sum("cnt_neg").cast("long").alias("cnt_neg"),
-            )
-            .collect()
-        )
+        counts = gens.fold(terms, ["term"], ["cnt_pos", "cnt_neg"])
+        (drow,) = gens.fold(docs, [], ["cnt_pos", "cnt_neg"]).collect()
         return _derive_nb_model(spark, counts, drow, alpha)
-    snaps = spark.read.parquet(model_path)
-    latest = snaps.agg(F.max("batch_id")).collect()[0][0]  # bounded scalar
-    state = snaps.filter(F.col("batch_id") == latest)
+    state = gens.latest(spark.read.parquet(model_path))
     counts = state.filter(F.col("kind") == "term").select("term", "cnt_pos", "cnt_neg")
     docs = state.filter(F.col("kind") == "docs").select("cnt_pos", "cnt_neg").collect()
     (drow,) = docs  # exactly one docs row per snapshot
@@ -881,87 +682,59 @@ def bigram_lm_writer(
     statistics of the concatenated stream and the derived model is
     bit-equal to batch training (pinned by test).
 
-    State layout: the bucketed delta-generation protocol of
-    :func:`nb_model_writer` ``(n_buckets=K)``, applied from the start
-    because n-gram vocabularies are the high-cardinality case the
-    snapshot layout is wrong for — each trigger writes ONLY its own
-    counts as append-only term-hash-bucketed generations under
+    State layout: the delta stores of :func:`nb_model_writer`
+    ``(n_buckets=K)`` (:mod:`renkodf_spark.streaming.generations`),
+    applied from the start because n-gram vocabularies are the
+    high-cardinality case the snapshot layout is wrong for — each
+    trigger writes ONLY its own counts, term-hash-bucketed, under
     ``<path>/uni`` (bucket on ``term``) and ``<path>/bi`` (bucket on
     ``w1``, so a context's transitions stay co-located), O(batch
-    vocabulary) per trigger regardless of lifetime vocabulary size.
-    Delta rows carry ``src_batch`` (identical rows ARE the same delta —
-    the crash-absorbing ``distinct`` in reader and compactor stays
-    exact); replays overwrite their own ``batch_id=N`` generations,
-    idempotent; ``compact_every`` bounds generations at
-    ``compact_every + 1`` via the shared compactor.
+    vocabulary) per trigger regardless of lifetime vocabulary size;
+    ``compact_every`` bounds generations at ``compact_every + 1``.
 
     Derive the scoring model with :func:`read_bigram_lm`.
     """
     if n_buckets <= 0:
         raise ValueError(f"n_buckets must be positive, got {n_buckets}")
-
     def write_batch(batch: DataFrame, batch_id: int) -> None:
-        import posixpath
-
-        from renkodf_spark.operators.search import _term_bucket_expr
         from renkodf_spark.operators.text import bigram_count_tables
-        from renkodf_spark.streaming.merge_stream import compact_index_generations
 
-        spark = batch.sparkSession
-        counts, bcounts = bigram_count_tables(batch, text_col=text_col)
-        (
-            counts.withColumn("src_batch", F.lit(batch_id).cast("long"))
-            .withColumn("tb", _term_bucket_expr(F.col("term"), n_buckets))
-            .write.mode("overwrite")
-            .partitionBy("tb")
-            .parquet(posixpath.join(model_path, "uni", f"batch_id={batch_id}"))
-        )
-        (
-            bcounts.withColumn("src_batch", F.lit(batch_id).cast("long"))
-            .withColumn("tb", _term_bucket_expr(F.col("w1"), n_buckets))
-            .write.mode("overwrite")
-            .partitionBy("tb")
-            .parquet(posixpath.join(model_path, "bi", f"batch_id={batch_id}"))
-        )
-        if compact_every is not None and (batch_id + 1) % compact_every == 0:
+        if gens.compaction_due(compact_every, batch_id):
             for sub in ("uni", "bi"):
-                compact_index_generations(
-                    spark,
+                gens.compact_index_generations(
+                    batch.sparkSession,
                     posixpath.join(model_path, sub),
                     batch_id,
                     partition_by="tb",
                 )
+        counts, bcounts = bigram_count_tables(batch, text_col=text_col)
+        for sub, df, key in (("uni", counts, "term"), ("bi", bcounts, "w1")):
+            gens.write_gen(
+                _bucketed_delta(df, batch_id, F.col(key), n_buckets),
+                posixpath.join(model_path, sub),
+                batch_id,
+                partition_by="tb",
+            )
 
     return write_batch
 
 
 def read_bigram_lm(spark, model_path: str, *, alpha: int = 1):
     """Fold every :func:`bigram_lm_writer` generation into the exact
-    lifetime count tables (leading ``distinct`` absorbs a compaction
-    crash that leaves a delta visible twice) and derive the model with
-    the SAME expressions as batch training
-    (``text.derive_bigram_model``) — returns the ``(unigrams, bigrams,
-    oov_micros)`` tuple :func:`text.bigram_logprob` consumes, bit-equal
-    to ``bigram_lm_train`` over the concatenated stream."""
-    import posixpath
-
+    lifetime count tables and derive the model with the SAME
+    expressions as batch training (``text.derive_bigram_model``) —
+    returns the ``(unigrams, bigrams, oov_micros)`` tuple
+    :func:`text.bigram_logprob` consumes, bit-equal to
+    ``bigram_lm_train`` over the concatenated stream."""
     from renkodf_spark.operators.text import derive_bigram_model
 
-    counts = (
-        spark.read.parquet(posixpath.join(model_path, "uni"))
-        .select("term", "cnt", "src_batch")
-        .distinct()
-        .groupBy("term")
-        .agg(F.sum("cnt").cast("long").alias("cnt"))
+    uni = spark.read.parquet(posixpath.join(model_path, "uni"))
+    bi = spark.read.parquet(posixpath.join(model_path, "bi"))
+    return derive_bigram_model(
+        gens.fold(uni, ["term"], ["cnt"]),
+        gens.fold(bi, ["w1", "w2"], ["cnt2"]),
+        alpha=alpha,
     )
-    bcounts = (
-        spark.read.parquet(posixpath.join(model_path, "bi"))
-        .select("w1", "w2", "cnt2", "src_batch")
-        .distinct()
-        .groupBy("w1", "w2")
-        .agg(F.sum("cnt2").cast("long").alias("cnt2"))
-    )
-    return derive_bigram_model(counts, bcounts, alpha=alpha)
 
 
 def quantile_sketch_writer(
@@ -980,14 +753,12 @@ def quantile_sketch_writer(
     test) — the same contract as :func:`nb_model_writer` /
     :func:`bigram_lm_writer`.
 
-    State layout: the bucketed delta-generation protocol — each trigger
-    appends ONLY its own (group, e, m, cnt) partials, hash-bucketed on
-    the group key so one group's buckets stay co-located, O(batch
-    distinct buckets) per trigger regardless of stream lifetime. Delta
-    rows carry ``src_batch`` (the crash-absorbing ``distinct`` in the
-    reader stays exact); replays overwrite their own ``batch_id=N``
-    generation, idempotent; ``compact_every`` bounds generations via
-    the shared compactor.
+    State layout: a delta store (:mod:`renkodf_spark.streaming.
+    generations`) — each trigger appends ONLY its own (group, e, m, cnt)
+    partials, hash-bucketed on the group key so one group's buckets stay
+    co-located, O(batch distinct buckets) per trigger regardless of
+    stream lifetime; ``compact_every`` bounds generations via the
+    shared compactor.
     """
     from renkodf_spark.functions.quantiles import _validate_k, quantile_sketch
 
@@ -997,41 +768,26 @@ def quantile_sketch_writer(
     gcols = [group_cols] if isinstance(group_cols, str) else list(group_cols)
 
     def write_batch(batch: DataFrame, batch_id: int) -> None:
-        import posixpath
-
-        from renkodf_spark.operators.search import _term_bucket_expr
-        from renkodf_spark.streaming.merge_stream import compact_index_generations
-
-        partial = quantile_sketch(batch, gcols, value_col, k=k)
-        (
-            partial.withColumn("src_batch", F.lit(batch_id).cast("long"))
-            .withColumn(
-                "tb",
-                _term_bucket_expr(F.concat_ws("\x1f", *gcols), n_buckets),
-            )
-            .write.mode("overwrite")
-            .partitionBy("tb")
-            .parquet(posixpath.join(sketch_path, f"batch_id={batch_id}"))
-        )
-        if compact_every is not None and (batch_id + 1) % compact_every == 0:
-            compact_index_generations(
+        if gens.compaction_due(compact_every, batch_id):
+            gens.compact_index_generations(
                 batch.sparkSession, sketch_path, batch_id, partition_by="tb"
             )
+        partial = quantile_sketch(batch, gcols, value_col, k=k)
+        key = F.concat_ws("\x1f", *gcols)
+        gens.write_gen(
+            _bucketed_delta(partial, batch_id, key, n_buckets),
+            sketch_path,
+            batch_id,
+            partition_by="tb",
+        )
 
     return write_batch
 
 
 def read_quantile_sketch(spark, sketch_path: str, group_cols: list[str] | str) -> DataFrame:
     """Fold every :func:`quantile_sketch_writer` generation into the
-    exact lifetime sketch (leading ``distinct`` absorbs a compaction
-    crash that leaves a delta visible twice) — bit-equal to
-    ``quantile_sketch`` over the concatenated stream; feed it to
-    ``sketch_quantiles`` / ``merge_sketches`` unchanged."""
+    exact lifetime sketch — bit-equal to ``quantile_sketch`` over the
+    concatenated stream; feed it to ``sketch_quantiles`` /
+    ``merge_sketches`` unchanged."""
     gcols = [group_cols] if isinstance(group_cols, str) else list(group_cols)
-    return (
-        spark.read.parquet(sketch_path)
-        .select(*gcols, "e", "m", "cnt", "src_batch")
-        .distinct()
-        .groupBy(*gcols, "e", "m")
-        .agg(F.sum("cnt").cast("long").alias("cnt"))
-    )
+    return gens.fold(spark.read.parquet(sketch_path), [*gcols, "e", "m"], ["cnt"])

@@ -10,14 +10,10 @@ ingestion-time half of the CDC story whose batch halves are
 one); composed here they give "keep a queryable current-state table
 up to date from a stream of upserts" without any table-format engine.
 
-State layout follows the house sketch-writer convention
-(``curation_stream.bloom_dedup_writer``): one FULL snapshot per
-trigger under ``batch_id=N`` via partition overwrite — an
-at-least-once replay of batch ``N`` recomputes against the same
-immutable prior snapshot, so replays are idempotent — and each
-trigger reads only the LATEST prior snapshot, so the state read is
-O(table), never O(triggers).  Readers get the current table with a
-plain ``spark.read.parquet(path).filter(batch_id == max)``.
+State layout: a snapshot store, one FULL snapshot per trigger (the
+``batch_id=N`` generation protocol of :mod:`renkodf_spark.streaming.
+generations`, which also owns the compactor the search-index writer
+here uses), so the state read is O(table), never O(triggers).
 
 Full-snapshot-per-trigger trades write amplification for replay
 safety and zero-compaction reads; for a table far larger than the
@@ -34,12 +30,12 @@ batch's key spread, not the table. Layout:
   (each trigger overwrites its own ``gen=N`` directory wholly, so
   at-least-once replays stay idempotent; untouched buckets keep their
   older ``gen`` directories);
-* ``<dir>/_manifest/batch_id=N/`` — a tiny full ``(kb, gen)`` map
-  snapshot per trigger saying which generation is current for every
-  bucket (the ``_`` prefix keeps it invisible to partition discovery
-  over ``<dir>``). A bucket whose merge result is EMPTY (all keys
-  deleted) maps to a ``gen`` with no files — the manifest is what
-  makes "empty" distinguishable from "unchanged".
+* ``<dir>/_manifest/batch_id=N/`` — a snapshot store of tiny full
+  ``(kb, gen)`` maps, one per trigger, saying which generation is
+  current for every bucket (the ``_`` prefix keeps it invisible to
+  partition discovery over ``<dir>``). A bucket whose merge result is
+  EMPTY (all keys deleted) maps to a ``gen`` with no files — the
+  manifest is what makes "empty" distinguishable from "unchanged".
 
 Readers use :func:`read_current_state`, which joins the latest
 manifest's ``(kb, gen)`` pairs as a static partition-pruning filter —
@@ -56,34 +52,26 @@ Pass ``vacuum_keep=None`` to a writer to retain everything.
 
 from __future__ import annotations
 
+import posixpath
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from renkodf_spark.operators.snapshot import merge_into
-from renkodf_spark.streaming.curation_stream import _is_missing_path
+from renkodf_spark.sources.lakehouse import hadoop_fs
+from renkodf_spark.streaming import generations as gens
 
 
 def _bucket_expr(keys: list[str], n_buckets: int):
     return F.pmod(F.xxhash64(*[F.col(k) for k in keys]), F.lit(n_buckets)).cast("int")
 
 
-def _read_manifest(spark, man_path: str, before_batch: int) -> dict[int, int] | None:
-    """Latest ``(kb -> gen)`` map strictly before ``before_batch`` —
-    ``None`` when no prior manifest exists. Bounded by n_key_buckets
-    rows; replays of batch N only ever see manifests < N."""
-    try:
-        snaps = spark.read.parquet(man_path).filter(F.col("batch_id") < before_batch)
-        latest = snaps.agg(F.max("batch_id")).collect()[0][0]  # bounded scalar
-        if latest is None:
-            return None
-        return {
-            r["kb"]: r["gen"]
-            for r in snaps.filter(F.col("batch_id") == latest).collect()
-        }
-    except Exception as exc:
-        if not _is_missing_path(exc):
-            raise
-        return None
+def _read_manifest(spark, man_path: str, before_batch: int | None) -> dict[int, int] | None:
+    """Latest ``(kb -> gen)`` map (strictly before ``before_batch`` if
+    given) — ``None`` when no such manifest exists. Bounded by
+    n_key_buckets rows; replays of batch N only ever see manifests < N."""
+    man = gens.read_latest(spark, man_path, before=before_batch)
+    return None if man is None else {r["kb"]: r["gen"] for r in man.collect()}
 
 
 def _bucket_filter(pairs: dict[int, int]):
@@ -99,24 +87,14 @@ def _read_state_buckets(spark, state_dir: str, pairs: dict[int, int], cols: list
     """Current rows of exactly the ``pairs`` buckets (None if the state
     dir doesn't exist yet). Partition pruning keeps the scan to the
     named ``gen=/kb=`` directories."""
-    if not pairs:
-        return None
-    try:
-        return (
-            spark.read.parquet(state_dir).filter(_bucket_filter(pairs)).select(*cols)
-        )
-    except Exception as exc:
-        if not _is_missing_path(exc):
-            raise
-        return None
+    state = gens.read_store(spark, state_dir) if pairs else None
+    return None if state is None else state.filter(_bucket_filter(pairs)).select(*cols)
 
 
 def _write_bucketed_gen(df: DataFrame, state_dir: str, batch_id: int) -> None:
     """One generation directory per trigger (``gen=N``), bucket
     subdirectories inside — overwriting ONLY this trigger's own dir, so
     replays are idempotent and other generations are never touched."""
-    import posixpath
-
     df.write.mode("overwrite").partitionBy("kb").parquet(
         posixpath.join(state_dir, f"gen={batch_id}")
     )
@@ -125,16 +103,9 @@ def _write_bucketed_gen(df: DataFrame, state_dir: str, batch_id: int) -> None:
 def _write_manifest(
     spark, man_path: str, batch_id: int, mapping: dict[int, int]
 ) -> None:
-    import posixpath
-
     rows = [(int(k), int(g)) for k, g in sorted(mapping.items())]
-    df = (
-        spark.createDataFrame(rows, "kb int, gen int")
-        if rows
-        else spark.createDataFrame([], "kb int, gen int")
-    )
-    df.coalesce(1).write.mode("overwrite").parquet(
-        posixpath.join(man_path, f"batch_id={batch_id}")
+    gens.write_gen(
+        spark.createDataFrame(rows, "kb int, gen int").coalesce(1), man_path, batch_id
     )
 
 
@@ -166,84 +137,84 @@ def vacuum_state_generations(
 
     Returns ``{"deleted_gens": [...], "deleted_manifests": [...]}``.
     """
-    import posixpath
-
-    sc = spark.sparkContext
-    HPath = sc._jvm.org.apache.hadoop.fs.Path
-    fs = HPath(state_dir).getFileSystem(sc._jsc.hadoopConfiguration())
     out = {"deleted_gens": [], "deleted_manifests": []}
     man_dir = posixpath.join(state_dir, "_manifest")
-    if not fs.exists(HPath(man_dir)):
-        return out
-    man_ids = sorted(
-        int(st.getPath().getName().split("=", 1)[1])
-        for st in fs.listStatus(HPath(man_dir))
-        if st.getPath().getName().startswith("batch_id=")
-    )
+    man_ids = gens.list_gens(spark, man_dir)
     recent = [m for m in man_ids if m <= current_batch_id][-keep_last:]
     if not recent:
         return out
     floor = recent[0]
     referenced = {
         r["gen"]
-        for r in spark.read.parquet(man_dir)
-        .filter(F.col("batch_id").isin([int(m) for m in recent]))
+        for r in gens.read_store(spark, man_dir)
+        .filter(F.col("batch_id").isin(recent))
         .select("gen")
         .distinct()
         .collect()
     }
-    for st in fs.listStatus(HPath(state_dir)):
+    fs, Path = hadoop_fs(spark, state_dir)
+    for st in fs.listStatus(Path(state_dir)):
         name = st.getPath().getName()
         if not name.startswith("gen="):
             continue
         gen = int(name.split("=", 1)[1])
         if gen not in referenced and gen < floor:
-            fs.delete(HPath(posixpath.join(state_dir, name)), True)
+            fs.delete(Path(posixpath.join(state_dir, name)), True)
             out["deleted_gens"].append(gen)
-    for m in man_ids:
-        if m < floor:
-            fs.delete(HPath(posixpath.join(man_dir, f"batch_id={m}")), True)
-            out["deleted_manifests"].append(m)
+    out["deleted_manifests"] = [m for m in man_ids if m < floor]
+    gens.delete_gens(spark, man_dir, out["deleted_manifests"])
     return out
 
 
-def _bucketed_affected_rewrite(
+def _log_through(log: DataFrame, state_path: str, batch_id: int) -> DataFrame:
+    """Append ``log`` as generation ``batch_id`` of ``<state_path>/log``
+    and return the whole log up to and including it."""
+    log_dir = posixpath.join(state_path, "log")
+    gens.write_gen(log, log_dir, batch_id)
+    return gens.read_before(log.sparkSession, log_dir, batch_id + 1)
+
+
+def _affected_rewrite(
     spark,
     dir_path: str,
     batch_id: int,
     keys_df: DataFrame,
     key_cols: list[str],
-    n_buckets: int,
+    n_buckets: int | None,
     recomputed: DataFrame,
     cols: list[str],
-    vacuum_keep: int | None = 3,
+    vacuum_keep: int | None,
 ) -> None:
-    """The bucket-partitioned form of the affected-keys recompute
-    pattern shared by the SCD2 and funnel writers: carry prior rows of
-    the AFFECTED buckets only (minus the batch's keys), union the
-    recomputed rows for the batch's keys, rewrite exactly those buckets
-    under ``gen=batch_id``, and publish the updated manifest. Untouched
-    buckets keep their old generation directories — trigger cost is
-    O(affected buckets), never O(table)."""
-    import posixpath
-
-    man_dir = posixpath.join(dir_path, "_manifest")
-    affected = sorted(
-        r["kb"]
-        for r in keys_df.withColumn("kb", _bucket_expr(key_cols, n_buckets))
-        .select("kb")
-        .distinct()
-        .collect()
-    )
-    manifest = _read_manifest(spark, man_dir, batch_id) or {}
-    prior = _read_state_buckets(
-        spark, dir_path, {b: manifest[b] for b in affected if b in manifest}, cols
-    )
-    if prior is None:
-        merged = recomputed.select(*cols)
+    """The affected-keys recompute shared by the SCD2 and funnel
+    writers: carry the prior rows of the keys the batch does not touch
+    and union the recomputed rows of the keys it does. With
+    ``n_buckets=None`` the prior is the latest snapshot and the result
+    the next one. Bucketed, only the AFFECTED buckets are read and
+    rewritten (under ``gen=batch_id``) and the updated manifest is
+    published; untouched buckets keep their old generation directories
+    — trigger cost is O(affected buckets), never O(table)."""
+    if n_buckets is None:
+        prior = gens.read_latest(spark, dir_path, before=batch_id)
+        prior = None if prior is None else prior.select(*cols)
     else:
-        untouched = prior.join(F.broadcast(keys_df), key_cols, "left_anti")
-        merged = untouched.unionByName(recomputed.select(*cols))
+        man_dir = posixpath.join(dir_path, "_manifest")
+        affected = sorted(
+            r["kb"]
+            for r in keys_df.withColumn("kb", _bucket_expr(key_cols, n_buckets))
+            .select("kb")
+            .distinct()
+            .collect()
+        )
+        manifest = _read_manifest(spark, man_dir, batch_id) or {}
+        prior = _read_state_buckets(
+            spark, dir_path, {b: manifest[b] for b in affected if b in manifest}, cols
+        )
+    merged = recomputed.select(*cols)
+    if prior is not None:
+        merged = prior.join(F.broadcast(keys_df), key_cols, "left_anti").unionByName(merged)
+    if n_buckets is None:
+        gens.write_gen(merged, dir_path, batch_id)
+        return
     _write_bucketed_gen(
         merged.withColumn("kb", _bucket_expr(key_cols, n_buckets)), dir_path, batch_id
     )
@@ -260,31 +231,12 @@ def read_current_state(spark, state_dir: str) -> DataFrame:
     filter) and legacy full-snapshot (``batch_id=max`` partition).
     Pass the same directory the writer received (for the scd2/funnel
     writers, their ``dim``/``state`` subdirectory)."""
-    import posixpath
-
-    man_dir = posixpath.join(state_dir, "_manifest")
-    try:
-        latest = (
-            spark.read.parquet(man_dir).agg(F.max("batch_id")).collect()[0][0]
-        )
-    except Exception as exc:
-        if not _is_missing_path(exc):
-            raise
-        latest = None
-    if latest is not None:
-        pairs = {
-            r["kb"]: r["gen"]
-            for r in spark.read.parquet(man_dir)
-            .filter(F.col("batch_id") == latest)
-            .collect()
-        }
-        df = spark.read.parquet(state_dir)
-        if not pairs:
-            return df.filter(F.lit(False)).drop("gen", "kb")
-        return df.filter(_bucket_filter(pairs)).drop("gen", "kb")
-    snaps = spark.read.parquet(state_dir)
-    mx = snaps.agg(F.max("batch_id")).collect()[0][0]
-    return snaps.filter(F.col("batch_id") == mx).drop("batch_id")
+    pairs = _read_manifest(spark, posixpath.join(state_dir, "_manifest"), None)
+    state = spark.read.parquet(state_dir)
+    if pairs is None:
+        snap = gens.latest(state)  # None: every snapshot is empty
+        return state.filter(F.lit(False)).drop("batch_id") if snap is None else snap
+    return state.filter(_bucket_filter(pairs)).drop("gen", "kb")
 
 
 def merge_writer(
@@ -314,8 +266,6 @@ def merge_writer(
     """
 
     def write_batch(batch: DataFrame, batch_id: int) -> None:
-        import posixpath
-
         spark = batch.sparkSession
 
         # collapse intra-batch duplicate keys: last-by-__seq wins when
@@ -365,18 +315,7 @@ def merge_writer(
                 )
             return
 
-        try:
-            snaps = spark.read.parquet(state_path).filter(F.col("batch_id") < batch_id)
-            latest = snaps.agg(F.max("batch_id")).collect()[0][0]  # bounded scalar
-            prior = (
-                snaps.filter(F.col("batch_id") == latest).select(*tbl_cols)
-                if latest is not None
-                else None
-            )
-        except Exception as exc:
-            if not _is_missing_path(exc):
-                raise
-            prior = None
+        prior = gens.read_latest(spark, state_path, before=batch_id)
         if prior is None:
             # first trigger: the table is the batch's own non-deleted rows
             merged = (
@@ -385,79 +324,10 @@ def merge_writer(
                 else src.select(*tbl_cols)
             )
         else:
-            merged = merge_into(prior, src, keys=keys, delete_col=delete_col)
-        merged.write.mode("overwrite").parquet(
-            posixpath.join(state_path, f"batch_id={batch_id}")
-        )
+            merged = merge_into(prior.select(*tbl_cols), src, keys=keys, delete_col=delete_col)
+        gens.write_gen(merged, state_path, batch_id)
 
     return write_batch
-
-
-def compact_index_generations(
-    spark,
-    dir_path: str,
-    current_batch_id: int,
-    *,
-    partition_by: str | None = None,
-    target_files: int = 4,
-) -> None:
-    """Fold every ``batch_id=`` generation OLDER than the current
-    trigger into one compacted generation — the band-index compaction
-    protocol (``neardup_stream.compact_band_index``) generalized to any
-    append-only generation directory: deterministic negative generation
-    id ``-(current+1)`` (idempotent under replay, collision-free),
-    hidden ``_compact_tmp`` + ``_SUCCESS`` + rename commit, promote a
-    complete leftover tmp / discard a torn one, delete sources only
-    after the new generation is visible (crash-mid-delete duplicates
-    are absorbed by the fold's ``distinct``). ``partition_by`` keeps a
-    sub-partitioning (e.g. the postings' term-hash buckets) intact in
-    the folded generation so bucket-pruned reads survive compaction."""
-    import posixpath
-
-    sc = spark.sparkContext
-    HPath = sc._jvm.org.apache.hadoop.fs.Path
-    fs = HPath(dir_path).getFileSystem(sc._jsc.hadoopConfiguration())
-    if not fs.exists(HPath(dir_path)):
-        return
-
-    gen_dir = posixpath.join(dir_path, f"batch_id={-(current_batch_id + 1)}")
-    tmp_dir = posixpath.join(dir_path, "_compact_tmp")
-    if fs.exists(HPath(tmp_dir)):
-        complete = fs.exists(HPath(posixpath.join(tmp_dir, "_SUCCESS")))
-        if complete and not fs.exists(HPath(gen_dir)):
-            fs.rename(HPath(tmp_dir), HPath(gen_dir))
-        else:
-            fs.delete(HPath(tmp_dir), True)
-
-    folded = []
-    for st in fs.listStatus(HPath(dir_path)):
-        name = st.getPath().getName()
-        if name.startswith("batch_id=") and int(name.split("=", 1)[1]) != current_batch_id:
-            folded.append(name)
-    if not folded:
-        return
-    # read the parent once (multi-root reads of batch_id= dirs with a
-    # sub-partitioning confuse partition discovery); the tmp dir is
-    # underscore-hidden, so only real generations are visible
-    hist = (
-        spark.read.parquet(dir_path)
-        .filter(F.col("batch_id") != current_batch_id)
-        .drop("batch_id")
-        .distinct()
-    )
-    if partition_by is not None:
-        # one task (=> one file) per sub-partition value
-        hist.repartition(F.col(partition_by)).write.mode("overwrite").partitionBy(
-            partition_by
-        ).parquet(tmp_dir)
-    else:
-        hist.coalesce(target_files).write.mode("overwrite").parquet(tmp_dir)
-    if fs.exists(HPath(gen_dir)):
-        fs.delete(HPath(gen_dir), True)
-    fs.rename(HPath(tmp_dir), HPath(gen_dir))
-    for name in folded:
-        if posixpath.join(dir_path, name) != gen_dir:
-            fs.delete(HPath(posixpath.join(dir_path, name)), True)
 
 
 def scd2_writer(
@@ -498,20 +368,9 @@ def scd2_writer(
     from renkodf_spark.operators.scd import scd2_from_changelog
 
     def write_batch(batch: DataFrame, batch_id: int) -> None:
-        import posixpath
-
-        spark = batch.sparkSession
         log_cols = [*key_cols, ts_col, *attr_cols] + ([seq_col] if seq_col else [])
-        batch.select(*log_cols).write.mode("overwrite").parquet(
-            posixpath.join(state_path, "log", f"batch_id={batch_id}")
-        )
-
+        full_log = _log_through(batch.select(*log_cols), state_path, batch_id)
         keys = batch.select(*key_cols).distinct()
-        full_log = (
-            spark.read.parquet(posixpath.join(state_path, "log"))
-            .filter(F.col("batch_id") <= batch_id)
-            .drop("batch_id")
-        )
         recomputed = scd2_from_changelog(
             full_log.join(F.broadcast(keys), key_cols, "left_semi"),
             key_cols=key_cols,
@@ -521,42 +380,16 @@ def scd2_writer(
         )
         dim_cols = [*key_cols, *attr_cols, "effective_from", "effective_to",
                     "is_current"]
-
-        if n_key_buckets is not None:
-            _bucketed_affected_rewrite(
-                spark,
-                posixpath.join(state_path, "dim"),
-                batch_id,
-                keys,
-                key_cols,
-                n_key_buckets,
-                recomputed,
-                dim_cols,
-            )
-            return
-
-        try:
-            snaps = spark.read.parquet(posixpath.join(state_path, "dim")).filter(
-                F.col("batch_id") < batch_id
-            )
-            latest = snaps.agg(F.max("batch_id")).collect()[0][0]  # bounded scalar
-            prior = (
-                snaps.filter(F.col("batch_id") == latest).select(*dim_cols)
-                if latest is not None
-                else None
-            )
-        except Exception as exc:
-            if not _is_missing_path(exc):
-                raise
-            prior = None
-
-        if prior is None:
-            merged = recomputed.select(*dim_cols)
-        else:
-            untouched = prior.join(F.broadcast(keys), key_cols, "left_anti")
-            merged = untouched.unionByName(recomputed.select(*dim_cols))
-        merged.write.mode("overwrite").parquet(
-            posixpath.join(state_path, "dim", f"batch_id={batch_id}")
+        _affected_rewrite(
+            batch.sparkSession,
+            posixpath.join(state_path, "dim"),
+            batch_id,
+            keys,
+            key_cols,
+            n_key_buckets,
+            recomputed,
+            dim_cols,
+            vacuum_keep,
         )
 
     return write_batch
@@ -591,18 +424,8 @@ def funnel_writer(
     from renkodf_spark.operators.funnel import funnel_steps
 
     def write_batch(batch: DataFrame, batch_id: int) -> None:
-        import posixpath
-
-        spark = batch.sparkSession
-        batch.select(user_col, ts_col, type_col).write.mode("overwrite").parquet(
-            posixpath.join(state_path, "log", f"batch_id={batch_id}")
-        )
+        full_log = _log_through(batch.select(user_col, ts_col, type_col), state_path, batch_id)
         users = batch.select(user_col).distinct()
-        full_log = (
-            spark.read.parquet(posixpath.join(state_path, "log"))
-            .filter(F.col("batch_id") <= batch_id)
-            .drop("batch_id")
-        )
         recomputed = funnel_steps(
             full_log.join(F.broadcast(users), user_col, "left_semi"),
             user_col=user_col,
@@ -611,42 +434,16 @@ def funnel_writer(
             steps=steps,
             horizon=horizon,
         )
-        cols = recomputed.columns
-        if n_key_buckets is not None:
-            _bucketed_affected_rewrite(
-                spark,
-                posixpath.join(state_path, "state"),
-                batch_id,
-                users,
-                [user_col],
-                n_key_buckets,
-                recomputed,
-                cols,
-            )
-            return
-        try:
-            snaps = spark.read.parquet(posixpath.join(state_path, "state")).filter(
-                F.col("batch_id") < batch_id
-            )
-            latest = snaps.agg(F.max("batch_id")).collect()[0][0]  # bounded scalar
-            prior = (
-                snaps.filter(F.col("batch_id") == latest).select(*cols)
-                if latest is not None
-                else None
-            )
-        except Exception as exc:
-            if not _is_missing_path(exc):
-                raise
-            prior = None
-        merged = (
-            recomputed
-            if prior is None
-            else prior.join(F.broadcast(users), user_col, "left_anti").unionByName(
-                recomputed
-            )
-        )
-        merged.write.mode("overwrite").parquet(
-            posixpath.join(state_path, "state", f"batch_id={batch_id}")
+        _affected_rewrite(
+            batch.sparkSession,
+            posixpath.join(state_path, "state"),
+            batch_id,
+            users,
+            [user_col],
+            n_key_buckets,
+            recomputed,
+            recomputed.columns,
+            vacuum_keep,
         )
 
     return write_batch
@@ -659,7 +456,6 @@ def search_index_writer(
     text_col: str = "text",
     n_buckets: int = 64,
     compact_every: int | None = None,
-    compact_target_files: int = 4,
 ):
     """``foreachBatch`` writer maintaining a searchable inverted index
     from a document stream — the incremental counterpart of
@@ -687,29 +483,35 @@ def search_index_writer(
     (never the text), and replays are idempotent because batch ``N``
     only ever probes generations ``< N``.
 
-    All writes are partition overwrites keyed by batch_id →
-    at-least-once replays are idempotent.  Query with
+    Every directory but ``meta`` is a generation store
+    (:mod:`renkodf_spark.streaming.generations`): postings and doclen
+    delta stores, stats a snapshot store.  Query with
     :func:`read_postings_stream` / the batch BM25 over its output.
 
-    ``compact_every=K`` (VERDICT r7 item 6) runs
-    :func:`compact_index_generations` over the postings (keeping the
-    term-hash sub-partitioning, so bucket pruning survives) and the
-    doclen generations every K triggers, and prunes superseded
-    cumulative stats snapshots — bounding the index at <=2 visible
-    generations per directory on a long-lived stream instead of one
-    directory per trigger forever.
+    ``compact_every=K`` (VERDICT r7 item 6) compacts the postings
+    (keeping the term-hash sub-partitioning, so bucket pruning
+    survives) and the doclen generations every K triggers, and prunes
+    superseded cumulative stats snapshots — bounding the index at <=2
+    visible generations per directory on a long-lived stream instead of
+    one directory per trigger forever.
     """
     from renkodf_spark.operators.search import (
         _term_bucket_expr,
         build_inverted_index,
     )
 
-    def write_batch(batch: DataFrame, batch_id: int) -> None:
-        import posixpath
+    postings_dir, doclen_dir, stats_dir = (
+        posixpath.join(state_path, d) for d in ("postings", "doclen", "stats")
+    )
 
+    def write_batch(batch: DataFrame, batch_id: int) -> None:
         from pyspark.sql.window import Window
 
         spark = batch.sparkSession
+        due = gens.compaction_due(compact_every, batch_id)
+        if due:
+            gens.compact_index_generations(spark, postings_dir, batch_id, partition_by="tb")
+            gens.compact_index_generations(spark, doclen_dir, batch_id)
         # collapse intra-batch duplicate ids deterministically
         w = Window.partitionBy(id_col).orderBy(F.md5(F.col(text_col)).asc())
         batch = (
@@ -717,51 +519,27 @@ def search_index_writer(
             .filter(F.col("__rn") == 1)
             .drop("__rn")
         )
-        # enforce append-only: drop ids already indexed by a PRIOR
-        # generation (doclen is the seen-id set; batch N probes only
-        # generations < N, so replays of N are idempotent)
-        try:
-            seen = (
-                spark.read.parquet(posixpath.join(state_path, "doclen"))
-                .filter(F.col("batch_id") < batch_id)
-                .select(F.col("doc_id").alias(id_col))
-                .distinct()
-            )
-            batch = batch.join(seen, id_col, "left_anti")
-        except Exception as exc:
-            if not _is_missing_path(exc):
-                raise
+        # enforce append-only: doclen is the seen-id set
+        batch = gens.drop_seen(batch, doclen_dir, batch_id, id_col, stored_id="doc_id")
         idx = build_inverted_index(batch, id_col=id_col, text_col=text_col)
-        idx.withColumn("tb", _term_bucket_expr(F.col("term"), n_buckets)).write.mode(
-            "overwrite"
-        ).partitionBy("tb").parquet(
-            posixpath.join(state_path, "postings", f"batch_id={batch_id}")
+        gens.write_gen(
+            idx.withColumn("tb", _term_bucket_expr(F.col("term"), n_buckets)),
+            postings_dir,
+            batch_id,
+            partition_by="tb",
         )
-        idx.groupBy("doc_id").agg(F.sum("tf").cast("long").alias("dl")).write.mode(
-            "overwrite"
-        ).parquet(posixpath.join(state_path, "doclen", f"batch_id={batch_id}"))
+        gens.write_gen(
+            idx.groupBy("doc_id").agg(F.sum("tf").cast("long").alias("dl")),
+            doclen_dir,
+            batch_id,
+        )
 
         cur = idx.groupBy().agg(
             F.count_distinct("doc_id").cast("long").alias("n_docs"),
             # coalesce: a fully-deduped (empty) batch sums to NULL
             F.coalesce(F.sum("tf"), F.lit(0)).cast("long").alias("total_tokens"),
         )
-        try:
-            snaps = spark.read.parquet(posixpath.join(state_path, "stats")).filter(
-                F.col("batch_id") < batch_id
-            )
-            latest = snaps.agg(F.max("batch_id")).collect()[0][0]  # bounded scalar
-            prior = (
-                snaps.filter(F.col("batch_id") == latest).select(
-                    "n_docs", "total_tokens"
-                )
-                if latest is not None
-                else None
-            )
-        except Exception as exc:
-            if not _is_missing_path(exc):
-                raise
-            prior = None
+        prior = gens.read_latest(spark, stats_dir, before=batch_id)
         merged = (
             cur
             if prior is None
@@ -770,55 +548,14 @@ def search_index_writer(
                 F.sum("total_tokens").cast("long").alias("total_tokens"),
             )
         )
-        merged.write.mode("overwrite").parquet(
-            posixpath.join(state_path, "stats", f"batch_id={batch_id}")
-        )
+        gens.write_gen(merged, stats_dir, batch_id)
         spark.createDataFrame([(int(n_buckets),)], "n_buckets long").write.mode(
             "overwrite"
         ).parquet(posixpath.join(state_path, "meta"))
-
-        if compact_every is not None and (batch_id + 1) % compact_every == 0:
-            compact_index_generations(
-                spark,
-                posixpath.join(state_path, "postings"),
-                batch_id,
-                partition_by="tb",
-                target_files=compact_target_files,
-            )
-            compact_index_generations(
-                spark,
-                posixpath.join(state_path, "doclen"),
-                batch_id,
-                target_files=compact_target_files,
-            )
-            _prune_stats_snapshots(spark, posixpath.join(state_path, "stats"), batch_id)
+        if due:
+            gens.prune_before(spark, stats_dir, batch_id)
 
     return write_batch
-
-
-def _prune_stats_snapshots(spark, stats_dir: str, current_batch_id: int) -> None:
-    """Delete cumulative stats snapshots superseded by the newest one
-    strictly BEFORE the current trigger (kept so a replay of the
-    current batch can still read its prior), plus any older than the
-    current. Streaming replays only ever re-run the CURRENT batch, so
-    nothing older is reachable."""
-    import posixpath
-
-    sc = spark.sparkContext
-    HPath = sc._jvm.org.apache.hadoop.fs.Path
-    fs = HPath(stats_dir).getFileSystem(sc._jsc.hadoopConfiguration())
-    if not fs.exists(HPath(stats_dir)):
-        return
-    gens = []
-    for st in fs.listStatus(HPath(stats_dir)):
-        name = st.getPath().getName()
-        if name.startswith("batch_id="):
-            gens.append(int(name.split("=", 1)[1]))
-    prior = [g for g in gens if g < current_batch_id]
-    keep = {current_batch_id, max(prior)} if prior else {current_batch_id}
-    for g in gens:
-        if g not in keep:
-            fs.delete(HPath(posixpath.join(stats_dir, f"batch_id={g}")), True)
 
 
 def read_postings_stream(spark, state_path: str, terms):
@@ -831,10 +568,10 @@ def read_postings_stream(spark, state_path: str, terms):
     terms = list(dict.fromkeys(terms))
     if not terms:
         raise ValueError("terms must be non-empty")
-    n_buckets = spark.read.parquet(state_path + "/meta").collect()[0]["n_buckets"]
-    buckets = sorted({_term_bucket_py(t, n_buckets) for t in terms})
+    meta = spark.read.parquet(posixpath.join(state_path, "meta"))
+    buckets = sorted({_term_bucket_py(t, meta.first()["n_buckets"]) for t in terms})
     return (
-        spark.read.parquet(state_path + "/postings")
+        spark.read.parquet(posixpath.join(state_path, "postings"))
         .filter(F.col("tb").isin(buckets) & F.col("term").isin(terms))
         .drop("tb", "batch_id")
     )

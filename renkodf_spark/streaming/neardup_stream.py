@@ -10,10 +10,9 @@ within-batch candidates, then appends its own bands to the index.
 Historical text is never re-read; per-trigger cost is
 O(batch x bands + matched buckets), independent of corpus age.
 
-Layout & idempotence: both the index and the pairs output are written
-as ``batch_id=N`` partition directories with per-batch OVERWRITE, so a
-replayed micro-batch (foreachBatch's at-least-once contract) rewrites
-its own partition instead of duplicating rows — the composition is
+Layout & idempotence: the index and the pairs output are generation
+stores (:mod:`renkodf_spark.streaming.generations`, which describes the
+replay protocol once for every writer here), so the composition is
 exactly-once at the directory level. The batch's bands are written
 FIRST and read back for the join, so shingling runs once per document
 ever (not once per downstream consumer), and the baseline is simply
@@ -24,8 +23,9 @@ bytes per doc, not the text. Production would bucket it by ``(band,
 key)`` on write (sources/lakehouse-style) to make the increment join
 co-located; the candidate-pair volume is bounded by the banding
 parameters exactly as in the batch operator. ``compact_every`` folds
-old per-trigger partitions into a single generation partition so the
-index never becomes a small-files swamp on a long-lived stream.
+old per-trigger partitions into a single generation partition (the
+store's one compactor) so the index never becomes a small-files swamp
+on a long-lived stream (VERDICT r5 item 3).
 """
 
 from __future__ import annotations
@@ -36,84 +36,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from renkodf_spark.operators.dedup import band_table, incremental_lsh_pairs
+from renkodf_spark.streaming import generations as gens
 
 _BAND_COLS = ["id", "band", "key"]
-
-
-def compact_band_index(
-    spark,
-    index_path: str,
-    current_batch_id: int,
-    *,
-    target_files: int = 4,
-) -> None:
-    """Fold every band partition OLDER than the current trigger into one
-    compacted generation partition, so the index stays at <=2 visible
-    partitions no matter how many triggers have run. Without this the
-    append path accumulates one ``batch_id=N`` directory per trigger
-    forever — after 10^5 triggers the "every batch but mine" read is a
-    small-files swamp (VERDICT r5 item 3).
-
-    The generation id is ``batch_id = -(current+1)``: deterministic per
-    trigger (a replayed micro-batch recreates the SAME generation, so
-    compaction is as idempotent as the per-batch partition overwrites),
-    negative so it can never collide with a real trigger's partition,
-    and strictly decreasing so successive generations never collide
-    with each other.
-
-    Crash safety (no atomic directory swap exists on object stores):
-    the folded history is first written to an underscore-prefixed tmp
-    dir — hidden from Spark's partition discovery, so readers never see
-    it — and committed by a single rename. On entry, a leftover tmp
-    WITH a ``_SUCCESS`` marker and no committed generation means the
-    previous attempt died between delete-old-gen and rename: the tmp
-    holds the complete folded history, so the rename is completed
-    first. A tmp without the marker is a torn write and is discarded
-    (its sources are still visible, nothing is lost). Source partitions
-    are deleted only AFTER the new generation is visible; a crash
-    mid-delete leaves duplicate rows that the ``distinct`` of the next
-    fold (and of the pairs output) absorbs.
-
-    Scale: the fold shuffles only the narrow ``(id, band, key)``
-    relation — bytes per doc, never the text — and runs once every
-    ``compact_every`` triggers; the directory listing and renames are
-    driver-side metadata ops bounded by the partition count (<=
-    compact_every + 1).
-    """
-    sc = spark.sparkContext
-    jvm = sc._jvm
-    HPath = jvm.org.apache.hadoop.fs.Path
-    fs = HPath(index_path).getFileSystem(sc._jsc.hadoopConfiguration())
-
-    gen_dir = posixpath.join(index_path, f"batch_id={-(current_batch_id + 1)}")
-    tmp_dir = posixpath.join(index_path, "_compact_tmp")
-    if fs.exists(HPath(tmp_dir)):
-        complete = fs.exists(HPath(posixpath.join(tmp_dir, "_SUCCESS")))
-        if complete and not fs.exists(HPath(gen_dir)):
-            fs.rename(HPath(tmp_dir), HPath(gen_dir))
-        else:
-            fs.delete(HPath(tmp_dir), True)
-
-    folded = []
-    for st in fs.listStatus(HPath(index_path)):
-        name = st.getPath().getName()
-        if name.startswith("batch_id=") and int(name.split("=", 1)[1]) != current_batch_id:
-            folded.append(name)
-    if not folded:
-        return
-    hist = (
-        spark.read.parquet(*[posixpath.join(index_path, n) for n in folded])
-        .select(*_BAND_COLS)
-        .distinct()
-        .coalesce(target_files)
-    )
-    hist.write.mode("overwrite").parquet(tmp_dir)
-    if fs.exists(HPath(gen_dir)):
-        fs.delete(HPath(gen_dir), True)
-    fs.rename(HPath(tmp_dir), HPath(gen_dir))
-    for name in folded:
-        if posixpath.join(index_path, name) != gen_dir:
-            fs.delete(HPath(posixpath.join(index_path, name)), True)
 
 
 def neardup_batch_writer(
@@ -126,7 +51,6 @@ def neardup_batch_writer(
     band_size: int = 2,
     shingle_n: int = 3,
     compact_every: int | None = None,
-    compact_target_files: int = 4,
 ):
     """Build the ``foreachBatch(batch_df, batch_id)`` callable.
 
@@ -138,14 +62,15 @@ def neardup_batch_writer(
     running the uncapped batch ``minhash_lsh_pairs`` over the corpus
     ingested so far — the property the two-trigger parity test pins.
 
-    ``compact_every=K`` runs :func:`compact_band_index` every K
-    triggers (after the batch's pairs are written), bounding the index
-    at <=2 visible partitions; candidates are unchanged because the
+    ``compact_every=K`` compacts the index every K triggers, bounding
+    it at <=2 visible partitions; candidates are unchanged because the
     fold is content-preserving (pinned by the compaction parity test).
     """
 
     def write_batch(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
+        if gens.compaction_due(compact_every, batch_id):
+            gens.compact_index_generations(spark, index_path, batch_id)
         bands = band_table(
             batch,
             text_col=text_col,
@@ -154,20 +79,12 @@ def neardup_batch_writer(
             band_size=band_size,
             shingle_n=shingle_n,
         )
-        bands.write.mode("overwrite").parquet(
-            posixpath.join(index_path, f"batch_id={batch_id}")
-        )
-        indexed = spark.read.parquet(index_path)
+        gens.write_gen(bands, index_path, batch_id)
+        indexed = gens.read_store(spark, index_path)
         new = indexed.filter(F.col("batch_id") == batch_id).select(*_BAND_COLS)
         old = indexed.filter(F.col("batch_id") != batch_id).select(*_BAND_COLS)
         pairs = incremental_lsh_pairs(new, old, include_within_new=True)
-        pairs.write.mode("overwrite").parquet(
-            posixpath.join(pairs_path, f"batch_id={batch_id}")
-        )
-        if compact_every is not None and (batch_id + 1) % compact_every == 0:
-            compact_band_index(
-                spark, index_path, batch_id, target_files=compact_target_files
-            )
+        gens.write_gen(pairs, pairs_path, batch_id)
 
     return write_batch
 
@@ -184,7 +101,6 @@ def start_neardup_stream(
     band_size: int = 2,
     shingle_n: int = 3,
     compact_every: int | None = None,
-    compact_target_files: int = 4,
 ):
     """Start the streaming near-dup job over a streaming ``docs`` frame.
 
@@ -201,7 +117,6 @@ def start_neardup_stream(
         band_size=band_size,
         shingle_n=shingle_n,
         compact_every=compact_every,
-        compact_target_files=compact_target_files,
     )
     return (
         docs.writeStream.foreachBatch(writer)
@@ -274,7 +189,6 @@ def cluster_labels_writer(
     path.
     """
     from renkodf_spark.operators.dedup import cluster_labels
-    from renkodf_spark.streaming.curation_stream import _is_missing_path
 
     if n_buckets <= 0:
         raise ValueError(f"n_buckets must be positive, got {n_buckets}")
@@ -301,14 +215,7 @@ def cluster_labels_writer(
             .unionByName(delta.select(F.col("dst").alias("id")))
             .distinct()
         )
-        try:
-            prior = spark.read.parquet(labels_dir).select("id", "cluster_id", "bucket")
-        except Exception as exc:
-            if not (
-                _is_missing_path(exc) or "UNABLE_TO_INFER_SCHEMA" in str(exc)
-            ):
-                raise
-            prior = None
+        prior = gens.read_store(spark, labels_dir)
 
         bucket_of = F.pmod(F.xxhash64("id"), F.lit(n_buckets))
         if prior is None:
@@ -327,6 +234,7 @@ def cluster_labels_writer(
             )
             return
 
+        prior = prior.select("id", "cluster_id", "bucket")
         affected = (
             dnodes.join(prior.select("id", "cluster_id"), "id")
             .select("cluster_id")
@@ -412,37 +320,23 @@ def winnow_index_writer(
 
     Per-trigger cost: O(batch fingerprints + matched buckets) — the
     corpus's text is never re-read; the one index-sized term is the
-    opt-out append-only id scan (the ann_stream contract). Writes are
-    per-batch partition overwrites, so at-least-once replays are
-    idempotent at the directory level."""
+    opt-out append-only id scan (the ann_stream contract). Both
+    directories are generation stores (:mod:`renkodf_spark.streaming.
+    generations`), so at-least-once replays are idempotent at the
+    directory level."""
     from renkodf_spark.operators.text import winnow_fingerprints
-    from renkodf_spark.streaming.curation_stream import _is_missing_path
 
     def write_batch(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
         if enforce_append_only:
-            try:
-                seen = (
-                    spark.read.parquet(index_path)
-                    .filter(F.col("batch_id") < batch_id)
-                    .select(F.col("id").alias(id_col))
-                    .distinct()
-                )
-                batch = batch.join(seen, id_col, "left_anti")
-            except Exception as exc:
-                if not (
-                    _is_missing_path(exc) or "UNABLE_TO_INFER_SCHEMA" in str(exc)
-                ):
-                    raise
+            batch = gens.drop_seen(batch, index_path, batch_id, id_col)
         fps = (
             winnow_fingerprints(batch, text_col=text_col, id_col=id_col, k=k, window=window)
             .select(F.col(id_col).alias("id"), "fp")
             .distinct()
         )
-        fps.write.mode("overwrite").parquet(
-            posixpath.join(index_path, f"batch_id={batch_id}")
-        )
-        indexed = spark.read.parquet(index_path)
+        gens.write_gen(fps, index_path, batch_id)
+        indexed = gens.read_store(spark, index_path)
         new = indexed.filter(F.col("batch_id") == batch_id).select("id", "fp")
         old = indexed.filter(F.col("batch_id") != batch_id).select("id", "fp")
         cross = new.alias("n").join(old.alias("o"), "fp").select(
@@ -463,9 +357,7 @@ def winnow_index_writer(
             .groupBy("id_a", "id_b")
             .agg(F.countDistinct("fp").alias("n_shared"))
         )
-        delta.write.mode("overwrite").parquet(
-            posixpath.join(pairs_path, f"batch_id={batch_id}")
-        )
+        gens.write_gen(delta, pairs_path, batch_id)
 
     return write_batch
 
@@ -514,12 +406,12 @@ def setsim_index_writer(
     ``read_setsim_pairs`` is a plain union of generations. Per-trigger
     cost: O(batch elements + matched prefix buckets + candidate
     verifies); stored text is never re-read (the index holds only
-    hashes). Writes are per-batch partition overwrites, replay-
-    idempotent (the freq overwrite recomputes identically from the
-    same first batch).
+    hashes). Replays are idempotent (the freq overwrite recomputes
+    identically from the same first batch).
 
-    State layout: ``freq/`` (once), ``prefix/batch_id=N/``,
-    ``sets/batch_id=N/``, ``pairs/batch_id=N/``.
+    State layout: ``freq/`` (once), and the ``prefix/``, ``sets/`` and
+    ``pairs/`` generation stores (:mod:`renkodf_spark.streaming.
+    generations`).
     """
     from renkodf_spark.operators.setsim import (
         _validate_threshold,
@@ -528,7 +420,6 @@ def setsim_index_writer(
         element_table,
         incremental_setsim_pairs,
     )
-    from renkodf_spark.streaming.curation_stream import _is_missing_path
 
     _validate_threshold(t_num, t_den)
 
@@ -538,63 +429,27 @@ def setsim_index_writer(
         prefix_path = posixpath.join(state_path, "prefix")
         freq_path = posixpath.join(state_path, "freq")
         if enforce_append_only:
-            try:
-                seen = (
-                    spark.read.parquet(sets_path)
-                    .filter(F.col("batch_id") < batch_id)
-                    .select(F.col("id").alias(id_col))
-                    .distinct()
-                )
-                batch = batch.join(seen, id_col, "left_anti")
-            except Exception as exc:
-                if not (
-                    _is_missing_path(exc) or "UNABLE_TO_INFER_SCHEMA" in str(exc)
-                ):
-                    raise
-        try:
-            freq = spark.read.parquet(freq_path).select("h", "c")
-            have_freq = True
-        except Exception as exc:
-            if not (_is_missing_path(exc) or "UNABLE_TO_INFER_SCHEMA" in str(exc)):
-                raise
-            freq = None
-            have_freq = False
+            batch = gens.drop_seen(batch, sets_path, batch_id, id_col)
+        freq = gens.read_store(spark, freq_path)
         # built once, cached for the trigger's four consumers (freq
         # freeze, pair delta, prefix, sets) and unpersisted at the end
         # so a long-lived stream does not accumulate per-trigger caches
         e_new = element_table(
             batch, text_col=text_col, id_col=id_col, shingle_n=shingle_n
         ).cache()
-        if not have_freq:
+        if freq is None:
             # first trigger: freeze the order basis (replay recomputes
             # the identical table from the same admitted batch)
             element_frequencies(e_new).write.mode("overwrite").parquet(freq_path)
-            freq = spark.read.parquet(freq_path).select("h", "c")
+            freq = spark.read.parquet(freq_path)
+        freq = freq.select("h", "c")
         # prior state, strictly earlier generations (replay-safe)
-        try:
-            old_prefix = (
-                spark.read.parquet(prefix_path)
-                .filter(F.col("batch_id") < batch_id)
-                .select("id", "sz", "pos", "h")
-            )
-            old_sets = (
-                spark.read.parquet(sets_path)
-                .filter(F.col("batch_id") < batch_id)
-                .select("id", "hs")
-            )
-        except Exception as exc:
-            if not (_is_missing_path(exc) or "UNABLE_TO_INFER_SCHEMA" in str(exc)):
-                raise
-            old_prefix = old_sets = None
-        if old_prefix is None:
-            old_prefix = (
-                e_new.sparkSession.createDataFrame(
-                    [], "id long, sz long, pos long, h long"
-                )
-            )
-            old_sets = e_new.sparkSession.createDataFrame(
-                [], "id long, hs array<long>"
-            )
+        old_prefix = gens.read_before(
+            spark, prefix_path, batch_id, schema="id long, sz long, pos long, h long"
+        ).select("id", "sz", "pos", "h")
+        old_sets = gens.read_before(
+            spark, sets_path, batch_id, schema="id long, hs array<long>"
+        ).select("id", "hs")
         try:
             delta = incremental_setsim_pairs(
                 batch,  # already append-only-filtered (unused: new_elements given)
@@ -608,17 +463,13 @@ def setsim_index_writer(
                 t_den=t_den,
                 new_elements=e_new,
             )
-            delta.write.mode("overwrite").parquet(
-                posixpath.join(state_path, "pairs", f"batch_id={batch_id}")
-            )
+            gens.write_gen(delta, posixpath.join(state_path, "pairs"), batch_id)
             from renkodf_spark.operators.setsim import prefix_index
 
-            prefix_index(e_new, t_num=t_num, t_den=t_den, freq=freq).write.mode(
-                "overwrite"
-            ).parquet(posixpath.join(prefix_path, f"batch_id={batch_id}"))
-            element_sets(e_new).write.mode("overwrite").parquet(
-                posixpath.join(sets_path, f"batch_id={batch_id}")
+            gens.write_gen(
+                prefix_index(e_new, t_num=t_num, t_den=t_den, freq=freq), prefix_path, batch_id
             )
+            gens.write_gen(element_sets(e_new), sets_path, batch_id)
         finally:
             e_new.unpersist()
 

@@ -14,7 +14,11 @@ SCHEMA = "k long, v string, seq long, del boolean"
 
 def _write(path, name, rows):
     pdf = pd.DataFrame(rows, columns=["k", "v", "seq", "del"])
-    pdf.to_parquet(os.path.join(path, name))
+    # hidden name, then rename: the file source must never list a
+    # half-written file (it would read it as an empty micro-batch)
+    tmp = os.path.join(path, "." + name)
+    pdf.to_parquet(tmp)
+    os.replace(tmp, os.path.join(path, name))
 
 
 def _run_stream(spark, tmp_path, writer, batches, schema=SCHEMA, rename_seq=True):
@@ -261,3 +265,58 @@ def test_vacuum_disabled_keeps_all_generations(spark, tmp_path):
         writer(df([(1, f"v{i}", False)]), i)
     gens = [d for d in os.listdir(state) if d.startswith("gen=")]
     assert len(gens) == 6
+
+
+def test_bucketed_merge_killed_before_manifest_replays_identically(
+    spark, tmp_path, monkeypatch
+):
+    """A trigger killed between its ``gen=N`` data write and its
+    ``_manifest`` publish: the replay of N gives the state of an
+    uninterrupted run, and every generation the replay reads survived
+    the kill (vacuum runs only after a publish)."""
+    from renkodf_spark.streaming import generations
+    from renkodf_spark.streaming.merge_stream import merge_writer, read_current_state
+
+    def df(rows):
+        return spark.createDataFrame(
+            [(k, v, d) for k, v, s, d in rows], "k long, v string, del boolean"
+        )
+
+    def writer(path):
+        return merge_writer(path, keys=["k"], delete_col="del", n_key_buckets=2, vacuum_keep=1)
+
+    def state_of(path):  # a list, so a replay that duplicates rows shows
+        return sorted(map(tuple, read_current_state(spark, path).select("k", "v").collect()))
+
+    def gen_dirs(path):
+        return sorted(d for d in os.listdir(path) if d.startswith("gen="))
+
+    clean, killed = str(tmp_path / "clean"), str(tmp_path / "killed")
+    for path in (clean, killed):
+        w = writer(path)
+        w(df(BATCHES[0]), 0)
+        w(df(BATCHES[1]), 1)
+    writer(clean)(df(BATCHES[2]), 2)
+
+    write_gen, kills = generations.write_gen, []
+
+    def killed_once(frame, path, batch_id, partition_by=None):
+        if path.endswith("_manifest") and not kills:
+            kills.append(batch_id)
+            raise RuntimeError("killed before the manifest publish")
+        write_gen(frame, path, batch_id, partition_by)
+
+    monkeypatch.setattr(generations, "write_gen", killed_once)
+    w = writer(killed)
+    with pytest.raises(RuntimeError, match="killed"):
+        w(df(BATCHES[2]), 2)
+    assert kills == [2]
+    assert "gen=2" in gen_dirs(killed)  # the data write landed
+    assert not os.path.exists(os.path.join(killed, "_manifest", "batch_id=2"))
+    # what the replay reads: manifest 1 and every generation it names
+    man1 = spark.read.parquet(os.path.join(killed, "_manifest", "batch_id=1")).collect()
+    assert man1 and all(f"gen={r['gen']}" in gen_dirs(killed) for r in man1)
+
+    w(df(BATCHES[2]), 2)  # the replay
+    assert state_of(killed) == state_of(clean) == [(1, "a2"), (4, "d2")]
+    assert gen_dirs(killed) == gen_dirs(clean)

@@ -19,7 +19,11 @@ SCHEMA = "doc_id long, event_time timestamp, text string"
 def _write_batch(path: str, name: str, rows: list[tuple]):
     pdf = pd.DataFrame(rows, columns=["doc_id", "event_time", "text"])
     pdf["event_time"] = pd.to_datetime(pdf["event_time"]).astype("datetime64[us]")
-    pdf.to_parquet(os.path.join(path, name))
+    # hidden name, then rename: the file source must never list a
+    # half-written file (it would read it as an empty micro-batch)
+    tmp = os.path.join(path, "." + name)
+    pdf.to_parquet(tmp)
+    os.replace(tmp, os.path.join(path, name))
 
 
 def _drain(spark, q, table: str, expect: int, deadline_s: int = 40) -> int:
@@ -203,7 +207,6 @@ def test_neardup_index_compaction_bounds_partitions_with_parity(spark, tmp_path)
             pairs_path=pairs_path,
             checkpoint=str(tmp_path / f"ck_{tag}"),
             compact_every=compact_every,
-            compact_target_files=1,
         )
         try:
             for i, rows in enumerate(batches):
@@ -238,52 +241,6 @@ def test_neardup_index_compaction_bounds_partitions_with_parity(spark, tmp_path)
     assert parts_c == {-6, 5}
     # the fold is content-preserving on the band set itself
     assert bands_c == bands_u
-
-
-def test_neardup_compaction_crash_recovery(spark, tmp_path):
-    """The compaction commit protocol: a leftover _compact_tmp WITH a
-    _SUCCESS marker and no committed generation is the delete-then-
-    crash window — its content (which may exist nowhere else) must be
-    promoted, not discarded. A tmp WITHOUT the marker is a torn write
-    whose sources are still visible, and must be discarded."""
-    from renkodf_spark.streaming.neardup_stream import compact_band_index
-
-    def write_bands(path, rows):
-        spark.createDataFrame(rows, "id long, band int, key string").coalesce(
-            1
-        ).write.mode("overwrite").parquet(path)
-
-    def band_set(path):
-        return {
-            (r.id, r.band, r.key)
-            for r in spark.read.parquet(path).select("id", "band", "key").collect()
-        }
-
-    a = [(1, 0, "ka")]   # an ordinary old partition
-    b = [(2, 0, "kb")]   # history that survives ONLY in the tmp
-    c = [(3, 0, "kc")]   # the current trigger's partition
-
-    # -- recovery case: complete tmp, no gen dir
-    idx = str(tmp_path / "idx_recover")
-    write_bands(os.path.join(idx, "batch_id=1"), a)
-    write_bands(os.path.join(idx, "batch_id=2"), c)
-    write_bands(os.path.join(idx, "_compact_tmp"), b)
-    assert os.path.exists(os.path.join(idx, "_compact_tmp", "_SUCCESS"))
-    compact_band_index(spark, idx, 2, target_files=1)
-    parts = {r.batch_id for r in spark.read.parquet(idx).select("batch_id").distinct().collect()}
-    assert parts == {-3, 2}
-    assert band_set(idx) == set(a[0:1]) | set(b) | set(c)
-
-    # -- torn-write case: tmp without _SUCCESS is discarded
-    idx2 = str(tmp_path / "idx_torn")
-    write_bands(os.path.join(idx2, "batch_id=1"), a)
-    write_bands(os.path.join(idx2, "batch_id=2"), c)
-    write_bands(os.path.join(idx2, "_compact_tmp"), b)
-    os.remove(os.path.join(idx2, "_compact_tmp", "_SUCCESS"))
-    compact_band_index(spark, idx2, 2, target_files=1)
-    parts2 = {r.batch_id for r in spark.read.parquet(idx2).select("batch_id").distinct().collect()}
-    assert parts2 == {-3, 2}
-    assert band_set(idx2) == set(a) | set(c)  # b was torn, not promoted
 
 
 def test_rate_gate_stream_equals_batch_sample(spark, tmp_path):
@@ -457,40 +414,134 @@ def test_quota_select_stream_equals_batch_quota_sample(spark, tmp_path):
     assert again == want
 
 
-def test_quota_cap_corrupt_counts_fails_batch(spark, tmp_path):
-    """A counts file that exists but cannot be read must FAIL the batch
-    (so foreachBatch retries) — not be treated as 'first batch', which
-    would restart prior=0 and admit past the lifetime quota. Only a
-    genuinely missing counts path may be swallowed."""
-    from renkodf_spark.streaming.curation_stream import quota_cap_writer
+def _corrupt_parquet(gen_dir: str) -> None:
+    """Garbage bytes where every parquet footer of a generation should be."""
+    for root, _, files in os.walk(gen_dir):
+        for name in files:
+            if name.endswith(".parquet"):
+                with open(os.path.join(root, name), "wb") as fh:
+                    fh.write(b"this is not a parquet file")
 
-    out_path = str(tmp_path / "admitted")
-    counts_path = str(tmp_path / "counts")
-    writer = quota_cap_writer(
-        out_path, counts_path, "lang", per_group=5, id_col="doc_id"
+
+def _corrupt_case(name, tmp_path):
+    """``(writer, generation dir to corrupt, dirs that must not gain
+    trigger 1's generation)`` for one prior-state read shape."""
+    from renkodf_spark.streaming.curation_stream import (
+        cms_rollup_writer,
+        quantile_sketch_writer,
+        quota_cap_writer,
     )
+    from renkodf_spark.streaming.merge_stream import merge_writer
+
+    a, b = str(tmp_path / "a"), str(tmp_path / "b")
+    if name == "quota_cap":  # all prior generations
+        w = quota_cap_writer(a, b, "lang", per_group=5, id_col="doc_id")
+        return w, os.path.join(b, "batch_id=0"), [a, b]
+    if name == "cms_rollup":  # latest snapshot
+        return cms_rollup_writer(a, "lang"), os.path.join(a, "batch_id=0"), [a]
+    if name == "merge_manifest":  # latest manifest
+        w = merge_writer(a, keys=["doc_id"], n_key_buckets=2)
+        return w, os.path.join(a, "_manifest", "batch_id=0"), [a, os.path.join(a, "_manifest")]
+    # compaction fold: trigger 1 is the compaction trigger
+    w = quantile_sketch_writer(a, "lang", "doc_id", k=32, n_buckets=4, compact_every=2)
+    return w, os.path.join(a, "batch_id=0"), [a]
+
+
+@pytest.mark.parametrize(
+    "case", ["quota_cap", "cms_rollup", "merge_manifest", "quantile_compaction"]
+)
+def test_corrupt_generation_fails_trigger(spark, tmp_path, case):
+    """A generation that exists but cannot be read must FAIL the trigger
+    (so foreachBatch retries it) — not read as 'no rows yet', which
+    would restart from empty state (for the quota cap: admit past the
+    lifetime quota). Only a missing or data-less store may be swallowed.
+    One writer per read shape; nothing from the failed trigger lands."""
+    writer, corrupt, stores = _corrupt_case(case, tmp_path)
     batch = spark.createDataFrame(
         [(i, "en" if i % 2 == 0 else "de", f"doc {i}") for i in range(8)],
         "doc_id long, lang string, text string",
     )
-
-    # Missing counts path → first batch, admits normally.
-    writer(batch, 0)
-    assert spark.read.parquet(out_path).count() == 8
-
-    # Corrupt the persisted counts: garbage bytes where a parquet
-    # footer should be. The next trigger's read must raise, not admit.
-    part_dir = os.path.join(counts_path, "batch_id=0")
-    for name in os.listdir(part_dir):
-        if name.endswith(".parquet"):
-            with open(os.path.join(part_dir, name), "wb") as fh:
-                fh.write(b"this is not a parquet file")
+    writer(batch, 0)  # missing store -> first batch, writes normally
+    _corrupt_parquet(corrupt)
     with pytest.raises(Exception) as excinfo:
         writer(batch, 1)
     assert "Path does not exist" not in str(excinfo.value)
-    # Nothing from the failed batch landed.
-    admitted = spark.read.parquet(out_path)
-    assert admitted.filter(F.col("batch_id") == 1).count() == 0
+    # neither trigger 1's generation nor a folded one (-2) landed
+    for store in stores:
+        assert not {"batch_id=1", "gen=1", "batch_id=-2"} & set(os.listdir(store))
+
+
+def _empty_store_case(name, spark, path):
+    """``(writer, one data batch, reader)`` for a writer with
+    compact_every=2 whose store can hold only empty ``partitionBy``
+    generations."""
+    from renkodf_spark.operators import similarity
+    from renkodf_spark.streaming import ann_stream, curation_stream as cs
+    from renkodf_spark.streaming import merge_stream
+
+    def rows(df):
+        return sorted(map(str, df.collect()))
+
+    if name == "quantile_sketch":
+        data = spark.createDataFrame([("a", 1.0), ("a", 2.5), ("b", 10.0)], "g string, v double")
+        w = cs.quantile_sketch_writer(path, "g", "v", k=32, n_buckets=4, compact_every=2)
+        return w, data, lambda: rows(cs.read_quantile_sketch(spark, path, "g"))
+    if name == "nb_model":
+        data = spark.createDataFrame(
+            [("good doc here", True), ("bad doc", False)], "text string, pos boolean"
+        )
+        w = cs.nb_model_writer(path, "pos", n_buckets=4, compact_every=2)
+
+        def read():
+            model, prior = cs.read_nb_model(spark, path)
+            return rows(model), prior
+
+        return w, data, read
+    if name == "bigram_lm":
+        data = spark.createDataFrame([("the cat sat",), ("the dog sat",)], "text string")
+        w = cs.bigram_lm_writer(path, n_buckets=4, compact_every=2)
+
+        def read():
+            uni, bi, oov = cs.read_bigram_lm(spark, path)
+            return rows(uni), rows(bi), oov
+
+        return w, data, read
+    if name == "search_index":
+        data = spark.createDataFrame([(1, "x y"), (2, "y z")], "k long, v string")
+        w = merge_stream.search_index_writer(
+            path, id_col="k", text_col="v", n_buckets=4, compact_every=2
+        )
+        return w, data, lambda: rows(merge_stream.read_postings_stream(spark, path, ["x", "y", "z"]))
+    vecs = spark.createDataFrame(
+        [(i, [float((i * 7 + j * 3) % 11) for j in range(4)], "ab"[i % 2]) for i in range(6)],
+        "vec_id long, embedding array<double>, label string",
+    )
+    w = ann_stream.ivf_index_writer(
+        similarity.embedding_centroids(vecs, dim=4), path, compact_every=2
+    )
+    return w, vecs, lambda: rows(ann_stream.read_ivf_index_stream(spark, path))
+
+
+@pytest.mark.parametrize(
+    "case", ["quantile_sketch", "nb_model", "bigram_lm", "search_index", "ivf_index"]
+)
+def test_empty_partitioned_store_does_not_wedge_compaction(spark, tmp_path, case):
+    """Two empty micro-batches leave a store of empty ``partitionBy``
+    generations (only ``_SUCCESS``, which fails schema inference). The
+    compaction trigger must treat it as 'no rows yet' — not fail on
+    every replay — and the store must read exactly like one fed the
+    data batch alone."""
+    path = str(tmp_path / "state")
+    writer, data, read = _empty_store_case(case, spark, path)
+    empty = spark.createDataFrame([], data.schema)
+    for batch_id, batch in enumerate([empty, empty, data]):
+        writer(batch, batch_id)
+    got = read()
+
+    path = str(tmp_path / "ref")
+    writer, data, read = _empty_store_case(case, spark, path)
+    writer(data, 0)
+    assert got == read()
 
 
 def test_bloom_dedup_stream_across_triggers(spark, tmp_path):

@@ -4,6 +4,7 @@ triggers, intra-batch duplicate resolution, delete semantics."""
 import os
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 SCHEMA = "k long, v string, seq long, del boolean"
@@ -11,7 +12,11 @@ SCHEMA = "k long, v string, seq long, del boolean"
 
 def _write(path, name, rows):
     pdf = pd.DataFrame(rows, columns=["k", "v", "seq", "del"])
-    pdf.to_parquet(os.path.join(path, name))
+    # hidden name, then rename: the file source must never list a
+    # half-written file (it would read it as an empty micro-batch)
+    tmp = os.path.join(path, "." + name)
+    pdf.to_parquet(tmp)
+    os.replace(tmp, os.path.join(path, name))
 
 
 def test_merge_stream_state_across_triggers(spark, tmp_path):
@@ -351,7 +356,7 @@ def test_search_index_compaction_bounds_generations_with_parity(spark, tmp_path)
         )
         writer = search_index_writer(
             state, id_col="k", text_col="v", n_buckets=8,
-            compact_every=compact_every, compact_target_files=1,
+            compact_every=compact_every,
         )
         q = (
             stream.writeStream.foreachBatch(writer)
@@ -402,7 +407,6 @@ def test_search_index_compaction_keeps_enforcement(spark, tmp_path):
     state = str(tmp_path / "sidx")
     writer = search_index_writer(
         state, id_col="k", text_col="v", n_buckets=8, compact_every=2,
-        compact_target_files=1,
     )
 
     def df(rows):
@@ -422,27 +426,38 @@ def test_search_index_compaction_keeps_enforcement(spark, tmp_path):
     assert got == [("x", 1, 2)]  # no z postings, original x intact
 
 
-def test_generic_compaction_crash_recovery(spark, tmp_path):
+@pytest.mark.parametrize(
+    "schema, a, b, c",
+    [
+        ("doc_id long, dl long", [(1, 10)], [(2, 20)], [(3, 30)]),
+        # the LSH band-index layout of neardup_stream
+        ("id long, band int, key string", [(1, 0, "ka")], [(2, 0, "kb")], [(3, 0, "kc")]),
+    ],
+    ids=["doclen", "bands"],
+)
+def test_generic_compaction_crash_recovery(spark, tmp_path, schema, a, b, c):
     """compact_index_generations commit protocol: a leftover tmp WITH
     _SUCCESS and no committed generation is promoted (its content may
-    exist nowhere else); a tmp WITHOUT the marker is discarded."""
-    from renkodf_spark.streaming.merge_stream import compact_index_generations
+    exist nowhere else — the delete-then-crash window); a tmp WITHOUT
+    the marker is a torn write whose sources are still visible, and is
+    discarded."""
+    from renkodf_spark.streaming.generations import compact_index_generations
+
+    cols = [f.split()[0] for f in schema.split(", ")]
 
     def write_gen(path, rows):
-        spark.createDataFrame(rows, "doc_id long, dl long").coalesce(1).write.mode(
+        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
             "overwrite"
         ).parquet(path)
 
     def rows_of(path):
-        return {(r.doc_id, r.dl) for r in spark.read.parquet(path).collect()}
-
-    a, b, c = [(1, 10)], [(2, 20)], [(3, 30)]
+        return set(map(tuple, spark.read.parquet(path).select(*cols).collect()))
 
     idx = str(tmp_path / "recover")
     write_gen(os.path.join(idx, "batch_id=1"), a)
     write_gen(os.path.join(idx, "batch_id=2"), c)
     write_gen(os.path.join(idx, "_compact_tmp"), b)  # complete: has _SUCCESS
-    compact_index_generations(spark, idx, 2, target_files=1)
+    compact_index_generations(spark, idx, 2)
     gens = {r.batch_id for r in spark.read.parquet(idx).select("batch_id").distinct().collect()}
     assert gens == {-3, 2}
     assert rows_of(idx) == set(a) | set(b) | set(c)
@@ -452,7 +467,7 @@ def test_generic_compaction_crash_recovery(spark, tmp_path):
     write_gen(os.path.join(idx2, "batch_id=2"), c)
     write_gen(os.path.join(idx2, "_compact_tmp"), b)
     os.remove(os.path.join(idx2, "_compact_tmp", "_SUCCESS"))  # torn write
-    compact_index_generations(spark, idx2, 2, target_files=1)
+    compact_index_generations(spark, idx2, 2)
     gens2 = {r.batch_id for r in spark.read.parquet(idx2).select("batch_id").distinct().collect()}
     assert gens2 == {-3, 2}
     assert rows_of(idx2) == set(a) | set(c)  # b discarded, sources intact
@@ -463,7 +478,11 @@ def test_generic_compaction_crash_recovery(spark, tmp_path):
 
 def _write_vecs(path, name, rows):
     pdf = pd.DataFrame(rows, columns=["vec_id", "embedding", "label"])
-    pdf.to_parquet(os.path.join(path, name))
+    # hidden name, then rename: the file source must never list a
+    # half-written file (it would read it as an empty micro-batch)
+    tmp = os.path.join(path, "." + name)
+    pdf.to_parquet(tmp)
+    os.replace(tmp, os.path.join(path, name))
 
 
 def test_ivf_index_stream_parity_and_append_only(spark, tmp_path):
