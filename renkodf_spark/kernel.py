@@ -1,7 +1,9 @@
-"""Sequential Renko compression kernel, shared by the batch host
-(`renkodf_spark.operators.renko`), the streaming operator
-(`renkodf_spark.streaming`) and `RenkoLive`. `scan` is the one place
-that picks between the two bit-identical loop variants.
+"""Sequential Renko compression kernel. Every Spark path runs it
+through `scan`, the one place that picks between the two bit-identical
+loop variants: the batch host (`renkodf_spark.operators.renko`), the
+chunked and sub-chunk passes, and both stream operators
+(`renkodf_spark.streaming`, through the batch host's `scan_group`).
+Only `RenkoLive` calls `scan_ticks` itself, one event at a time.
 
 Semantics reproduce srlcarlg/renkodf (reference at
 ``/root/reference/src/renkodf/renkodf.py``):
@@ -56,19 +58,16 @@ WIDE_VALUE_COLUMNS = (
     "fake_low",
 )
 
-# Kernel state vector layout (mutable list):
-#   [last_close, last_direction, wick_min, wick_max, volume, tick_open]
-# Mirrors the scalar state of RenkoWS (renkodf.py:504-508) plus the
-# batch-only tick_open position (renkodf.py:92).
-STATE_LEN = 6
-
-
 def grid_anchor(price: float, brick: float) -> float:
     """Initial reference price: floor of the first price to the brick
     grid (reference renkodf.py:88)."""
     return (price // brick) * brick
 
 
+# Kernel state vector layout (mutable list):
+#   [last_close, last_direction, wick_min, wick_max, volume, tick_open]
+# Mirrors the scalar state of RenkoWS (renkodf.py:504-508) plus the
+# batch-only tick_open position (renkodf.py:92).
 def new_state(first_price: float, brick: float) -> list:
     """Fresh kernel state anchored at the first tick's grid price."""
     anchor = grid_anchor(first_price, brick)

@@ -10,11 +10,13 @@ parallelism model (the reference is single-threaded per instrument).
 Everything around the kernel (projection, export, slicing) is plain
 DataFrame API so Catalyst prunes/pushes as usual.
 
-The host (shared by `renko`, `renko_chunked` and its sub-chunk passes):
+The host (shared by `renko`, `renko_chunked` and its sub-chunk passes;
+the stream operators `renko_stream` and `renko_stream_animate` use its
+guard and `scan_group`):
 
-- `slim_ticks`: the input guard — eager validation, the slim
-  ``(symbol, __time, __price, __seq)`` projection and the null/NaN
-  filter.
+- `guard_ticks`: the input guard — eager validation, the
+  ``(symbol, __time, __price)`` projection and the null/NaN filter;
+  `slim_ticks` adds the batch hosts' ``__seq``.
 - `sorted_ticks`: one group's ticks in the canonical stable
   ``(__time, __seq)`` order.
 - `scan_group`: seed or resume, `kernel.scan`, first-brick label drop;
@@ -189,15 +191,25 @@ def renko(
 def slim_ticks(
     ticks: DataFrame, brick_size: float, symbol_col: str, time_col: str, price_col: str, *extra
 ) -> DataFrame:
-    """The batch hosts' input guard: validate eagerly (before any job
-    runs), project ``(symbol, __time, __price, __seq, *extra)``
-    and drop null/NaN prices and null timestamps.
-
-    A table without ``symbol_col`` is one symbol, ``"0"``. ``__seq``
+    """The batch hosts' input: `guard_ticks` plus ``__seq``, which
     captures input order before the shuffle so equal-timestamp ticks
-    replay in file order. The filter sits on the scan so it pushes down;
-    without it the recurrence would absorb NaN into the wick state (the
-    reference has no guard and corrupts)."""
+    replay in file order."""
+    seq = F.monotonically_increasing_id().alias("__seq")
+    return guard_ticks(ticks, brick_size, symbol_col, time_col, price_col, seq, *extra)
+
+
+def guard_ticks(
+    ticks: DataFrame, brick_size: float, symbol_col: str, time_col: str, price_col: str, *extra
+) -> DataFrame:
+    """The input guard of every Renko host, batch and stream: validate
+    eagerly (before any job or query runs), project
+    ``(symbol, __time, __price, *extra)`` and drop null/NaN prices and
+    null timestamps.
+
+    A table without ``symbol_col`` is one symbol, ``"0"``. The filter
+    sits on the scan so it pushes down; without it the recurrence would
+    absorb NaN into the wick state (the reference has no guard and
+    corrupts)."""
     if brick_size is None or brick_size <= 0:
         raise ValueError("brick_size cannot be 'None' or '<= 0'")
     for col in (price_col, time_col):
@@ -208,7 +220,6 @@ def slim_ticks(
         symbol.cast("string").alias("symbol"),
         F.col(time_col).alias("__time"),
         F.col(price_col).cast("double").alias("__price"),
-        F.monotonically_increasing_id().alias("__seq"),
         *extra,
     ).filter(
         F.col("__time").isNotNull() & F.col("__price").isNotNull() & ~F.isnan("__price")

@@ -36,8 +36,9 @@ stitch, while keeping the output bit-identical to the one-shot scan:
    brick_seq / tick indexes; union with the repair bricks.
 
 Both passes run on the shared Arrow host of ``operators/renko.py``: the
-spec scans are `scan_group` calls, and summaries, incoming and outgoing
-states are carries (its carry protocol) in rows of ``SUB_SCHEMA`` — the
+spec scans are `scan_group` calls, the repair rescans `kernel.scan`
+calls (which pick the loop variant, as everywhere), and summaries,
+incoming and outgoing states are carries (its carry protocol) in rows of ``SUB_SCHEMA`` — the
 host's ``PACKED_SCHEMA`` plus the sub-chunk fields below.
 
 Why bitwise convergence is the right test: grid levels are built by the
@@ -75,15 +76,7 @@ import numpy as np
 import pyarrow as pa
 from pyspark.sql import types as T
 
-from renkodf_spark.kernel import (
-    choose_scan,
-    new_output,
-    new_state,
-    output_arrays,
-    scan,
-    scan_ticks,
-    scan_ticks_vectorized,
-)
+from renkodf_spark.kernel import new_output, new_state, output_arrays, scan
 from renkodf_spark.operators.renko import (
     KIND_BRICK,
     KIND_CARRY,
@@ -231,8 +224,6 @@ def make_repair_runner(
         for s, p in plans_by_symbol.items()
     }
     scan_k = timed(scan, acc_kernel)
-    scan_ticks_k = timed(scan_ticks, acc_kernel)
-    scan_vec_k = timed(scan_ticks_vectorized, acc_kernel)
 
     def run(tick_tbl, side_tbl):
         ts_type = tick_tbl.schema.field("__time").type
@@ -308,18 +299,11 @@ def make_repair_runner(
             jstar = -1
             keep_from = n_spec  # default: no spec bricks survive
             m = hi - lo
-            vec = choose_scan(cp, brick)
-            cp_list: list = []  # scalar-path prefix, extended lazily
             while pos < m and horizon >= 0:
                 stop = min(pos + blk, m)
                 n_prev = len(out["close"])
-                if vec:
-                    # sliced views keep tick indexes chunk-local
-                    scan_vec_k(ct[:stop], cp[:stop], pos, brick, kstate, out)
-                else:
-                    if len(cp_list) < stop:
-                        cp_list.extend(cp[len(cp_list) : stop].tolist())
-                    scan_ticks_k(ct, cp_list, pos, brick, kstate, out, stop)
+                # sliced views keep tick indexes chunk-local
+                scan_k(ct[:stop], cp[:stop], pos, brick, kstate, out)
                 if acc_repair_ticks is not None:
                     acc_repair_ticks.add(stop - pos)
                 # the views over `out` must not outlive this call: the next

@@ -31,12 +31,12 @@ from renkodf_spark.queries import pipeline10  # noqa: F401
 from renkodf_spark.queries import pipeline11  # noqa: F401
 
 # Rotation rule: first the queries whose builders reach code the latest
-# change touched (here: renko_chunked's staging cleanup, now through the
-# shared Hadoop FileSystem handle; no query reaches a streaming writer),
-# then the renko_* product surface.
+# change touched (here: the sub-chunk repair pass, now on kernel.scan,
+# then the input guard every renko_* query shares; no query reaches a
+# stream operator), then the renko_* product surface.
 _PRIORITY = [
-    "renko_chunked_wide",
     "renko_subchunked_wide",
+    "renko_chunked_wide",
     "renko_wicks",
     "renko_normal",
     "renko_nongap",

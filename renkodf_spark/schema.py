@@ -41,7 +41,6 @@ MODE_SOURCES = {
 }
 
 UTILS_COLUMNS = ("direction", "is_reversal", "tick_index_open", "tick_index_close")
-UTILS_COLUMNS_STREAM = ("direction", "is_reversal")
 
 # Wide brick table produced by the batch operator. `symbol` is an engine
 # addition (the reference is single-instrument per instance, SURVEY §1.4)

@@ -5,12 +5,13 @@ hosted in `applyInPandasWithState` — the one streaming host.
 Per-key value state is exactly the reference's scalar state
 (renkodf.py:504-511): (last_close, last_direction, wick_min, wick_max,
 volume) plus our explicit `brick_seq` counter. Completed bricks are
-emitted in append mode. The forming bar (reference `renko_animate`)
-comes either from `renko_stream_animate` (update mode, one forming row
-per key per micro-batch) or client-side from (last bricks + state) via
-`forming_bar_from_state` below. Both operators share one warm-start
-parse (`_warm_states`), one event sort and resume/seed step
-(`_scan_batch`) and one brick-row build (`_batch_frame`).
+emitted in append mode; `renko_stream_animate` adds the forming bar
+(reference `renko_animate`) in update mode, one forming row per key per
+micro-batch. Both operators share the batch hosts' input guard
+(`guard_ticks`), one warm-start parse (`_warm_states`), one event sort
+and resume step (`_scan_batch`: a `Carry` through the batch host's
+`scan_group`, so a resumed micro-batch is the batch scan resumed) and
+one brick-row build (`_batch_frame`).
 
 Semantics notes, matching the reference and `renkodf_spark.live`:
 - cold start seeds one synthetic brick at the grid anchor with
@@ -33,10 +34,10 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from renkodf_spark.kernel import grid_anchor, new_output, output_arrays, scan_ticks, seed_row
+from renkodf_spark.kernel import grid_anchor, seed_row
+from renkodf_spark.operators.renko import Carry, guard_ticks, scan_group
 from renkodf_spark.schema import MODE_SOURCES, MODES, STREAM_SCHEMA
 
 _STATE_SCHEMA = (
@@ -56,7 +57,6 @@ def renko_stream(
     time_col: str = "event_time",
     price_col: str = "close",
     initial_state: pd.DataFrame | None = None,
-    emit_seed: bool = True,
 ) -> DataFrame:
     """Build the streaming wide-brick DataFrame from a streaming tick
     DataFrame. Output mode: append (completed bricks only).
@@ -66,23 +66,20 @@ def renko_stream(
     timestamp, ...). Must be small (one tail row per symbol is enough);
     it is captured in the task closure like a broadcast dim.
     """
-    if brick_size is None or brick_size <= 0:
-        raise ValueError("brick_size cannot be 'None' or '<= 0'")
+    slim = guard_ticks(ticks, brick_size, symbol_col, time_col, price_col)
     warm = _warm_states(initial_state)
 
     def process(key, pdfs, state):
         stored = state.get if state.exists else warm.get(key[0])
-        batch = _scan_batch(pdfs, stored, brick_size, time_col, price_col, emit_seed)
+        batch = _scan_batch(pdfs, stored, brick_size)
         if batch is None:
             return
-        _times, _prices, kstate, seq, head, out = batch
-        n = len(out["event_time"])
-        state.update((*kstate[:4], int(kstate[4]), int(seq + n)))
-        if n or head is not None:
-            yield _batch_frame(key[0], seq, head, out)
+        _times, _prices, head, bricks, carry = batch
+        state.update((*carry[:4], int(carry.volume), int(carry.next_seq)))
+        if len(bricks["brick_seq"]) or head is not None:
+            yield _batch_frame(key[0], head, bricks)
 
-    slim = _clean_input(ticks, symbol_col, time_col, price_col)
-    return slim.groupBy(symbol_col).applyInPandasWithState(
+    return slim.groupBy("symbol").applyInPandasWithState(
         process,
         outputStructType=STREAM_SCHEMA,
         stateStructType=_STATE_SCHEMA,
@@ -107,73 +104,50 @@ def _warm_states(initial_state: pd.DataFrame | None, open_src: str | None = None
     return warm
 
 
-def _scan_batch(
-    pdfs, stored: tuple | None, brick: float, time_col: str, price_col: str, emit_seed: bool
-):
-    """One key's micro-batch through the kernel: events replayed in
+def _scan_batch(pdfs, stored: tuple | None, brick: float):
+    """One key's micro-batch through `scan_group`: events replayed in
     event-time order (stable), resumed from ``stored`` (the key's state
-    or its warm start), else a cold start. Returns ``(times, prices,
-    kstate, seq, head, out)`` — ``seq`` numbers the first brick in
-    ``out``, ``head`` is the cold-start seed row (or None) — or None for
-    an empty batch. Stored fields after ``seq`` are the caller's."""
-    chunks = [pdf[[time_col, price_col]] for pdf in pdfs]
-    events = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else chunks[0]
-    events = events.sort_values(time_col, kind="mergesort")
-    times = events[time_col].to_numpy()
-    prices = events[price_col].to_numpy().tolist()
-    if not prices:
+    or its warm start), else from the reference's cold-start seed over
+    every tick but the first. Returns ``(times, prices, head, bricks,
+    carry)`` — all the batch's sorted ticks, the cold-start seed row (or
+    None), the brick columns (`emit`) and the carry after the batch —
+    or None for an empty batch. Stored fields after ``seq`` are the
+    caller's."""
+    pdfs = list(pdfs)
+    events = pd.concat(pdfs, ignore_index=True) if len(pdfs) > 1 else pdfs[0]
+    events = events.sort_values("__time", kind="mergesort")
+    times = events["__time"].to_numpy()
+    prices = events["__price"].to_numpy()
+    if not len(prices):
         return None
-    head = None
-    if stored is not None:
-        kstate, seq, start = [*stored[:5], 0], stored[5], 0
-    else:
-        anchor = grid_anchor(prices[0], brick)
-        seq = 0
-        if emit_seed:
-            head = seed_row(times[0], anchor)
-            seq = 1
-        # reference cold start: state mirrors the seed row (dir=1)
-        kstate, start = [anchor, 1, anchor, anchor, 1, 0], 1
-    out = new_output()
-    scan_ticks(times, prices, start, brick, kstate, out)
-    return times, prices, kstate, seq, head, out
+    head, start = None, 0
+    if stored is None:
+        anchor = grid_anchor(float(prices[0]), brick)
+        head, start = seed_row(times[0], anchor), 1
+        # the seed row is brick 0 and the state mirrors it (dir=1)
+        stored = (anchor, 1, anchor, anchor, 1, 1)
+    carry = Carry(*stored[:5], tick_open=0, next_seq=stored[5], tick_offset=0, first_ts=None)
+    bricks, carry = scan_group(times[start:], prices[start:], brick, False, carry)
+    return times, prices, head, bricks, carry
 
 
-def _batch_frame(symbol: str, seq: int, head: dict | None, out: dict) -> pd.DataFrame:
-    """One micro-batch's rows for ``symbol``: the kernel's bricks in
-    ``out``, numbered from ``seq``, led by the cold-start `seed_row`
-    ``head`` (numbered ``seq - 1``) when there is one.  The seed is
-    prepended to the column arrays, in their dtypes, rather than
-    concatenated as a frame: a batch that closes no brick would make
-    that an empty-frame concat."""
-    arrs = output_arrays(out)
-    event_time = out["event_time"]
+def _batch_frame(symbol: str, head: dict | None, bricks: dict) -> pd.DataFrame:
+    """One micro-batch's rows for ``symbol``: the brick columns
+    ``bricks``, led by the cold-start `seed_row` ``head`` (brick 0) when
+    there is one. The seed is prepended to the column arrays, in their
+    dtypes, rather than concatenated as a frame: a batch that closes no
+    brick would make that an empty-frame concat. ``event_time`` leaves
+    as nanoseconds whatever the input unit."""
+    cols = ["brick_seq", "event_time", *_VALUE_COLUMNS]
     if head is not None:
-        seq -= 1
-        event_time = [head["event_time"], *event_time]
-        arrs = {
-            c: np.concatenate((np.array([head[c]], dtype=arrs[c].dtype), arrs[c]))
-            for c in _VALUE_COLUMNS
+        head = {**head, "brick_seq": 0}
+        bricks = {
+            c: np.concatenate((np.array([head[c]], dtype=bricks[c].dtype), bricks[c]))
+            for c in cols
         }
-    frame = {
-        "symbol": symbol,
-        "brick_seq": range(seq, seq + len(event_time)),
-        "event_time": event_time,
-    }
-    for c in _VALUE_COLUMNS:
-        frame[c] = arrs[c]
+    frame = {"symbol": symbol, **{c: bricks[c] for c in cols}}
+    frame["event_time"] = frame["event_time"].astype("datetime64[ns]")
     return pd.DataFrame(frame, columns=_OUT_COLUMNS)
-
-
-def _clean_input(ticks: DataFrame, symbol_col: str, time_col: str, price_col: str) -> DataFrame:
-    """Same null/NaN guard as batch renko(): NaN would silently poison
-    the wick min/max state (and raise in the scalar scan); filtering on
-    the projection keeps it at the source."""
-    return ticks.select(symbol_col, time_col, price_col).filter(
-        F.col(time_col).isNotNull()
-        & F.col(price_col).isNotNull()
-        & ~F.isnan(F.col(price_col).cast("double"))
-    )
 
 
 _FORMING_SCHEMA = T.StructType(
@@ -207,8 +181,7 @@ def renko_stream_animate(
     projection); its values are written into every variant column, so
     only the chosen mode's projection of the forming row is meaningful.
     """
-    if brick_size is None or brick_size <= 0:
-        raise ValueError("brick_size cannot be 'None' or '<= 0'")
+    slim = guard_ticks(ticks, brick_size, symbol_col, time_col, price_col)
     if mode not in MODES:
         raise ValueError(f"Only {list(MODES)} options are valid.")
     open_src, _high_src, _low_src = MODE_SOURCES[mode]
@@ -218,22 +191,20 @@ def renko_stream_animate(
     def process(key, pdfs, state):
         symbol = key[0]
         stored = state.get if state.exists else warm.get(symbol)
-        batch = _scan_batch(pdfs, stored, brick_size, time_col, price_col, True)
+        batch = _scan_batch(pdfs, stored, brick_size)
         if batch is None:
             return
-        times, prices, kstate, seq, head, out = batch
-        n = len(out["event_time"])
+        times, prices, head, bricks, carry = batch
+        last_close, _ld, wick_min, wick_max, volume = carry[:5]
+        n = len(bricks["brick_seq"])
         if n:
-            last_open = float(output_arrays(out)[open_src][-1])
+            last_open = float(bricks[open_src][-1])
         else:
-            last_open = stored[-1] if stored is not None else kstate[0]  # cold: the anchor
-        state.update(
-            (kstate[0], kstate[1], kstate[2], kstate[3], int(kstate[4]), int(seq + n), last_open)
-        )
+            last_open = stored[-1] if stored is not None else last_close  # cold: the anchor
+        state.update((*carry[:4], int(volume), int(carry.next_seq), last_open))
 
         # forming bar (reference renko_animate branching, renkodf.py:817-849)
         price = float(prices[-1])
-        last_close, _ld, wick_min, wick_max, volume, _to = kstate
         o = price
         h = wick_max if mode != "normal" else price
         lo = wick_min if mode != "normal" else price
@@ -258,7 +229,7 @@ def renko_stream_animate(
         direction = 1 if price > o else -1 if price < o else 0
         forming = {
             "symbol": symbol,
-            "brick_seq": int(seq + n),
+            "brick_seq": int(carry.next_seq),
             "event_time": times[-1],
             "is_forming": 1,
             "close": price,
@@ -280,11 +251,10 @@ def renko_stream_animate(
         }
         frames = [pd.DataFrame([forming])]
         if n or head is not None:
-            frames.insert(0, _batch_frame(symbol, seq, head, out).assign(is_forming=0))
+            frames.insert(0, _batch_frame(symbol, head, bricks).assign(is_forming=0))
         yield pd.concat(frames, ignore_index=True)[_FORMING_COLUMNS]
 
-    slim = _clean_input(ticks, symbol_col, time_col, price_col)
-    return slim.groupBy(symbol_col).applyInPandasWithState(
+    return slim.groupBy("symbol").applyInPandasWithState(
         process,
         outputStructType=_FORMING_SCHEMA,
         stateStructType=_ANIMATE_STATE_SCHEMA,
@@ -292,31 +262,3 @@ def renko_stream_animate(
         timeoutConf="NoTimeout",
     )
 
-
-def forming_bar_from_state(
-    completed: pd.DataFrame,
-    last_price: float,
-    last_ts,
-    state: tuple,
-    mode: str = "wicks",
-) -> pd.DataFrame:
-    """Client-side forming-bar synthesis from the latest completed
-    bricks + streaming state — the streaming analog of
-    `RenkoLive.renko_animate` (reference renkodf.py:767-858) for sinks
-    that want the in-progress bar."""
-    from renkodf_spark.live import RenkoLive
-
-    live = RenkoLive.__new__(RenkoLive)
-    live._ts_unit = "us"
-    live._brick_size = 0.0  # unused by animate
-    live._buf = {"timestamp": completed["timestamp"].tolist() if "timestamp" in completed else []}
-    from renkodf_spark.live import _LIVE_COLUMNS
-
-    for c in _LIVE_COLUMNS:
-        live._buf[c] = completed[c].tolist() if c in completed else []
-    live._initial_df = live._wide_frame()
-    last_close, last_dir, wick_min, wick_max, volume, _seq = state
-    live._state = [last_close, last_dir, wick_min, wick_max, volume, 0]
-    live._ws_timestamp = last_ts
-    live._ws_price = last_price
-    return live.renko_animate(mode, max_len=0)

@@ -9,6 +9,25 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_TEST", "/root/testdata/sf0.001")
 
 
+def write_source(src, name, data, columns=None, mtime=None):
+    """Write ``data`` (a pandas frame, or rows with ``columns``) as the
+    parquet file ``name`` of the watched stream source directory ``src``.
+
+    The file is written under a hidden name and renamed into place: the
+    file source must never list a half-written file (it would read it as
+    an empty micro-batch). ``mtime`` (epoch seconds) orders the file
+    among its siblings: the source takes files oldest first."""
+    import pandas as pd
+
+    if not isinstance(data, pd.DataFrame):
+        data = pd.DataFrame(data, columns=columns)
+    tmp = os.path.join(src, "." + name)
+    data.to_parquet(tmp, index=False)
+    if mtime is not None:
+        os.utime(tmp, (mtime, mtime))
+    os.replace(tmp, os.path.join(src, name))
+
+
 @pytest.fixture(scope="session")
 def spark():
     from pyspark.sql import SparkSession

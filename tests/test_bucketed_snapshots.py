@@ -9,22 +9,16 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from tests.conftest import write_source
+
 SCHEMA = "k long, v string, seq long, del boolean"
-
-
-def _write(path, name, rows):
-    pdf = pd.DataFrame(rows, columns=["k", "v", "seq", "del"])
-    # hidden name, then rename: the file source must never list a
-    # half-written file (it would read it as an empty micro-batch)
-    tmp = os.path.join(path, "." + name)
-    pdf.to_parquet(tmp)
-    os.replace(tmp, os.path.join(path, name))
+MERGE_COLUMNS = ["k", "v", "seq", "del"]
 
 
 def _run_stream(spark, tmp_path, writer, batches, schema=SCHEMA, rename_seq=True):
     src = str(tmp_path / "src")
     os.makedirs(src, exist_ok=True)
-    _write(src, "b0.parquet", batches[0])
+    write_source(src, "b0.parquet", batches[0], MERGE_COLUMNS)
     stream = (
         spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(src)
     )
@@ -37,7 +31,7 @@ def _run_stream(spark, tmp_path, writer, batches, schema=SCHEMA, rename_seq=True
     try:
         q.processAllAvailable()
         for i, rows in enumerate(batches[1:], start=1):
-            _write(src, f"b{i}.parquet", rows)
+            write_source(src, f"b{i}.parquet", rows, MERGE_COLUMNS)
             q.processAllAvailable()
     finally:
         q.stop()

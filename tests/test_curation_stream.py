@@ -12,18 +12,15 @@ import pytest
 from pyspark.sql import functions as F
 
 from renkodf_spark.streaming.curation_stream import dedup_stream, quality_gate
+from tests.conftest import write_source
 
 SCHEMA = "doc_id long, event_time timestamp, text string"
 
 
-def _write_batch(path: str, name: str, rows: list[tuple]):
+def _docs(rows: list[tuple]) -> pd.DataFrame:
     pdf = pd.DataFrame(rows, columns=["doc_id", "event_time", "text"])
     pdf["event_time"] = pd.to_datetime(pdf["event_time"]).astype("datetime64[us]")
-    # hidden name, then rename: the file source must never list a
-    # half-written file (it would read it as an empty micro-batch)
-    tmp = os.path.join(path, "." + name)
-    pdf.to_parquet(tmp)
-    os.replace(tmp, os.path.join(path, name))
+    return pdf
 
 
 def _drain(spark, q, table: str, expect: int, deadline_s: int = 40) -> int:
@@ -40,14 +37,14 @@ def _drain(spark, q, table: str, expect: int, deadline_s: int = 40) -> int:
 def test_dedup_stream_across_batches(spark, tmp_path):
     src = str(tmp_path / "src")
     os.makedirs(src)
-    _write_batch(
+    write_source(
         src,
         "b1.parquet",
-        [
+        _docs([
             (1, "2024-01-01 00:00:00", "alpha beta gamma"),
             (2, "2024-01-01 00:00:01", "delta epsilon zeta"),
             (3, "2024-01-01 00:00:02", "alpha beta gamma"),  # in-batch dup of 1
-        ],
+        ]),
     )
     stream = (
         spark.readStream.schema(SCHEMA)
@@ -65,13 +62,13 @@ def test_dedup_stream_across_batches(spark, tmp_path):
     try:
         assert _drain(spark, q, "dedup_docs", 2) == 2
         # second file, later trigger: one cross-batch dup + one new doc
-        _write_batch(
+        write_source(
             src,
             "b2.parquet",
-            [
+            _docs([
                 (4, "2024-01-01 00:10:00", "alpha beta gamma"),  # dup of 1
                 (5, "2024-01-01 00:10:01", "eta theta iota"),
-            ],
+            ]),
         )
         assert _drain(spark, q, "dedup_docs", 3) == 3
     finally:
@@ -87,14 +84,14 @@ def test_dedup_stream_across_batches(spark, tmp_path):
 def test_quality_gate_stateless(spark, tmp_path):
     src = str(tmp_path / "src")
     os.makedirs(src)
-    _write_batch(
+    write_source(
         src,
         "b1.parquet",
-        [
+        _docs([
             (1, "2024-01-01 00:00:00", "one two three four five six"),
             (2, "2024-01-01 00:00:01", "too short"),
             (3, "2024-01-01 00:00:02", "w. x, y; z: a! b? c. d, e; f: g!"),
-        ],
+        ]),
     )
     stream = spark.readStream.schema(SCHEMA).parquet(src)
     q = (
@@ -133,7 +130,7 @@ def test_neardup_stream_matches_batch_incremental_lsh(spark, tmp_path):
     ]
     src = str(tmp_path / "src")
     os.makedirs(src)
-    _write_batch(src, "b1.parquet", b1)
+    write_source(src, "b1.parquet", _docs(b1))
     stream = (
         spark.readStream.schema(SCHEMA).option("maxFilesPerTrigger", "1").parquet(src)
     )
@@ -147,7 +144,7 @@ def test_neardup_stream_matches_batch_incremental_lsh(spark, tmp_path):
     )
     try:
         q.processAllAvailable()
-        _write_batch(src, "b2.parquet", b2)
+        write_source(src, "b2.parquet", _docs(b2))
         q.processAllAvailable()
     finally:
         q.stop()
@@ -210,7 +207,7 @@ def test_neardup_index_compaction_bounds_partitions_with_parity(spark, tmp_path)
         )
         try:
             for i, rows in enumerate(batches):
-                _write_batch(src, f"b{i}.parquet", rows)
+                write_source(src, f"b{i}.parquet", _docs(rows))
                 q.processAllAvailable()
         finally:
             q.stop()
@@ -255,8 +252,8 @@ def test_rate_gate_stream_equals_batch_sample(spark, tmp_path):
     ]
     src = str(tmp_path / "src")
     os.makedirs(src)
-    _write_batch(src, "b1.parquet", rows[:120])
-    _write_batch(src, "b2.parquet", rows[120:])
+    write_source(src, "b1.parquet", _docs(rows[:120]))
+    write_source(src, "b2.parquet", _docs(rows[120:]))
     stream = (
         spark.readStream.schema(SCHEMA).option("maxFilesPerTrigger", "1").parquet(src)
     )
@@ -294,7 +291,7 @@ def test_quota_cap_stream_fills_across_triggers(spark, tmp_path):
 
     src = str(tmp_path / "src")
     os.makedirs(src)
-    _write_batch(src, "b1.parquet", rows(0, 8))  # 4 en, 4 de
+    write_source(src, "b1.parquet", _docs(rows(0, 8)))  # 4 en, 4 de
     stream = (
         spark.readStream.schema(SCHEMA).option("maxFilesPerTrigger", "1").parquet(src)
     )
@@ -316,7 +313,7 @@ def test_quota_cap_stream_fills_across_triggers(spark, tmp_path):
             spark.read.parquet(out_path).groupBy("lang").count().collect()
         )
         assert {r["lang"]: r["count"] for r in first} == {"en": 4, "de": 4}
-        _write_batch(src, "b2.parquet", rows(8, 20))  # 6 more of each
+        write_source(src, "b2.parquet", _docs(rows(8, 20)))  # 6 more of each
         q.processAllAvailable()
     finally:
         q.stop()
@@ -350,7 +347,7 @@ def test_quota_select_stream_equals_batch_quota_sample(spark, tmp_path):
 
     src = str(tmp_path / "src")
     os.makedirs(src)
-    _write_batch(src, "b1.parquet", rows(0, 30))
+    write_source(src, "b1.parquet", _docs(rows(0, 30)))
     stream = (
         spark.readStream.schema(SCHEMA).option("maxFilesPerTrigger", "1").parquet(src)
     )
@@ -369,9 +366,9 @@ def test_quota_select_stream_equals_batch_quota_sample(spark, tmp_path):
             (r.doc_id, r.sample_rank)
             for r in spark.read.parquet(sel_path).select("doc_id", "sample_rank").collect()
         }
-        _write_batch(src, "b2.parquet", rows(30, 90))
+        write_source(src, "b2.parquet", _docs(rows(30, 90)))
         q.processAllAvailable()
-        _write_batch(src, "b3.parquet", rows(90, 120))
+        write_source(src, "b3.parquet", _docs(rows(90, 120)))
         q.processAllAvailable()
     finally:
         q.stop()
@@ -555,14 +552,14 @@ def test_bloom_dedup_stream_across_triggers(spark, tmp_path):
 
     src = str(tmp_path / "src")
     os.makedirs(src)
-    _write_batch(
+    write_source(
         src,
         "b1.parquet",
-        [
+        _docs([
             (1, "2024-01-01 00:00:00", "alpha beta gamma"),
             (2, "2024-01-01 00:00:01", "delta epsilon zeta"),
             (3, "2024-01-01 00:00:02", "alpha beta gamma"),  # in-batch dup of 1
-        ],
+        ]),
     )
     stream = (
         spark.readStream.schema(SCHEMA).option("maxFilesPerTrigger", "1").parquet(src)
@@ -580,13 +577,13 @@ def test_bloom_dedup_stream_across_triggers(spark, tmp_path):
         q.processAllAvailable()
         got1 = sorted(r["doc_id"] for r in spark.read.parquet(out_path).collect())
         assert got1 == [1, 2]  # in-batch dup dropped, first id wins
-        _write_batch(
+        write_source(
             src,
             "b2.parquet",
-            [
+            _docs([
                 (4, "2024-01-01 00:01:00", "ALPHA BETA GAMMA  "),  # norm dup of 1
                 (5, "2024-01-01 00:01:01", "eta theta iota"),
-            ],
+            ]),
         )
         q.processAllAvailable()
     finally:
@@ -621,7 +618,7 @@ def test_bloom_dedup_one_sided_under_tiny_sketch(spark, tmp_path):
     src = str(tmp_path / "src")
     os.makedirs(src)
     rows1 = [(i, "2024-01-01 00:00:%02d" % (i % 60), f"first wave doc {i}") for i in range(30)]
-    _write_batch(src, "b1.parquet", rows1)
+    write_source(src, "b1.parquet", _docs(rows1))
     stream = (
         spark.readStream.schema(SCHEMA).option("maxFilesPerTrigger", "1").parquet(src)
     )
@@ -638,7 +635,7 @@ def test_bloom_dedup_one_sided_under_tiny_sketch(spark, tmp_path):
         # replays of wave-1 texts + genuinely new texts
         rows2 = [(100 + i, "2024-01-01 00:01:%02d" % (i % 60), f"first wave doc {i}") for i in range(30)]
         rows2 += [(200 + i, "2024-01-01 00:02:%02d" % (i % 60), f"second wave doc {i}") for i in range(30)]
-        _write_batch(src, "b2.parquet", rows2)
+        write_source(src, "b2.parquet", _docs(rows2))
         q.processAllAvailable()
     finally:
         q.stop()
@@ -667,7 +664,7 @@ def test_sketch_rollup_stream_equals_batch(spark, tmp_path):
             for i in range(lo, hi)
         ]
 
-    _write_batch(src, "b1.parquet", rows(0, 40))
+    write_source(src, "b1.parquet", _docs(rows(0, 40)))
     stream = (
         spark.readStream.schema(SCHEMA).option("maxFilesPerTrigger", "1").parquet(src)
     )
@@ -682,7 +679,7 @@ def test_sketch_rollup_stream_equals_batch(spark, tmp_path):
     )
     try:
         q.processAllAvailable()
-        _write_batch(src, "b2.parquet", rows(20, 80))  # overlaps trigger 1
+        write_source(src, "b2.parquet", _docs(rows(20, 80)))  # overlaps trigger 1
         q.processAllAvailable()
     finally:
         q.stop()
@@ -725,7 +722,7 @@ def test_cms_rollup_stream_equals_batch(spark, tmp_path):
             for i in range(lo, hi)
         ]
 
-    _write_batch(src, "b1.parquet", rows(0, 30))
+    write_source(src, "b1.parquet", _docs(rows(0, 30)))
     stream = (
         spark.readStream.schema(SCHEMA).option("maxFilesPerTrigger", "1").parquet(src)
     )
@@ -738,7 +735,7 @@ def test_cms_rollup_stream_equals_batch(spark, tmp_path):
     )
     try:
         q.processAllAvailable()
-        _write_batch(src, "b2.parquet", rows(30, 100))
+        write_source(src, "b2.parquet", _docs(rows(30, 100)))
         q.processAllAvailable()
     finally:
         q.stop()
@@ -792,7 +789,7 @@ def test_dhash_dedup_stream_matches_batch_election(spark, tmp_path):
     def write_media(src, name, df):
         pdf = df.toPandas()
         pdf["payload"] = pdf["payload"].apply(bytes)
-        pdf.to_parquet(os.path.join(src, name))
+        write_source(src, name, pdf)
 
     src = str(tmp_path / "msrc")
     os.makedirs(src)
@@ -876,9 +873,7 @@ def test_nb_model_stream_equals_batch_train(spark, tmp_path):
           (4, "fresh words appear", True)]
 
     def _w(name, rows):
-        pd.DataFrame(rows, columns=["doc_id", "text", "is_target"]).to_parquet(
-            os.path.join(src, name)
-        )
+        write_source(src, name, rows, ["doc_id", "text", "is_target"])
 
     _w("b1.parquet", b1)
     stream = (
@@ -953,9 +948,7 @@ def test_nb_model_bucketed_deltas_equal_batch_train(spark, tmp_path):
     ]
 
     def _w(name, rows):
-        pd.DataFrame(rows, columns=["doc_id", "text", "is_target"]).to_parquet(
-            os.path.join(src, name)
-        )
+        write_source(src, name, rows, ["doc_id", "text", "is_target"])
 
     _w("b1.parquet", batches[0])
     stream = (
@@ -1059,9 +1052,7 @@ def test_bigram_lm_stream_equals_batch_train(spark, tmp_path):
     ]
 
     def _w(name, rows):
-        pd.DataFrame(rows, columns=["doc_id", "text"]).to_parquet(
-            os.path.join(src, name)
-        )
+        write_source(src, name, rows, ["doc_id", "text"])
 
     _w("b1.parquet", batches[0])
     stream = (

@@ -3,20 +3,13 @@ triggers, intra-batch duplicate resolution, delete semantics."""
 
 import os
 
-import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from tests.conftest import write_source
+
 SCHEMA = "k long, v string, seq long, del boolean"
-
-
-def _write(path, name, rows):
-    pdf = pd.DataFrame(rows, columns=["k", "v", "seq", "del"])
-    # hidden name, then rename: the file source must never list a
-    # half-written file (it would read it as an empty micro-batch)
-    tmp = os.path.join(path, "." + name)
-    pdf.to_parquet(tmp)
-    os.replace(tmp, os.path.join(path, name))
+MERGE_COLUMNS = ["k", "v", "seq", "del"]
 
 
 def test_merge_stream_state_across_triggers(spark, tmp_path):
@@ -25,12 +18,12 @@ def test_merge_stream_state_across_triggers(spark, tmp_path):
     src = str(tmp_path / "src")
     os.makedirs(src)
     # trigger 1: inserts, incl. an intra-batch duplicate key (seq wins)
-    _write(src, "b1.parquet", [
+    write_source(src, "b1.parquet", [
         (1, "a0", 1, False),
         (1, "a1", 2, False),   # same key, higher seq -> wins
         (2, "b", 3, False),
         (3, "c", 4, False),
-    ])
+    ], MERGE_COLUMNS)
     stream = (
         spark.readStream.schema(SCHEMA).option("maxFilesPerTrigger", "1").parquet(src)
     )
@@ -47,12 +40,12 @@ def test_merge_stream_state_across_triggers(spark, tmp_path):
     try:
         q.processAllAvailable()
         # trigger 2: update k=1, delete k=2, insert k=4, orphan delete k=9
-        _write(src, "b2.parquet", [
+        write_source(src, "b2.parquet", [
             (1, "a2", 5, False),
             (2, None, 6, True),
             (4, "d", 7, False),
             (9, None, 8, True),
-        ])
+        ], MERGE_COLUMNS)
         q.processAllAvailable()
     finally:
         q.stop()
@@ -80,10 +73,10 @@ def test_scd2_stream_matches_batch_incl_late_rows(spark, tmp_path):
     src = str(tmp_path / "src")
     os.makedirs(src)
     # (k, status=v, ts encoded in seq for simplicity)
-    _write(src, "b1.parquet", [
+    write_source(src, "b1.parquet", [
         (1, "a", 10, False), (1, "b", 20, False),
         (2, "x", 10, False),
-    ])
+    ], MERGE_COLUMNS)
     stream = (
         spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(src)
     )
@@ -98,10 +91,10 @@ def test_scd2_stream_matches_batch_incl_late_rows(spark, tmp_path):
         q.processAllAvailable()
         # trigger 2: key 1 gets a LATE row at ts 15 (between a@10 and
         # b@20) and key 3 appears; key 2 untouched
-        _write(src, "b2.parquet", [
+        write_source(src, "b2.parquet", [
             (1, "z", 15, False),
             (3, "m", 5, False),
-        ])
+        ], MERGE_COLUMNS)
         q.processAllAvailable()
     finally:
         q.stop()
@@ -142,10 +135,10 @@ def test_funnel_stream_matches_batch_incl_late_step(spark, tmp_path):
     os.makedirs(src)
     # (user=k, event_type=v, ts=seq): user 1 does b@20 only (no chain),
     # user 2 completes a@5 b@9
-    _write(src, "b1.parquet", [
+    write_source(src, "b1.parquet", [
         (1, "b", 20, False),
         (2, "a", 5, False), (2, "b", 9, False),
-    ])
+    ], MERGE_COLUMNS)
     stream = (
         spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(src)
     )
@@ -161,7 +154,7 @@ def test_funnel_stream_matches_batch_incl_late_step(spark, tmp_path):
         q.processAllAvailable()
         # late a@10 for user 1 retroactively completes their chain
         # (a@10 -> b@20); user 3 starts a chain
-        _write(src, "b2.parquet", [(1, "a", 10, False), (3, "a", 1, False)])
+        write_source(src, "b2.parquet", [(1, "a", 10, False), (3, "a", 1, False)], MERGE_COLUMNS)
         q.processAllAvailable()
     finally:
         q.stop()
@@ -203,9 +196,9 @@ def test_search_index_stream_matches_batch(spark, tmp_path):
     schema = "k long, v string, seq long, del boolean"  # v = text
     src = str(tmp_path / "src")
     os.makedirs(src)
-    _write(src, "b1.parquet", [
+    write_source(src, "b1.parquet", [
         (1, "x x y", 0, False), (2, "a b a", 0, False),
-    ])
+    ], MERGE_COLUMNS)
     stream = (
         spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(src)
     )
@@ -218,7 +211,7 @@ def test_search_index_stream_matches_batch(spark, tmp_path):
     )
     try:
         q.processAllAvailable()
-        _write(src, "b2.parquet", [(3, "y x", 0, False), (4, "b", 0, False)])
+        write_source(src, "b2.parquet", [(3, "y x", 0, False), (4, "b", 0, False)], MERGE_COLUMNS)
         q.processAllAvailable()
     finally:
         q.stop()
@@ -279,7 +272,7 @@ def test_search_index_resent_doc_id_is_ignored(spark, tmp_path):
     schema = "k long, v string, seq long, del boolean"
     src = str(tmp_path / "src")
     os.makedirs(src)
-    _write(src, "b1.parquet", [(1, "x x y", 0, False), (2, "a b", 0, False)])
+    write_source(src, "b1.parquet", [(1, "x x y", 0, False), (2, "a b", 0, False)], MERGE_COLUMNS)
     stream = (
         spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(src)
     )
@@ -294,11 +287,11 @@ def test_search_index_resent_doc_id_is_ignored(spark, tmp_path):
         q.processAllAvailable()
         # trigger 2: id 1 re-sent with NEW text (must be dropped), id 3
         # fresh but duplicated within the batch (one copy indexed)
-        _write(src, "b2.parquet", [
+        write_source(src, "b2.parquet", [
             (1, "z z z z", 0, False),
             (3, "y", 0, False),
             (3, "y", 0, False),
-        ])
+        ], MERGE_COLUMNS)
         q.processAllAvailable()
     finally:
         q.stop()
@@ -365,7 +358,7 @@ def test_search_index_compaction_bounds_generations_with_parity(spark, tmp_path)
         )
         try:
             for i, rows in enumerate(batches):
-                _write(src, f"b{i}.parquet", rows)
+                write_source(src, f"b{i}.parquet", rows, MERGE_COLUMNS)
                 q.processAllAvailable()
         finally:
             q.stop()
@@ -476,13 +469,7 @@ def test_generic_compaction_crash_recovery(spark, tmp_path, schema, a, b, c):
 # ------------------------------------------------ streaming IVF index
 
 
-def _write_vecs(path, name, rows):
-    pdf = pd.DataFrame(rows, columns=["vec_id", "embedding", "label"])
-    # hidden name, then rename: the file source must never list a
-    # half-written file (it would read it as an empty micro-batch)
-    tmp = os.path.join(path, "." + name)
-    pdf.to_parquet(tmp)
-    os.replace(tmp, os.path.join(path, name))
+VEC_COLUMNS = ["vec_id", "embedding", "label"]
 
 
 def test_ivf_index_stream_parity_and_append_only(spark, tmp_path):
@@ -507,7 +494,7 @@ def test_ivf_index_stream_parity_and_append_only(spark, tmp_path):
 
     src = str(tmp_path / "src")
     os.makedirs(src)
-    _write_vecs(src, "b1.parquet", vecs[:8] + [vecs[3]])  # intra-batch dup id 3
+    write_source(src, "b1.parquet", vecs[:8] + [vecs[3]], VEC_COLUMNS)  # intra-batch dup id 3
     stream = (
         spark.readStream.schema("vec_id long, embedding array<double>, label string")
         .option("maxFilesPerTrigger", "1")
@@ -525,7 +512,7 @@ def test_ivf_index_stream_parity_and_append_only(spark, tmp_path):
         # trigger 2: rest of the corpus + a RE-SENT id 5 with a mutated
         # vector — append-only must keep the first-generation row
         mutated = (5, [99.0, 99.0, 99.0, 99.0], "zz")
-        _write_vecs(src, "b2.parquet", vecs[8:] + [mutated])
+        write_source(src, "b2.parquet", vecs[8:] + [mutated], VEC_COLUMNS)
         q.processAllAvailable()
     finally:
         q.stop()

@@ -3,11 +3,11 @@ rank-error guarantee, mergeability, streaming parity."""
 
 import os
 
-import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from renkodf_spark.functions import quantiles as Q
+from tests.conftest import write_source
 
 
 def _sketch_dict(df, gcols=("g",)):
@@ -101,7 +101,7 @@ def test_quantile_sketch_stream_equals_batch(spark, tmp_path):
     ]
 
     def _w(name, rows):
-        pd.DataFrame(rows, columns=["g", "v"]).to_parquet(os.path.join(src, name))
+        write_source(src, name, rows, ["g", "v"])
 
     _w("b1.parquet", batches[0])
     stream = (

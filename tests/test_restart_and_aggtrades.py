@@ -13,6 +13,7 @@ import pandas as pd
 import pytest
 
 from renkodf_spark.streaming import renko_stream
+from tests.conftest import write_source
 from tests.test_streaming import _live_replay, _two_symbol_ticks, _us
 
 BRICK = 1.0
@@ -43,9 +44,7 @@ def test_stream_restart_from_checkpoint(spark, tmp_path):
 
     # phase 1: two files, then stop
     for i in (0, 1):
-        p = os.path.join(src, f"part-{i:04d}.parquet")
-        pdf.iloc[batches[i]].to_parquet(p, index=False)
-        os.utime(p, (1e9 + i, 1e9 + i))
+        write_source(src, f"part-{i:04d}.parquet", pdf.iloc[batches[i]], mtime=1e9 + i)
     q = start_query()
     q.processAllAvailable()
     q.stop()
@@ -53,9 +52,7 @@ def test_stream_restart_from_checkpoint(spark, tmp_path):
 
     # phase 2: new query object, same checkpoint, remaining files
     for i in (2, 3):
-        p = os.path.join(src, f"part-{i:04d}.parquet")
-        pdf.iloc[batches[i]].to_parquet(p, index=False)
-        os.utime(p, (1e9 + i, 1e9 + i))
+        write_source(src, f"part-{i:04d}.parquet", pdf.iloc[batches[i]], mtime=1e9 + i)
     q2 = start_query()
     q2.processAllAvailable()
     q2.stop()

@@ -228,12 +228,11 @@ def test_setsim_stream_equals_batch(spark, tmp_path):
     cross-trigger pair, a re-sent id dropped, and replay idempotency."""
     import os
 
-    import pandas as pd
-
     from renkodf_spark.streaming.neardup_stream import (
         read_setsim_pairs,
         setsim_index_writer,
     )
+    from tests.conftest import write_source
 
     schema = "doc_id long, text string"
     src = str(tmp_path / "src")
@@ -248,9 +247,7 @@ def test_setsim_stream_equals_batch(spark, tmp_path):
     ]
 
     def _w(name, rows):
-        pd.DataFrame(rows, columns=["doc_id", "text"]).to_parquet(
-            os.path.join(src, name)
-        )
+        write_source(src, name, rows, ["doc_id", "text"])
 
     _w("b1.parquet", batches[0])
     stream = (

@@ -9,9 +9,12 @@ import os
 import numpy as np
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 from renkodf_spark.live import RenkoLive
 from renkodf_spark.streaming import renko_stream
+from renkodf_spark.streaming.renko_stream import _VALUE_COLUMNS
+from tests.conftest import write_source
 from tests.test_vs_reference import make_ticks
 
 BRICK = 1.0
@@ -32,23 +35,22 @@ def _us(col):
     return pd.DatetimeIndex(col).astype("datetime64[us]").asi8
 
 
-def _live_replay(pdf, sym):
+def _live_replay(pdf, sym, brick=BRICK):
     sub = pdf[pdf["symbol"] == sym].sort_values("event_time", kind="mergesort")
     ts = _us(sub["event_time"])
-    live = RenkoLive(int(ts[0]), float(sub["close"].iloc[0]), brick_size=BRICK)
+    live = RenkoLive(int(ts[0]), float(sub["close"].iloc[0]), brick_size=brick)
     for t, p in zip(ts[1:], sub["close"].iloc[1:]):
         live.add_prices(int(t), float(p))
     return live
 
 
-def _run_stream(spark, tmpdir, pdf, n_files=4, initial_state=None, emit_seed=True):
+def _run_stream(spark, tmpdir, pdf, n_files=4, initial_state=None, brick=BRICK):
     src = os.path.join(tmpdir, "src")
     os.makedirs(src, exist_ok=True)
     # chronological file split -> deterministic multi-batch replay
     bounds = np.array_split(np.arange(len(pdf)), n_files)
     for i, idx in enumerate(bounds):
-        pdf.iloc[idx].to_parquet(os.path.join(src, f"part-{i:04d}.parquet"), index=False)
-        os.utime(os.path.join(src, f"part-{i:04d}.parquet"), (1e9 + i, 1e9 + i))
+        write_source(src, f"part-{i:04d}.parquet", pdf.iloc[idx], mtime=1e9 + i)
 
     schema = spark.createDataFrame(pdf.head(2)).schema
     ticks = (
@@ -56,7 +58,7 @@ def _run_stream(spark, tmpdir, pdf, n_files=4, initial_state=None, emit_seed=Tru
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
     )
-    bricks = renko_stream(ticks, BRICK, initial_state=initial_state, emit_seed=emit_seed)
+    bricks = renko_stream(ticks, brick, initial_state=initial_state)
     q = (
         bricks.writeStream.outputMode("append")
         .format("memory")
@@ -100,9 +102,7 @@ def test_stream_warm_start_resumes(spark, tmp_path):
     wide = renko(spark.createDataFrame(head), BRICK, drop_first=False)
     export = to_rws(wide, BRICK).toPandas()
 
-    out = _run_stream(
-        spark, str(tmp_path), tail, n_files=2, initial_state=export, emit_seed=False
-    )
+    out = _run_stream(spark, str(tmp_path), tail, n_files=2, initial_state=export)
 
     # warm-started stream must continue exactly like a RenkoLive warm start
     for sym in ["AAA", "BBB"]:
@@ -177,14 +177,18 @@ def _old_batch_frame(symbol, seq, head, out):
 
 
 def _cold_batch(prices, unit):
-    """Kernel output of a cold-start symbol's first micro-batch."""
+    """A cold-start symbol's first micro-batch: the (seed row, kernel
+    output) the old build framed, and the operator's `_scan_batch`
+    result."""
     from renkodf_spark.kernel import grid_anchor, new_output, scan_ticks, seed_row
+    from renkodf_spark.streaming.renko_stream import _scan_batch
 
     times = np.datetime64("2024-01-01T00:00:00", unit) + np.arange(len(prices)) * np.timedelta64(1, "s")
     anchor = grid_anchor(prices[0], BRICK)
     out = new_output()
     scan_ticks(times, prices, 1, BRICK, [anchor, 1, anchor, anchor, 1, 0], out)
-    return seed_row(times[0], anchor), out
+    events = pd.DataFrame({"__time": times, "__price": prices})
+    return (seed_row(times[0], anchor), out), _scan_batch([events], None, BRICK)
 
 
 @pytest.mark.parametrize("unit", ["ns", "us"])
@@ -197,13 +201,58 @@ def test_stream_cold_start_frame_without_bricks(unit):
 
     from renkodf_spark.streaming.renko_stream import _batch_frame
 
-    quiet_head, quiet_out = _cold_batch([100.2, 100.4, 100.1, 100.3, 100.5, 100.6], unit)
-    busy_head, busy_out = _cold_batch([100.2, 101.4, 102.6, 100.3, 98.1, 97.6], unit)
+    (quiet_head, quiet_out), quiet_batch = _cold_batch([100.2, 100.4, 100.1, 100.3, 100.5, 100.6], unit)
+    (busy_head, busy_out), busy_batch = _cold_batch([100.2, 101.4, 102.6, 100.3, 98.1, 97.6], unit)
     assert len(quiet_out["event_time"]) == 0 and len(busy_out["event_time"]) > 0
     with warnings.catch_warnings():
         warnings.simplefilter("error", FutureWarning)
-        quiet = _batch_frame("AAA", 1, quiet_head, quiet_out)
-        busy = _batch_frame("AAA", 1, busy_head, busy_out)
+        quiet = _batch_frame("AAA", *quiet_batch[2:4])
+        busy = _batch_frame("AAA", *busy_batch[2:4])
     pd.testing.assert_frame_equal(busy, _old_batch_frame("AAA", 1, busy_head, busy_out))
     pd.testing.assert_frame_equal(quiet, busy.iloc[:1])
     assert quiet["brick_seq"].tolist() == [0] and quiet["direction"].tolist() == [1]
+
+
+@pytest.mark.parametrize("operator", ["renko_stream", "renko_stream_animate"])
+def test_stream_missing_column_raises(spark, operator):
+    """Both stream operators share the batch input guard: a streaming
+    frame without the price column fails eagerly, before any query
+    starts, with the batch operators' message."""
+    import renkodf_spark.streaming as streaming
+
+    ticks = spark.readStream.format("rate").load().select(
+        F.lit("A").alias("symbol"), F.col("timestamp").alias("event_time")
+    )
+    with pytest.raises(ValueError, match="Column 'close' doesn't exist!"):
+        getattr(streaming, operator)(ticks, BRICK)
+
+
+def test_stream_sparse_key_takes_the_skip_scan(spark, tmp_path):
+    """A key whose micro-batches each hold >= 4096 sparse ticks resumes
+    through `kernel.scan`'s skip-scan variant: its bricks, brick_seq and
+    final state equal a RenkoLive replay."""
+    from renkodf_spark.kernel import choose_scan
+
+    n, brick = 20000, 0.5
+    rng = np.random.default_rng(7)
+    drift = np.repeat([0.0012, -0.0016, 0.0014, -0.001], n // 4)
+    close = np.round(100 + np.cumsum(rng.normal(0, 0.004, n) + drift), 6)
+    t = pd.Timestamp("2024-01-01") + pd.to_timedelta(np.arange(n), unit="ms")
+    pdf = pd.DataFrame({"symbol": "SPARSE", "event_time": t.astype("datetime64[us]"), "close": close})
+    halves = np.array_split(close, 2)
+    assert all(len(h) >= 4096 and choose_scan(h, brick) for h in halves)
+
+    out = _run_stream(spark, str(tmp_path), pdf, n_files=2, brick=brick)
+    live = _live_replay(pdf, "SPARSE", brick)
+    want = live._wide_frame().reset_index(drop=True)
+    assert len(out) == len(want) > 20 and want["is_reversal"].iloc[1:].sum() > 2
+    assert out["brick_seq"].tolist() == list(range(len(want)))
+    np.testing.assert_array_equal(_us(out["event_time"]), want["timestamp"].to_numpy())
+    for col in _VALUE_COLUMNS:
+        np.testing.assert_array_equal(out[col].to_numpy(), want[col].to_numpy(), err_msg=col)
+
+    state = spark.read.format("statestore").load(os.path.join(str(tmp_path), "ckpt")).collect()
+    assert len(state) == 1
+    value = state[0]["value"]["groupState"]
+    assert list(value)[:5] == live._state[:5]
+    assert value["seq"] == len(want)

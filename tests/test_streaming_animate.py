@@ -10,6 +10,7 @@ import pytest
 
 from renkodf_spark.live import RenkoLive
 from renkodf_spark.streaming import renko_stream_animate
+from tests.conftest import write_source
 from tests.test_streaming import _two_symbol_ticks, _us
 
 BRICK = 1.0
@@ -24,9 +25,7 @@ def test_animate_stream_matches_live(spark, tmp_path, mode):
     n_files = 3
     batches = np.array_split(np.arange(len(pdf)), n_files)
     for i, idx in enumerate(batches):
-        p = os.path.join(src, f"part-{i:04d}.parquet")
-        pdf.iloc[idx].to_parquet(p, index=False)
-        os.utime(p, (1e9 + i, 1e9 + i))
+        write_source(src, f"part-{i:04d}.parquet", pdf.iloc[idx], mtime=1e9 + i)
 
     captured = []  # (batch_id, pandas)
     schema = spark.createDataFrame(pdf.head(2)).schema
@@ -92,9 +91,7 @@ def test_animate_stream_warm_start_matches_live(spark, tmp_path, mode):
     os.makedirs(src)
     batches = np.array_split(np.arange(len(tail)), 3)
     for i, idx in enumerate(batches):
-        p = os.path.join(src, f"part-{i:04d}.parquet")
-        tail.iloc[idx].to_parquet(p, index=False)
-        os.utime(p, (1e9 + i, 1e9 + i))
+        write_source(src, f"part-{i:04d}.parquet", tail.iloc[idx], mtime=1e9 + i)
 
     captured = []
     schema = spark.createDataFrame(tail.head(2)).schema

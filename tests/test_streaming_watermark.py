@@ -7,6 +7,8 @@ import os
 import pandas as pd
 from pyspark.sql import functions as F
 
+from tests.conftest import write_source
+
 
 def test_watermark_drops_late_events(spark, tmp_path):
     src = os.path.join(str(tmp_path), "src")
@@ -27,9 +29,7 @@ def test_watermark_drops_late_events(spark, tmp_path):
                 "close": closes,
             }
         )
-        p = os.path.join(src, f"p{i}.parquet")
-        pdf.to_parquet(p, index=False)
-        os.utime(p, (1e9 + i, 1e9 + i))
+        write_source(src, f"p{i}.parquet", pdf, mtime=1e9 + i)
         return pdf
 
     b1 = write(0, ["2024-01-01 10:00", "2024-01-01 10:01", "2024-01-01 10:04"], [1.0, 2.0, 3.0])
