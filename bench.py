@@ -1,7 +1,13 @@
 """Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints
-ONE JSON line:
+(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and ends
+stdout with ONE JSON line:
   {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+The full payload, with a status-store profile per timed entry, goes to
+stderr; a run writes nothing in the tree.
+
+``python bench.py NAME ...`` times the named registered queries instead
+of ``HEADLINE`` and skips the scale block and the centrality split; an
+unknown name exits non-zero before any Spark work.
 
 Also measures raw Renko kernel throughput (ticks/sec) on a synthetic
 replay comparable to the reference's perf_backtest.py (~1.5 M ticks/s
@@ -10,95 +16,31 @@ on one core, BASELINE.md).
 
 from __future__ import annotations
 
+import dataclasses
+import itertools
 import json
 import os
+import shutil
 import sys
 import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from perfbench.probes import group_stages, stage_table  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+SCALE_REP = int(os.environ.get("SPARK_GRAFT_SCALE_REP", "10"))
 
-# Co-tenancy gate (VERDICT r4 item 2, extended r7 per VERDICT r6 item
-# 1): BENCH_r04 was snapshotted at loadavg 13 and read as a phantom
-# 1.2-1.7x regression on untouched queries; BENCH_r05/r06 then
-# committed a x100 skew number ~2x its quiet-machine value because the
-# gate only bracketed the HEADLINE section. The gate now runs before
-# EVERY measured section (headline, scale, scale_curve) — a bounded
-# wait for the box's 1-minute load to drop below the threshold — and
-# each section's gate outcome lands in the methodology block. The
-# first gate runs before our own Spark session spins up 32 threads;
-# mid-run gates also absorb the decay of our own previous section.
-# r12 (VERDICT r11 "What's wrong" #1): threshold tightened 4 -> 2 —
-# the r11 artifact was committed from a run gated only down to 3.82
-# and carried two phantom per-query regressions on unchanged code.
-QUIET_LOAD = float(os.environ.get("SPARK_GRAFT_QUIET_LOAD", "2"))
-QUIET_TIMEOUT = float(os.environ.get("SPARK_GRAFT_QUIET_TIMEOUT", "300"))
-
-QUIET_GATES: dict[str, dict] = {}
-
-
-def spin_probe(window: float = 0.15) -> float:
-    """Achieved single-thread Python M-iterations/sec over a short wall
-    window. Loadavg cannot see co-tenant CPU *steal* mid-run (our own
-    executor threads keep it high anyway); this probe measures the
-    compute rate this process actually achieves — a stolen core shows
-    up as a proportionally lower number regardless of what the load
-    average reports (NOTES round-8 candidate #6). Absolute values are
-    machine-specific; compare ratios across sections of one run and
-    across rounds on the same box."""
-    end = time.perf_counter() + window
-    n = 0
-    while time.perf_counter() < end:
-        for _ in range(1000):
-            pass
-        n += 1000
-    return round(n / window / 1e6, 2)
-
-
-def bandwidth_probe(mb: int = 256, reps: int = 3) -> float:
-    """Achieved memory-copy bandwidth in GB/s (best of ``reps`` copies
-    of a ``mb``-MiB array, counting read+write bytes).  The spin probe
-    is cache-resident pure Python and CANNOT see memory-bandwidth
-    steal — which is exactly what hits the Arrow/shuffle-heavy scale
-    workloads hardest (the ×100 skew number swung 70–121 s at similar
-    spin readings; a same-session repeat ruled warmth out at ~8%).
-    Compare this value across sections and rounds to attribute those
-    swings."""
-    import numpy as np
-
-    a = np.zeros(mb * 1024 * 1024 // 8, dtype=np.float64)
-    best = 0.0
-    for _ in range(reps):
-        t0 = time.perf_counter()
-        b = a.copy()
-        el = time.perf_counter() - t0
-        best = max(best, (2 * a.nbytes) / el / 1e9)
-        del b
-    return round(best, 2)
-
-
-def wait_for_quiet(section: str) -> dict:
-    start = list(os.getloadavg())
-    t0 = time.time()
-    while os.getloadavg()[0] > QUIET_LOAD and (time.time() - t0) < QUIET_TIMEOUT:
-        time.sleep(10)
-    outcome = {
-        "threshold": QUIET_LOAD,
-        "start_loadavg": [round(x, 2) for x in start],
-        "gated_loadavg": [round(x, 2) for x in os.getloadavg()],
-        "waited_sec": round(time.time() - t0, 1),
-        # taken at section start, while our own Spark jobs are idle —
-        # dominated by co-tenant pressure, not our executors
-        "spin_miters": spin_probe(),
-        "bw_gbps": bandwidth_probe(),
-    }
-    QUIET_GATES[section] = outcome
-    if outcome["waited_sec"]:
-        print(f"# co-tenancy gate [{section}]: {outcome}", file=sys.stderr)
-    return outcome
+# x100 skew curve: replication, and the sub-chunk threshold wired into
+# it (at x100 the hot symbol carries ~1.2 M ticks per week window, below
+# the 3 M default; 400 k/50 k splits each hot window into ~24 chunks)
+SCALE_CURVE = 100
+X100_SUBCHUNK_THR = 400_000
+# the sub-chunk head-to-head's hot symbol of unique dense ticks
+SUBCHUNK_TICKS = 1_500_000
+BPE_K = 64  # merges learned by the batched-BPE entries
 
 HEADLINE = [
     "renko_wicks",
@@ -237,9 +179,7 @@ def kernel_throughput() -> dict:
         prices = base + np.cumsum(rng.normal(0, sigma, n))
         times = np.arange(n)
         samples = []
-        for _ in range(5):  # best-of-5: each rep is <=0.6s and the box
-            # is co-tenant — r5->r6 drifted -19/-22% on unchanged code
-            # with only 3 reps (VERDICT r6 item 2)
+        for _ in range(5):  # best-of-5: each rep is <= 0.6 s on a shared box
             state = new_state(float(prices[0]), brick)
             out = new_output()
             t0 = time.perf_counter()
@@ -251,12 +191,12 @@ def kernel_throughput() -> dict:
 
 
 def materialize(df) -> int:
-    """Pruning-proof full materialization (VERDICT r2 item 3): under a
-    bare count() Catalyst prunes every unreferenced output column, so
-    projection-only queries (text_quality etc.) were timed optimistically.
-    Aggregating a full-width row hash references every output column —
-    nothing can be pruned — while still returning only one row to the
-    driver. Returns the row count."""
+    """Pruning-proof full materialization: under a bare count() Catalyst
+    prunes every unreferenced output column, so projection-only queries
+    (text_quality etc.) would be timed optimistically. Aggregating a
+    full-width row hash references every output column — nothing can be
+    pruned — while still returning only one row to the driver. Returns
+    the row count."""
     from pyspark.sql import functions as F
 
     row = df.agg(
@@ -266,16 +206,70 @@ def materialize(df) -> int:
     return row["n"]
 
 
+_VISITS = itertools.count()  # job groups are unique per visit in a run
+
+
+def profile(spark, group: str) -> dict:
+    """Status-store totals of the jobs run under ``group``: jobs, stages
+    that ran, tasks, executor run and CPU seconds, shuffle read and
+    write and spill (MB). Executor CPU next to wall is the co-tenancy
+    signal: a stolen core stretches the wall, not the CPU."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()  # last task ends
+    jobs, stages = group_stages(spark, group, stage_table(spark))
+    prof = {"jobs": jobs, "stages": len(stages)}
+    for key in ("tasks", "run_s", "jvm_cpu_s", "read_mb", "write_mb", "spill_mb"):
+        prof[key] = round(sum(s[key] for s in stages), 3)
+    return prof
+
+
+def sample(spark, entries, passes: int = 2, out: dict | None = None) -> dict[str, dict]:
+    """The one measuring loop: ``passes`` interleaved passes over the
+    ``(name, thunk)`` entries, so minutes of other work separate two
+    samples of one entry and a co-tenant burst rarely poisons both.
+    Each visit clears the cache (operators that cache internal subtrees
+    re-pay that cost), runs the thunk under its own job group, and then,
+    outside the timed window (a status-store read takes ~0.7 s at 900
+    retained stages), reads the visit's :func:`profile`.
+
+    Per name: ``sec``, the min over the visits, and that visit's
+    ``profile``; every visit in ``samples``; the thunk's last return in
+    ``value``. Pass ``out`` to add visits to an earlier result."""
+    out = {} if out is None else out
+    sc = spark.sparkContext
+    for _ in range(passes):
+        for name, thunk in entries:
+            rec = out.setdefault(name, {"samples": []})
+            group = f"bench-{next(_VISITS)}-{name}"
+            spark.catalog.clearCache()
+            sc.setJobGroup(group, name)
+            t0 = time.perf_counter()
+            rec["value"] = thunk()
+            sec = round(time.perf_counter() - t0, 3)
+            sc.setLocalProperty("spark.jobGroup.id", None)  # later jobs: no group
+            prof = profile(spark, group)
+            rec["samples"].append(sec)
+            if sec <= rec.get("sec", sec):
+                rec["sec"], rec["profile"] = sec, prof
+    return out
+
+
+def publish(out: dict, res: dict[str, dict]) -> None:
+    """``{name}_sec``, ``{name}_samples`` and ``{name}_profile`` of each
+    sampled entry into ``out``."""
+    for name, rec in res.items():
+        for key in ("sec", "samples", "profile"):
+            out[f"{name}_{key}"] = rec[key]
+
+
 def centrality_split(spark) -> dict:
     """Build-vs-fixpoint decomposition of the centrality headline
-    entries (VERDICT r12 item 8): knn_pagerank / knn_trustrank rebuild
-    the same kNN graph inside every timed window, so their headline
-    numbers mostly measure the shared build (~2/3 of the wall). This
-    block times the phases separately at the gate parameters: graph
-    build + persist once (write_knn_graph), then each fixpoint over
-    the stored narrow (src, dst) relation — the marginal cost of one
-    more centrality question against a stored corpus snapshot. Two
-    interleaved samples per phase, min (the scale-entry convention)."""
+    entries: knn_pagerank / knn_trustrank rebuild the same kNN graph
+    inside every timed window, so their headline numbers mostly measure
+    the shared build. This block times the phases separately at the gate
+    parameters: graph build + persist once (write_knn_graph), then each
+    fixpoint over the stored narrow (src, dst) relation — the marginal
+    cost of one more centrality question against a stored corpus
+    snapshot."""
     from pyspark.sql import functions as F
 
     from renkodf_spark.operators import graph, similarity
@@ -288,15 +282,12 @@ def centrality_split(spark) -> dict:
         _PR_SCALE,
         _TR_SEED_LABEL,
     )
+    from renkodf_spark.queries.pipeline10 import _LPA_ITERS, _graph_state_path
     from renkodf_spark.sources.tables import load_table
 
     emb = load_table(spark, SF_DIR, "embeddings")
     cents = similarity.embedding_centroids(emb, dim=_IVF_DIM)
-    # shared per-process state dir, rmtree'd at exit (ADVICE r13: a
-    # fresh mkdtemp per bench run accumulated graph copies in /tmp)
-    from renkodf_spark.queries.pipeline10 import _graph_state_path
-
-    path = _graph_state_path()
+    path = _graph_state_path()  # shared per-process state dir, removed at exit
     nodes = emb.select(F.col("vec_id").alias("id"))
     seeds = emb.filter(F.col("label") == _TR_SEED_LABEL).select(
         F.col("vec_id").alias("id")
@@ -306,112 +297,132 @@ def centrality_split(spark) -> dict:
         similarity.write_knn_graph(emb, cents, path, k=_KNN_K)
         return 0
 
-    def _edges():
-        return similarity.read_knn_graph(spark, path).select("src", "dst")
-
-    def _fix_pr():
+    def _fixpoint(**kw):
+        edges = similarity.read_knn_graph(spark, path).select("src", "dst")
         return materialize(
             graph.pagerank(
-                _edges(), nodes, iterations=_PR_ITERS, d_num=_PR_DNUM,
-                d_den=_PR_DDEN, scale=_PR_SCALE,
-            )
-        )
-
-    def _fix_tr():
-        return materialize(
-            graph.pagerank(
-                _edges(), nodes, iterations=_PR_ITERS, d_num=_PR_DNUM,
-                d_den=_PR_DDEN, scale=_PR_SCALE, seeds=seeds,
+                edges, nodes, iterations=_PR_ITERS, d_num=_PR_DNUM,
+                d_den=_PR_DDEN, scale=_PR_SCALE, **kw,
             )
         )
 
     def _fix_lpa():
-        from renkodf_spark.queries.pipeline10 import _LPA_ITERS
-
-        pairs = similarity.mutual_knn_edges(
-            similarity.read_knn_graph(spark, path)
-        )
+        pairs = similarity.mutual_knn_edges(similarity.read_knn_graph(spark, path))
         und = pairs.selectExpr("id_a as src", "id_b as dst").unionByName(
             pairs.selectExpr("id_b as src", "id_a as dst")
         )
-        return materialize(
-            graph.label_propagation(und, nodes, iterations=_LPA_ITERS)
-        )
+        return materialize(graph.label_propagation(und, nodes, iterations=_LPA_ITERS))
 
-    phases = [
+    res = sample(spark, [
         ("build_write", _build),
-        ("pagerank_fixpoint", _fix_pr),
-        ("trustrank_fixpoint", _fix_tr),
+        ("pagerank_fixpoint", _fixpoint),
+        ("trustrank_fixpoint", lambda: _fixpoint(seeds=seeds)),
         ("lpa_fixpoint", _fix_lpa),
-    ]
-    samples: dict[str, list] = {n: [] for n, _ in phases}
-    for _pass in range(2):
-        for name, thunk in phases:
-            spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            thunk()
-            samples[name].append(round(time.perf_counter() - t0, 3))
-    out = {f"{n}_sec": min(samples[n]) for n, _ in phases}
-    out["samples"] = samples
+    ])
+    out = {f"{n}_sec": r["sec"] for n, r in res.items()}
+    out.update({f"{n}_profile": r["profile"] for n, r in res.items()})
+    out["samples"] = {n: r["samples"] for n, r in res.items()}
     out["note"] = (
         "headline knn_pagerank/knn_trustrank/knn_communities each "
         "include a fresh graph build; the *_indexed twins include "
         "build+write+fixpoint. The fixpoint_sec values here are the "
         "per-question marginal cost once the graph is stored "
-        "(lpa_fixpoint = mutual symmetrize + vote rounds, r14)."
+        "(lpa_fixpoint = mutual symmetrize + vote rounds)."
     )
     return out
 
 
-def scale_block(spark, rep: int) -> dict:
-    """Secondary scale demonstration (VERDICT r2 item 9): no sf1 dataset
-    exists under /root/testdata, so replicate the sf0.1 inputs rep x on
-    the fly — events as rep x new symbols (renko's parallelism axis),
-    documents as rep x perturbed texts (keeps LSH bucket sizes realistic
-    instead of exploding every bucket rep x) — and publish wall-times
-    for the operator families whose scaling matters most.
-
-    Sampling (VERDICT r7 item 3): the old best-of-2 BACK-TO-BACK pairs
-    shared any co-tenant burst's window — the committed minhash entry
-    read 31.1 s while a quiet standalone re-run measured 5.55 s (5.6x).
-    The scale entries now run as two temporally-INTERLEAVED passes
-    (like the headline), with a spin + memory-bandwidth probe recorded
-    immediately before every sample so a poisoned sample is visible in
-    the artifact instead of silently becoming the committed number.
-    """
-    import pandas as pd  # noqa: F401  (kernel path warm by now)
-    from datetime import timedelta as _td
-
+def replicated_ticks(spark, n: int):
+    """The sf ticks as n x new symbols (renko's parallelism axis)."""
     from pyspark.sql import functions as F
 
-    from renkodf_spark.operators.dedup import minhash_lsh_pairs, remove_duplicated_spans
-    from renkodf_spark.operators.rangejoin import point_in_interval_join
-    from renkodf_spark.operators.setsim import setsim_join
-    from renkodf_spark.operators.graph import pagerank
-    from renkodf_spark.operators import graph as graph_ops
-    from renkodf_spark.operators.renko import renko_mode
-    from renkodf_spark.operators.renko_chunked import renko_chunked
-    from renkodf_spark.sources.tables import load_table, ticks_from_events
+    from renkodf_spark.sources.tables import ticks_from_events
 
-    wait_for_quiet("scale")
-    reps = spark.range(rep).select(F.col("id").alias("rep"))
-    out: dict = {"replication": rep}
-
-    # --- inputs (built once; every sample re-executes the full plan) ---
-    ticks = (
+    reps = spark.range(n).select(F.col("id").alias("rep"))
+    return (
         ticks_from_events(spark, SF_DIR)
         .crossJoin(F.broadcast(reps))
         .withColumn("symbol", F.concat_ws("_", "symbol", "rep"))
         .drop("rep")
     )
-    docs = (
+
+
+def skewed_ticks(spark, n: int):
+    """Hot-symbol skew: :func:`replicated_ticks` with ~50% of the ticks
+    in ONE symbol — the regime where per-symbol sequential operators
+    hurt. renko_chunked is the declared answer (windowed stitching
+    bounds the per-task tick count at window x symbol)."""
+    from pyspark.sql import functions as F
+
+    hot = F.pmod(F.hash("event_time"), F.lit(2)) == 0
+    return replicated_ticks(spark, n).withColumn(
+        "symbol", F.when(hot, F.lit("HOT")).otherwise(F.col("symbol"))
+    )
+
+
+def replicated_docs(spark, n: int):
+    """The sf documents as n x perturbed texts (keeps LSH bucket sizes
+    realistic instead of exploding every bucket n x), with their source
+    and lang: each copy keeps the base source tag, so a trusted subset
+    replicates n-fold too."""
+    from pyspark.sql import functions as F
+
+    from renkodf_spark.sources.tables import load_table
+
+    reps = spark.range(n).select(F.col("id").alias("rep"))
+    return (
         load_table(spark, SF_DIR, "documents")
         .crossJoin(F.broadcast(reps))
         .select(
-            (F.col("doc_id") * rep + F.col("rep")).alias("doc_id"),
+            (F.col("doc_id") * n + F.col("rep")).alias("doc_id"),
             F.concat_ws(" ", F.col("text"), F.concat(F.lit("rep"), F.col("rep"))).alias("text"),
+            "source",
+            "lang",
         )
     )
+
+
+def scale_block(spark, rep: int) -> dict:
+    """Secondary scale demonstration: there is no sf1 dataset, so
+    replicate the sf0.1 inputs rep x on the fly —
+    events as rep x new symbols (renko's parallelism axis), documents as
+    rep x perturbed texts (keeps LSH bucket sizes realistic instead of
+    exploding every bucket rep x) — and publish wall-times for the
+    operator families whose scaling matters most. Every entry runs
+    through :func:`sample` (two interleaved passes, min, a status-store
+    profile of the min visit)."""
+    from datetime import timedelta as _td
+
+    from pyspark.sql import functions as F
+
+    from renkodf_spark.operators import classifier, similarity
+    from renkodf_spark.operators import corpus as corpus_ops
+    from renkodf_spark.operators import graph as graph_ops
+    from renkodf_spark.operators import text as text_ops
+    from renkodf_spark.operators.dedup import minhash_lsh_pairs, remove_duplicated_spans
+    from renkodf_spark.operators.rangejoin import point_in_interval_join
+    from renkodf_spark.operators.renko import renko_mode
+    from renkodf_spark.operators.renko_chunked import renko_chunked
+    from renkodf_spark.operators.setsim import setsim_join
+    from renkodf_spark.queries.pipeline import _docs as _bpe_docs
+    from renkodf_spark.queries.pipeline3 import _EVAL_LEN, _EVAL_MOD, _EVAL_START
+    from renkodf_spark.queries.pipeline11 import pretrain_dag
+    from renkodf_spark.sources.tables import load_table
+    from renkodf_spark.streaming.ann_stream import (
+        knn_centrality_writer,
+        knn_communities_writer,
+    )
+
+    reps = spark.range(rep).select(F.col("id").alias("rep"))
+    out: dict = {"replication": rep}
+
+    # --- inputs (built once; every sample re-executes the full plan) ---
+    ticks = replicated_ticks(spark, rep)
+    # the model families train on the corpus WITH metadata: training
+    # input grows with the corpus while the MODEL stays bounded by the
+    # (shared) vocabulary
+    rdocs_meta = replicated_docs(spark, rep)
+    docs = rdocs_meta.select("doc_id", "text")
     ev = (
         load_table(spark, SF_DIR, "events")
         .crossJoin(F.broadcast(reps))
@@ -422,29 +433,6 @@ def scale_block(spark, rep: int) -> dict:
             "event_type",
         )
     )
-    from renkodf_spark.operators import classifier, similarity
-    from renkodf_spark.operators import corpus as corpus_ops
-    from renkodf_spark.operators import text as text_ops
-    from renkodf_spark.queries.pipeline3 import _EVAL_LEN, _EVAL_MOD, _EVAL_START
-    from renkodf_spark.queries.pipeline11 import pretrain_dag
-
-    # replicated corpus WITH metadata (source label) for the model
-    # families: each rep keeps the base source tag, so the trusted
-    # subset replicates rep-fold too — training input grows with the
-    # corpus while the MODEL stays bounded by the (shared) vocabulary
-    rdocs_meta = (
-        load_table(spark, SF_DIR, "documents")
-        .crossJoin(F.broadcast(reps))
-        .select(
-            (F.col("doc_id") * rep + F.col("rep")).alias("doc_id"),
-            F.concat_ws(
-                " ", F.col("text"), F.concat(F.lit("rep"), F.col("rep"))
-            ).alias("text"),
-            "source",
-            "lang",
-        )
-    )
-
     remb = (
         load_table(spark, SF_DIR, "embeddings")
         .crossJoin(F.broadcast(reps))
@@ -464,42 +452,59 @@ def scale_block(spark, rep: int) -> dict:
         "user_id", F.col("ts").alias("click_ts")
     )
 
-    # Hot-symbol skew (VERDICT r3 item 7): one symbol carries ~50% of
-    # all replicated ticks — the regime where per-symbol sequential
-    # operators hurt. renko_chunked is the declared answer (windowed
-    # stitching bounds the per-task tick count at window x symbol).
-    def skewed_ticks(n: int):
-        rs = spark.range(n).select(F.col("id").alias("rep"))
-        t = (
-            ticks_from_events(spark, SF_DIR)
-            .crossJoin(F.broadcast(rs))
-            .withColumn("symbol", F.concat_ws("_", "symbol", "rep"))
-            .drop("rep")
-        )
-        return t.withColumn(
-            "symbol",
-            F.when(F.pmod(F.hash("event_time"), F.lit(2)) == 0, F.lit("HOT")).otherwise(
-                F.col("symbol")
-            ),
+    skewed = skewed_ticks(spark, rep)
+
+    # The capped kNN graph of the replicated embeddings: replicating
+    # them WITH their labels grows every cell rep-fold — the hot-cell
+    # regime where the within-cell pair term (Sigma cell^2) explodes
+    # (321 s/sample uncapped at x10: 20k vectors in 8 cells = 50 M
+    # pairs). The entries therefore run the documented mitigation,
+    # max_cell_size: sub-cells bound the pair term at cap x n.
+    def capped_graph():
+        return similarity.knn_graph(
+            remb, similarity.embedding_centroids(remb, dim=64), k=3, max_cell_size=500
         )
 
-    skewed = skewed_ticks(rep)
+    def communities():
+        pairs = similarity.mutual_knn_edges(capped_graph())
+        und = pairs.selectExpr("id_a as src", "id_b as dst").unionByName(
+            pairs.selectExpr("id_b as src", "id_a as dst")
+        )
+        return graph_ops.label_propagation(
+            und, remb.select(F.col("vec_id").alias("id")), iterations=4
+        )
 
-    # --- entries, each measured as min over 2 interleaved samples ---
-    # minhash: explicit cap = the declared adversarial-scale posture
-    #   (operator default is None since ADVICE r3); r3-comparable.
-    # span_removal: the replicated corpus is the adversarial case —
-    #   nearly every gram is duplicated across the rep copies, so the
-    #   drop-position relation hits its linear worst case (tokens x n),
-    #   never a quadratic pair term (min-owner per gram, not pairs).
+    src0 = F.col("source") == "src0"
+    # the eval carve of the pretraining DAG replays the gate rule (every
+    # _EVAL_MOD-th doc) on the replicated ids
+    eval_docs = rdocs_meta.filter(F.col("doc_id") % _EVAL_MOD == 0).select(
+        F.col("doc_id").alias("eval_id"),
+        F.array_join(
+            F.slice(corpus_ops._norm_gram_tokens("text"), _EVAL_START, _EVAL_LEN), " "
+        ).alias("text"),
+    )
+
+    # minhash: explicit cap = the declared adversarial-scale posture.
+    # span_removal: nearly every gram is duplicated across the rep
+    #   copies, so the drop-position relation hits its linear worst case
+    #   (tokens x n), never a quadratic pair term.
     # range_join: rep x the event table on BOTH sides; candidates are
     #   bounded by (user, 2h-bin) co-residency, never |L|*|R|.
+    # knn_communities_capped: delta over knn_graph_capped = mutual
+    #   symmetrize + vote rounds; knn_pagerank_capped: delta = 3 integer
+    #   PageRank iterations over the narrow (id, pr) relation.
+    # nb_train_score / bigram_lm_score: the full train+score pipeline
+    #   (model bounded by the trusted-subset vocabulary, scoring by
+    #   vocab-keyed equi-joins, text never shuffles).
+    # setsim_join: the rep-suffix perturbation leaves each doc's rep
+    #   copies ~92% Jaccard-similar, so the TRUE answer has ~rep^2/2
+    #   pairs per doc — the cost is the answer's size, not a plan defect.
+    # pretrain_end_to_end: all seven stages over the replicated corpus;
+    #   the copies are LSH candidates of each other, so the near-dup
+    #   stage drops ~all replication (the adversarial-dedup regime).
     entries = [
         ("renko_wicks", lambda: materialize(renko_mode(ticks, 5.0, "wicks"))),
-        (
-            "dedup_minhash_lsh",
-            lambda: materialize(minhash_lsh_pairs(docs, max_bucket_size=1000)),
-        ),
+        ("dedup_minhash_lsh", lambda: materialize(minhash_lsh_pairs(docs, max_bucket_size=1000))),
         ("span_removal", lambda: materialize(remove_duplicated_spans(docs, n=10))),
         (
             "range_join",
@@ -515,73 +520,14 @@ def scale_block(spark, rep: int) -> dict:
                 )
             ),
         ),
-        (
-            "skew_renko_chunked",
-            lambda: materialize(renko_chunked(skewed, 5.0, window="1 week")),
-        ),
-        # r11: replicating embeddings WITH their labels grows every
-        # cell rep-fold — by construction the pathological hot-cell
-        # regime where the within-cell pair term (Sigma cell^2)
-        # explodes (measured 321 s/sample uncapped at x10: 20k
-        # vectors in 8 cells = 50 M pairs). The scale entry therefore
-        # runs the DOCUMENTED mitigation, max_cell_size: sub-cells
-        # bound the pair term at cap x n, the per-rank recall trade
-        # is substitution within a sub-cell (knn_graph docstring,
-        # pinned in tests), and balanced centroids are the real fix.
-        (
-            "knn_graph_capped",
-            lambda: materialize(
-                similarity.knn_graph(
-                    remb,
-                    similarity.embedding_centroids(remb, dim=64),
-                    k=3,
-                    max_cell_size=500,
-                )
-            ),
-        ),
-        # r13: LPA communities at rep x — same capped graph build as
-        # knn_pagerank_capped, plus the mutual symmetrization and
-        # `iterations` (id, label)-narrow vote rounds; the lazy edge
-        # checkpoint keeps the graph build out of the per-iteration
-        # plan. Delta over knn_graph_capped = symmetrize + votes.
-        (
-            "knn_communities_capped",
-            lambda: materialize(
-                (lambda g: graph_ops.label_propagation(
-                    similarity.mutual_knn_edges(g)
-                    .selectExpr("id_a as src", "id_b as dst")
-                    .unionByName(
-                        similarity.mutual_knn_edges(g)
-                        .selectExpr("id_b as src", "id_a as dst")
-                    ),
-                    remb.select(F.col("vec_id").alias("id")),
-                    iterations=4,
-                ))(
-                    similarity.knn_graph(
-                        remb,
-                        similarity.embedding_centroids(remb, dim=64),
-                        k=3,
-                        max_cell_size=500,
-                    )
-                )
-            ),
-        ),
-        # r12 (VERDICT r11 item 5): the r11 model families at rep x —
-        # their scale claim (model bounded by the trusted-subset
-        # vocabulary / counting-only training; scoring = vocab-keyed
-        # equi-joins, text never shuffles) measured, not just argued.
-        # Each thunk re-executes the FULL train+score pipeline on the
-        # replicated metadata-carrying corpus, the same DAG as the
-        # headline query at 1x.
+        ("skew_renko_chunked", lambda: materialize(renko_chunked(skewed, 5.0, window="1 week"))),
+        ("knn_graph_capped", lambda: materialize(capped_graph())),
+        ("knn_communities_capped", lambda: materialize(communities())),
         (
             "nb_train_score",
             lambda: materialize(
                 classifier.nb_score(
-                    rdocs_meta,
-                    classifier.nb_train(
-                        rdocs_meta, positive=F.col("source") == "src0"
-                    ),
-                    positive=F.col("source") == "src0",
+                    rdocs_meta, classifier.nb_train(rdocs_meta, positive=src0), positive=src0
                 )
             ),
         ),
@@ -589,124 +535,49 @@ def scale_block(spark, rep: int) -> dict:
             "bigram_lm_score",
             lambda: materialize(
                 text_ops.bigram_logprob(
-                    rdocs_meta,
-                    text_ops.bigram_lm_train(
-                        rdocs_meta.filter(F.col("source") == "src0")
-                    ),
+                    rdocs_meta, text_ops.bigram_lm_train(rdocs_meta.filter(src0))
                 )
             ),
         ),
-        # r12 wave 5: the exact set-similarity join at rep x. NOTE the
-        # output is legitimately quadratic-in-rep on this synthetic
-        # replication: the rep-suffix perturbation leaves each doc's
-        # rep copies ~92% Jaccard-similar, so every doc becomes a
-        # rep-clique and the TRUE answer has ~rep^2/2 per-doc pairs —
-        # the measured cost is the answer's size (verified == brute
-        # force by test), not a plan defect.
-        (
-            "setsim_join",
-            lambda: materialize(setsim_join(docs, t_num=1, t_den=2)),
-        ),
-        # r12 wave 5: the graph-centrality fixpoint at rep x — the
-        # full DAG (centroids -> capped kNN graph -> 3 integer
-        # PageRank iterations over the narrow (id, pr) relation). The
-        # fixpoint's own cost is the delta over knn_graph_capped.
+        ("setsim_join", lambda: materialize(setsim_join(docs, t_num=1, t_den=2))),
         (
             "knn_pagerank_capped",
             lambda: materialize(
-                pagerank(
-                    similarity.knn_graph(
-                        remb,
-                        similarity.embedding_centroids(remb, dim=64),
-                        k=3,
-                        max_cell_size=500,
-                    ).select("src", "dst"),
+                graph_ops.pagerank(
+                    capped_graph().select("src", "dst"),
                     remb.select(F.col("vec_id").alias("id")),
                     iterations=3,
                 )
             ),
         ),
-        # r14: the flagship pretraining DAG at rep x — all seven stages
-        # (exact dedup -> LSH near-dup drop -> Gopher -> decontam ->
-        # temperature -> packing -> shard digests) in one plan over the
-        # replicated corpus; the eval carve replays the gate rule
-        # (every _EVAL_MOD-th doc) on the replicated ids. NOTE the
-        # rep-suffix perturbation makes every doc's rep copies LSH
-        # candidates of each other, so the near-dup stage drops ~all
-        # replication — the adversarial-dedup regime, which is exactly
-        # what this stage exists to bound.
-        (
-            "pretrain_end_to_end",
-            lambda: materialize(
-                pretrain_dag(
-                    rdocs_meta,
-                    rdocs_meta.filter(F.col("doc_id") % _EVAL_MOD == 0).select(
-                        F.col("doc_id").alias("eval_id"),
-                        F.array_join(
-                            F.slice(
-                                corpus_ops._norm_gram_tokens("text"),
-                                _EVAL_START,
-                                _EVAL_LEN,
-                            ),
-                            " ",
-                        ).alias("text"),
-                    ),
-                )
-            ),
-        ),
+        ("pretrain_end_to_end", lambda: materialize(pretrain_dag(rdocs_meta, eval_docs))),
     ]
-    probes: dict[str, list] = {name: [] for name, _ in entries}
-    samples: dict[str, list] = {name: [] for name, _ in entries}
-    for _pass in range(2):
-        for name, thunk in entries:
-            spark.catalog.clearCache()
-            probes[name].append(
-                {"spin_miters": spin_probe(), "bw_gbps": bandwidth_probe()}
-            )
-            t0 = time.perf_counter()
-            out[f"{name}_rows"] = thunk()
-            samples[name].append(round(time.perf_counter() - t0, 3))
-    for name, _ in entries:
-        out[f"{name}_sec"] = min(samples[name])
-        out[f"{name}_samples"] = samples[name]
-        out[f"{name}_probes"] = probes[name]
+    res = sample(spark, entries)
+    publish(out, res)
+    out.update({f"{name}_rows": rec["value"] for name, rec in res.items()})
 
-    # --- streaming centrality/communities maintainers at rep x (r14,
-    # VERDICT r13 item 3): the batch twins above time the FULL-graph
-    # recompute; these time what a TRIGGER costs against the stored
-    # rep-x state. Trigger 0 ingests the whole replicated corpus (the
-    # one-time build, reported for context); the measured steady-state
-    # triggers deliver ~1% new vectors, whose cost the per-cell
-    # decomposition bounds by the affected cells' sum(|cell|^2) — not
-    # |V|+|E|. Centrality runs SEEDED (TrustRank): the trigger batches
-    # carry no seed vectors, so |S| is frozen and only routed cells
-    # refixpoint (unseeded PageRank refixpoints everything on every
-    # growing trigger — documented in knn_centrality_writer). LPA has
-    # no global parameter, so its affected-cells recompute is always
-    # exact. min over 2 steady-state triggers each (fresh ids per
-    # trigger — a replayed batch_id would take the idempotent
-    # short-circuit and measure nothing).
-    import shutil
-
-    from renkodf_spark.streaming.ann_stream import (
-        knn_centrality_writer,
-        knn_communities_writer,
-    )
-
+    # --- streaming centrality/communities maintainers at rep x: the
+    # batch twins above time the FULL-graph recompute; these time what a
+    # TRIGGER costs against the stored rep-x state. Trigger 0 ingests the
+    # whole replicated corpus (the one-time build, reported for context);
+    # the measured steady-state triggers deliver ~1% new vectors, whose
+    # cost the per-cell decomposition bounds by the affected cells'
+    # sum(|cell|^2) — not |V|+|E|. Centrality runs SEEDED (TrustRank):
+    # the trigger batches carry no seed vectors, so |S| is frozen and
+    # only routed cells refixpoint. Every trigger gets fresh ids and the
+    # next batch id: a replayed batch_id would take the idempotent
+    # short-circuit and measure nothing.
     emb_base = remb.select("vec_id", "embedding")
     n_base = emb_base.count()
     small_n = max(n_base // 100, 1)
     scents = similarity.embedding_centroids(remb, dim=64)
     seeds = remb.filter(F.col("label") == 0).select(F.col("vec_id").alias("id"))
 
-    def _trigger_batch(i: int):
-        # small_n fresh ids all carrying ONE base vector's embedding —
-        # every trigger row routes to the SAME centroid cell, so the
-        # measured trigger recomputes exactly one cell's subgraph. (A
-        # first cut used small_n DISTINCT vectors: they spread across
-        # every cell and the "steady-state" trigger cost equalled the
-        # full ingest — affected-cells boundedness needs the affected
-        # set to actually be small, which one hot cell demonstrates.)
+    def trigger_batch(i: int):
+        # small_n fresh ids all carrying ONE base vector's embedding:
+        # every row routes to the same centroid cell, so the trigger
+        # recomputes exactly one cell's subgraph (distinct vectors would
+        # spread across every cell and cost the full ingest)
         one = emb_base.filter(F.col("vec_id") == i).select("embedding")
         return (
             spark.range(small_n)
@@ -714,38 +585,40 @@ def scale_block(spark, rep: int) -> dict:
             .crossJoin(F.broadcast(one))
         )
 
-    for wname, factory in (
-        (
-            "knn_centrality_writer",
-            lambda p: knn_centrality_writer(
-                scents, p, seeds=seeds, k=3, iterations=3, max_cell_size=500
+    def triggers(w):
+        ids = itertools.count()
+
+        def run():
+            i = next(ids)
+            w(trigger_batch(i), i + 1)
+
+        return run
+
+    sdirs = {w: tempfile.mkdtemp(prefix=f"bench_{w}_") for w in (
+        "knn_centrality_writer", "knn_communities_writer"
+    )}
+    try:
+        writers = {
+            "knn_centrality_writer": knn_centrality_writer(
+                scents, sdirs["knn_centrality_writer"], seeds=seeds, k=3,
+                iterations=3, max_cell_size=500,
             ),
-        ),
-        (
-            "knn_communities_writer",
-            lambda p: knn_communities_writer(
-                scents, p, k=3, iterations=3, max_cell_size=500
+            "knn_communities_writer": knn_communities_writer(
+                scents, sdirs["knn_communities_writer"], k=3, iterations=3,
+                max_cell_size=500,
             ),
-        ),
-    ):
-        sdir = tempfile.mkdtemp(prefix=f"bench_{wname}_")
-        try:
-            w = factory(sdir)
-            spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            w(emb_base, 0)
-            out[f"{wname}_ingest_sec"] = round(time.perf_counter() - t0, 3)
-            trig = []
-            for i in range(2):
-                spark.catalog.clearCache()
-                t0 = time.perf_counter()
-                w(_trigger_batch(i), i + 1)
-                trig.append(round(time.perf_counter() - t0, 3))
-            out[f"{wname}_trigger_sec"] = min(trig)
-            out[f"{wname}_trigger_samples"] = trig
-            out[f"{wname}_trigger_rows"] = small_n
-        finally:
-            shutil.rmtree(sdir, ignore_errors=True)
+        }
+        ingest = sample(spark, [
+            (f"{w}_ingest", lambda w=w: writers[w](emb_base, 0)) for w in writers
+        ], passes=1)
+        res = sample(spark, [(f"{w}_trigger", triggers(writers[w])) for w in writers])
+    finally:
+        for d in sdirs.values():
+            shutil.rmtree(d, ignore_errors=True)
+    for name, rec in ingest.items():
+        out[f"{name}_sec"], out[f"{name}_profile"] = rec["sec"], rec["profile"]
+    publish(out, res)
+    out.update({f"{w}_trigger_rows": small_n for w in writers})
     out["stream_state_rows"] = n_base
 
     out["ticks_rows"] = ticks.count()
@@ -757,243 +630,229 @@ def scale_block(spark, rep: int) -> dict:
         .agg(F.max("count"))
         .collect()[0][0]
     )
-
-    # Scale CURVE (VERDICT r4 stretch #9): re-run the skew-critical
-    # operator at x100 replication (~100 M ticks at sf0.1, half of them
-    # in ONE symbol) so the committed artifact shows the x10 -> x100
-    # shape. Two samples, interleaved with the quota head-to-head so
-    # they never share one co-tenant burst; each sample carries its own
-    # probes, a per-window phase breakdown (kernel vs Python vs
-    # shuffle/Arrow/IO — NOTES r8 variance investigation), and the
-    # bandwidth-normalized rate (Kbricks/s per GB/s) that is the
-    # round-over-round comparable when raw bandwidth swings.
-    crep = int(os.environ.get("SPARK_GRAFT_SCALE_CURVE", "100"))
-    if crep > rep:
-        wait_for_quiet("scale_curve")
-        cskewed = skewed_ticks(crep)
-
-        # quota_sample head-to-head at skew (VERDICT r4 item 1's perf
-        # claim): 90% of crep*10-replicated docs in ONE group. The
-        # full-window path shuffles the whole text payload and sorts the
-        # hot group in one reducer; the pre-filter pays 3 parallel
-        # pruned scans instead (crossover ~5 M docs on local[32]).
-        from renkodf_spark.operators import corpus
-
-        drep = crep * 10
-        dreps = spark.range(drep).select(F.col("id").alias("rep"))
-        qdocs = (
-            load_table(spark, SF_DIR, "documents")
-            .crossJoin(F.broadcast(dreps))
-            .select(
-                (F.col("doc_id") * drep + F.col("rep")).alias("doc_id"),
-                F.concat_ws(" ", F.col("text"), F.concat(F.lit("rep"), F.col("rep"))).alias(
-                    "text"
-                ),
-            )
-            .withColumn(
-                "grp",
-                F.when(F.pmod(F.hash("doc_id"), F.lit(10)) < 9, F.lit("hot")).otherwise(
-                    F.concat(F.lit("g"), F.pmod(F.hash("doc_id"), F.lit(7)))
-                ),
-            )
-        )
-
-        cc = out["scale_curve"] = {
-            "replication": crep,
-            "ticks_rows": out["ticks_rows"] * crep // rep,
-            "samples": [],
-        }
-        q = cc["quota_skew"] = {"docs_rows": qdocs.count(), "samples": {}}
-        for s in range(2):
-            spark.catalog.clearCache()
-            probe = {"spin_miters": spin_probe(), "bw_gbps": bandwidth_probe()}
-            inst: dict = {}
-            t0 = time.perf_counter()
-            # subchunk_threshold wired into the x100 entry (VERDICT r9
-            # item 4): at crep=100 the hot symbol carries ~1.2M ticks
-            # per week window — below the 3M default, so r9's artifact
-            # never showed the splice path's parallelism at the curve.
-            # 400k/50k splits every hot window into ~24 spec chunks
-            # (measured sweep: target 200k -> 6 chunks / max wall 43s,
-            # 100k -> 12 / 18s, 50k -> 24 / 9.2s, all converged, rows
-            # identical); hot_stats and the per-window achieved
-            # parallelism are published per sample.
-            x100_thr = int(os.environ.get("SPARK_GRAFT_X100_SUBCHUNK_THR", "400000"))
-            rows = materialize(
-                renko_chunked(
-                    cskewed, 5.0, window="1 week", instrument=inst,
-                    subchunk_threshold=x100_thr, subchunk_target=x100_thr // 8,
-                )
-            )
-            el = time.perf_counter() - t0
-            wins = inst.get("windows", [])
-            cc["samples"].append(
-                {
-                    "sec": round(el, 3),
-                    "probe": probe,
-                    # bandwidth-normalized rate: stable when the wall
-                    # time is bandwidth-steal-inflated
-                    "kbricks_per_sec_per_gbps": round(
-                        rows / el / 1e3 / probe["bw_gbps"], 2
-                    ),
-                    "phases": {
-                        "stage_write_sec": inst.get("stage_write_sec"),
-                        "discover_sec": inst.get("discover_sec"),
-                        "n_windows": inst.get("n_windows"),
-                        "windows_wall_sec": round(sum(w["wall_sec"] for w in wins), 3),
-                        "py_sec_total": round(sum(w["py_sec"] for w in wins), 3),
-                        "kernel_sec_total": round(
-                            sum(w["kernel_sec"] for w in wins), 3
-                        ),
-                        "max_window_wall_sec": max((w["wall_sec"] for w in wins), default=0),
-                        # achieved parallelism per window: worker-side
-                        # Python seconds / window wall — ~1 means the
-                        # window ran as one serial task; the r8 "done"
-                        # bar for sub-chunking is > 20 on the hot
-                        # windows at local[32]
-                        "windows": [
-                            {
-                                "wall_sec": w["wall_sec"],
-                                "achieved_parallelism": round(
-                                    w["py_sec"] / max(w["wall_sec"], 1e-9), 1
-                                ),
-                                **({"hot": w["hot"]} if "hot" in w else {}),
-                            }
-                            for w in wins
-                        ],
-                    },
-                }
-            )
-            cc["skew_renko_chunked_rows"] = rows
-            # interleave: the quota pair separates the two x100 samples
-            for label, af in (("prefilter_sec", 2), ("full_window_sec", None)):
-                spark.catalog.clearCache()
-                t0 = time.perf_counter()
-                materialize(
-                    corpus.quota_sample(qdocs, "grp", per_group=25, admit_factor=af)
-                )
-                q["samples"].setdefault(label, []).append(
-                    round(time.perf_counter() - t0, 3)
-                )
-        cc["skew_renko_chunked_sec"] = min(s["sec"] for s in cc["samples"])
-        for label in ("prefilter_sec", "full_window_sec"):
-            q[label] = min(q["samples"][label])
-
-        # Sub-chunking head-to-head (VERDICT r8 item 3): the x100 HOT
-        # symbol above is duplicate-heavy (hash-selected events repeat
-        # identically across reps) so its serial scan is cheap and the
-        # default 3M-tick threshold rightly leaves it alone. The serial
-        # floor the sub-chunk operator exists for is a hot symbol of
-        # UNIQUE dense ticks — built here deterministically in-Spark
-        # (2-decimal exponential prices via inverse-CDF of a hash
-        # uniform, every tick moving multiple 5.0-bricks), one window,
-        # measured serial (subchunk_threshold=None) vs speculative
-        # sub-chunks, interleaved min-of-2 like every scale entry.
-        wait_for_quiet("subchunk")
-        n_hot = int(os.environ.get("SPARK_GRAFT_SUBCHUNK_TICKS", "1500000"))
-        u = (F.pmod(F.xxhash64(F.col("id")), F.lit(1_000_000)) + 0.5) / 1_000_000.0
-        hot_ticks = spark.range(n_hot).select(
-            F.lit("HOT").alias("symbol"),
-            (
-                F.lit("2024-01-01 00:00:00").cast("timestamp")
-                + F.make_interval(secs=F.col("id") * 0.05)
-            ).alias("event_time"),
-            F.round(-50.0 * F.log(1.0 - u), 2).alias("close"),
-        )
-        cool_ticks = spark.range(n_hot // 10).select(
-            F.concat(F.lit("S"), F.pmod(F.col("id"), F.lit(50))).alias("symbol"),
-            (
-                F.lit("2024-01-01 00:00:00").cast("timestamp")
-                + F.make_interval(secs=F.col("id") * 0.5)
-            ).alias("event_time"),
-            F.round(
-                -50.0 * F.log(1.0 - (F.pmod(F.xxhash64(F.col("id") + 7), F.lit(1_000_000)) + 0.5) / 1_000_000.0),
-                2,
-            ).alias("close"),
-        )
-        sticks = hot_ticks.unionByName(cool_ticks)
-        sb = cc["subchunk"] = {"hot_ticks": n_hot, "samples": {}}
-        for _pass in range(2):
-            for label, thr in (("chunked_sec", 1_000_000), ("serial_sec", None)):
-                spark.catalog.clearCache()
-                inst: dict = {}
-                t0 = time.perf_counter()
-                rows = materialize(
-                    renko_chunked(
-                        sticks, 5.0, window="30 days", instrument=inst,
-                        subchunk_threshold=thr, subchunk_target=300_000,
-                    )
-                )
-                sb["samples"].setdefault(label, []).append(
-                    round(time.perf_counter() - t0, 3)
-                )
-                # per-config row counts (ADVICE r9: one shared key let a
-                # row-count divergence in the bench regime go unrecorded)
-                # — the head-to-head doubles as a large-scale equivalence
-                # check, enforced below.
-                sb.setdefault("bricks", {})[label.replace("_sec", "")] = rows
-                if thr is not None and inst.get("windows"):
-                    sb["hot_stats"] = inst["windows"][0].get("hot")
-        assert sb["bricks"]["chunked"] == sb["bricks"]["serial"], (
-            "subchunk bench: chunked/serial brick counts diverged "
-            f"{sb['bricks']} — the splice is wrong at bench scale"
-        )
-        for label in ("chunked_sec", "serial_sec"):
-            sb[label] = min(sb["samples"][label])
-        sb["speedup"] = round(sb["serial_sec"] / max(sb["chunked_sec"], 1e-9), 2)
-
-        # Batched BPE at realistic vocab scale (VERDICT r9 item 5):
-        # learn k=64 merges on the sf0.1 corpus, sequential (batch_m=1,
-        # one driver round per rule) vs batched fill (batch_m 8/16,
-        # rounds until k rules). sec_per_merge is the headline number;
-        # rounds is the claimed ceil-ish job-count win — at cluster
-        # scale each round is a scheduling round-trip, so rounds/rule
-        # is what survives a 100x executor-count scale-up.
-        wait_for_quiet("bpe")
-        from renkodf_spark.operators.text import bpe_merges
-        from renkodf_spark.queries.pipeline import _docs as _bpe_docs
-
-        kk = int(os.environ.get("SPARK_GRAFT_BPE_K", "64"))
-        bdocs = _bpe_docs(spark, SF_DIR)
-        bp = out["bpe_scale"] = {"k": kk, "samples": {}, "rules": {}, "rounds": {}}
-        for _pass in range(2):
-            for label, mm in (("sequential", 1), ("batch8_fill", 8), ("batch16_fill", 16)):
-                spark.catalog.clearCache()
-                binst: dict = {}
-                t0 = time.perf_counter()
-                rules = bpe_merges(
-                    bdocs, k=kk, batch_m=mm, fill=True, instrument=binst
-                ).collect()
-                bp["samples"].setdefault(label, []).append(
-                    round(time.perf_counter() - t0, 3)
-                )
-                bp["rules"][label] = len(rules)
-                bp["rounds"][label] = binst["rounds"]
-        for label in ("sequential", "batch8_fill", "batch16_fill"):
-            sec = min(bp["samples"][label])
-            bp[f"{label}_sec"] = sec
-            bp[f"{label}_sec_per_merge"] = round(sec / max(bp["rules"][label], 1), 3)
-        bp["speedup_batch8"] = round(
-            bp["sequential_sec"] / max(bp["batch8_fill_sec"], 1e-9), 2
-        )
+    if SCALE_CURVE > rep:
+        out["scale_curve"] = scale_curve(spark, rep, out["ticks_rows"])
+        out["bpe_scale"] = bpe_scale(spark, _bpe_docs(spark, SF_DIR))
     return out
 
 
-def main():
-    wait_for_quiet("headline")
+def scale_curve(spark, rep: int, ticks_rows: int) -> dict:
+    """The skew-critical operator at x100 replication (~100 M ticks at
+    sf0.1, half of them in ONE symbol), so the artifact shows the
+    x10 -> x100 shape, interleaved with the quota_sample head-to-head;
+    then the sub-chunk head-to-head. Each x100 sample keeps its
+    per-window phase breakdown (kernel vs Python vs shuffle/Arrow/IO)."""
+    from pyspark.sql import functions as F
 
-    # single-core kernel throughput first, before the Spark JVM spins up
-    # 32 executor threads that perturb the measurement
-    tput = kernel_throughput()
+    from renkodf_spark.operators import corpus
+    from renkodf_spark.operators.renko_chunked import renko_chunked
 
-    from renkodf_spark.session import build_session
+    cskewed = skewed_ticks(spark, SCALE_CURVE)
+    # quota_sample at skew: 90% of x(10 * SCALE_CURVE) docs in ONE
+    # group. The full-window path shuffles the whole text payload and
+    # sorts the hot group in one reducer; the pre-filter pays 3 parallel
+    # pruned scans instead (crossover ~5 M docs on local[32]).
+    qdocs = (
+        replicated_docs(spark, SCALE_CURVE * 10)
+        .select("doc_id", "text")
+        .withColumn(
+            "grp",
+            F.when(F.pmod(F.hash("doc_id"), F.lit(10)) < 9, F.lit("hot")).otherwise(
+                F.concat(F.lit("g"), F.pmod(F.hash("doc_id"), F.lit(7)))
+            ),
+        )
+    )
+    phases = []
 
-    spark = build_session("renkodf-spark-bench", cores=int(CPUS), driver_memory="24g")
-    spark.sparkContext.setLogLevel("ERROR")
+    def x100():
+        inst: dict = {}
+        rows = materialize(
+            renko_chunked(
+                cskewed, 5.0, window="1 week", instrument=inst,
+                subchunk_threshold=X100_SUBCHUNK_THR,
+                subchunk_target=X100_SUBCHUNK_THR // 8,
+            )
+        )
+        wins = inst.get("windows", [])
+        phases.append({
+            "stage_write_sec": inst.get("stage_write_sec"),
+            "discover_sec": inst.get("discover_sec"),
+            "n_windows": inst.get("n_windows"),
+            "windows_wall_sec": round(sum(w["wall_sec"] for w in wins), 3),
+            "py_sec_total": round(sum(w["py_sec"] for w in wins), 3),
+            "kernel_sec_total": round(sum(w["kernel_sec"] for w in wins), 3),
+            "max_window_wall_sec": max((w["wall_sec"] for w in wins), default=0),
+            # achieved parallelism per window: worker-side Python
+            # seconds / window wall; ~1 means one serial task
+            "windows": [
+                {
+                    "wall_sec": w["wall_sec"],
+                    "achieved_parallelism": round(w["py_sec"] / max(w["wall_sec"], 1e-9), 1),
+                    **({"hot": w["hot"]} if "hot" in w else {}),
+                }
+                for w in wins
+            ],
+        })
+        return rows
 
+    def quota(af):
+        return lambda: materialize(corpus.quota_sample(qdocs, "grp", per_group=25, admit_factor=af))
+
+    res = sample(spark, [
+        ("skew_renko_chunked", x100),
+        ("prefilter", quota(2)),
+        ("full_window", quota(None)),
+    ])
+    x = res.pop("skew_renko_chunked")
+    cc = {
+        "replication": SCALE_CURVE,
+        "ticks_rows": ticks_rows * SCALE_CURVE // rep,
+        "samples": [{"sec": s, "phases": p} for s, p in zip(x["samples"], phases)],
+        "skew_renko_chunked_rows": x["value"],
+        "skew_renko_chunked_sec": x["sec"],
+        "skew_renko_chunked_profile": x["profile"],
+        "quota_skew": {"docs_rows": qdocs.count(), "samples": {}},
+    }
+    q = cc["quota_skew"]
+    for label, rec in res.items():
+        q["samples"][f"{label}_sec"] = rec["samples"]
+        q[f"{label}_sec"], q[f"{label}_profile"] = rec["sec"], rec["profile"]
+
+    # Sub-chunking head-to-head: the x100 HOT symbol above is
+    # duplicate-heavy (hash-selected events repeat identically across
+    # reps), so its serial scan is cheap. The serial floor the sub-chunk
+    # operator exists for is a hot symbol of UNIQUE dense ticks — built
+    # here deterministically in-Spark (2-decimal exponential prices via
+    # inverse-CDF of a hash uniform, every tick moving multiple
+    # 5.0-bricks), one window, measured serial (subchunk_threshold=None)
+    # vs speculative sub-chunks. The pair doubles as a large-scale
+    # equivalence check on the brick counts.
+    u = (F.pmod(F.xxhash64(F.col("id")), F.lit(1_000_000)) + 0.5) / 1_000_000.0
+    hot_ticks = spark.range(SUBCHUNK_TICKS).select(
+        F.lit("HOT").alias("symbol"),
+        (
+            F.lit("2024-01-01 00:00:00").cast("timestamp")
+            + F.make_interval(secs=F.col("id") * 0.05)
+        ).alias("event_time"),
+        F.round(-50.0 * F.log(1.0 - u), 2).alias("close"),
+    )
+    cool_ticks = spark.range(SUBCHUNK_TICKS // 10).select(
+        F.concat(F.lit("S"), F.pmod(F.col("id"), F.lit(50))).alias("symbol"),
+        (
+            F.lit("2024-01-01 00:00:00").cast("timestamp")
+            + F.make_interval(secs=F.col("id") * 0.5)
+        ).alias("event_time"),
+        F.round(
+            -50.0 * F.log(1.0 - (F.pmod(F.xxhash64(F.col("id") + 7), F.lit(1_000_000)) + 0.5) / 1_000_000.0),
+            2,
+        ).alias("close"),
+    )
+    sticks = hot_ticks.unionByName(cool_ticks)
+    sb = cc["subchunk"] = {"hot_ticks": SUBCHUNK_TICKS, "samples": {}}
+
+    def subchunked(thr):
+        def run():
+            inst: dict = {}
+            rows = materialize(
+                renko_chunked(
+                    sticks, 5.0, window="30 days", instrument=inst,
+                    subchunk_threshold=thr, subchunk_target=300_000,
+                )
+            )
+            if thr is not None and inst.get("windows"):
+                sb["hot_stats"] = inst["windows"][0].get("hot")
+            return rows
+
+        return run
+
+    res = sample(spark, [("chunked", subchunked(1_000_000)), ("serial", subchunked(None))])
+    sb["bricks"] = {label: rec["value"] for label, rec in res.items()}
+    assert sb["bricks"]["chunked"] == sb["bricks"]["serial"], (
+        "subchunk bench: chunked/serial brick counts diverged "
+        f"{sb['bricks']} — the splice is wrong at bench scale"
+    )
+    for label, rec in res.items():
+        sb["samples"][f"{label}_sec"] = rec["samples"]
+        sb[f"{label}_sec"], sb[f"{label}_profile"] = rec["sec"], rec["profile"]
+    sb["speedup"] = round(sb["serial_sec"] / max(sb["chunked_sec"], 1e-9), 2)
+    return cc
+
+
+def bpe_scale(spark, bdocs) -> dict:
+    """Batched BPE at realistic vocab scale: learn BPE_K merges,
+    sequential (batch_m=1, one driver round per rule) vs batched fill
+    (batch_m 8/16, rounds until k rules). sec_per_merge is the headline
+    number; rounds is the job-count win — at cluster scale each round is
+    a scheduling round-trip, so rounds/rule is what survives a 100x
+    executor-count scale-up."""
+    from renkodf_spark.operators.text import bpe_merges
+
+    def learn(mm):
+        def run():
+            inst: dict = {}
+            rules = bpe_merges(bdocs, k=BPE_K, batch_m=mm, fill=True, instrument=inst).collect()
+            return len(rules), inst["rounds"]
+
+        return run
+
+    res = sample(spark, [
+        (label, learn(mm))
+        for label, mm in (("sequential", 1), ("batch8_fill", 8), ("batch16_fill", 16))
+    ])
+    bp = {"k": BPE_K, "samples": {}, "rules": {}, "rounds": {}}
+    for label, rec in res.items():
+        bp["samples"][label] = rec["samples"]
+        bp["rules"][label], bp["rounds"][label] = rec["value"]
+        bp[f"{label}_sec"], bp[f"{label}_profile"] = rec["sec"], rec["profile"]
+        bp[f"{label}_sec_per_merge"] = round(rec["sec"] / max(bp["rules"][label], 1), 3)
+    bp["speedup_batch8"] = round(bp["sequential_sec"] / max(bp["batch8_fill_sec"], 1e-9), 2)
+    return bp
+
+
+def final_line(timings: dict[str, float], sf) -> dict:
+    """The last stdout line, the one the driver parses. Its capture
+    window holds a few KB, so the line carries only the output contract
+    (metric/value/unit/queries/sf, ~30 bytes a query) and the kernel
+    figures; the full payload goes to stderr. ``value`` is the sum of
+    the query timings, kernel figures excluded."""
+    queries = {k: v for k, v in timings.items() if not k.startswith("kernel_mticks")}
+    return {
+        "metric": "headline_total_runtime",
+        "value": round(sum(queries.values()), 3),
+        "unit": "sec",
+        "queries": queries,
+        "sf": sf,
+        "n_queries": len(queries),
+        "kernel_dense_mticks": timings["kernel_mticks_per_sec_dense"],
+        "kernel_sparse_mticks": timings["kernel_mticks_per_sec_sparse"],
+        "full_payload": "stderr",
+    }
+
+
+def main(names: list[str]) -> None:
     import renkodf_spark.queries as q
 
     builders = q.queries()
+    unknown = [n for n in names if n not in builders]
+    if unknown:
+        sys.exit(f"unknown query: {', '.join(unknown)}")
+
+    # single-core kernel throughput first, before the Spark JVM spins up
+    # executor threads that perturb the measurement
+    tput = kernel_throughput()
+
+    from renkodf_spark.plans.audit import plan_summary
+    from renkodf_spark.session import build_session
+
+    # 24g on the benchmark box, a quarter of the RAM on a smaller one:
+    # Arrow's direct memory may grow as large as the heap, and the
+    # sub-chunk pair's serial scan (14.4 M bricks in one task) peaked at
+    # 15.1 GB of process-tree RSS on a 16 GB box with a 7g heap
+    ram_gb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**30
+    spark = build_session(
+        "renkodf-spark-bench", cores=int(CPUS), driver_memory=f"{min(24, ram_gb // 4)}g"
+    )
+    spark.sparkContext.setLogLevel("ERROR")
 
     # Warm-up: spin up executor threads, Python workers (Arrow path),
     # and whole-stage codegen before the timed loop — cold-start cost is
@@ -1011,55 +870,41 @@ def main():
         .collect()
     )
 
-    # Two temporally-SEPARATED full passes over the headline, min per
-    # query, plus a 3rd visit for sub-second queries (VERDICT r6 item
-    # 2, hardened r7): back-to-back reps share a co-tenant spike's
-    # window — a run this round recorded 18.3 s best-of-2 for a query
-    # whose fresh-session steady state is 2.2 s, because both reps sat
-    # inside the same external load burst. Interleaving the passes puts
-    # minutes between a query's samples, which decorrelates the blips
-    # the loadavg gate cannot see mid-run (our own 32 threads keep the
-    # 1-minute loadavg high, so per-query gating would always wait).
-    # Each visit still stands alone: clearCache before each, so
-    # operators that cache internal subtrees (LSH signatures, shingle
-    # sets) re-pay that cost and nothing carries between samples; the
-    # first pass eats every plan's one-off whole-stage-codegen JIT.
+    # Two interleaved passes over the queries, min per query, plus a 3rd
+    # visit for sub-second queries; the first pass eats every plan's
+    # one-off whole-stage-codegen JIT.
+    built = {}
+
+    def visit(name):
+        def run():
+            built[name] = df = builders[name](spark, SF_DIR)
+            return materialize(df)  # pruning-proof: all columns computed
+
+        return run
+
+    entries = [(name, visit(name)) for name in names]
+    res = sample(spark, entries)
+    sample(spark, [(n, t) for n, t in entries if res[n]["sec"] < 1.0], passes=1, out=res)
+
     timings: dict[str, float] = {}
-    rows: dict[str, int] = {}
-    visits: dict[str, int] = {}
-    qsamples: dict[str, list] = {name: [] for name in HEADLINE}
-
-    def visit(name: str) -> None:
-        spark.catalog.clearCache()
-        t0 = time.perf_counter()
-        df = builders[name](spark, SF_DIR)
-        rows[name] = materialize(df)  # pruning-proof: all columns computed
-        el = time.perf_counter() - t0
-        timings[name] = min(timings.get(name, el), el)
-        visits[name] = visits.get(name, 0) + 1
-        qsamples[name].append(el)
-
-    for _pass in range(2):
-        for name in HEADLINE:
-            visit(name)
-    for name in HEADLINE:  # sub-second queries: one more decorrelated sample
-        if timings[name] < 1.0:
-            visit(name)
-
-    # this run's numbers only: the min over its own interleaved visits
-    for name in HEADLINE:
-        timings[name] = round(timings[name], 3)
+    profiles: dict[str, dict] = {}
+    for name, rec in res.items():
+        timings[name] = rec["sec"]
+        plan = dataclasses.asdict(plan_summary(built[name]))
+        del plan["text"]
+        profiles[name] = {**rec["profile"], "plan": plan}
+        p = rec["profile"]
         print(
-            f"# {name}: {timings[name]}s ({rows[name]} rows, {visits[name]} visits)",
+            f"# {name}: {rec['sec']}s ({rec['value']} rows, {len(rec['samples'])} visits; "
+            f"{p['jobs']} jobs, {p['stages']} stages, executor cpu {p['jvm_cpu_s']}s)",
             file=sys.stderr,
         )
 
-    # second kernel visit, temporally separated from the pre-Spark one
-    # by the whole headline loop (VERDICT r10 item 2: two samples far
-    # apart in time decorrelate a co-tenant burst the way the query
-    # passes already do). Spark's executor threads idle between jobs,
-    # so the single-core loop is measurable here; a busy-box sample
-    # only LOWERS throughput, and we take the max.
+    # second kernel visit, separated from the pre-Spark one by the whole
+    # query loop: two samples far apart in time decorrelate a co-tenant
+    # burst. Spark's executor threads idle between jobs, so the
+    # single-core loop is measurable here; a busy-box sample only LOWERS
+    # throughput, and we take the max.
     tput2 = kernel_throughput()
     for lbl in ("sparse", "dense"):
         tput["samples"][lbl].extend(tput2["samples"][lbl])
@@ -1072,183 +917,44 @@ def main():
         file=sys.stderr,
     )
 
-    rep = int(os.environ.get("SPARK_GRAFT_SCALE_REP", "10"))
-    scale = None
-    if rep > 1:
-        scale = scale_block(spark, rep)
-        print(f"# scale x{rep}: {scale}", file=sys.stderr)
+    extra = {}
+    if names == HEADLINE:  # named queries only: no scale block or split
+        if SCALE_REP > 1:
+            extra["scale"] = scale_block(spark, SCALE_REP)
+        extra["centrality_split"] = centrality_split(spark)
 
-    wait_for_quiet("centrality_split")
-    csplit = centrality_split(spark)
-    print(f"# centrality split: {csplit}", file=sys.stderr)
-
-    total = round(sum(v for k, v in timings.items() if not k.startswith("kernel_mticks")), 3)
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
+    final = final_line(timings, float(sf) if sf.replace(".", "").isdigit() else sf)
     payload = {
-        "metric": "headline_total_runtime",
-        "value": total,
+        "metric": final["metric"],
+        "value": final["value"],
         "unit": "sec",
         "queries": timings,
-        "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-        # ADVICE r3: record the measurement regime so cross-round
-        # comparisons can't silently mix methodologies. v5 (r08): the
-        # SCALE entries join the interleaved-sampling regime (2
-        # temporally-separated samples per entry, min, per-sample
-        # spin/bw probes recorded) and the x100 curve gets two
-        # interleaved samples + per-window phase breakdown + a
-        # bandwidth-normalized rate. v4 (r07): two separated headline
-        # passes + 3rd visit for sub-second queries; per-section gates.
-        # v3 (earlier r07): best-of-2 back-to-back. v2 (r03-r06):
-        # best-of-2, headline-only gate. r01/r02: single rep, count()
-        # materialization — not comparable.
+        "sf": final["sf"],
+        # the measurement regime, so comparisons across runs cannot mix
+        # methodologies. v8: every timed entry (queries, scale, curve,
+        # centrality split) runs through one sampler and carries a
+        # status-store profile of its min visit; no co-tenancy probes.
+        # v7: this run's samples only. Before v4: not comparable.
         "methodology": {
-            "version": 7,
-            # v7: this run's samples only (the v6 cross-run min-merge
-            # pool is gone). v6 (r12): per-query samples cross-run
-            # min-merged under a package-source fingerprint, quiet-gate
-            # threshold 4 -> 2
+            "version": 8,
             "reps": "2 interleaved passes (3rd visit if best < 1s); scale entries 2 interleaved samples",
             "agg": "min",
             "materialize": "full_width_row_hash",
-            # the gates only control WHEN each section starts (bounded
-            # wait for co-tenant quiet); measurement semantics unchanged
-            "quiet_gate": QUIET_GATES,
-            # run-end probes: compare against the per-section values
-            # to see whether co-tenant pressure changed mid-run (spin
-            # = CPU steal, bw = memory-bandwidth steal — the one that
-            # actually moves the Arrow/shuffle-bound scale numbers)
-            "spin_miters_end": spin_probe(),
-            "bw_gbps_end": bandwidth_probe(),
         },
-        # co-tenancy context: this box's load swings 6x+ (NOTES.md
-        # postmortem); a high load average here means absolute numbers
-        # are inflated and only intra-run ratios are meaningful
         "loadavg": [round(x, 2) for x in os.getloadavg()],
         # this run's raw samples behind the minima above
-        "samples": {"queries": qsamples, "kernel": tput["samples"]},
+        "samples": {
+            "queries": {name: rec["samples"] for name, rec in res.items()},
+            "kernel": tput["samples"],
+        },
+        "profiles": profiles,
+        **extra,
     }
-    if scale is not None:
-        payload["scale"] = scale
-    payload["centrality_split"] = csplit
-
-    # Artifact layout (VERDICT r7 item 2): the full payload became one
-    # giant stdout line that overflowed the driver's capture buffer —
-    # BENCH_r07.json stored only its tail ("parsed": null, no headline
-    # total). The FULL payload goes to stderr only (a run leaves the
-    # tree clean); stdout ends with a compact always-fits summary line
-    # carrying the output contract (metric/value/unit/queries/sf) plus
-    # the headline numbers a round-over-round comparison needs.
     print(json.dumps(payload), file=sys.stderr)
-
-    compact = {
-        "metric": payload["metric"],
-        "value": total,
-        "unit": "sec",
-        "queries": timings,
-        "sf": payload["sf"],
-        "methodology_version": 7,
-        "probes": {
-            **{
-                sect: {"spin": g["spin_miters"], "bw": g["bw_gbps"]}
-                for sect, g in QUIET_GATES.items()
-            },
-            "end": {
-                "spin": payload["methodology"]["spin_miters_end"],
-                "bw": payload["methodology"]["bw_gbps_end"],
-            },
-        },
-        "loadavg": payload["loadavg"],
-        "full_payload": "stderr",
-    }
-    if scale is not None:
-        cs = {
-            k: v
-            for k, v in scale.items()
-            if k.endswith(("_sec", "_rows", "_samples", "_probes"))
-            or k in ("replication", "skew_hot_ticks", "skew_peak_window_symbol_rows")
-        }
-        curve = scale.get("scale_curve")
-        if curve:
-            cs["scale_curve"] = {
-                "replication": curve["replication"],
-                "ticks_rows": curve["ticks_rows"],
-                "skew_renko_chunked_rows": curve.get("skew_renko_chunked_rows"),
-                "skew_renko_chunked_sec": curve.get("skew_renko_chunked_sec"),
-                "samples": [
-                    {
-                        "sec": s["sec"],
-                        "bw": s["probe"]["bw_gbps"],
-                        "kbricks_per_sec_per_gbps": s["kbricks_per_sec_per_gbps"],
-                    }
-                    for s in curve.get("samples", [])
-                ],
-                "quota_skew": {
-                    k: curve["quota_skew"][k]
-                    for k in ("docs_rows", "prefilter_sec", "full_window_sec")
-                    if k in curve.get("quota_skew", {})
-                },
-                "subchunk": {
-                    k: curve["subchunk"][k]
-                    for k in ("hot_ticks", "bricks", "serial_sec", "chunked_sec", "speedup")
-                    if k in curve.get("subchunk", {})
-                },
-                # per-window splice proof at the x100 curve (VERDICT r9
-                # item 4), from the best sample: hot chunk count, how
-                # many speculative scans converged, and the repair
-                # fraction actually rescanned
-                "hot_windows": [
-                    w
-                    for w in min(
-                        curve.get("samples", []), key=lambda s: s["sec"], default={}
-                    ).get("phases", {}).get("windows", [])
-                    if "hot" in w
-                ] if curve.get("samples") else [],
-            }
-        if "bpe_scale" in scale:
-            bp = scale["bpe_scale"]
-            cs["bpe_scale"] = {
-                k: bp[k]
-                for k in (
-                    "k", "rules", "rounds", "sequential_sec",
-                    "sequential_sec_per_merge", "batch8_fill_sec",
-                    "batch8_fill_sec_per_merge", "batch16_fill_sec",
-                    "batch16_fill_sec_per_merge", "speedup_batch8",
-                )
-                if k in bp
-            }
-        compact["scale"] = cs
-    print(json.dumps(compact))
-    # VERDICT r8 item 1 / VERDICT r14 item 1: the compact line above
-    # still carries the bulky methodology/scale blobs and can overflow
-    # the driver's stdout capture window, truncating the LEADING keys
-    # (metric/value — the headline). The driver parses the LAST
-    # parseable JSON line, so end stdout with a bounded final line.
-    # r14's ~150-byte micro line omitted per-query timings, which left
-    # PERF_r14.json with an empty per_query/scaling comparison — the
-    # driver was judging blind. The final line now carries the
-    # {"queries": {name: sec}} map (~30 bytes/query, ~2.5 KB for 80
-    # queries — well inside the several-KB capture window that held the
-    # r14 tail), restoring the full driver contract
-    # (metric/value/unit/queries/sf) in the last line while keeping the
-    # methodology/scale bulk out of it.
-    micro = {
-        "metric": payload["metric"],
-        "value": total,
-        "unit": "sec",
-        "queries": {
-            k: round(v, 3)
-            for k, v in timings.items()
-            if not k.startswith("kernel_mticks")
-        },
-        "sf": payload["sf"],
-        "n_queries": len([k for k in timings if not k.startswith("kernel_mticks")]),
-        "kernel_dense_mticks": timings["kernel_mticks_per_sec_dense"],
-        "kernel_sparse_mticks": timings["kernel_mticks_per_sec_sparse"],
-        "full_payload": "stderr",
-    }
-    print(json.dumps(micro))
+    print(json.dumps(final))
     spark.stop()
 
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1:] or HEADLINE)

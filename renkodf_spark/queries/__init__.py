@@ -31,9 +31,10 @@ from renkodf_spark.queries import pipeline10  # noqa: F401
 from renkodf_spark.queries import pipeline11  # noqa: F401
 
 # Rotation rule: first the queries whose builders reach code the latest
-# change touched (here: the sub-chunk repair pass, now on kernel.scan,
-# then the input guard every renko_* query shares; no query reaches a
-# stream operator), then the renko_* product surface.
+# change touched, then the renko_* product surface. The latest change
+# touched bench.py, the generation store's snapshot read and six
+# foreachBatch index writers; no query builder reaches any of them, so
+# the list is the renko_* surface alone, the sub-chunk splice first.
 _PRIORITY = [
     "renko_subchunked_wide",
     "renko_chunked_wide",

@@ -32,10 +32,9 @@ append-only-generation protocol to the vector index:
 
 100 TB shape: per-trigger routing + write cost is O(batch × centroids)
 — never a function of index size — and reads stay O(probed cells).
-The one index-sized term is OPT-IN: exact append-only ENFORCEMENT
-re-reads the id column of prior generations each trigger (O(ids), the
-vectors never move); producers with unique ids pass
-``enforce_append_only=False`` and pay O(batch) throughout. Mining and
+The one index-sized term is exact append-only enforcement, which
+always runs: it re-reads the id column of prior generations each
+trigger (O(ids), the vectors never move). Mining and
 search over the streamed index compose with ``ivf_topk_indexed`` and
 ``hard_negative_mining_ann`` untouched.
 """
@@ -57,7 +56,6 @@ def ivf_index_writer(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     carry: tuple = (),
-    enforce_append_only: bool = True,
     compact_every: int | None = None,
 ):
     """``foreachBatch`` writer maintaining an IVF vector index from an
@@ -70,16 +68,14 @@ def ivf_index_writer(
     is a superset of the batch one (an extra ``batch_id`` partition
     level the readers' column selection drops).
 
-    Cost honesty (code-review r10): with ``enforce_append_only=True``
-    each trigger re-reads the ID COLUMN of every prior generation and
-    distinct-shuffles it for the anti-join — exact enforcement is
-    O(ids indexed so far) per trigger (the vectors are never read:
-    column pruning keeps the scan to the 8-byte id field, but it is a
-    data scan, not metadata). The routing/write work stays O(batch).
-    When the producer guarantees unique ids (the common CDC-keyed
-    case), pass ``enforce_append_only=False`` and the per-trigger cost
-    is O(batch) throughout; at-least-once REPLAYS remain idempotent
-    either way (the generation overwrite is keyed by batch_id)."""
+    Append-only enforcement: each trigger drops the batch ids a prior
+    generation already holds. It re-reads the ID COLUMN of every prior
+    generation and distinct-shuffles it for the anti-join, so exact
+    enforcement is O(ids indexed so far) per trigger (the vectors are
+    never read: column pruning keeps the scan to the 8-byte id field,
+    but it is a data scan, not metadata). The routing/write work stays
+    O(batch), and at-least-once REPLAYS are idempotent (the generation
+    overwrite is keyed by batch_id)."""
     from renkodf_spark.operators.similarity import nearest_centroid
 
     # routing must be deterministic: pin the centroid rows driver-side
@@ -107,8 +103,7 @@ def ivf_index_writer(
             .filter(F.col("__rn") == 1)
             .drop("__rn")
         )
-        if enforce_append_only:  # cost documented in the docstring
-            batch = gens.drop_seen(batch, data_dir, batch_id, id_col)
+        batch = gens.drop_seen(batch, data_dir, batch_id, id_col)  # cost: docstring
         routed = nearest_centroid(
             batch, cents, id_col=id_col, vec_col=vec_col, carry=carry
         )
@@ -154,7 +149,6 @@ def knn_graph_writer(
     vec_col: str = "embedding",
     round_digits: int = 6,
     max_cell_size: int | None = None,
-    enforce_append_only: bool = True,
     compact_every: int | None = None,
 ):
     """``foreachBatch`` writer maintaining an approximate kNN graph
@@ -191,8 +185,8 @@ def knn_graph_writer(
     Per-trigger cost: O(batch x centroids) routing plus
     O(sum over affected cells of |cell|^2) pair work — a function of
     the batch's cell footprint, never of total graph/corpus size. The
-    one index-sized term stays the OPT-IN append-only id scan
-    documented on :func:`ivf_index_writer`. A cell that keeps
+    one index-sized term stays the append-only id scan documented on
+    :func:`ivf_index_writer`. A cell that keeps
     receiving vectors is recomputed each trigger at its full size — the
     same hot-cell exposure as the batch operator; ``max_cell_size``
     applies the shared ``_cap_cells`` guard with the same documented
@@ -212,7 +206,6 @@ def knn_graph_writer(
         state_path,
         id_col=id_col,
         vec_col=vec_col,
-        enforce_append_only=enforce_append_only,
         compact_every=compact_every,
     )
 
@@ -268,7 +261,6 @@ def knn_centrality_writer(
     vec_col: str = "embedding",
     round_digits: int = 6,
     max_cell_size: int | None = None,
-    enforce_append_only: bool = True,
     compact_every: int | None = None,
 ):
     """``foreachBatch`` writer maintaining PageRank / TrustRank over
@@ -306,8 +298,8 @@ def knn_centrality_writer(
     streaming twin only pays off on duplicate-heavy streams.
 
     Per-trigger |S| is counted from the store's 8-byte id column
-    (O(ids), vectors never read) — the same exact-enforcement cost
-    class as ``enforce_append_only``.
+    (O(ids), vectors never read) — the same cost class as the
+    append-only enforcement.
     """
     from renkodf_spark.operators.graph import pagerank
 
@@ -319,7 +311,6 @@ def knn_centrality_writer(
         vec_col=vec_col,
         round_digits=round_digits,
         max_cell_size=max_cell_size,
-        enforce_append_only=enforce_append_only,
         compact_every=compact_every,
     )
     # pin the seed ids once, driver-side (the frozen-centroids rule):
@@ -406,7 +397,6 @@ def knn_communities_writer(
     vec_col: str = "embedding",
     round_digits: int = 6,
     max_cell_size: int | None = None,
-    enforce_append_only: bool = True,
     compact_every: int | None = None,
 ):
     """``foreachBatch`` writer maintaining LPA communities
@@ -437,7 +427,6 @@ def knn_communities_writer(
         vec_col=vec_col,
         round_digits=round_digits,
         max_cell_size=max_cell_size,
-        enforce_append_only=enforce_append_only,
         compact_every=compact_every,
     )
 

@@ -621,7 +621,9 @@ def read_nb_model(spark, model_path: str, *, alpha: int = 1):
         counts = gens.fold(terms, ["term"], ["cnt_pos", "cnt_neg"])
         (drow,) = gens.fold(docs, [], ["cnt_pos", "cnt_neg"]).collect()
         return _derive_nb_model(spark, counts, drow, alpha)
-    state = gens.latest(spark.read.parquet(model_path))
+    state = gens.read_latest(spark, model_path)
+    if state is None:
+        raise FileNotFoundError(f"no committed NB model under {model_path}")
     counts = state.filter(F.col("kind") == "term").select("term", "cnt_pos", "cnt_neg")
     docs = state.filter(F.col("kind") == "docs").select("cnt_pos", "cnt_neg").collect()
     (drow,) = docs  # exactly one docs row per snapshot

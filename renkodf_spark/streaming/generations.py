@@ -11,8 +11,10 @@ Protocol:
   the same prior state and overwrites the same directory, so every
   writer is idempotent under replay without a commit log of its own.
 * A snapshot store holds the whole cumulative state in each generation:
-  a trigger reads the latest one before its own (:func:`read_latest`,
-  an O(state) read at any trigger count) and writes the merged state.
+  a trigger reads the latest committed one before its own
+  (:func:`read_latest`, an O(state) read at any trigger count, which
+  picks it from the listing, so an empty snapshot is the state) and
+  writes the merged state.
 * A delta store holds each trigger's own rows only: a trigger reads the
   generations before its own (:func:`read_before`), a reader all of
   them. Delta rows that feed a sum carry their ``src_batch``, so
@@ -83,21 +85,23 @@ def read_before(spark, path: str, batch_id: int, schema=None) -> DataFrame | Non
     return store.filter(F.col("batch_id") < batch_id).drop("batch_id")
 
 
-def latest(store: DataFrame, before: int | None = None) -> DataFrame | None:
-    """The latest generation of ``store`` (before ``before`` if given),
-    without the id column; ``None`` if there is none."""
-    if before is not None:
-        store = store.filter(F.col("batch_id") < before)
-    top = store.agg(F.max("batch_id")).first()[0]  # bounded scalar
-    return None if top is None else store.filter(F.col("batch_id") == top).drop("batch_id")
-
-
 def read_latest(spark, path: str, before: int | None = None, schema=None):
-    """:func:`latest` of the store at ``path``; ``None``, or an empty
-    frame of ``schema``, when there is no such generation."""
-    store = read_store(spark, path)
-    snap = None if store is None else latest(store, before)
-    return _empty(spark, schema) if snap is None else snap
+    """The latest committed generation of the store at ``path`` (before
+    ``before`` if given) alone, chosen from the listing so that an empty
+    snapshot counts; ``None``, or an empty frame of ``schema``, when
+    there is no such generation or it holds no rows under the rule above.
+
+    A generation is committed when its directory holds the committer's
+    ``_SUCCESS``: :func:`write_gen` writes straight into it, so a killed
+    write leaves ``_temporary`` and no marker, and is passed over."""
+    fs, Path = hadoop_fs(spark, path)
+    for g in reversed(list_gens(spark, path)):
+        if (before is None or g < before) and fs.exists(
+            Path(posixpath.join(_gen_path(path, g), "_SUCCESS"))
+        ):
+            snap = read_gen(spark, path, g)
+            return _empty(spark, schema) if snap is None else snap
+    return _empty(spark, schema)
 
 
 def fold(store: DataFrame, keys: list[str], sums: list[str]) -> DataFrame:

@@ -228,15 +228,17 @@ def read_current_state(spark, state_dir: str) -> DataFrame:
     """Current table from a snapshot-writer state directory, for BOTH
     layouts: bucketed (``<dir>/_manifest`` exists → the latest
     manifest's (kb, gen) pairs become a static partition-pruning
-    filter) and legacy full-snapshot (``batch_id=max`` partition).
+    filter) and legacy full-snapshot (the latest committed ``batch_id=N``
+    generation, empty or not).
     Pass the same directory the writer received (for the scd2/funnel
     writers, their ``dim``/``state`` subdirectory)."""
     pairs = _read_manifest(spark, posixpath.join(state_dir, "_manifest"), None)
-    state = spark.read.parquet(state_dir)
-    if pairs is None:
-        snap = gens.latest(state)  # None: every snapshot is empty
-        return state.filter(F.lit(False)).drop("batch_id") if snap is None else snap
-    return state.filter(_bucket_filter(pairs)).drop("gen", "kb")
+    if pairs is not None:
+        return spark.read.parquet(state_dir).filter(_bucket_filter(pairs)).drop("gen", "kb")
+    snap = gens.read_latest(spark, state_dir)
+    if snap is None:
+        raise FileNotFoundError(f"no committed snapshot under {state_dir}")
+    return snap
 
 
 def merge_writer(

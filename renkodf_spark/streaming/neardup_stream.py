@@ -294,7 +294,6 @@ def winnow_index_writer(
     id_col: str = "doc_id",
     k: int = 3,
     window: int = 4,
-    enforce_append_only: bool = True,
 ):
     """``foreachBatch`` writer maintaining a winnowing fingerprint
     index and its per-trigger match deltas — the streaming twin of the
@@ -320,7 +319,7 @@ def winnow_index_writer(
 
     Per-trigger cost: O(batch fingerprints + matched buckets) — the
     corpus's text is never re-read; the one index-sized term is the
-    opt-out append-only id scan (the ann_stream contract). Both
+    append-only id scan, O(ids indexed so far) (the ann_stream contract). Both
     directories are generation stores (:mod:`renkodf_spark.streaming.
     generations`), so at-least-once replays are idempotent at the
     directory level."""
@@ -328,8 +327,7 @@ def winnow_index_writer(
 
     def write_batch(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
-        if enforce_append_only:
-            batch = gens.drop_seen(batch, index_path, batch_id, id_col)
+        batch = gens.drop_seen(batch, index_path, batch_id, id_col)
         fps = (
             winnow_fingerprints(batch, text_col=text_col, id_col=id_col, k=k, window=window)
             .select(F.col(id_col).alias("id"), "fp")
@@ -383,7 +381,6 @@ def setsim_index_writer(
     shingle_n: int = 3,
     t_num: int = 1,
     t_den: int = 2,
-    enforce_append_only: bool = True,
 ):
     """``foreachBatch`` writer maintaining the EXACT set-similarity
     index (``operators/setsim.py``) and its per-trigger qualifying-pair
@@ -428,8 +425,7 @@ def setsim_index_writer(
         sets_path = posixpath.join(state_path, "sets")
         prefix_path = posixpath.join(state_path, "prefix")
         freq_path = posixpath.join(state_path, "freq")
-        if enforce_append_only:
-            batch = gens.drop_seen(batch, sets_path, batch_id, id_col)
+        batch = gens.drop_seen(batch, sets_path, batch_id, id_col)
         freq = gens.read_store(spark, freq_path)
         # built once, cached for the trigger's four consumers (freq
         # freeze, pair delta, prefix, sets) and unpersisted at the end

@@ -62,6 +62,50 @@ def test_merge_stream_state_across_triggers(spark, tmp_path):
     ) == [0, 1]
 
 
+def _merge_trigger(spark, state):
+    """Run one ``merge_writer`` trigger on ``(k, v, del)`` rows and
+    return the current state as sorted ``(k, v)`` tuples."""
+    from renkodf_spark.streaming.merge_stream import merge_writer, read_current_state
+
+    writer = merge_writer(state, keys=["k"], delete_col="del")
+
+    def trigger(batch_id, rows):
+        writer(spark.createDataFrame(rows, "k long, v string, del boolean"), batch_id)
+        return sorted(map(tuple, read_current_state(spark, state).select("k", "v").collect()))
+
+    return trigger
+
+
+def test_merge_emptied_snapshot_does_not_resurrect(spark, tmp_path):
+    """Deleting every key leaves an empty (schema-only) snapshot; it is
+    the state, for the reader and for the next trigger's prior."""
+    trigger = _merge_trigger(spark, str(tmp_path / "state"))
+    assert trigger(0, [(1, "a", False)]) == [(1, "a")]
+    assert trigger(1, [(1, None, True)]) == []
+    assert trigger(2, [(2, "b", False)]) == [(2, "b")]
+
+
+def test_merge_uncommitted_generation_is_ignored(spark, tmp_path):
+    """A write killed before its commit leaves ``batch_id=N`` with data
+    files and ``_temporary`` but no ``_SUCCESS``: readers and the replay
+    of N resume from the last committed generation."""
+    state = str(tmp_path / "state")
+    trigger = _merge_trigger(spark, state)
+    assert trigger(0, [(1, "a", False)]) == [(1, "a")]
+
+    torn = os.path.join(state, "batch_id=1")
+    spark.createDataFrame([(9, "zombie", None)], "k long, v string, del boolean").select(
+        "k", "v"
+    ).write.parquet(torn)
+    os.remove(os.path.join(torn, "_SUCCESS"))
+    os.makedirs(os.path.join(torn, "_temporary", "0"))
+    from renkodf_spark.streaming.merge_stream import read_current_state
+
+    current = read_current_state(spark, state).select("k", "v").collect()
+    assert sorted(map(tuple, current)) == [(1, "a")]
+    assert trigger(1, [(2, "b", False)]) == [(1, "a"), (2, "b")]
+
+
 def test_scd2_stream_matches_batch_incl_late_rows(spark, tmp_path):
     """Streaming SCD2 maintenance: after N triggers (including a LATE
     changelog row that rewrites a key's history), the latest dim
