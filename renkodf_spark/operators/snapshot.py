@@ -110,11 +110,11 @@ def merge_into(
     PRECONDITION: ``source`` must be unique on ``keys`` — a duplicate
     source key fans out every matched target row through the full-outer
     join (same caveat as ``snapshot_diff``, and the same rule as SQL
-    MERGE, which raises on multiple matches). Streaming callers get
-    this for free: ``streaming/merge_stream.merge_writer`` collapses
-    intra-batch duplicates deterministically (last-by-``__seq``, else
-    by row digest) before calling in; batch callers with a raw change
-    log should apply the same collapse first.
+    MERGE, which raises on multiple matches). Its streaming twin,
+    ``streaming/merge_stream.merge_writer``, applies the same rule per
+    trigger after collapsing intra-batch duplicates deterministically
+    (last-by-``__seq``, else by row digest); batch callers with a raw
+    change log should apply the same collapse first.
     Compose with ``sources/lakehouse.VersionedTable`` to persist the
     result as a new table version, or with ``snapshot_diff`` to emit
     the change feed of the same operation.

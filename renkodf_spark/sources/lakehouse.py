@@ -1,23 +1,16 @@
-"""Lakehouse-style table management.
+"""Lakehouse-style table management without a table-format engine.
 
-Two layers:
-
-1. `VersionedTable` — a real, dependency-free snapshot layer over plain
-   parquet: every write lands in a new ``v=N`` directory and readers
-   resolve the latest *committed* version (Spark's ``_SUCCESS`` marker),
-   so concurrent readers never observe a half-written snapshot and old
-   versions remain queryable (time travel). This is the subset of
-   Delta/Iceberg semantics a single-writer pipeline needs — checkpoint
-   outputs, reproducible training-data snapshots — implemented with the
-   Hadoop FileSystem API, so it works unchanged on HDFS/S3A paths on a
-   real cluster. Explicit non-goals (use a real table format for these):
-   multi-writer commit arbitration, row-level deletes, schema evolution
-   tracking.
-
-2. Import-gated Delta / Iceberg / Hudi readers: their jars are not on
-   this image's classpath (per the environment contract), so these
-   delegate to the real readers when available and fail with a precise,
-   actionable error instead of an opaque ClassNotFoundException mid-job.
+`VersionedTable` is a dependency-free snapshot layer over plain
+parquet: every write lands in a new ``v=N`` directory and readers
+resolve the latest *committed* version (Spark's ``_SUCCESS`` marker),
+so concurrent readers never observe a half-written snapshot and old
+versions remain queryable (time travel). This is the subset of
+Delta/Iceberg semantics a single-writer pipeline needs — checkpoint
+outputs, reproducible training-data snapshots — implemented with the
+Hadoop FileSystem API (:func:`hadoop_fs`), so it works unchanged on
+HDFS/S3A paths on a real cluster. Explicit non-goals (use a real table
+format for these): multi-writer commit arbitration, row-level deletes,
+schema evolution tracking.
 """
 
 from __future__ import annotations
@@ -156,40 +149,3 @@ class VersionedTable:
             fs.delete(Path(self._version_path(v)), True)
         return sorted(doomed)
 
-
-def _format_available(spark: SparkSession, fmt: str, probe_class: str) -> bool:
-    try:
-        spark._jvm.java.lang.Class.forName(probe_class)  # type: ignore[union-attr]
-        return True
-    except Exception:
-        return False
-
-
-def read_delta(spark: SparkSession, path: str) -> DataFrame:
-    if not _format_available(spark, "delta", "org.apache.spark.sql.delta.DeltaLog"):
-        raise ImportError(
-            "Delta Lake jars are not on the classpath. Add "
-            "io.delta:delta-spark_2.13 and the DeltaCatalog confs, then "
-            "spark.read.format('delta').load(path) — this helper will pick it up."
-        )
-    return spark.read.format("delta").load(path)
-
-
-def read_iceberg(spark: SparkSession, table: str) -> DataFrame:
-    if not _format_available(spark, "iceberg", "org.apache.iceberg.spark.SparkCatalog"):
-        raise ImportError(
-            "Iceberg runtime is not on the classpath. Add "
-            "org.apache.iceberg:iceberg-spark-runtime and a catalog conf; "
-            "then spark.table('catalog.db.table')."
-        )
-    return spark.table(table)
-
-
-def read_hudi(spark: SparkSession, path: str) -> DataFrame:
-    if not _format_available(spark, "hudi", "org.apache.hudi.DefaultSource"):
-        raise ImportError(
-            "Hudi bundle is not on the classpath. Add "
-            "org.apache.hudi:hudi-spark-bundle, then "
-            "spark.read.format('hudi').load(path)."
-        )
-    return spark.read.format("hudi").load(path)

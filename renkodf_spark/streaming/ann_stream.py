@@ -375,7 +375,9 @@ def knn_centrality_writer(
             .partitionBy("cell")
             .parquet(posixpath.join(state_path, "ranks"))
         )
-        gens.write_gen(spark.createDataFrame([(int(n_seed),)], "n_seed long"), meta_dir, batch_id)
+        gens.write_snapshot(
+            spark.createDataFrame([(int(n_seed),)], "n_seed long"), meta_dir, batch_id
+        )
 
     return write_batch
 

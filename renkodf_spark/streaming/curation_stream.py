@@ -210,8 +210,7 @@ def quota_select_writer(
             id_col=id_col,
             salt=salt,
         )
-        gens.write_gen(sel, selection_path, batch_id)
-        gens.prune_before(spark, selection_path, batch_id)
+        gens.write_snapshot(sel, selection_path, batch_id)
 
     return write_batch
 
@@ -309,7 +308,7 @@ def bloom_dedup_writer(
             .groupBy("word_idx")
             .agg(F.bit_or("bits").alias("bits"))
         )
-        gens.write_gen(new_sketch, sketch_path, batch_id)
+        gens.write_snapshot(new_sketch, sketch_path, batch_id)
 
     return write_batch
 
@@ -350,7 +349,7 @@ def sketch_rollup_writer(
             .groupBy("__grp")
             .agg(F.hll_union_agg("sketch").alias("sketch"))
         )
-        gens.write_gen(
+        gens.write_snapshot(
             merged.withColumn("estimate", F.hll_sketch_estimate("sketch")),
             sketch_path,
             batch_id,
@@ -394,7 +393,7 @@ def cms_rollup_writer(
             cur if prior is None
             else countmin.cms_merge(prior.select("row", "col", "count"), cur)
         )
-        gens.write_gen(merged, sketch_path, batch_id)
+        gens.write_snapshot(merged, sketch_path, batch_id)
 
     return write_batch
 
@@ -462,7 +461,7 @@ def dhash_dedup_writer(
                 F.min("status").alias("status"),
             )
         )
-        gens.write_gen(merged, state_path, batch_id)
+        gens.write_snapshot(merged, state_path, batch_id)
         # admitted: the batch's elected keeper of each hash unseen by
         # the PRIOR snapshot (null-safe on the hash so undecodables
         # admit their first occurrence too)
@@ -593,7 +592,7 @@ def nb_model_writer(
                 F.sum("cnt_neg").cast("long").alias("cnt_neg"),
             )
         )
-        gens.write_gen(merged, model_path, batch_id)
+        gens.write_snapshot(merged, model_path, batch_id)
 
     return write_batch_bucketed if n_buckets is not None else write_batch
 

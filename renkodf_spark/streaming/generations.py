@@ -1,6 +1,7 @@
 """The ``batch_id=N`` generation store behind every ``foreachBatch``
 state writer of this package (the curation, merge, near-dup and ANN
-stream modules).
+stream modules), the bucketed key-state layout of ``merge_stream``
+included: its generations are ``batch_id=N/kb=B`` partitioned writes.
 
 Protocol:
 
@@ -28,13 +29,16 @@ Protocol:
   and reads as 0 rows). Every other error, such as a corrupt footer,
   propagates: the trigger fails and Structured Streaming retries it,
   instead of resuming from empty state.
-* :func:`compact_index_generations` bounds a delta store at
-  ``compact_every + 1`` generations, :func:`prune_before` a snapshot
-  store at two. A writer compacts first, before it reads or writes
-  anything (a lazy read planned before the fold would list files the
-  fold deletes), so a fold that cannot read its sources fails the
-  trigger with nothing landed. It prunes last, after its own snapshot
-  landed.
+* Retention. :func:`compact_index_generations` bounds a delta store
+  at ``compact_every + 1`` generations. Every snapshot store is written
+  through :func:`write_snapshot`, the one retention rule for it: write,
+  then keep only the new generation and the one :func:`read_latest`
+  picks for a replay of it, so the store holds two. A writer compacts
+  first, before it reads or writes anything (a lazy read planned
+  before the fold would list files the fold deletes), so a fold that
+  cannot read its sources fails the trigger with nothing landed. A
+  bucketed key-state store is bounded by its manifests instead
+  (``merge_stream.vacuum_state_generations``).
 
 Listing, rename and delete go through one Hadoop FileSystem handle
 (``sources.lakehouse.hadoop_fs``); no data is read for them.
@@ -94,14 +98,19 @@ def read_latest(spark, path: str, before: int | None = None, schema=None):
     A generation is committed when its directory holds the committer's
     ``_SUCCESS``: :func:`write_gen` writes straight into it, so a killed
     write leaves ``_temporary`` and no marker, and is passed over."""
+    g = _latest_committed(spark, path, before)
+    snap = None if g is None else read_gen(spark, path, g)
+    return _empty(spark, schema) if snap is None else snap
+
+
+def _latest_committed(spark, path: str, before: int | None) -> int | None:
     fs, Path = hadoop_fs(spark, path)
     for g in reversed(list_gens(spark, path)):
         if (before is None or g < before) and fs.exists(
             Path(posixpath.join(_gen_path(path, g), "_SUCCESS"))
         ):
-            snap = read_gen(spark, path, g)
-            return _empty(spark, schema) if snap is None else snap
-    return _empty(spark, schema)
+            return g
+    return None
 
 
 def fold(store: DataFrame, keys: list[str], sums: list[str]) -> DataFrame:
@@ -214,10 +223,12 @@ def compact_index_generations(
     delete_gens(spark, dir_path, [g for g in folded if g != gen_id])
 
 
-def prune_before(spark, path: str, batch_id: int) -> None:
-    """Delete every snapshot generation but ``batch_id``'s and the latest
-    one before it, which a replay of ``batch_id`` still reads. A replay
-    of an older batch cannot happen once this one's commit lands."""
-    ids = list_gens(spark, path)
-    keep = {batch_id, *[g for g in ids if g < batch_id][-1:]}
-    delete_gens(spark, path, [g for g in ids if g not in keep])
+def write_snapshot(df: DataFrame, path: str, batch_id: int) -> None:
+    """Write snapshot generation ``batch_id``, then delete every other
+    generation but the one a replay of ``batch_id`` reads (the latest
+    committed one before it). A replay of an older batch cannot happen
+    once this one's commit lands."""
+    write_gen(df, path, batch_id)
+    spark = df.sparkSession
+    keep = {batch_id, _latest_committed(spark, path, batch_id)}
+    delete_gens(spark, path, [g for g in list_gens(spark, path) if g not in keep])

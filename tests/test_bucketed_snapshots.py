@@ -81,8 +81,8 @@ def test_bucketed_trigger_rewrites_only_affected_buckets(spark, tmp_path):
     spread = [(k, f"v{k}", k, False) for k in range(1, 17)]  # many buckets
     _run_stream(spark, tmp_path / "r", writer, [spread, [(1, "v1b", 100, False)]])
 
-    gen1 = [d for d in os.listdir(os.path.join(state, "gen=1")) if d.startswith("kb=")]
-    gen0 = [d for d in os.listdir(os.path.join(state, "gen=0")) if d.startswith("kb=")]
+    gen1 = [d for d in os.listdir(os.path.join(state, "batch_id=1")) if d.startswith("kb=")]
+    gen0 = [d for d in os.listdir(os.path.join(state, "batch_id=0")) if d.startswith("kb=")]
     assert len(gen1) == 1  # exactly the one touched bucket
     assert len(gen0) > 1
 
@@ -217,7 +217,7 @@ def test_vacuum_bounds_generations_on_hot_bucket(spark, tmp_path):
         writer(df([(hot_k, f"h{i}", False)]), i)
 
     gens = sorted(
-        int(d.split("=")[1]) for d in os.listdir(state) if d.startswith("gen=")
+        int(d.split("=")[1]) for d in os.listdir(state) if d.startswith("batch_id=")
     )
     # referenced: cold bucket -> gen 0, hot bucket -> gens {5,6,7} via
     # the last keep_last=3 manifests; gens 1-4 are superseded and gone
@@ -257,14 +257,14 @@ def test_vacuum_disabled_keeps_all_generations(spark, tmp_path):
 
     for i in range(6):
         writer(df([(1, f"v{i}", False)]), i)
-    gens = [d for d in os.listdir(state) if d.startswith("gen=")]
+    gens = [d for d in os.listdir(state) if d.startswith("batch_id=")]
     assert len(gens) == 6
 
 
 def test_bucketed_merge_killed_before_manifest_replays_identically(
     spark, tmp_path, monkeypatch
 ):
-    """A trigger killed between its ``gen=N`` data write and its
+    """A trigger killed between its ``batch_id=N`` data write and its
     ``_manifest`` publish: the replay of N gives the state of an
     uninterrupted run, and every generation the replay reads survived
     the kill (vacuum runs only after a publish)."""
@@ -283,7 +283,7 @@ def test_bucketed_merge_killed_before_manifest_replays_identically(
         return sorted(map(tuple, read_current_state(spark, path).select("k", "v").collect()))
 
     def gen_dirs(path):
-        return sorted(d for d in os.listdir(path) if d.startswith("gen="))
+        return sorted(d for d in os.listdir(path) if d.startswith("batch_id="))
 
     clean, killed = str(tmp_path / "clean"), str(tmp_path / "killed")
     for path in (clean, killed):
@@ -305,11 +305,11 @@ def test_bucketed_merge_killed_before_manifest_replays_identically(
     with pytest.raises(RuntimeError, match="killed"):
         w(df(BATCHES[2]), 2)
     assert kills == [2]
-    assert "gen=2" in gen_dirs(killed)  # the data write landed
+    assert "batch_id=2" in gen_dirs(killed)  # the data write landed
     assert not os.path.exists(os.path.join(killed, "_manifest", "batch_id=2"))
     # what the replay reads: manifest 1 and every generation it names
     man1 = spark.read.parquet(os.path.join(killed, "_manifest", "batch_id=1")).collect()
-    assert man1 and all(f"gen={r['gen']}" in gen_dirs(killed) for r in man1)
+    assert man1 and all(f"batch_id={r['gen']}" in gen_dirs(killed) for r in man1)
 
     w(df(BATCHES[2]), 2)  # the replay
     assert state_of(killed) == state_of(clean) == [(1, "a2"), (4, "d2")]

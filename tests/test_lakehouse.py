@@ -4,7 +4,7 @@ orphan (uncommitted) snapshot skipping, and vacuum retention."""
 import pytest
 from pyspark.sql import functions as F
 
-from renkodf_spark.sources.lakehouse import VersionedTable, read_delta
+from renkodf_spark.sources.lakehouse import VersionedTable
 
 
 def test_versioned_write_read_time_travel(spark, tmp_path):
@@ -94,11 +94,6 @@ def test_vacuum_removes_old_orphans_keeps_fresh(spark, tmp_path):
     # version allocation no longer sees the vacuumed orphan but still
     # skips past the fresh one
     assert t.write(spark.range(1)) == 10
-
-
-def test_delta_gate_raises_actionable(spark):
-    with pytest.raises(ImportError, match="delta-spark"):
-        read_delta(spark, "/tmp/nonexistent")
 
 
 def test_vacuum_reclaims_orphans_with_no_committed_versions(spark, tmp_path):

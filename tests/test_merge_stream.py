@@ -106,6 +106,54 @@ def test_merge_uncommitted_generation_is_ignored(spark, tmp_path):
     assert trigger(1, [(2, "b", False)]) == [(1, "a"), (2, "b")]
 
 
+@pytest.mark.parametrize("n_key_buckets", [None, 2])
+@pytest.mark.parametrize("kind", ["merge", "scd2", "funnel"])
+def test_null_key_stream_equals_batch(spark, tmp_path, kind, n_key_buckets):
+    """A NULL key is one key, as in ``merge_into``: two triggers that
+    both carry it leave the state of the batch twin over the
+    concatenated input, in both layouts."""
+    from renkodf_spark.operators.funnel import funnel_steps
+    from renkodf_spark.operators.scd import scd2_from_changelog
+    from renkodf_spark.streaming import merge_stream as ms
+
+    path = str(tmp_path / "state")
+    schema = "k long, ts long, v string"
+    if kind == "merge":
+        schema = "k long, v string, del boolean"
+        triggers = [[(None, "a", False), (1, "x", False)], [(None, "b", False)]]
+        writer = ms.merge_writer(path, keys=["k"], delete_col="del", n_key_buckets=n_key_buckets)
+        state_dir = path
+
+        def twin(_):
+            return spark.createDataFrame([(1, "x"), (None, "b")], "k long, v string")
+    elif kind == "scd2":
+        triggers = [[(None, 1, "a"), (1, 1, "x")], [(None, 2, "b")]]
+        writer = ms.scd2_writer(
+            path, key_cols=["k"], ts_col="ts", attr_cols=["v"], n_key_buckets=n_key_buckets
+        )
+        state_dir = path + "/dim"
+
+        def twin(log):
+            return scd2_from_changelog(log, key_cols=["k"], ts_col="ts", attr_cols=["v"])
+    else:
+        triggers = [[(None, 1, "a"), (1, 1, "a")], [(None, 2, "b")]]
+        funnel = dict(user_col="k", ts_col="ts", type_col="v", steps=["a", "b"])
+        writer = ms.funnel_writer(path, n_key_buckets=n_key_buckets, **funnel)
+        state_dir = path + "/state"
+
+        def twin(log):
+            return funnel_steps(log, **funnel)
+
+    frames = [spark.createDataFrame(rows, schema) for rows in triggers]
+    for batch_id, frame in enumerate(frames):
+        writer(frame, batch_id)
+    want = twin(frames[0].unionByName(frames[1]))
+    got = ms.read_current_state(spark, state_dir).select(*want.columns)
+    assert sorted(map(tuple, got.collect()), key=repr) == sorted(
+        map(tuple, want.collect()), key=repr
+    )
+
+
 def test_scd2_stream_matches_batch_incl_late_rows(spark, tmp_path):
     """Streaming SCD2 maintenance: after N triggers (including a LATE
     changelog row that rewrites a key's history), the latest dim

@@ -47,15 +47,3 @@ def test_renko_on_rate_source(spark, tmp_path):
     ).toPandas()
     assert set(bars["direction"]).issubset({1, -1})
 
-
-def test_lakehouse_stubs_error_clearly(spark):
-    import pytest
-
-    from renkodf_spark.sources.lakehouse import read_delta, read_hudi, read_iceberg
-
-    with pytest.raises(ImportError, match="Delta"):
-        read_delta(spark, "/tmp/nope")
-    with pytest.raises(ImportError, match="Iceberg"):
-        read_iceberg(spark, "cat.db.t")
-    with pytest.raises(ImportError, match="Hudi"):
-        read_hudi(spark, "/tmp/nope")
