@@ -4,11 +4,12 @@ runs the kernel in.
 Spark-first layout (SURVEY.md §1.4 / §2 O-5): the brick-ification
 recurrence is non-associative (every brick depends on the running
 `last_close` over the whole prefix), so it cannot be a join/window
-composition. It runs as a grouped-map Arrow UDF — parallel across
-symbols, sequential within a symbol, exactly the reference's
-parallelism model (the reference is single-threaded per instrument).
-Everything around the kernel (projection, export, slicing) is plain
-DataFrame API so Catalyst prunes/pushes as usual.
+composition. `renko()` runs it in a partition-level Arrow UDF
+(`repartition(symbol).mapInArrow`): parallel across symbols,
+sequential within a symbol, exactly the reference's parallelism model
+(the reference is single-threaded per instrument). Everything around
+the kernel (projection, export, slicing) is plain DataFrame API so
+Catalyst prunes/pushes as usual.
 
 The host (shared by `renko`, `renko_chunked` and its sub-chunk passes;
 the stream operators `renko_stream` and `renko_stream_animate` use its
@@ -18,7 +19,8 @@ guard and `scan_group`):
   ``(symbol, __time, __price)`` projection and the null/NaN filter;
   `slim_ticks` adds the batch hosts' ``__seq``.
 - `sorted_ticks`: one group's ticks in the canonical stable
-  ``(__time, __seq)`` order.
+  ``(__time, __seq)`` order; `partition_bricks`, renko()'s body, sorts
+  a whole shuffle partition by symbol first, then scans each symbol.
 - `scan_group`: seed or resume, `kernel.scan`, first-brick label drop;
   returns the surviving brick columns and the next carry.
 - `bricks_table` / `carry_table` / `read_carry`: Arrow output in any
@@ -52,6 +54,7 @@ from collections import namedtuple
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -156,16 +159,20 @@ def renko(
 ) -> DataFrame:
     """Compress a tick DataFrame into the wide Renko brick table.
 
-    Scale model: one shuffle on `symbol`, then each symbol's ticks are
-    compressed sequentially inside a single Arrow-batched Python worker
-    call. At 100 TB the parallel axis is symbols (x days via the
-    warm-start splitter); there is no other shuffle in the plan.
+    Scale model: one shuffle on `symbol` and no sort; one Python worker
+    call then takes a whole shuffle partition (`partition_bricks`),
+    orders it and compresses each symbol's ticks sequentially. That
+    worker holds the partition's ticks, about 32 B a tick plus the
+    symbol, so a partition must fit one worker's memory; for inputs
+    bigger than that, `renko_chunked` cuts each symbol into event-time
+    windows. At 100 TB the parallel axis is symbols (x days via the
+    chunked path); there is no other shuffle in the plan.
 
     Column pruning happens on both sides of the kernel: only
     (symbol, time, price) travel in, and `value_columns` trims what
-    travels out (Catalyst cannot prune through a grouped-map UDF's
-    output schema, so callers that want one mode pass just its columns
-    — `renko_mode` does this automatically)."""
+    travels out (Catalyst cannot prune through a Python UDF's output
+    schema, so callers that want one mode pass just its columns —
+    `renko_mode` does this automatically)."""
     slim = slim_ticks(ticks, brick_size, symbol_col, time_col, price_col)
     out_schema = WIDE_SCHEMA
     if value_columns is not None:
@@ -175,17 +182,39 @@ def renko(
         keep = {"symbol", "brick_seq", "event_time", *value_columns}
         out_schema = T.StructType([f for f in WIDE_SCHEMA.fields if f.name in keep])
 
-    # Arrow-native kernel host (r8): applyInArrow hands the group in as
-    # a pa.Table (primitive columns view as numpy zero-copy) and takes
-    # arrays back zero-copy — measured 5x end-to-end over the old
-    # applyInPandas body on a 10M-tick group at ~0.15 bricks/tick.
-    def run_arrow(tbl: pa.Table) -> pa.Table:
-        times, prices = sorted_ticks(tbl)
-        bricks, _ = scan_group(times, prices, brick_size, drop_first)
-        sym = tbl.column("symbol")[0].as_py()
-        return bricks_table(out_schema, sym, bricks, tbl.schema.field("__time").type)
+    def run(batches):
+        return partition_bricks(batches, out_schema, brick_size, drop_first)
 
-    return slim.groupBy("symbol").applyInArrow(run_arrow, out_schema)
+    return slim.repartition("symbol").mapInArrow(run, out_schema)
+
+
+def partition_bricks(batches, schema: T.StructType, brick: float, drop_first: bool):
+    """renko()'s host body: the bricks of every symbol in one shuffle
+    partition of `slim_ticks` rows, as ``schema`` record batches.
+
+    The shuffle only co-locates a symbol's ticks; the body orders them
+    itself with one lexsort on (symbol code, ``__time``, ``__seq``), so
+    the plan has no Sort, and the order does not depend on the order in
+    which batches arrive. Each symbol's slice then runs `scan_group`."""
+    batches = [b for b in batches if b.num_rows]
+    if not batches:
+        return
+    tbl = pa.Table.from_batches(batches)
+    # a NULL symbol is its own group, as under groupBy; the chunks of
+    # a chunked encoding share one dictionary
+    enc = pc.dictionary_encode(tbl.column("symbol"), null_encoding="encode")
+    codes = np.concatenate([chunk.indices.to_numpy() for chunk in enc.chunks])
+    times = tbl.column("__time").to_numpy()
+    order = np.lexsort((tbl.column("__seq").to_numpy(), times.view("int64"), codes))
+    codes, times = codes[order], times[order]
+    prices = tbl.column("__price").to_numpy()[order]
+    symbols = enc.chunks[0].dictionary
+    ts_type = tbl.schema.field("__time").type
+    cuts = np.flatnonzero(np.diff(codes)) + 1
+    for lo, hi in zip((0, *cuts), (*cuts, len(codes))):
+        bricks, _ = scan_group(times[lo:hi], prices[lo:hi], brick, drop_first)
+        sym = symbols[codes[lo]].as_py()
+        yield from bricks_table(schema, sym, bricks, ts_type).to_batches()
 
 
 def slim_ticks(
@@ -336,7 +365,7 @@ def timed(fn, acc):
 def padded_table(schema: T.StructType, ts_type, m: int, cols: dict) -> pa.Table:
     """An ``m``-row ``schema``-shaped table: ``cols`` maps column names
     to numpy arrays or to constants; every other column (and a None) is
-    typed nulls. applyInArrow validates types strictly, and timestamps
+    typed nulls. Arrow UDFs validate types strictly, and timestamps
     must carry the session timezone of ``ts_type``."""
     arrays = []
     for f in schema.fields:
@@ -399,8 +428,8 @@ def renko_mode(
     **renko_kwargs,
 ) -> DataFrame:
     """End-to-end single-mode Renko with pushdown: only the mode's
-    variant columns cross the kernel's Arrow boundary (a grouped-map
-    UDF's output schema is opaque to Catalyst's column pruning, so the
+    variant columns cross the kernel's Arrow boundary (a Python UDF's
+    output schema is opaque to Catalyst's column pruning, so the
     pruning is explicit here)."""
     if mode not in MODES:
         raise ValueError(f"Only {list(MODES)} options are valid.")

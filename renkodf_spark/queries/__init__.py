@@ -32,10 +32,10 @@ from renkodf_spark.queries import pipeline11  # noqa: F401
 
 # Rotation rule: first the queries whose builders reach code the latest
 # change touched, then the renko_* product surface. The latest change
-# touched the foreachBatch state writers, the generation store and the
-# lakehouse reader stubs (and only the docstring of merge_into); no
-# query builder reaches any of them, so the list is the renko_* surface
-# alone, the sub-chunk splice first.
+# touched renko()'s host, which every renko_* builder reaches, the
+# Arrow batch bound of `build_session` (the driver passes its own
+# session) and the kNN stream writers, which no builder reaches; so the
+# list is the renko_* surface alone, the sub-chunk splice first.
 _PRIORITY = [
     "renko_subchunked_wide",
     "renko_chunked_wide",

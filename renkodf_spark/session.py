@@ -10,8 +10,15 @@ encodes the settings we tune for:
   symbol/bucket cases without manual salting in the common path.
 - shuffle partitions ~ cores locally (the 200 default over-parallelizes
   small local runs; on a real cluster size it to 2-3x total cores).
-- Arrow batch size bounded: grouped-map kernels stream symbol histories
-  through fixed-size Arrow batches instead of one giant allocation.
+- Arrow batches bounded by rows only (`ARROW_BATCH_BYTES`, always set,
+  no option): ``maxRecordsPerBatch`` caps every JVM->Python Arrow batch
+  at 65,536 rows, and ``maxBytesPerBatch`` is 2147483647, the one value
+  at which Spark 4.1 skips its byte probe.  Under any other value the
+  batch writers (``BatchedPythonArrowInput.writeSizedBatch``, and the
+  stateful ``BaseStreamingArrowWriter.isBatchSizeLimitReached``) call
+  ``ArrowWriter.sizeInBytes`` once per row; on a 1 M-tick Renko job
+  that probe held 23 of 29 ``jstack`` samples of the executor task
+  threads (4 cores).  Batches bounded by rows are how Spark 3.x behaved.
 - Python workers forked from `renkodf_spark.worker_daemon`
   (``spark.python.daemon.module``, always set, no option): pyspark's
   worker calls ``importlib.invalidate_caches()`` on every task, and
@@ -34,6 +41,8 @@ from renkodf_spark import worker_daemon
 
 # every session's Python worker daemon; conf key and module in one place
 WORKER_DAEMON = ("spark.python.daemon.module", worker_daemon.__name__)
+# every session's Arrow batch byte bound: none, so rows alone bound a batch
+ARROW_BATCH_BYTES = ("spark.sql.execution.arrow.maxBytesPerBatch", str(2**31 - 1))
 
 
 def build_session(
@@ -68,6 +77,7 @@ def build_session(
         .config("spark.driver.memory", driver_memory)
         .config("spark.ui.enabled", "false")
         .config(*WORKER_DAEMON)
+        .config(*ARROW_BATCH_BYTES)
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)

@@ -345,8 +345,12 @@ def knn_centrality_writer(
             scope = ids  # |S| changed (or first trigger): full refixpoint
         scope = scope.select("id", "cell")
 
+        # no edge yet: an empty store typed like the vectors' cell
+        cell_type = ids.schema["cell"].dataType.simpleString()
         edges = gens.read_store(
-            spark, posixpath.join(state_path, "edges"), schema="src long, dst long, cell int"
+            spark,
+            posixpath.join(state_path, "edges"),
+            schema=f"src long, dst long, cell {cell_type}",
         ).select("src", "dst", "cell")
         scope_cells = scope.select("cell").distinct()
         edges = edges.join(F.broadcast(scope_cells), "cell").select("src", "dst")
@@ -443,11 +447,13 @@ def knn_communities_writer(
             .filter(F.col("cell").isin(affected))
             .select("id", "cell")
         )
+        # no edge yet: an empty store typed like the vectors' cell
+        cell_type = nodes.schema["cell"].dataType.simpleString()
         g = (
             gens.read_store(
                 spark,
                 posixpath.join(state_path, "edges"),
-                schema="src long, dst long, cos_sim double, cell int",
+                schema=f"src long, dst long, cos_sim double, cell {cell_type}",
             )
             .filter(F.col("cell").isin(affected))
             .select("src", "dst", "cos_sim")

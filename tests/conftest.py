@@ -32,7 +32,7 @@ def write_source(src, name, data, columns=None, mtime=None):
 def spark():
     from pyspark.sql import SparkSession
 
-    from renkodf_spark.session import WORKER_DAEMON
+    from renkodf_spark.session import ARROW_BATCH_BYTES, WORKER_DAEMON
 
     s = (
         SparkSession.builder.master("local[4]")
@@ -44,6 +44,7 @@ def spark():
         .config("spark.driver.memory", "4g")
         .config("spark.sql.warehouse.dir", "/tmp/renkodf-spark-test-warehouse")
         .config(*WORKER_DAEMON)
+        .config(*ARROW_BATCH_BYTES)
         .getOrCreate()
     )
     yield s

@@ -1060,3 +1060,45 @@ def test_knn_communities_stream_matches_batch(spark, tmp_path):
     assert {tuple(r) for r in read_knn_communities(spark, state).collect()} == want
     writer(spark.createDataFrame([], schema), 3)  # empty trigger
     assert {tuple(r) for r in read_knn_communities(spark, state).collect()} == want
+
+
+@pytest.mark.parametrize("name", ["centrality", "communities"])
+def test_knn_writers_string_cells_before_any_edge(spark, tmp_path, name):
+    """Centroids labelled by strings give string cells. A first trigger
+    that leaves one vector in each cell writes no edge, and the next
+    trigger must read that empty edge store with the vector store's
+    string ``cell``, not fail casting a label to a number; the state
+    then equals the batch operator on both triggers' vectors."""
+    from renkodf_spark.operators import graph, similarity
+    from renkodf_spark.streaming import ann_stream
+
+    lvecs = [(i, [float((i * 7 + j * 3) % 11) for j in range(4)], "ab"[i % 2]) for i in range(8)]
+    schema = "vec_id long, embedding array<double>"
+    cents = similarity.embedding_centroids(
+        spark.createDataFrame(lvecs, schema + ", label string"), dim=4
+    )
+    vecs = [(i, v) for i, v, _ in lvecs]
+    state = str(tmp_path / name)
+    if name == "centrality":
+        writer = ann_stream.knn_centrality_writer(cents, state, k=2, iterations=1)
+        read = ann_stream.read_knn_centrality
+    else:
+        writer = ann_stream.knn_communities_writer(cents, state, k=2, iterations=1)
+        read = ann_stream.read_knn_communities
+    writer(spark.createDataFrame(vecs[:2], schema), 0)
+    edges = os.path.join(state, "edges")  # one vector in each cell: no edge yet
+    assert not os.path.isdir(edges) or not [d for d in os.listdir(edges) if d.startswith("cell=")]
+    writer(spark.createDataFrame(vecs[2:], schema), 1)
+
+    all_df = spark.createDataFrame(vecs, schema)
+    g = similarity.knn_graph(all_df, cents, k=2)
+    nodes = all_df.selectExpr("vec_id as id")
+    if name == "centrality":
+        want = graph.pagerank(g.select("src", "dst"), nodes, iterations=1)
+    else:
+        pairs = similarity.mutual_knn_edges(g)
+        und = pairs.selectExpr("id_a as src", "id_b as dst").unionByName(
+            pairs.selectExpr("id_b as src", "id_a as dst")
+        )
+        want = graph.label_propagation(und, nodes, iterations=1)
+    assert {tuple(r) for r in read(spark, state).collect()} == {tuple(r) for r in want.collect()}

@@ -49,8 +49,36 @@ def test_renko_mode_projection_prunes_variants(spark, sf_dir):
     bars = renko_df(renko(ticks_from_events(spark, sf_dir), 5.0), "wicks", utils_columns=False)
     opt = _optimized(bars)
     # the projection above the kernel keeps only the wicks columns
-    head = re.split(r"FlatMapGroupsIn(?:Pandas|Arrow)", opt)[0]
+    head = opt.split("MapInArrow")[0]
     assert "fake_high" not in head and "reverse_low" not in head
+
+
+def test_renko_plan_is_one_exchange_and_one_map(spark, sf_dir):
+    """renko(): one hash exchange on symbol feeding one partition-level
+    MapInArrow; no Sort and no grouped-map node (the host sorts)."""
+    from renkodf_spark.operators.renko import renko
+    from renkodf_spark.sources.tables import ticks_from_events
+
+    plan = _executed(renko(ticks_from_events(spark, sf_dir), 5.0))
+    assert plan.count("Exchange") == 1 and "Exchange hashpartitioning(symbol#" in plan
+    assert plan.count("MapInArrow") == 1
+    assert "Sort" not in plan and "FlatMapGroupsInArrow" not in plan
+
+
+def test_sessions_bound_arrow_batches_by_rows(spark, monkeypatch):
+    """`build_session` and the test session set the same Arrow batch
+    byte bound, the one value at which Spark skips its per-row size
+    probe."""
+    from pyspark.sql import SparkSession
+
+    from renkodf_spark.session import ARROW_BATCH_BYTES, build_session
+
+    key, value = ARROW_BATCH_BYTES
+    assert value == "2147483647"
+    # the test session's launch conf holds the fixture's own settings
+    assert spark.sparkContext.getConf().get(key) == value
+    monkeypatch.setattr(SparkSession.Builder, "getOrCreate", lambda self: dict(self._options))
+    assert build_session()[key] == value
 
 
 def test_renko_scan_prunes_tick_columns(spark, sf_dir):

@@ -8,6 +8,7 @@ import os
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 
 from renkodf_spark.operators.renko import (
@@ -16,8 +17,10 @@ from renkodf_spark.operators.renko import (
     PACKED_SCHEMA,
     Carry,
     carry_table,
+    partition_bricks,
     read_carry,
     renko,
+    renko_pandas,
     scan_group,
 )
 from renkodf_spark.operators.renko_chunked import renko_chunked
@@ -149,3 +152,133 @@ def test_chunked_reliable_session_conf(spark, tmp_path, spark_conf):
         written = [f for _r, _d, fs in os.walk(ckpt) for f in fs]
         assert written, "the session conf did not reach the window checkpoints"
         _frames_equal(base, rel)
+
+
+# -- renko()'s partition-level host: every case equals renko_pandas per
+# symbol, bit for bit, with ticks ordered by (time, input order)
+
+
+def _expect_per_symbol(pdf, brick, drop_first=True):
+    """renko_pandas over each symbol's ticks (NULL is a symbol), ticks in
+    ``pdf`` row order within a timestamp: the ``__seq`` tie-break."""
+    out = {}
+    for sym, grp in pdf.groupby("symbol", dropna=False, sort=False):
+        ordered = grp.sort_values("event_time", kind="mergesort")
+        out[None if pd.isna(sym) else sym] = renko_pandas(ordered, brick, drop_first=drop_first)
+    return out
+
+
+def _assert_host_matches(wide, pdf, brick, drop_first=True):
+    got = wide if isinstance(wide, pd.DataFrame) else wide.toPandas()
+    want = _expect_per_symbol(pdf, brick, drop_first)
+    assert len(got) == sum(len(bricks) for bricks in want.values())
+    cols = [c for c in got.columns if c not in ("symbol", "brick_seq")]
+    for sym, bricks in want.items():
+        mine = got[got["symbol"].isna() if sym is None else got["symbol"] == sym]
+        mine = mine.sort_values("brick_seq")
+        assert mine["brick_seq"].tolist() == list(range(len(bricks))), sym
+        for col in cols:
+            a, b = mine[col], bricks[col]
+            if col == "event_time":  # Spark hands back naive UTC, Arrow tz-aware
+                a, b = _utc_us(a), _utc_us(b)
+            np.testing.assert_array_equal(a.to_numpy(), b.to_numpy(), err_msg=f"{sym}.{col}")
+
+
+def _utc_us(times):
+    return pd.to_datetime(times, utc=True).dt.tz_localize(None).astype("datetime64[us]")
+
+
+def _walk(symbols, n, seed):
+    """``n[i]`` ticks of ``symbols[i]`` at random whole seconds (equal
+    timestamps happen), random-walk prices; rows shuffled across symbols."""
+    rng = np.random.default_rng(seed)
+    frames = []
+    for i, (sym, m) in enumerate(zip(symbols, n)):
+        frames.append(pd.DataFrame({
+            "symbol": [sym] * m,
+            "event_time": pd.Timestamp("2024-01-01") + pd.to_timedelta(
+                np.sort(rng.integers(0, 10 * m, m)) + i, unit="s"),
+            "close": 100.0 + np.cumsum(rng.normal(0, 0.6, m)),
+        }))
+    pdf = pd.concat(frames, ignore_index=True).sample(frac=1.0, random_state=seed)
+    return pdf.reset_index(drop=True)
+
+
+def test_host_null_symbol_is_its_own_group(spark):
+    pdf = _walk(["a", None, "b"], [700, 900, 500], seed=41)
+    ticks = spark.createDataFrame(pdf, "symbol string, event_time timestamp, close double")
+    _assert_host_matches(renko(ticks, 1.0), pdf, 1.0)
+
+
+def test_host_hot_symbol(spark):
+    names = ["hot"] + [f"s{i}" for i in range(12)]
+    pdf = _walk(names, [30_000] + [200] * 12, seed=42)
+    assert (pdf["symbol"] == "hot").mean() > 0.9
+    _assert_host_matches(renko(spark.createDataFrame(pdf), 0.5), pdf, 0.5)
+
+
+def test_host_fewer_symbols_than_partitions(spark):
+    """Two symbols over the session's 8 shuffle partitions: most of the
+    host's partitions are empty."""
+    assert int(spark.conf.get("spark.sql.shuffle.partitions")) > 2
+    pdf = _walk(["x", "y"], [1500, 1200], seed=43)
+    _assert_host_matches(renko(spark.createDataFrame(pdf), 1.0), pdf, 1.0)
+
+
+def test_host_equal_timestamps_across_files(spark, tmp_path, spark_conf):
+    """Every file holds a tick at each of the same timestamps, and each
+    file is its own scan partition: the order of equal-timestamp ticks
+    is the scan's input order (``__seq``), and it decides the bricks."""
+    times = pd.Timestamp("2024-01-01") + pd.to_timedelta(np.arange(60) * 7, unit="s")
+    for f in range(4):
+        rng = np.random.default_rng(100 + f)
+        tbl = pa.table({
+            "symbol": ["eq"] * 60 + ["other"] * 60,
+            "event_time": pa.array(np.tile(times.to_numpy().astype("datetime64[us]"), 2),
+                                   pa.timestamp("us", tz="UTC")),
+            "close": 100.0 + f * 1.7 + np.cumsum(rng.normal(0, 1.5, 120)),
+        })
+        pq.write_table(tbl, str(tmp_path / f"part-{f}.parquet"))
+    # a file's open cost fills a whole split: one file per partition
+    one_file_each = {
+        "spark.sql.files.maxPartitionBytes": "1m",
+        "spark.sql.files.openCostInBytes": "1m",
+    }
+    with spark_conf(one_file_each, checkpoint_dir=None):
+        ticks = spark.read.parquet(str(tmp_path))
+        assert ticks.rdd.getNumPartitions() == 4
+        # a plain scan collects in input order: the order __seq captures
+        pdf = ticks.toPandas()
+        _assert_host_matches(renko(ticks, 1.0), pdf, 1.0)
+    # the tie-break matters here: reversed ties give other bricks
+    flipped = pdf.iloc[::-1].reset_index(drop=True)
+    want, other = _expect_per_symbol(pdf, 1.0), _expect_per_symbol(flipped, 1.0)
+    assert not want["eq"]["close"].equals(other["eq"]["close"])
+
+
+def test_host_value_columns_keep_all_bricks(spark):
+    pdf = _walk(["p", "q", "r"], [800, 600, 400], seed=44)
+    ticks = spark.createDataFrame(pdf)
+    wide = renko(ticks, 1.0, value_columns=("close", "volume", "fake_high"), drop_first=False)
+    assert wide.columns == ["symbol", "brick_seq", "event_time", "close", "volume", "fake_high"]
+    _assert_host_matches(wide, pdf, 1.0, drop_first=False)
+
+
+def test_partition_bricks_orders_any_arrival():
+    """The host body sorts what it is handed: ticks arriving shuffled
+    and split over batches (equal timestamps included) give the bricks
+    of the ``(__time, __seq)`` order."""
+    from renkodf_spark.schema import WIDE_SCHEMA
+
+    pdf = _walk(["u", "v"], [900, 700], seed=45)
+    pdf["event_time"] = pdf["event_time"].dt.floor("30s")  # many equal timestamps
+    assert pdf.duplicated(["symbol", "event_time"]).sum() > 100
+    slim = pa.table({
+        "symbol": pdf["symbol"],
+        "__time": pa.array(pdf["event_time"].to_numpy().astype("datetime64[us]"), UTC),
+        "__price": pdf["close"],
+        "__seq": np.arange(len(pdf), dtype=np.int64),
+    })
+    shuffled = slim.take(np.random.default_rng(7).permutation(len(pdf)))
+    out = partition_bricks(shuffled.to_batches(max_chunksize=333), WIDE_SCHEMA, 1.0, True)
+    _assert_host_matches(pa.Table.from_batches(list(out)).to_pandas(), pdf, 1.0)

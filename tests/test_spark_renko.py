@@ -1,8 +1,6 @@
 """Spark batch operator: distributed renko() == per-symbol pandas kernel;
 mode projection; to_rws export; multi-symbol parallelism."""
 
-import re
-
 import numpy as np
 import pandas as pd
 
@@ -69,7 +67,7 @@ def test_plan_prunes_unused_variants(spark):
     pdf = _multi_symbol_ticks()
     wide = renko(spark.createDataFrame(pdf), 1.0)
     plan = renko_df(wide, "wicks", utils_columns=False)._jdf.queryExecution().optimizedPlan().toString()
-    assert "fake_high" not in re.split(r"FlatMapGroupsIn(?:Pandas|Arrow)", plan)[0]
+    assert "fake_high" not in plan.split("MapInArrow")[0]
 
 
 def test_renko_mode_pushdown_matches_full_projection(spark):
