@@ -231,22 +231,39 @@ def sample(spark, entries, passes: int = 2, out: dict | None = None) -> dict[str
     outside the timed window (a status-store read takes ~0.7 s at 900
     retained stages), reads the visit's :func:`profile`.
 
+    An entry ``(name, build, action)`` times ``action(build())`` as one
+    visit but runs the two calls under separate job groups, so a
+    builder's eager jobs are not counted as the action's: the profile
+    is the action's, with the builder's own profile and seconds under
+    ``builder``. Under AQE every shuffle stage is a job of its own, so
+    job counts alone cannot tell the two apart.
+
     Per name: ``sec``, the min over the visits, and that visit's
     ``profile``; every visit in ``samples``; the thunk's last return in
     ``value``. Pass ``out`` to add visits to an earlier result."""
     out = {} if out is None else out
     sc = spark.sparkContext
     for _ in range(passes):
-        for name, thunk in entries:
+        for name, *steps in entries:
             rec = out.setdefault(name, {"samples": []})
             group = f"bench-{next(_VISITS)}-{name}"
             spark.catalog.clearCache()
-            sc.setJobGroup(group, name)
             t0 = time.perf_counter()
-            rec["value"] = thunk()
+            if len(steps) == 2:
+                build, action = steps
+                sc.setJobGroup(f"{group}-builder", name)
+                built = build()
+                builder_s = round(time.perf_counter() - t0, 3)
+                sc.setJobGroup(group, name)
+                rec["value"] = action(built)
+            else:
+                sc.setJobGroup(group, name)
+                rec["value"] = steps[0]()
             sec = round(time.perf_counter() - t0, 3)
             sc.setLocalProperty("spark.jobGroup.id", None)  # later jobs: no group
             prof = profile(spark, group)
+            if len(steps) == 2:
+                prof["builder"] = {**profile(spark, f"{group}-builder"), "sec": builder_s}
             rec["samples"].append(sec)
             if sec <= rec.get("sec", sec):
                 rec["sec"], rec["profile"] = sec, prof
@@ -875,16 +892,17 @@ def main(names: list[str]) -> None:
     # one-off whole-stage-codegen JIT.
     built = {}
 
-    def visit(name):
+    def build(name):
         def run():
             built[name] = df = builders[name](spark, SF_DIR)
-            return materialize(df)  # pruning-proof: all columns computed
+            return df
 
         return run
 
-    entries = [(name, visit(name)) for name in names]
+    # materialize: pruning-proof, every output column is computed
+    entries = [(name, build(name), materialize) for name in names]
     res = sample(spark, entries)
-    sample(spark, [(n, t) for n, t in entries if res[n]["sec"] < 1.0], passes=1, out=res)
+    sample(spark, [e for e in entries if res[e[0]]["sec"] < 1.0], passes=1, out=res)
 
     timings: dict[str, float] = {}
     profiles: dict[str, dict] = {}
@@ -893,10 +911,11 @@ def main(names: list[str]) -> None:
         plan = dataclasses.asdict(plan_summary(built[name]))
         del plan["text"]
         profiles[name] = {**rec["profile"], "plan": plan}
-        p = rec["profile"]
+        p, b = rec["profile"], rec["profile"]["builder"]
         print(
             f"# {name}: {rec['sec']}s ({rec['value']} rows, {len(rec['samples'])} visits; "
-            f"{p['jobs']} jobs, {p['stages']} stages, executor cpu {p['jvm_cpu_s']}s)",
+            f"builder {b['sec']}s, {b['jobs']} jobs, {b['stages']} stages; "
+            f"action {p['jobs']} jobs, {p['stages']} stages, executor cpu {p['jvm_cpu_s']}s)",
             file=sys.stderr,
         )
 
@@ -932,12 +951,14 @@ def main(names: list[str]) -> None:
         "queries": timings,
         "sf": final["sf"],
         # the measurement regime, so comparisons across runs cannot mix
-        # methodologies. v8: every timed entry (queries, scale, curve,
-        # centrality split) runs through one sampler and carries a
-        # status-store profile of its min visit; no co-tenancy probes.
-        # v7: this run's samples only. Before v4: not comparable.
+        # methodologies. v9: a query's profile counts the final action's
+        # jobs, with the builder's eager jobs apart under "builder".
+        # v8: every timed entry (queries, scale, curve, centrality
+        # split) runs through one sampler and carries a status-store
+        # profile of its min visit; no co-tenancy probes. v7: this
+        # run's samples only. Before v4: not comparable.
         "methodology": {
-            "version": 8,
+            "version": 9,
             "reps": "2 interleaved passes (3rd visit if best < 1s); scale entries 2 interleaved samples",
             "agg": "min",
             "materialize": "full_width_row_hash",

@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from renkodf_spark.operators.topk import top_k
 from renkodf_spark.plans.persist import persist_block
 
 # --------------------------------------------------------------- dedup apply
@@ -376,8 +377,6 @@ def quota_sample(
     and ranks every row (the small-data shape). Results are identical
     either way, bit-for-bit.
     """
-    key = _sample_key(id_col, salt)
-    w = Window.partitionBy(group_col).orderBy(key, F.col(id_col))
     src = (
         df
         if admit_factor is None
@@ -390,9 +389,9 @@ def quota_sample(
             admit_factor=admit_factor,
         )
     )
-    return (
-        src.withColumn("sample_rank", F.row_number().over(w))
-        .filter(F.col("sample_rank") <= per_group)
+    key = _sample_key(id_col, salt)
+    return top_k(
+        src, per_group, key, id_col, by=(group_col,), ascending=True, rank="sample_rank"
     )
 
 
@@ -1483,13 +1482,8 @@ def weighted_sample(
             .select(*df.columns, "__es_key")
         )
 
-    win = Window.partitionBy(*part).orderBy(
-        F.desc("__es_key"), F.col(id_col).asc()
-    )
-    return (
-        keyed.withColumn("sample_rank", F.row_number().over(win))
-        .filter(F.col("sample_rank") <= k)
-        .drop("__es_key")
+    return top_k(keyed, k, "__es_key", id_col, by=part, rank="sample_rank").drop(
+        "__es_key"
     )
 
 

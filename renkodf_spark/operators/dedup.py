@@ -21,8 +21,10 @@ Design notes (100 TB posture):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from renkodf_spark.operators.topk import top_k
 
 
 def _shingles(text_col: str, n: int):
@@ -169,12 +171,9 @@ def _band_keys(
         # adversarial corpora after consulting lsh_bucket_stats(),
         # accepting bounded near-dup recall loss past the cap in every
         # colliding band (pinned in tests/test_pipeline_ops.py).
-        w = Window.partitionBy("band", "key").orderBy("id")
-        bands = (
-            bands.withColumn("__rk", F.row_number().over(w))
-            .filter(F.col("__rk") <= max_bucket_size)
-            .drop("__rk")
-        )
+        bands = top_k(
+            bands, max_bucket_size, "id", by=("band", "key"), ascending=True, rank="__rk"
+        ).drop("__rk")
     return bands
 
 

@@ -45,6 +45,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from renkodf_spark.operators.topk import top_k
 from renkodf_spark.plans.persist import persist_block
 
 DEFAULT_SCALE = 10**12
@@ -340,8 +341,6 @@ def label_propagation(
     within a cell's subgraph — the same per-cell decomposition the
     streaming centrality maintainer exploits.
     """
-    from pyspark.sql import Window
-
     if iterations < 0:
         raise ValueError(f"iterations must be >= 0, got {iterations}")
     # LAZY localCheckpoint: every iteration references the edge
@@ -363,11 +362,8 @@ def label_propagation(
             .groupBy("__d", "lbl")
             .agg(F.count(F.lit(1)).alias("__cnt"))
         )
-        w = Window.partitionBy("__d").orderBy(F.desc("__cnt"), F.asc("lbl"))
-        winner = (
-            votes.withColumn("__rk", F.row_number().over(w))
-            .filter(F.col("__rk") == 1)
-            .select(F.col("__d").alias(id_col), F.col("lbl").alias("__new"))
+        winner = top_k(votes, 1, "__cnt", "lbl", by=("__d",), rank="__rk").select(
+            F.col("__d").alias(id_col), F.col("lbl").alias("__new")
         )
         lbl = lbl.join(winner, id_col, "left").select(
             id_col, F.coalesce("__new", "lbl").alias("lbl")

@@ -29,10 +29,11 @@ only the final per-query top-k pays a rank shuffle keyed by query.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from renkodf_spark.operators.similarity import _dot
+from renkodf_spark.operators.topk import top_k
 
 
 def _dot_unrolled(a, b, n: int, a_off: int = 0, b_off: int = 0):
@@ -316,6 +317,21 @@ def _adc_score(codes_col, luts_col):
     )
 
 
+def _rank_adc(pairs: DataFrame, query_id, neighbor_id, luts, k: int) -> DataFrame:
+    """The ADC top-k tail of :func:`pq_adc_topk` and :func:`ivfpq_topk`:
+    score each (query, corpus ``codes``) pair against the query's LUTs,
+    drop self-pairs, keep the ``k`` best per query (ties to the smaller
+    neighbor id) as ``(query_id, neighbor_id, rank, score_micros)``."""
+    scored = pairs.select(
+        query_id.alias("query_id"),
+        neighbor_id.alias("neighbor_id"),
+        _adc_score(F.col("codes"), luts).alias("score_micros"),
+    ).filter(F.col("query_id") != F.col("neighbor_id"))
+    return top_k(scored, k, "score_micros", "neighbor_id", by=("query_id",)).select(
+        "query_id", "neighbor_id", "rank", "score_micros"
+    )
+
+
 def pq_adc_topk(
     codes: DataFrame,
     queries: DataFrame,
@@ -358,27 +374,11 @@ def pq_adc_topk(
     qrow = luts.agg(
         F.collect_list(F.struct(F.col("query_id"), F.col("__luts"))).alias("__qs")
     )
-    scored = (
-        codes.crossJoin(F.broadcast(qrow))
-        .select(
-            F.col("id").alias("neighbor_id"),
-            "codes",
-            F.explode("__qs").alias("__q"),
-        )
-        .select(
-            F.col("__q.query_id").alias("query_id"),
-            "neighbor_id",
-            _adc_score(F.col("codes"), F.col("__q.__luts")).alias("score_micros"),
-        )
-        .filter(F.col("query_id") != F.col("neighbor_id"))
+    pairs = codes.crossJoin(F.broadcast(qrow)).select(
+        F.col("id").alias("neighbor_id"), "codes", F.explode("__qs").alias("__q")
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score_micros"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "score_micros")
+    return _rank_adc(
+        pairs, F.col("__q.query_id"), F.col("neighbor_id"), F.col("__q.__luts"), k
     )
 
 
@@ -441,20 +441,5 @@ def ivfpq_topk(
         .crossJoin(F.broadcast(_books_by_sub_row(codebooks, m)))
         .select("query_id", "cell", _lut_entries(F.col("__q"), dsub).alias("__luts"))
     )
-    scored = (
-        enc.join(F.broadcast(qluts), "cell")
-        .select(
-            "query_id",
-            F.col("id").alias("neighbor_id"),
-            _adc_score(F.col("codes"), F.col("__luts")).alias("score_micros"),
-        )
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score_micros"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "score_micros")
-    )
+    pairs = enc.join(F.broadcast(qluts), "cell")
+    return _rank_adc(pairs, F.col("query_id"), F.col("id"), F.col("__luts"), k)

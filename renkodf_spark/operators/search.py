@@ -23,6 +23,8 @@ from typing import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from renkodf_spark.operators.topk import top_k
+
 
 def build_inverted_index(
     docs: DataFrame,
@@ -230,28 +232,36 @@ def bm25_topk(
     terms' postings are scored (term-partition-prunable via
     ``read_postings``); the final top-k is one rank ordering.
     """
-    terms = list(dict.fromkeys(terms))
-    if not terms:
-        raise ValueError("terms must be non-empty")
-    if k <= 0:
-        raise ValueError(f"k must be positive, got {k}")
-
+    terms = _query_terms(terms, k)
     doclen = index.groupBy("doc_id").agg(F.sum("tf").cast("long").alias("__dl"))
     glob = index.groupBy().agg(
         F.count_distinct("doc_id").cast("long").alias("__N"),
         F.sum("tf").cast("long").alias("__total"),
     )
-    dfreq = (
-        index.filter(F.col("term").isin(terms))
-        .groupBy("term")
-        .agg(F.count(F.lit(1)).cast("long").alias("__df"))
-    )
+    return _bm25_ranked(index.filter(F.col("term").isin(terms)), doclen, glob, k, k1, b)
 
-    posts = (
-        index.filter(F.col("term").isin(terms))
-        .join(F.broadcast(dfreq), "term")
+
+def _query_terms(terms: Sequence[str], k: int) -> list[str]:
+    """The ranked searches' one input guard: distinct terms in query
+    order, non-empty, and a positive ``k``."""
+    terms = list(dict.fromkeys(terms))
+    if not terms:
+        raise ValueError("terms must be non-empty")
+    if k <= 0:
+        raise ValueError(f"k must be positive, got {k}")
+    return terms
+
+
+def _bm25_ranked(posts, doclen, stats, k: int, k1: float, b: float) -> DataFrame:
+    """BM25 scoring shared by :func:`bm25_topk` and
+    :func:`bm25_topk_indexed`: ``posts`` are the query terms' postings,
+    ``doclen`` is ``(doc_id, __dl)`` and ``stats`` the one corpus row
+    ``(__N, __total)``."""
+    dfreq = posts.groupBy("term").agg(F.count(F.lit(1)).cast("long").alias("__df"))
+    joined = (
+        posts.join(F.broadcast(dfreq), "term")
         .join(doclen, "doc_id")
-        .crossJoin(F.broadcast(glob))
+        .crossJoin(F.broadcast(stats))
     )
     idf = F.log(
         F.lit(1.0)
@@ -263,18 +273,36 @@ def bm25_topk(
         idf * (tf * (k1 + 1.0)) / (tf + F.lit(k1) * (1.0 - b + F.lit(b) * norm_len))
         * 1e6
     ).cast("long")
-
-    from pyspark.sql.window import Window
-
-    scored = posts.select("doc_id", contrib.alias("__c")).groupBy("doc_id").agg(
+    scored = joined.select("doc_id", contrib.alias("__c")).groupBy("doc_id").agg(
         F.sum("__c").alias("score_micros")
     )
-    w = Window.orderBy(F.desc("score_micros"), F.asc("doc_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("doc_id", "score_micros", "rank")
+    return top_k(scored, k, "score_micros", "doc_id").select("doc_id", "score_micros", "rank")
+
+
+def _ql_ranked(posts, doclen, stats, n_terms: int, k: int, mu: int) -> DataFrame:
+    """Dirichlet query-likelihood scoring shared by :func:`ql_topk` and
+    :func:`ql_topk_indexed`: ``posts`` are the query terms' postings,
+    ``doclen`` is ``(doc_id, __dl)`` and ``stats`` the one corpus row
+    ``(__total)``."""
+    cfreq = posts.groupBy("term").agg(F.sum("tf").cast("long").alias("__cf"))
+    joined = posts.join(F.broadcast(cfreq), "term").crossJoin(F.broadcast(stats))
+    tf = F.col("tf").cast("double")
+    contrib = F.round(
+        F.log(F.lit(1.0) + tf * F.col("__total") / (F.lit(float(mu)) * F.col("__cf")))
+        * 1e6
+    ).cast("long")
+    scored = joined.select("doc_id", contrib.alias("__c")).groupBy("doc_id").agg(
+        F.sum("__c").alias("__match")
     )
+    prior = F.round(
+        F.lit(float(n_terms))
+        * F.log(F.lit(float(mu)) / (F.col("__dl") + F.lit(float(mu))))
+        * 1e6
+    ).cast("long")
+    ranked = scored.join(doclen, "doc_id").select(
+        "doc_id", (F.col("__match") + prior).alias("score_micros")
+    )
+    return top_k(ranked, k, "score_micros", "doc_id").select("doc_id", "score_micros", "rank")
 
 
 def ql_topk(
@@ -316,51 +344,12 @@ def ql_topk(
     (term-partition-prunable via :func:`read_postings`); the final
     top-k is one rank ordering.
     """
-    terms = list(dict.fromkeys(terms))
-    if not terms:
-        raise ValueError("terms must be non-empty")
-    if k <= 0:
-        raise ValueError(f"k must be positive, got {k}")
+    terms = _query_terms(terms, k)
     if mu <= 0:
         raise ValueError(f"mu must be positive, got {mu}")
-
     doclen = index.groupBy("doc_id").agg(F.sum("tf").cast("long").alias("__dl"))
     glob = index.groupBy().agg(F.sum("tf").cast("long").alias("__total"))
-    cfreq = (
-        index.filter(F.col("term").isin(terms))
-        .groupBy("term")
-        .agg(F.sum("tf").cast("long").alias("__cf"))
-    )
-
-    posts = (
-        index.filter(F.col("term").isin(terms))
-        .join(F.broadcast(cfreq), "term")
-        .crossJoin(F.broadcast(glob))
-    )
-    tf = F.col("tf").cast("double")
-    contrib = F.round(
-        F.log(F.lit(1.0) + tf * F.col("__total") / (F.lit(float(mu)) * F.col("__cf")))
-        * 1e6
-    ).cast("long")
-
-    from pyspark.sql.window import Window
-
-    scored = posts.select("doc_id", contrib.alias("__c")).groupBy("doc_id").agg(
-        F.sum("__c").alias("__match")
-    )
-    prior = F.round(
-        F.lit(float(len(terms)))
-        * F.log(F.lit(float(mu)) / (F.col("__dl") + F.lit(float(mu))))
-        * 1e6
-    ).cast("long")
-    w = Window.orderBy(F.desc("score_micros"), F.asc("doc_id"))
-    return (
-        scored.join(doclen, "doc_id")
-        .select("doc_id", (F.col("__match") + prior).alias("score_micros"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("doc_id", "score_micros", "rank")
-    )
+    return _ql_ranked(index.filter(F.col("term").isin(terms)), doclen, glob, len(terms), k, mu)
 
 
 def rrf_fuse(
@@ -384,8 +373,6 @@ def rrf_fuse(
     the id.  Both inputs are bounded top-k relations, so the fusion is
     driver-cheap by construction.
     """
-    from pyspark.sql.window import Window
-
     if k <= 0:
         raise ValueError(f"k must be positive, got {k}")
 
@@ -403,12 +390,7 @@ def rrf_fuse(
         .groupBy(id_col)
         .agg(F.sum("__c").alias("rrf_nanos"))
     )
-    w = Window.orderBy(F.desc("rrf_nanos"), F.asc(id_col))
-    return (
-        fused.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(id_col, "rrf_nanos", "rank")
-    )
+    return top_k(fused, k, "rrf_nanos", id_col).select(id_col, "rrf_nanos", "rank")
 
 
 def write_search_index(
@@ -450,47 +432,11 @@ def bm25_topk_indexed(
     terms' bucket partitions plus the two small stats tables — scan
     cost ∝ query terms, not corpus size.
     """
-    terms = list(dict.fromkeys(terms))
-    if not terms:
-        raise ValueError("terms must be non-empty")
-    if k <= 0:
-        raise ValueError(f"k must be positive, got {k}")
-    posts = read_postings(spark, path, terms)
-    doclen = spark.read.parquet(path + "/doclen").select(
-        "doc_id", F.col("dl").alias("__dl")
-    )
+    terms = _query_terms(terms, k)
     stats = spark.read.parquet(path + "/stats").select(
         F.col("n_docs").alias("__N"), F.col("total_tokens").alias("__total")
     )
-    dfreq = posts.groupBy("term").agg(F.count(F.lit(1)).cast("long").alias("__df"))
-
-    joined = (
-        posts.join(F.broadcast(dfreq), "term")
-        .join(doclen, "doc_id")
-        .crossJoin(F.broadcast(stats))
-    )
-    idf = F.log(
-        F.lit(1.0)
-        + (F.col("__N") - F.col("__df") + F.lit(0.5)) / (F.col("__df") + F.lit(0.5))
-    )
-    norm_len = F.col("__dl") * F.col("__N") / F.col("__total")
-    tf = F.col("tf").cast("double")
-    contrib = F.round(
-        idf * (tf * (k1 + 1.0)) / (tf + F.lit(k1) * (1.0 - b + F.lit(b) * norm_len))
-        * 1e6
-    ).cast("long")
-
-    from pyspark.sql.window import Window
-
-    scored = joined.select("doc_id", contrib.alias("__c")).groupBy("doc_id").agg(
-        F.sum("__c").alias("score_micros")
-    )
-    w = Window.orderBy(F.desc("score_micros"), F.asc("doc_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("doc_id", "score_micros", "rank")
-    )
+    return _bm25_ranked(read_postings(spark, path, terms), _doclen(spark, path), stats, k, k1, b)
 
 
 def ql_topk_indexed(
@@ -510,44 +456,14 @@ def ql_topk_indexed(
     two stats tables BM25 reads — so the scan stays ∝ query terms,
     not corpus size.
     """
-    terms = list(dict.fromkeys(terms))
-    if not terms:
-        raise ValueError("terms must be non-empty")
-    if k <= 0:
-        raise ValueError(f"k must be positive, got {k}")
+    terms = _query_terms(terms, k)
     if mu <= 0:
         raise ValueError(f"mu must be positive, got {mu}")
+    stats = spark.read.parquet(path + "/stats").select(F.col("total_tokens").alias("__total"))
     posts = read_postings(spark, path, terms)
-    doclen = spark.read.parquet(path + "/doclen").select(
-        "doc_id", F.col("dl").alias("__dl")
-    )
-    stats = spark.read.parquet(path + "/stats").select(
-        F.col("total_tokens").alias("__total")
-    )
-    cfreq = posts.groupBy("term").agg(F.sum("tf").cast("long").alias("__cf"))
+    return _ql_ranked(posts, _doclen(spark, path), stats, len(terms), k, mu)
 
-    joined = posts.join(F.broadcast(cfreq), "term").crossJoin(F.broadcast(stats))
-    tf = F.col("tf").cast("double")
-    contrib = F.round(
-        F.log(F.lit(1.0) + tf * F.col("__total") / (F.lit(float(mu)) * F.col("__cf")))
-        * 1e6
-    ).cast("long")
 
-    from pyspark.sql.window import Window
-
-    scored = joined.select("doc_id", contrib.alias("__c")).groupBy("doc_id").agg(
-        F.sum("__c").alias("__match")
-    )
-    prior = F.round(
-        F.lit(float(len(terms)))
-        * F.log(F.lit(float(mu)) / (F.col("__dl") + F.lit(float(mu))))
-        * 1e6
-    ).cast("long")
-    w = Window.orderBy(F.desc("score_micros"), F.asc("doc_id"))
-    return (
-        scored.join(doclen, "doc_id")
-        .select("doc_id", (F.col("__match") + prior).alias("score_micros"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("doc_id", "score_micros", "rank")
-    )
+def _doclen(spark, path: str) -> DataFrame:
+    """A :func:`write_search_index` index's ``(doc_id, __dl)`` lengths."""
+    return spark.read.parquet(path + "/doclen").select("doc_id", F.col("dl").alias("__dl"))

@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from renkodf_spark.operators.topk import top_k
 from renkodf_spark.plans.persist import persist_block
 
 
@@ -46,6 +47,23 @@ def _cosine_pre(a, b, na, nb):
     return _dot(a, b) / (na * nb)
 
 
+def _with_cos(pairs: DataFrame) -> DataFrame:
+    """Score (query, neighbor) candidate pairs carrying ``qvec``/``cvec``
+    and their norms ``__qn``/``__cn``: appends ``cos``."""
+    return pairs.withColumn(
+        "cos", _cosine_pre(F.col("qvec"), F.col("cvec"), F.col("__qn"), F.col("__cn"))
+    )
+
+
+def _rank_cos(scored: DataFrame, k: int, round_digits: int) -> DataFrame:
+    """The cosine top-k tail: per query, the ``k`` best ``cos``, ties to
+    the smaller neighbor id, exported as ``(query_id, neighbor_id, rank,
+    cos_sim)``."""
+    return top_k(scored, k, "cos", "neighbor_id", by=("query_id",)).select(
+        "query_id", "neighbor_id", "rank", F.round("cos", round_digits).alias("cos_sim")
+    )
+
+
 def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -61,8 +79,6 @@ def cosine_topk(
     window top-k on (query). Corpus never shuffles for the join; the
     only shuffle is the final per-query ranking, keyed by query id
     (cardinality = |queries|)."""
-    from pyspark.sql.window import Window
-
     # r14 (guide §1.2): per-row norms computed once on each side of the
     # N x Q pair stage; the pair term is one fold, values bit-identical
     # (:func:`_cosine_pre`).
@@ -74,19 +90,8 @@ def cosine_topk(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).cast("array<double>").alias("qvec"),
     ).withColumn("__qn", _norm(F.col("qvec")))
-    scored = (
-        c.join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id"))
-        .withColumn(
-            "cos",
-            _cosine_pre(F.col("qvec"), F.col("cvec"), F.col("__qn"), F.col("__cn")),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.round("cos", round_digits).alias("cos_sim"))
-    )
+    pairs = c.join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id"))
+    return _rank_cos(_with_cos(pairs), k, round_digits)
 
 
 def label_blocked_pairs(
@@ -376,22 +381,15 @@ def ivf_topk(
     keyed by query id. No (query, neighbor) pair can repeat: each
     corpus vector lives in exactly one cell and the probed cells are
     distinct."""
-    from pyspark.sql.window import Window
-
     cc = nearest_centroid(corpus, centroids, id_col=id_col, vec_col=vec_col).select(
         F.col("id").alias("neighbor_id"), F.col("vec").alias("cvec"), "cell", "cell_cos"
     )
     if max_cell_size is not None:
         if max_cell_size <= 0:
             raise ValueError(f"max_cell_size must be positive, got {max_cell_size}")
-        wc = Window.partitionBy("cell").orderBy(
-            F.desc("cell_cos"), F.asc("neighbor_id")
-        )
-        cc = (
-            cc.withColumn("__ck", F.row_number().over(wc))
-            .filter(F.col("__ck") <= max_cell_size)
-            .drop("__ck")
-        )
+        cc = top_k(
+            cc, max_cell_size, "cell_cos", "neighbor_id", by=("cell",), rank="__ck"
+        ).drop("__ck")
     cc = cc.drop("cell_cos").withColumn("__cn", _norm(F.col("cvec")))
     qc = (
         _probe_cells(
@@ -400,20 +398,10 @@ def ivf_topk(
         .select(F.col("id").alias("query_id"), F.col("vec").alias("qvec"), "cell")
         .withColumn("__qn", _norm(F.col("qvec")))
     )
-    scored = (
-        cc.join(F.broadcast(qc), "cell")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn(
-            "cos",
-            _cosine_pre(F.col("qvec"), F.col("cvec"), F.col("__qn"), F.col("__cn")),
-        )
+    pairs = cc.join(F.broadcast(qc), "cell").filter(
+        F.col("neighbor_id") != F.col("query_id")
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.round("cos", round_digits).alias("cos_sim"))
-    )
+    return _rank_cos(_with_cos(pairs), k, round_digits)
 
 
 def write_ivf_index(
@@ -480,8 +468,6 @@ def ivf_topk_indexed(
     already guaranteed by :func:`_probe_cells`'s slice; it is restated
     here because DPP only fires when the broadcast side carries a
     selective predicate."""
-    from pyspark.sql.window import Window
-
     cents = spark.read.parquet(path + "/centroids")
     qc = (
         _probe_cells(
@@ -494,20 +480,10 @@ def ivf_topk_indexed(
     idx = spark.read.parquet(path + "/data").select(
         F.col("id").alias("neighbor_id"), F.col("vec").alias("cvec"), "cell"
     ).withColumn("__cn", _norm(F.col("cvec")))
-    scored = (
-        idx.join(F.broadcast(qc), "cell")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn(
-            "cos",
-            _cosine_pre(F.col("qvec"), F.col("cvec"), F.col("__qn"), F.col("__cn")),
-        )
+    pairs = idx.join(F.broadcast(qc), "cell").filter(
+        F.col("neighbor_id") != F.col("query_id")
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.round("cos", round_digits).alias("cos_sim"))
-    )
+    return _rank_cos(_with_cos(pairs), k, round_digits)
 
 
 def rp_planes(n_planes: int, dim: int) -> list[list[float]]:
@@ -559,28 +535,16 @@ def lsh_bucket_topk(
     """ANN top-k: compare a query only against corpus vectors in the
     same random-hyperplane bucket. Recall < 1 by construction; this is
     the scale path (equi-join on bucket instead of full cross)."""
-    from pyspark.sql.window import Window
-
     cb = rp_lsh_bucket(corpus, vec_col=vec_col, n_planes=n_planes, dim=dim).select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).cast("array<double>").alias("cvec"), "bucket"
     ).withColumn("__cn", _norm(F.col("cvec")))
     qb = rp_lsh_bucket(queries, vec_col=vec_col, n_planes=n_planes, dim=dim).select(
         F.col(id_col).alias("query_id"), F.col(vec_col).cast("array<double>").alias("qvec"), "bucket"
     ).withColumn("__qn", _norm(F.col("qvec")))
-    scored = (
-        cb.join(F.broadcast(qb), "bucket")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn(
-            "cos",
-            _cosine_pre(F.col("qvec"), F.col("cvec"), F.col("__qn"), F.col("__cn")),
-        )
+    pairs = cb.join(F.broadcast(qb), "bucket").filter(
+        F.col("neighbor_id") != F.col("query_id")
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.round("cos", round_digits).alias("cos_sim"))
-    )
+    return _rank_cos(_with_cos(pairs), k, round_digits)
 
 
 def quantize_embeddings(
@@ -800,8 +764,6 @@ def knn_edges_from_routed(
     generations, the ``(cell, src)`` window would emit up to ``k``
     edges per (cell, src) instead of ``k`` per src — dedupe to one row
     per id first."""
-    from pyspark.sql import Window
-
     routed = persist_block(routed)
     routed, pair_keys = _cap_cells(routed, max_cell_size)
     routed = routed.withColumn("__nrm", _norm(F.col("vec")))
@@ -854,12 +816,9 @@ def knn_edges_from_routed(
     # keys: a source's pairs all live in its (cell[, __sub]) group, so
     # row_number per (pair_keys..., src) == row_number per src, and the
     # window rides the join exchange instead of adding its own.
-    w = Window.partitionBy(*pair_keys, "src").orderBy(F.desc("cos_sim"), F.col("dst"))
-    out = (
-        pairs.withColumn("__rk", F.row_number().over(w))
-        .filter(F.col("__rk") <= k)
-        .drop("__rk", *sub_keys)
-    )
+    out = top_k(
+        pairs, k, "cos_sim", "dst", by=(*pair_keys, "src"), rank="__rk"
+    ).drop("__rk", *sub_keys)
     return out if keep_cell else out.drop("cell")
 
 
@@ -1037,8 +996,6 @@ def projected_cosine_topk(
     corpus + per-query top-k rank) but every dot is ``out_dim`` wide
     instead of ``dim`` — the pairwise term shrinks by ``out_dim/dim``.
     """
-    from pyspark.sql.window import Window
-
     cp = random_project(
         corpus, id_col=id_col, vec_col=vec_col, out_dim=out_dim, dim=dim
     ).select(F.col(id_col).alias("neighbor_id"), F.col("proj").cast("array<double>").alias("cv"))
@@ -1054,14 +1011,7 @@ def projected_cosine_topk(
         "neighbor_id",
         _cosine_pre(F.col("qv"), F.col("cv"), F.col("__qn"), F.col("__cn")).alias("cos"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id", "neighbor_id", "rank", F.round("cos", round_digits).alias("cos_sim")
-        )
-    )
+    return _rank_cos(scored, k, round_digits)
 
 
 def binary_quantize(
@@ -1116,8 +1066,6 @@ def hamming_topk(
     a broadcast NLJ (this is the bandwidth point — 16 bytes per vector
     instead of 512), and the per-query top-k is the only shuffle.
     """
-    from pyspark.sql.window import Window
-
     if k <= 0:
         raise ValueError(f"k must be positive, got {k}")
     qrow = query_codes.agg(
@@ -1148,12 +1096,9 @@ def hamming_topk(
         )
         .filter(F.col("query_id") != F.col("neighbor_id"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.asc("hamming"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "hamming")
-    )
+    return top_k(
+        scored, k, "hamming", "neighbor_id", by=("query_id",), ascending=True
+    ).select("query_id", "neighbor_id", "rank", "hamming")
 
 
 def hard_negative_mining(
@@ -1255,16 +1200,36 @@ def hard_negative_mining_ann(
     the corpus ONCE with :func:`write_ivf_index` and mine over the
     persisted layout so even that single corpus shuffle amortizes away.
     """
-    cc = _probe_cells(
+    routed = _probe_cells(
         corpus, centroids, id_col=id_col, vec_col=vec_col, n_probe=1,
         round_digits=6, carry=(label_col,),
-    ).select(
+    )
+    qc = _miner_anchors(
+        anchors, centroids, id_col=id_col, vec_col=vec_col, label_col=label_col,
+        n_probe=n_probe,
+    )
+    return _mine_cells(
+        _miner_corpus(routed, label_col), qc, k, round_digits, broadcast_anchors
+    )
+
+
+def _miner_corpus(routed: DataFrame, label_col: str) -> DataFrame:
+    """The ANN miners' corpus side: cell-routed ``(id, vec, label,
+    cell)`` rows as ``(neighbor_id, cvec, __nlabel, cell, __cn)``."""
+    return routed.select(
         F.col("id").alias("neighbor_id"),
         F.col("vec").alias("cvec"),
         F.col(label_col).alias("__nlabel"),
         "cell",
     ).withColumn("__cn", _norm(F.col("cvec")))
-    qc = _probe_cells(
+
+
+def _miner_anchors(
+    anchors, centroids, *, id_col, vec_col, label_col, n_probe, keep=()
+) -> DataFrame:
+    """The ANN miners' anchor side: each anchor's ``n_probe`` nearest
+    cells as ``(anchor_id, avec, __alabel, cell, *keep, __an)``."""
+    return _probe_cells(
         anchors, centroids, id_col=id_col, vec_col=vec_col, n_probe=n_probe,
         round_digits=6, carry=(label_col,),
     ).select(
@@ -1272,9 +1237,14 @@ def hard_negative_mining_ann(
         F.col("vec").alias("avec"),
         F.col(label_col).alias("__alabel"),
         "cell",
+        *keep,
     ).withColumn("__an", _norm(F.col("avec")))
-    # each corpus vector lives in exactly one cell and an anchor's
-    # probed cells are distinct, so no (anchor, neighbor) pair repeats
+
+
+def _mine_cells(cc, qc, k: int, round_digits: int, broadcast_anchors: bool) -> DataFrame:
+    """Join the miners' corpus and anchor sides on ``cell`` and mine.
+    Each corpus vector lives in exactly one cell and an anchor's probed
+    cells are distinct, so no (anchor, neighbor) pair repeats."""
     if broadcast_anchors:
         joined = cc.join(F.broadcast(qc), "cell")
     else:
@@ -1316,11 +1286,9 @@ def _mine_candidates(joined, k: int, round_digits: int) -> DataFrame:
             F.when(F.col("__nlabel") == F.col("__alabel"), F.col("cos"))
         ).over(Window.partitionBy("anchor_id")),
     )
-    w = Window.partitionBy("anchor_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    negk = (
-        scored.filter(F.col("__nlabel") != F.col("__alabel"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+    negk = top_k(
+        scored.filter(F.col("__nlabel") != F.col("__alabel")),
+        k, "cos", "neighbor_id", by=("anchor_id",),
     )
     return negk.select(
         "anchor_id",
@@ -1359,31 +1327,14 @@ def hard_negative_mining_ann_indexed(
     shuffle join (one linear exchange per side) when the anchor set
     exceeds the broadcast bound."""
     cents = spark.read.parquet(path + "/centroids")
-    cc = spark.read.parquet(path + "/data").select(
-        F.col("id").alias("neighbor_id"),
-        F.col("vec").alias("cvec"),
-        F.col(label_col).alias("__nlabel"),
-        "cell",
-    ).withColumn("__cn", _norm(F.col("cvec")))
-    qc = _probe_cells(
-        anchors, cents, id_col=id_col, vec_col=vec_col, n_probe=n_probe,
-        round_digits=6, carry=(label_col,),
-    ).select(
-        F.col("id").alias("anchor_id"),
-        F.col("vec").alias("avec"),
-        F.col(label_col).alias("__alabel"),
-        "cell",
-        # restated for DPP: pruning fires only when the broadcast side
-        # carries a selective predicate (the ivf_topk_indexed rule)
-        "probe_rank",
-    ).filter(F.col("probe_rank") <= n_probe).drop("probe_rank").withColumn(
-        "__an", _norm(F.col("avec"))
-    )
-    if broadcast_anchors:
-        joined = cc.join(F.broadcast(qc), "cell")
-    else:
-        joined = cc.hint("shuffle_merge").join(qc.hint("shuffle_merge"), "cell")
-    return _mine_candidates(joined, k, round_digits)
+    cc = _miner_corpus(spark.read.parquet(path + "/data"), label_col)
+    # probe_rank restated for DPP: pruning fires only when the broadcast
+    # side carries a selective predicate (the ivf_topk_indexed rule)
+    qc = _miner_anchors(
+        anchors, cents, id_col=id_col, vec_col=vec_col, label_col=label_col,
+        n_probe=n_probe, keep=("probe_rank",),
+    ).filter(F.col("probe_rank") <= n_probe).drop("probe_rank")
+    return _mine_cells(cc, qc, k, round_digits, broadcast_anchors)
 
 
 def write_ivf_index_bucketed(
@@ -1445,21 +1396,9 @@ def hard_negative_mining_ann_bucketed(
     centroids (parity-pinned). The mining shuffle width equals the
     bucket count — size ``n_buckets`` to cluster parallelism at write
     time."""
-    cents = spark.table(f"{table}__centroids")
-    cc = spark.table(table).select(
-        F.col("id").alias("neighbor_id"),
-        F.col("vec").alias("cvec"),
-        F.col(label_col).alias("__nlabel"),
-        "cell",
-    ).withColumn("__cn", _norm(F.col("cvec")))
-    qc = _probe_cells(
-        anchors, cents, id_col=id_col, vec_col=vec_col, n_probe=n_probe,
-        round_digits=6, carry=(label_col,),
-    ).select(
-        F.col("id").alias("anchor_id"),
-        F.col("vec").alias("avec"),
-        F.col(label_col).alias("__alabel"),
-        "cell",
-    ).withColumn("__an", _norm(F.col("avec")))
-    joined = cc.hint("shuffle_merge").join(qc.hint("shuffle_merge"), "cell")
-    return _mine_candidates(joined, k, round_digits)
+    cc = _miner_corpus(spark.table(table), label_col)
+    qc = _miner_anchors(
+        anchors, spark.table(f"{table}__centroids"), id_col=id_col, vec_col=vec_col,
+        label_col=label_col, n_probe=n_probe,
+    )
+    return _mine_cells(cc, qc, k, round_digits, broadcast_anchors=False)

@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from renkodf_spark.operators.topk import top_k
 from renkodf_spark.plans.persist import persist_block
 
 # tiny marker-word lists per language for the n-gram/stopword heuristic
@@ -430,8 +431,6 @@ def tfidf_top_terms(
     tf = pairs.groupBy("id", "term").agg(F.count(F.lit(1)).alias("tf"))
     docfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     n_docs = df.agg(F.count(F.lit(1)).alias("__n"))
-    from pyspark.sql.window import Window
-
     scored = (
         tf.join(docfreq, "term")
         .crossJoin(F.broadcast(n_docs))
@@ -442,13 +441,8 @@ def tfidf_top_terms(
             ),
         )
     )
-    w = Window.partitionBy("id").orderBy(F.desc("score"), F.asc("term"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            F.col("id").alias(id_col), "rank", "term", "tf", "df", "score"
-        )
+    return top_k(scored, k, "score", "term", by=("id",)).select(
+        F.col("id").alias(id_col), "rank", "term", "tf", "df", "score"
     )
 
 

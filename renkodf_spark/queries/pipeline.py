@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from renkodf_spark.operators import dedup, multimodal, similarity, text
 from renkodf_spark.plans.persist import persist_block
+from renkodf_spark.queries.ctes import COMPONENT_WALK, COS_TOP5, WS_TOKENS, cosine
 from renkodf_spark.queries.registry import query
 from renkodf_spark.sources.tables import load_table
 
@@ -100,9 +101,9 @@ def dedup_exact(spark, sf_dir):
 
 
 # shared oracle CTE: word-3-gram shingles per doc
-_SHINGLE_CTE = r"""
+_SHINGLE_CTE = rf"""
 WITH toks AS (
-  SELECT doc_id, string_split_regex(trim(text), '\s+') AS t FROM documents
+  SELECT doc_id, {WS_TOKENS} AS t FROM documents
 ),
 shingled AS (
   SELECT doc_id,
@@ -246,17 +247,8 @@ def dedup_edit_distance(spark, sf_dir):
 # shallow, so the transitive closure stays small at gate scale.
 _CLUSTER_ORACLE = (
     _PAIRS_CTES.replace("WITH toks", "WITH RECURSIVE toks", 1)
-    + """,
-edges AS (
-  SELECT id_a AS src, id_b AS dst FROM pairs
-  UNION
-  SELECT id_b AS src, id_a AS dst FROM pairs
-),
-walk(id, node) AS (
-  SELECT doc_id, doc_id FROM documents
-  UNION
-  SELECT w.id, e.dst FROM walk w JOIN edges e ON e.src = w.node
-)
+    + f""",
+{COMPONENT_WALK}
 SELECT id, MIN(node) AS cluster_id FROM walk GROUP BY id
 """
 )
@@ -284,7 +276,7 @@ _SIMSUM = " + ".join(f"CASE WHEN s{j} > 0 THEN {1 << j} ELSE 0 END" for j in ran
 
 _SIMHASH_ORACLE = rf"""
 WITH toks AS (
-  SELECT doc_id, list_distinct(string_split_regex(trim(text), '\s+')) AS t FROM documents
+  SELECT doc_id, list_distinct({WS_TOKENS}) AS t FROM documents
 ),
 hashed AS (
   SELECT doc_id, list_transform(t, x -> ('0x' || substr(md5(x), 1, 8))::BIGINT) AS th FROM toks
@@ -309,20 +301,14 @@ def dedup_simhash(spark, sf_dir):
 
 # ------------------------------------------------------------------ similarity
 
-_COS = "list_dot_product(qv, cv) / (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(cv, cv)))"
-
 _TOPK_ORACLE = f"""
 WITH q AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id < 5),
 c AS (SELECT vec_id AS neighbor_id, embedding::DOUBLE[] AS cv FROM embeddings),
 scored AS (
-  SELECT query_id, neighbor_id, {_COS} AS cos
+  SELECT query_id, neighbor_id, {cosine("qv", "cv")} AS cos
   FROM c, q WHERE neighbor_id <> query_id
 ),
-ranked AS (
-  SELECT query_id, neighbor_id, cos,
-         ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rank
-  FROM scored)
-SELECT query_id, neighbor_id, rank, ROUND(cos, 4) AS cos_sim FROM ranked WHERE rank <= 5
+{COS_TOP5}
 """
 
 
@@ -339,11 +325,9 @@ def similarity_cosine_topk(spark, sf_dir):
 _BLOCKED_ORACLE = f"""
 WITH e AS (SELECT label AS block, vec_id AS id, embedding::DOUBLE[] AS v FROM embeddings)
 SELECT a.block, a.id AS id_a, b.id AS id_b,
-       ROUND(list_dot_product(a.v, b.v)
-             / (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v))), 4) AS cos_sim
+       ROUND({cosine("a.v", "b.v")}, 4) AS cos_sim
 FROM e a JOIN e b ON a.block = b.block AND a.id < b.id
-WHERE list_dot_product(a.v, b.v)
-      / (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v))) > 0.3
+WHERE {cosine("a.v", "b.v")} > 0.3
 """
 
 
@@ -373,14 +357,9 @@ b AS (SELECT vec_id, v, {_rp_bucket_sql()} AS bucket FROM e),
 q AS (SELECT vec_id AS query_id, v AS qv, bucket FROM b WHERE vec_id < 20),
 scored AS (
   SELECT q.query_id, c.vec_id AS neighbor_id,
-         list_dot_product(qv, c.v)
-           / (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(c.v, c.v))) AS cos
+         {cosine("qv", "c.v")} AS cos
   FROM b c JOIN q ON c.bucket = q.bucket AND c.vec_id <> q.query_id),
-ranked AS (
-  SELECT query_id, neighbor_id, cos,
-         ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rank
-  FROM scored)
-SELECT query_id, neighbor_id, rank, ROUND(cos, 4) AS cos_sim FROM ranked WHERE rank <= 5
+{COS_TOP5}
 """
 
 
@@ -440,7 +419,7 @@ _QUALITY_ORACLE = rf"""
 WITH base AS (
   SELECT doc_id, text,
          length(text) AS n_chars_m,
-         len(string_split_regex(trim(text), '\s+')) AS n_words,
+         len({WS_TOKENS}) AS n_words,
          length(regexp_replace(text, '[^.,;:!?]', '', 'g')) AS punct,
          ({_STOP_SUM}) AS stop
   FROM documents)
@@ -460,9 +439,9 @@ def text_quality(spark, sf_dir):
     return text.quality_score(_docs(spark, sf_dir))
 
 
-_TOKEN_ORACLE = r"""
+_TOKEN_ORACLE = rf"""
 SELECT doc_id,
-       len(string_split_regex(trim(text), '\s+')) AS ws_tokens,
+       len({WS_TOKENS}) AS ws_tokens,
        len(regexp_extract_all(text, '([A-Za-z]+|[0-9]+|[^A-Za-z0-9\s])', 1)) AS bpe_tokens
 FROM documents
 """

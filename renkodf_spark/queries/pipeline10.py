@@ -374,13 +374,7 @@ from renkodf_spark.queries.pipeline8 import (  # noqa: E402
     _KNN_K,
     _shared_knn_edges,
 )
-from renkodf_spark.queries.pipeline9 import (  # noqa: E402
-    _PR_DDEN,
-    _PR_DNUM,
-    _PR_ITERS,
-    _PR_SCALE,
-    _pr_oracle,
-)
+from renkodf_spark.queries.pipeline9 import _knn_rank, _pr_oracle  # noqa: E402
 
 
 @query(
@@ -404,16 +398,7 @@ def knn_pagerank_indexed(spark, sf_dir):
     path = _graph_state_path()
     similarity.write_knn_graph(emb, cents, path, k=_KNN_K)
     edges = similarity.read_knn_graph(spark, path)
-    nodes = emb.select(F.col("vec_id").alias("id"))
-    pr = graph.pagerank(
-        edges.select("src", "dst"),
-        nodes,
-        iterations=_PR_ITERS,
-        d_num=_PR_DNUM,
-        d_den=_PR_DDEN,
-        scale=_PR_SCALE,
-    )
-    return pr.select(F.col("id").alias("vec_id"), "pr")
+    return _knn_rank(edges.select("src", "dst"), emb)
 
 
 # ------------------------------------------- LPA communities
@@ -507,20 +492,10 @@ def knn_trustrank_indexed(spark, sf_dir):
     path = _graph_state_path()
     similarity.write_knn_graph(emb, cents, path, k=_KNN_K)
     edges = similarity.read_knn_graph(spark, path)
-    nodes = emb.select(F.col("vec_id").alias("id"))
     seeds = emb.filter(F.col("label") == _TR_SEED_LABEL).select(
         F.col("vec_id").alias("id")
     )
-    pr = graph.pagerank(
-        edges.select("src", "dst"),
-        nodes,
-        iterations=_PR_ITERS,
-        d_num=_PR_DNUM,
-        d_den=_PR_DDEN,
-        scale=_PR_SCALE,
-        seeds=seeds,
-    )
-    return pr.select(F.col("id").alias("vec_id"), "pr")
+    return _knn_rank(edges.select("src", "dst"), emb, seeds=seeds)
 
 
 @query(

@@ -80,6 +80,7 @@ from renkodf_spark.queries.pipeline4 import (
     _G_MIN_WORDS,
     _GOPHER_ORACLE,
 )
+from renkodf_spark.queries.ctes import WS_TOKENS
 from renkodf_spark.queries.registry import query
 
 
@@ -280,7 +281,7 @@ def pretrain_dag(docs, eval_snippets):
 
 from renkodf_spark.operators import search as search_ops  # noqa: E402
 from renkodf_spark.operators import text as text_ops  # noqa: E402
-from renkodf_spark.queries.relational3 import _TOKS_CTE  # noqa: E402
+from renkodf_spark.queries.relational3 import _TOKS_CTE, _TOP20  # noqa: E402
 
 
 @query(
@@ -306,13 +307,8 @@ from renkodf_spark.queries.relational3 import _TOKS_CTE  # noqa: E402
       SELECT m.doc_id,
              (m.m + ROUND(2.0 * ln(100.0 / (d.dl + 100.0)) * 1e6)::BIGINT)::BIGINT
                AS score_micros
-      FROM matched m JOIN doclen d USING (doc_id))
-    SELECT doc_id, score_micros, rank FROM (
-      SELECT doc_id, score_micros,
-             ROW_NUMBER() OVER (ORDER BY score_micros DESC, doc_id) AS rank
-      FROM scored)
-    WHERE rank <= 20
-    """,
+      FROM matched m JOIN doclen d USING (doc_id))"""
+    + _TOP20,
     doc="query-likelihood ranked retrieval ('spark vector', top-20, "
     "Dirichlet mu=100): the language-modeling ranker next to BM25 "
     "(Lucene's LMDirichletSimilarity), scored in the Zhai-Lafferty "
@@ -338,7 +334,7 @@ _VG_BUCKETS = 10
     WITH mx AS (SELECT MAX(doc_id)::BIGINT AS mx FROM documents),
     tok AS (
       SELECT d.doc_id, (d.doc_id * {_VG_BUCKETS}) // (mx.mx + 1) AS bucket,
-             unnest(string_split_regex(trim(text), '\s+')) AS term
+             unnest({WS_TOKENS}) AS term
       FROM documents d CROSS JOIN mx),
     per_bucket AS (
       SELECT bucket, COUNT(DISTINCT doc_id)::BIGINT AS n_docs,

@@ -22,23 +22,27 @@ from renkodf_spark.queries.pipeline import (
     _rp_bucket_sql,
     _shared_pairs,
 )
+from renkodf_spark.queries.ctes import (
+    CELL_COS,
+    CENTS,
+    COMPONENT_WALK,
+    COS_RANK,
+    COS_TOP5,
+    IVF_ROUTE,
+    VECS,
+    WS_TOKENS,
+    assign,
+    scored,
+    top_ids,
+)
 from renkodf_spark.queries.registry import query
 
 # ------------------------------------------------------- dedup apply stage
 
 _DEDUP_FILTER_ORACLE = (
     _PAIRS_CTES.replace("WITH toks", "WITH RECURSIVE toks", 1)
-    + """,
-edges AS (
-  SELECT id_a AS src, id_b AS dst FROM pairs
-  UNION
-  SELECT id_b AS src, id_a AS dst FROM pairs
-),
-walk(id, node) AS (
-  SELECT doc_id, doc_id FROM documents
-  UNION
-  SELECT w.id, e.dst FROM walk w JOIN edges e ON e.src = w.node
-),
+    + f""",
+{COMPONENT_WALK},
 labels AS (SELECT id, MIN(node) AS cluster_id FROM walk GROUP BY id),
 sizes AS (SELECT cluster_id, COUNT(*) AS cluster_size FROM labels GROUP BY cluster_id)
 SELECT l.id AS doc_id, s.cluster_size
@@ -69,7 +73,7 @@ _CHUNK_STRIDE = 24
 
 _CHUNKS_ORACLE = rf"""
 WITH toks AS (
-  SELECT doc_id, string_split_regex(trim(text), '\s+') AS t FROM documents
+  SELECT doc_id, {WS_TOKENS} AS t FROM documents
 ),
 st AS (
   SELECT doc_id, t, unnest(range(0, len(t), {_CHUNK_STRIDE})) AS s FROM toks
@@ -199,7 +203,7 @@ _WINNOW_MAX_FP = 1000
 # RIGHTMOST position on ties (MAX(i) over the min-hash members)
 _WINNOW_CTES = rf"""
 WITH toks AS (
-  SELECT doc_id, string_split_regex(trim(text), '\s+') AS t FROM documents),
+  SELECT doc_id, {WS_TOKENS} AS t FROM documents),
 gh AS (
   SELECT doc_id, unnest(range(1, len(t) - {_WINNOW_K - 2})) - 1 AS i,
          t
@@ -407,11 +411,11 @@ def lang_rate_sample(spark, sf_dir):
 # split x quality-bucket counts: the one-look dashboard a curation run
 # ends with (is junk uniform across holdout splits?). Pure composition
 # of two gated operators; the oracle recomposes their SQL.
-_DASH_ORACLE = r"""
+_DASH_ORACLE = rf"""
 WITH b AS (
   SELECT doc_id,
          ('0x' || substr(md5('split:' || doc_id::VARCHAR), 1, 12))::BIGINT % 100 AS bucket,
-         len(string_split_regex(trim(text), '\s+')) AS n_words,
+         len({WS_TOKENS}) AS n_words,
          length(regexp_replace(text, '[^.,;:!?]', '', 'g')) AS punct,
          length(text) AS n_chars
   FROM documents),
@@ -450,7 +454,7 @@ _REP_NS = (2, 3)
 
 _REPETITION_ORACLE = rf"""
 WITH toks AS (
-  SELECT doc_id, len(text) AS chars, string_split_regex(trim(text), '\s+') AS t
+  SELECT doc_id, len(text) AS chars, {WS_TOKENS} AS t
   FROM documents),
 ns AS (SELECT unnest([{", ".join(str(n) for n in _REP_NS)}]) AS n),
 st AS (
@@ -495,7 +499,7 @@ _TFIDF_K = 3
 
 _TFIDF_ORACLE = rf"""
 WITH pairs AS (
-  SELECT doc_id, unnest(string_split_regex(trim(text), '\s+')) AS term FROM documents),
+  SELECT doc_id, unnest({WS_TOKENS}) AS term FROM documents),
 tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM pairs GROUP BY ALL),
 dfreq AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY term),
 n AS (SELECT COUNT(*) AS n FROM documents),
@@ -574,51 +578,25 @@ def ivf_centroids(spark, sf_dir):
 # vector identically (similarity.nearest_centroid docstring).
 _IVF_TOPK_ORACLE = (
     _CENTROID_CTES
-    + """,
-cents AS (SELECT cell, LIST(mval ORDER BY i) AS cv FROM m GROUP BY cell),
-vecs AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-assign AS (
-  SELECT vec_id, cell,
-         ROW_NUMBER() OVER (
-           PARTITION BY vec_id
-           ORDER BY ROUND(list_dot_product(v, cv)
-                          / (sqrt(list_dot_product(v, v)) * sqrt(list_dot_product(cv, cv))), 6) DESC,
-                    cell) AS rk
-  FROM vecs CROSS JOIN cents),
+    + f""",
+{IVF_ROUTE},
 cellof AS (SELECT vec_id, cell FROM assign WHERE rk = 1),
 q AS (SELECT v.vec_id AS query_id, v.v AS qv, c.cell
       FROM vecs v JOIN cellof c USING (vec_id) WHERE v.vec_id < 5),
 nb AS (SELECT v.vec_id AS neighbor_id, v.v AS nv, c.cell
        FROM vecs v JOIN cellof c USING (vec_id)),
-scored AS (
-  SELECT query_id, neighbor_id,
-         list_dot_product(qv, nv)
-           / (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(nv, nv))) AS cos
-  FROM q JOIN nb USING (cell) WHERE neighbor_id <> query_id),
-ranked AS (
-  SELECT query_id, neighbor_id, cos,
-         ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rank
-  FROM scored)
-SELECT query_id, neighbor_id, rank, ROUND(cos, 4) AS cos_sim FROM ranked WHERE rank <= 5
+{scored("scored", "q JOIN nb USING (cell)")},
+{COS_TOP5}
 """
 )
 
 
 _IVF_CELL_STATS_ORACLE = (
     _CENTROID_CTES
-    + """,
-cents AS (SELECT cell, LIST(mval ORDER BY i) AS cv FROM m GROUP BY cell),
-vecs AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-assign AS (
-  SELECT vec_id, cell,
-         ROUND(list_dot_product(v, cv)
-               / (sqrt(list_dot_product(v, v)) * sqrt(list_dot_product(cv, cv))), 6) AS rcos,
-         ROW_NUMBER() OVER (
-           PARTITION BY vec_id
-           ORDER BY ROUND(list_dot_product(v, cv)
-                          / (sqrt(list_dot_product(v, v)) * sqrt(list_dot_product(cv, cv))), 6) DESC,
-                    cell) AS rk
-  FROM vecs CROSS JOIN cents)
+    + f""",
+{CENTS},
+{VECS},
+{assign(f"vec_id, cell, {CELL_COS} AS rcos")}
 SELECT cell, COUNT(*) AS n_assigned,
        MIN(rcos) AS min_cos, MAX(rcos) AS max_cos
 FROM assign WHERE rk = 1 GROUP BY cell
@@ -646,31 +624,14 @@ def ivf_cell_stats(spark, sf_dir):
 
 _IVF_PROBE2_ORACLE = (
     _CENTROID_CTES
-    + """,
-cents AS (SELECT cell, LIST(mval ORDER BY i) AS cv FROM m GROUP BY cell),
-vecs AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-assign AS (
-  SELECT vec_id, cell,
-         ROW_NUMBER() OVER (
-           PARTITION BY vec_id
-           ORDER BY ROUND(list_dot_product(v, cv)
-                          / (sqrt(list_dot_product(v, v)) * sqrt(list_dot_product(cv, cv))), 6) DESC,
-                    cell) AS rk
-  FROM vecs CROSS JOIN cents),
+    + f""",
+{IVF_ROUTE},
 q AS (SELECT v.vec_id AS query_id, v.v AS qv, c.cell
       FROM vecs v JOIN assign c USING (vec_id) WHERE v.vec_id < 5 AND c.rk <= 2),
 nb AS (SELECT v.vec_id AS neighbor_id, v.v AS nv, c.cell
        FROM vecs v JOIN assign c USING (vec_id) WHERE c.rk = 1),
-scored AS (
-  SELECT query_id, neighbor_id,
-         list_dot_product(qv, nv)
-           / (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(nv, nv))) AS cos
-  FROM q JOIN nb USING (cell) WHERE neighbor_id <> query_id),
-ranked AS (
-  SELECT query_id, neighbor_id, cos,
-         ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rank
-  FROM scored)
-SELECT query_id, neighbor_id, rank, ROUND(cos, 4) AS cos_sim FROM ranked WHERE rank <= 5
+{scored("scored", "q JOIN nb USING (cell)")},
+{COS_TOP5}
 """
 )
 
@@ -707,17 +668,12 @@ def similarity_ivf_topk(spark, sf_dir):
 # ---------------------------------------------------------- ANN recall
 
 # the same 20-query set for all three methods; exact top-5 is the truth
-_RECALL_EXACT = """
+_RECALL_EXACT = f"""
 WITH q AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id < 20),
 c AS (SELECT vec_id AS neighbor_id, embedding::DOUBLE[] AS cv FROM embeddings),
-scored AS (
-  SELECT query_id, neighbor_id,
-         list_dot_product(qv, cv) / (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(cv, cv))) AS cos
-  FROM c, q WHERE neighbor_id <> query_id),
+{scored("scored", "c, q", nv="cv")},
 ranked AS (
-  SELECT query_id, neighbor_id,
-         ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rank
-  FROM scored)
+  SELECT query_id, neighbor_id, {COS_RANK} FROM scored)
 SELECT query_id, neighbor_id FROM ranked WHERE rank <= 5
 """
 
@@ -740,6 +696,29 @@ SELECT method, hits, total, ROUND(hits::DOUBLE / total, 4) AS recall FROM m
 """
 
 
+def _recall_row(method: str, exact, ann):
+    """One ``(method, hits, total, recall)`` row: the recall of the
+    ``ann`` neighbor lists against the ``exact`` ones."""
+    j = exact.join(
+        ann.select("query_id", "neighbor_id").withColumn("__h", F.lit(1)),
+        ["query_id", "neighbor_id"],
+        "left",
+    )
+    return (
+        j.groupBy(F.lit(method).alias("method"))
+        .agg(
+            F.sum(F.coalesce("__h", F.lit(0))).alias("hits"),
+            F.count(F.lit(1)).alias("total"),
+        )
+        .select(
+            "method",
+            "hits",
+            "total",
+            F.round(F.col("hits") / F.col("total"), 4).alias("recall"),
+        )
+    )
+
+
 @query(
     "ann_recall_report",
     oracle=_recall_oracle(),
@@ -758,24 +737,7 @@ def ann_recall_report(spark, sf_dir):
     }
     out = None
     for name, ann in methods.items():
-        j = exact.join(
-            ann.select("query_id", "neighbor_id").withColumn("__h", F.lit(1)),
-            ["query_id", "neighbor_id"],
-            "left",
-        )
-        row = (
-            j.groupBy(F.lit(name).alias("method"))
-            .agg(
-                F.sum(F.coalesce("__h", F.lit(0))).alias("hits"),
-                F.count(F.lit(1)).alias("total"),
-            )
-            .select(
-                "method",
-                "hits",
-                "total",
-                F.round(F.col("hits") / F.col("total"), 4).alias("recall"),
-            )
-        )
+        row = _recall_row(name, exact, ann)
         out = row if out is None else out.unionByName(row)
     return out
 
@@ -795,49 +757,49 @@ pl AS (
 planted AS (SELECT vec_id, label, LIST(x ORDER BY i) AS v FROM pl GROUP BY vec_id, label)
 """
 
+
+
+def _planted_recall(method: str) -> str:
+    """The planted-recall oracles' shared tail: IVF top-5 ids of the
+    ``q``/``nb`` probe CTEs, exact top-5 ids over ``planted``, and the
+    recall of the first against the second."""
+    return f"""{scored("ivf_scored", "q JOIN nb USING (cell)")},
+{top_ids("ivf", "ivf_scored")},
+eq AS (SELECT vec_id AS query_id, v AS qv FROM planted WHERE vec_id < 20),
+ec AS (SELECT vec_id AS neighbor_id, v AS cv FROM planted),
+{scored("ex_scored", "ec, eq", nv="cv")},
+{top_ids("exact", "ex_scored")}
+SELECT '{method}' AS method, COUNT(a.neighbor_id)::BIGINT AS hits, COUNT(*)::BIGINT AS total,
+       ROUND(COUNT(a.neighbor_id)::DOUBLE / COUNT(*), 4) AS recall
+FROM exact e LEFT JOIN ivf a ON e.query_id = a.query_id AND e.neighbor_id = a.neighbor_id
+"""
+
+
 _RECALL_PLANTED_ORACLE = f"""
 WITH {_PLANTED_CTE},
 m AS (SELECT label AS cell, i, AVG(x) AS mval FROM pl GROUP BY 1, 2),
-cents AS (SELECT cell, LIST(mval ORDER BY i) AS cv FROM m GROUP BY cell),
-assign AS (
-  SELECT vec_id, cell,
-         ROW_NUMBER() OVER (
-           PARTITION BY vec_id
-           ORDER BY ROUND(list_dot_product(v, cv)
-                          / (sqrt(list_dot_product(v, v)) * sqrt(list_dot_product(cv, cv))), 6) DESC,
-                    cell) AS rk
-  FROM planted CROSS JOIN cents),
+{CENTS},
+{assign(src="planted CROSS JOIN cents")},
 cellof AS (SELECT vec_id, cell FROM assign WHERE rk = 1),
 q AS (SELECT p.vec_id AS query_id, p.v AS qv, c.cell
       FROM planted p JOIN cellof c USING (vec_id) WHERE p.vec_id < 20),
 nb AS (SELECT p.vec_id AS neighbor_id, p.v AS nv, c.cell
        FROM planted p JOIN cellof c USING (vec_id)),
-ivf_scored AS (
-  SELECT query_id, neighbor_id,
-         list_dot_product(qv, nv)
-           / (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(nv, nv))) AS cos
-  FROM q JOIN nb USING (cell) WHERE neighbor_id <> query_id),
-ivf AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT query_id, neighbor_id,
-           ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rank
-    FROM ivf_scored) WHERE rank <= 5),
-eq AS (SELECT vec_id AS query_id, v AS qv FROM planted WHERE vec_id < 20),
-ec AS (SELECT vec_id AS neighbor_id, v AS cv FROM planted),
-ex_scored AS (
-  SELECT query_id, neighbor_id,
-         list_dot_product(qv, cv)
-           / (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(cv, cv))) AS cos
-  FROM ec, eq WHERE neighbor_id <> query_id),
-exact AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT query_id, neighbor_id,
-           ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rank
-    FROM ex_scored) WHERE rank <= 5)
-SELECT 'ivf_planted' AS method, COUNT(a.neighbor_id)::BIGINT AS hits, COUNT(*)::BIGINT AS total,
-       ROUND(COUNT(a.neighbor_id)::DOUBLE / COUNT(*), 4) AS recall
-FROM exact e LEFT JOIN ivf a ON e.query_id = a.query_id AND e.neighbor_id = a.neighbor_id
-"""
+{_planted_recall("ivf_planted")}"""
+
+
+def _planted(spark, sf_dir):
+    """The gate embeddings with the label-axis cluster planted."""
+    v = F.col("embedding").cast("array<double>")
+    # 2-arg lambda = (element, index) dispatch, used deliberately here
+    return _emb(spark, sf_dir).select(
+        "vec_id",
+        "label",
+        F.transform(
+            v,
+            lambda x, i: 0.3 * x + F.when(i == F.col("label"), 1.0).otherwise(0.0),
+        ).alias("embedding"),
+    )
 
 
 @query(
@@ -848,35 +810,12 @@ FROM exact e LEFT JOIN ivf a ON e.query_id = a.query_id AND e.neighbor_id = a.ne
     "baseline: same machinery, structured data, high recall.",
 )
 def ann_recall_planted(spark, sf_dir):
-    emb = _emb(spark, sf_dir)
-    v = F.col("embedding").cast("array<double>")
-    # 2-arg lambda = (element, index) dispatch, used deliberately here
-    planted = emb.select(
-        "vec_id",
-        "label",
-        F.transform(
-            v,
-            lambda x, i: 0.3 * x + F.when(i == F.col("label"), 1.0).otherwise(0.0),
-        ).alias("embedding"),
-    )
+    planted = _planted(spark, sf_dir)
     q20 = planted.filter(F.col("vec_id") < 20)
     cents = similarity.embedding_centroids(planted, dim=_IVF_DIM).cache()
     exact = similarity.cosine_topk(planted, q20, k=5).select("query_id", "neighbor_id")
     ivf = similarity.ivf_topk(planted, q20, cents, k=5).select("query_id", "neighbor_id")
-    j = exact.join(ivf.withColumn("__h", F.lit(1)), ["query_id", "neighbor_id"], "left")
-    return (
-        j.groupBy(F.lit("ivf_planted").alias("method"))
-        .agg(
-            F.sum(F.coalesce("__h", F.lit(0))).alias("hits"),
-            F.count(F.lit(1)).alias("total"),
-        )
-        .select(
-            "method",
-            "hits",
-            "total",
-            F.round(F.col("hits") / F.col("total"), 4).alias("recall"),
-        )
-    )
+    return _recall_row("ivf_planted", exact, ivf)
 
 
 # -------------------------------------------------- unlabeled IVF training
@@ -900,7 +839,7 @@ def _lloyd_ctes(iters: int) -> str:
             f"""a{t} AS (
   SELECT vec_id, v, cell,
          ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY
-           ROUND(list_dot_product(v, cv) / (sqrt(list_dot_product(v, v)) * sqrt(list_dot_product(cv, cv))), 6) DESC,
+           {CELL_COS} DESC,
            cell) AS rk
   FROM e CROSS JOIN c{t - 1})"""
         )
@@ -949,7 +888,7 @@ b AS (SELECT vec_id, v, {_rp_bucket_sql(_SEED_PLANES, _IVF_DIM)} AS cell FROM e)
 af AS (
   SELECT vec_id, cell,
          ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY
-           ROUND(list_dot_product(v, cv) / (sqrt(list_dot_product(v, v)) * sqrt(list_dot_product(cv, cv))), 6) DESC,
+           {CELL_COS} DESC,
            cell) AS rk
   FROM e CROSS JOIN c{_LLOYD_ITERS}),
 cellof AS (SELECT vec_id, cell FROM af WHERE rk = 1),
@@ -957,32 +896,7 @@ q AS (SELECT e.vec_id AS query_id, e.v AS qv, a.cell
       FROM e JOIN af a USING (vec_id) WHERE e.vec_id < 20 AND a.rk <= 2),
 nb AS (SELECT e.vec_id AS neighbor_id, e.v AS nv, c.cell
        FROM e JOIN cellof c USING (vec_id)),
-ivf_scored AS (
-  SELECT query_id, neighbor_id,
-         list_dot_product(qv, nv)
-           / (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(nv, nv))) AS cos
-  FROM q JOIN nb USING (cell) WHERE neighbor_id <> query_id),
-ivf AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT query_id, neighbor_id,
-           ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rank
-    FROM ivf_scored) WHERE rank <= 5),
-eq AS (SELECT vec_id AS query_id, v AS qv FROM planted WHERE vec_id < 20),
-ec AS (SELECT vec_id AS neighbor_id, v AS cv FROM planted),
-ex_scored AS (
-  SELECT query_id, neighbor_id,
-         list_dot_product(qv, cv)
-           / (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(cv, cv))) AS cos
-  FROM ec, eq WHERE neighbor_id <> query_id),
-exact AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT query_id, neighbor_id,
-           ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rank
-    FROM ex_scored) WHERE rank <= 5)
-SELECT 'ivf_planted_unlabeled' AS method, COUNT(a.neighbor_id)::BIGINT AS hits, COUNT(*)::BIGINT AS total,
-       ROUND(COUNT(a.neighbor_id)::DOUBLE / COUNT(*), 4) AS recall
-FROM exact e LEFT JOIN ivf a ON e.query_id = a.query_id AND e.neighbor_id = a.neighbor_id
-"""
+{_planted_recall("ivf_planted_unlabeled")}"""
 
 
 @query(
@@ -994,16 +908,7 @@ FROM exact e LEFT JOIN ivf a ON e.query_id = a.query_id AND e.neighbor_id = a.ne
     "recall 1.0 at the gate SF, same machinery as ann_recall_planted.",
 )
 def ann_recall_planted_unlabeled(spark, sf_dir):
-    emb = _emb(spark, sf_dir)
-    v = F.col("embedding").cast("array<double>")
-    planted = emb.select(
-        "vec_id",
-        "label",
-        F.transform(
-            v,
-            lambda x, i: 0.3 * x + F.when(i == F.col("label"), 1.0).otherwise(0.0),
-        ).alias("embedding"),
-    )
+    planted = _planted(spark, sf_dir)
     q20 = planted.filter(F.col("vec_id") < 20)
     cents = similarity.train_ivf_centroids(
         planted, dim=_IVF_DIM, n_planes=_SEED_PLANES, iters=_LLOYD_ITERS
@@ -1012,20 +917,7 @@ def ann_recall_planted_unlabeled(spark, sf_dir):
     ivf = similarity.ivf_topk(planted, q20, cents, k=5, n_probe=2).select(
         "query_id", "neighbor_id"
     )
-    j = exact.join(ivf.withColumn("__h", F.lit(1)), ["query_id", "neighbor_id"], "left")
-    return (
-        j.groupBy(F.lit("ivf_planted_unlabeled").alias("method"))
-        .agg(
-            F.sum(F.coalesce("__h", F.lit(0))).alias("hits"),
-            F.count(F.lit(1)).alias("total"),
-        )
-        .select(
-            "method",
-            "hits",
-            "total",
-            F.round(F.col("hits") / F.col("total"), 4).alias("recall"),
-        )
-    )
+    return _recall_row("ivf_planted_unlabeled", exact, ivf)
 
 
 # --------------------------------------------------------- sequence packing
@@ -1035,7 +927,7 @@ _PACK_SHARDS = 4
 
 _PACK_ORACLE = rf"""
 WITH toks AS (
-  SELECT doc_id, string_split_regex(trim(text), '\s+') AS t FROM documents),
+  SELECT doc_id, {WS_TOKENS} AS t FROM documents),
 st AS (SELECT doc_id, t, unnest(range(0, len(t), {_CHUNK_STRIDE})) AS s FROM toks),
 chunks AS (
   SELECT doc_id, (s // {_CHUNK_STRIDE}) AS chunk_id,
@@ -1078,7 +970,7 @@ def sequence_packing(spark, sf_dir):
 # bin_tokens == budget for every non-terminal bin is part of the values
 _BINS_ORACLE = rf"""
 WITH toks AS (
-  SELECT doc_id, string_split_regex(trim(text), '\s+') AS t FROM documents),
+  SELECT doc_id, {WS_TOKENS} AS t FROM documents),
 st AS (SELECT doc_id, t, unnest(range(0, len(t), {_CHUNK_STRIDE})) AS s FROM toks),
 chunks AS (
   SELECT doc_id, (s // {_CHUNK_STRIDE}) AS chunk_id,
@@ -1130,7 +1022,7 @@ def packed_bins(spark, sf_dir):
 
 # ------------------------------------------------------ int8 quantized ANN
 
-_QTOPK_ORACLE = """
+_QTOPK_ORACLE = f"""
 WITH qz AS (
   SELECT vec_id,
          list_transform(embedding::DOUBLE[],
@@ -1138,16 +1030,8 @@ WITH qz AS (
   FROM embeddings),
 q AS (SELECT vec_id AS query_id, qv::DOUBLE[] AS qvec FROM qz WHERE vec_id < 5),
 c AS (SELECT vec_id AS neighbor_id, qv::DOUBLE[] AS cvec FROM qz),
-scored AS (
-  SELECT query_id, neighbor_id,
-         list_dot_product(qvec, cvec)
-           / (sqrt(list_dot_product(qvec, qvec)) * sqrt(list_dot_product(cvec, cvec))) AS cos
-  FROM c, q WHERE neighbor_id <> query_id),
-ranked AS (
-  SELECT query_id, neighbor_id, cos,
-         ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rank
-  FROM scored)
-SELECT query_id, neighbor_id, rank, ROUND(cos, 4) AS cos_sim FROM ranked WHERE rank <= 5
+{scored("scored", "c, q", "qvec", "cvec")},
+{COS_TOP5}
 """
 
 

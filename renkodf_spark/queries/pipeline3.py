@@ -18,6 +18,7 @@ from renkodf_spark.operators import corpus, pq, similarity, text
 from renkodf_spark.queries.pipeline import _docs, _emb
 from renkodf_spark.sources.tables import load_table
 from renkodf_spark.queries.pipeline2 import _CENTROID_CTES, _IVF_DIM as _SEM_DIM
+from renkodf_spark.queries.ctes import IVF_ROUTE, MEM, WS_TOKENS, cosine
 from renkodf_spark.queries.registry import query
 
 # -------------------------------------------------------- decontamination
@@ -117,9 +118,9 @@ def decontaminated_corpus(spark, sf_dir):
 # BIGINT and all sums are exact integer arithmetic, so the only float
 # step both engines share is ln() of identical doubles (same ROUND-once
 # convention as tfidf_top_terms' score rank).
-_UNIGRAM_ORACLE = r"""
+_UNIGRAM_ORACLE = rf"""
 WITH toks AS (
-  SELECT doc_id, string_split_regex(trim(text), '\s+') AS t FROM documents),
+  SELECT doc_id, {WS_TOKENS} AS t FROM documents),
 pairs AS (SELECT doc_id, unnest(t) AS term FROM toks),
 tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM pairs GROUP BY 1, 2),
 counts AS (SELECT term, SUM(tf) AS cnt FROM tf GROUP BY 1),
@@ -159,24 +160,12 @@ _SEMDEDUP_THR = 0.4
 _SEMDEDUP_ORACLE = (
     _CENTROID_CTES
     + f""",
-cents AS (SELECT cell, LIST(mval ORDER BY i) AS cv FROM m GROUP BY cell),
-vecs AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-assign AS (
-  SELECT vec_id, cell,
-         ROW_NUMBER() OVER (
-           PARTITION BY vec_id
-           ORDER BY ROUND(list_dot_product(v, cv)
-                          / (sqrt(list_dot_product(v, v)) * sqrt(list_dot_product(cv, cv))), 6) DESC,
-                    cell) AS rk
-  FROM vecs CROSS JOIN cents),
-mem AS (
-  SELECT c.vec_id, c.cell, v.v
-  FROM (SELECT vec_id, cell FROM assign WHERE rk = 1) c JOIN vecs v USING (vec_id)),
+{IVF_ROUTE},
+{MEM},
 dropped AS (
   SELECT DISTINCT a.vec_id
   FROM mem a JOIN mem b ON a.cell = b.cell AND a.vec_id > b.vec_id
-  WHERE ROUND(list_dot_product(a.v, b.v)
-              / (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v))), 6)
+  WHERE ROUND({cosine('a.v', 'b.v')}, 6)
         >= {_SEMDEDUP_THR})
 SELECT mem.vec_id, mem.cell FROM mem LEFT JOIN dropped USING (vec_id)
 WHERE dropped.vec_id IS NULL
@@ -206,19 +195,8 @@ _SEMDEDUP_CAP = 20
 _SEMDEDUP_CAPPED_ORACLE = (
     _CENTROID_CTES
     + f""",
-cents AS (SELECT cell, LIST(mval ORDER BY i) AS cv FROM m GROUP BY cell),
-vecs AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-assign AS (
-  SELECT vec_id, cell,
-         ROW_NUMBER() OVER (
-           PARTITION BY vec_id
-           ORDER BY ROUND(list_dot_product(v, cv)
-                          / (sqrt(list_dot_product(v, v)) * sqrt(list_dot_product(cv, cv))), 6) DESC,
-                    cell) AS rk
-  FROM vecs CROSS JOIN cents),
-mem AS (
-  SELECT c.vec_id, c.cell, v.v
-  FROM (SELECT vec_id, cell FROM assign WHERE rk = 1) c JOIN vecs v USING (vec_id)),
+{IVF_ROUTE},
+{MEM},
 subbed AS (
   SELECT vec_id, cell, v,
          vec_id % CAST(CEIL(COUNT(*) OVER (PARTITION BY cell)
@@ -228,8 +206,7 @@ dropped AS (
   SELECT DISTINCT a.vec_id
   FROM subbed a JOIN subbed b
     ON a.cell = b.cell AND a.sub = b.sub AND a.vec_id > b.vec_id
-  WHERE ROUND(list_dot_product(a.v, b.v)
-              / (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v))), 6)
+  WHERE ROUND({cosine('a.v', 'b.v')}, 6)
         >= {_SEMDEDUP_THR})
 SELECT s.vec_id, s.cell FROM subbed s LEFT JOIN dropped USING (vec_id)
 WHERE dropped.vec_id IS NULL

@@ -17,6 +17,7 @@ from renkodf_spark.plans.persist import persist_block
 from renkodf_spark.queries.pipeline import _docs, _emb
 from renkodf_spark.queries.pipeline2 import _IVF_DIM
 from renkodf_spark.queries.pipeline3 import _PQ_ASSIGN_CTES, _PQ_DSUB, _PQ_M
+from renkodf_spark.queries.ctes import WS_TOKENS
 from renkodf_spark.queries.registry import query
 
 # --------------------------------------------------------- Gopher rules
@@ -36,7 +37,7 @@ _STOP_HITS_SQL = " + ".join(
 _GOPHER_ORACLE = rf"""
 WITH f AS (
   SELECT doc_id, text,
-         string_split_regex(trim(text), '\s+') AS t,
+         {WS_TOKENS} AS t,
          string_split(text, chr(10)) AS ls
   FROM documents),
 s AS (
@@ -162,7 +163,7 @@ _UNK = -1
 
 _VOCAB_CTES = rf"""
 WITH pairs AS (
-  SELECT unnest(string_split_regex(trim(text), '\s+')) AS term
+  SELECT unnest({WS_TOKENS}) AS term
   FROM documents),
 counts AS (SELECT term, COUNT(*) AS cnt FROM pairs GROUP BY 1),
 vocab AS (
@@ -178,7 +179,7 @@ _ENCODE_ORACLE = (
     + rf""",
 lx AS (
   SELECT doc_id, unnest(range(1, len(t) + 1)) AS pos, t
-  FROM (SELECT doc_id, string_split_regex(trim(text), '\s+') AS t
+  FROM (SELECT doc_id, {WS_TOKENS} AS t
         FROM documents)),
 p AS (SELECT doc_id, pos, t[pos] AS term FROM lx),
 j AS (

@@ -20,6 +20,7 @@ from renkodf_spark.operators import corpus, dedup, text
 from renkodf_spark.plans.hints import maybe_broadcast_verdict
 from renkodf_spark.plans.persist import persist_block
 from renkodf_spark.queries.pipeline import _PAIRS_CTES, _docs, _shared_pairs
+from renkodf_spark.queries.ctes import COMPONENT_WALK, COS_RANK, WS_TOKENS, cosine
 from renkodf_spark.queries.registry import query
 
 # ------------------------------------------- quality-aware dedup keep
@@ -28,17 +29,8 @@ from renkodf_spark.queries.registry import query
 # the representative election: highest n_chars, ties to smallest id
 _KEEP_ORACLE = (
     _PAIRS_CTES.replace("WITH toks", "WITH RECURSIVE toks", 1)
-    + """,
-edges AS (
-  SELECT id_a AS src, id_b AS dst FROM pairs
-  UNION
-  SELECT id_b AS src, id_a AS dst FROM pairs
-),
-walk(id, node) AS (
-  SELECT doc_id, doc_id FROM documents
-  UNION
-  SELECT w.id, e.dst FROM walk w JOIN edges e ON e.src = w.node
-),
+    + f""",
+{COMPONENT_WALK},
 labels AS (SELECT id, MIN(node) AS cluster_id FROM walk GROUP BY id),
 scored AS (
   SELECT l.id, l.cluster_id, d.n_chars::BIGINT AS score
@@ -79,9 +71,9 @@ def dedup_keep_best(spark, sf_dir):
 
 # unigram-LM CTEs (same integer micro-nat replay as unigram_doc_quality
 # in pipeline3.py) + per-language NTILE over the exact-long quotient
-_BUCKETS_ORACLE = r"""
+_BUCKETS_ORACLE = rf"""
 WITH toks AS (
-  SELECT doc_id, string_split_regex(trim(text), '\s+') AS t FROM documents),
+  SELECT doc_id, {WS_TOKENS} AS t FROM documents),
 prs AS (SELECT doc_id, unnest(t) AS term FROM toks),
 tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM prs GROUP BY 1, 2),
 counts AS (SELECT term, SUM(tf) AS cnt FROM tf GROUP BY 1),
@@ -363,21 +355,17 @@ WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
 p AS (SELECT vec_id, {_proj_sql(_JL_OUT, _JL_DIM)} AS proj FROM e)
 """
 
-_JL_COS = (
-    "list_dot_product(qv, cv) / (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(cv, cv)))"
-)
-
 _JL_TOPK_CTES = (
     _JL_CTES
     + f""",
 pd AS (SELECT vec_id, list_transform(proj, x -> x::DOUBLE) AS pv FROM p),
 q AS (SELECT vec_id AS query_id, pv AS qv FROM pd WHERE vec_id < {{nq}}),
 scored AS (
-  SELECT query_id, c.vec_id AS neighbor_id, {_JL_COS.replace('cv', 'c.pv')} AS cos
+  SELECT query_id, c.vec_id AS neighbor_id, {cosine('qv', 'c.pv')} AS cos
   FROM pd c, q WHERE c.vec_id <> q.query_id),
 ranked AS (
   SELECT query_id, neighbor_id, cos,
-         ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rank
+         {COS_RANK}
   FROM scored)
 """
 )

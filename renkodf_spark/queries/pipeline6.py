@@ -10,6 +10,7 @@ the Spark-side ``F.aggregate`` fold.
 from __future__ import annotations
 
 from renkodf_spark.operators import text
+from renkodf_spark.queries.ctes import CENTS, assign, cosine
 from renkodf_spark.queries.registry import query
 
 _BPE_K = 8
@@ -136,10 +137,25 @@ def bpe_encoded_docs(spark, sf_dir):
 
 # ---------------------------------------------------- hard-negative mining
 
-_COS_HN = (
-    "list_dot_product(qv, cv) / "
-    "(sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(cv, cv)))"
-)
+
+def _mine_tail(cand: str) -> str:
+    """The hard-negative oracles' shared tail over the scored candidate
+    CTE ``cand``: each anchor's best positive, its top-5 negatives, and
+    the is_hard flag."""
+    return f"""pos AS (SELECT anchor_id, MAX(cos) AS pos_cos
+        FROM {cand} WHERE nlabel = alabel GROUP BY 1),
+negk AS (
+  SELECT anchor_id, neighbor_id, cos,
+         ROW_NUMBER() OVER (PARTITION BY anchor_id
+                            ORDER BY cos DESC, neighbor_id) AS rank
+  FROM {cand} WHERE nlabel <> alabel)
+SELECT n.anchor_id, n.neighbor_id, n.rank,
+       ROUND(n.cos, 4) AS neg_sim, ROUND(p.pos_cos, 4) AS best_positive_sim,
+       CASE WHEN p.pos_cos IS NULL THEN NULL
+            ELSE (n.cos > p.pos_cos)::INT END AS is_hard
+FROM negk n LEFT JOIN pos p USING (anchor_id) WHERE n.rank <= 5
+"""
+
 
 _HARDNEG_ORACLE = f"""
 WITH a AS (SELECT vec_id AS anchor_id, label AS alabel, embedding::DOUBLE[] AS qv
@@ -147,21 +163,9 @@ WITH a AS (SELECT vec_id AS anchor_id, label AS alabel, embedding::DOUBLE[] AS q
 c AS (SELECT vec_id AS neighbor_id, label AS nlabel, embedding::DOUBLE[] AS cv
       FROM embeddings),
 scored AS (
-  SELECT anchor_id, alabel, neighbor_id, nlabel, {_COS_HN} AS cos
+  SELECT anchor_id, alabel, neighbor_id, nlabel, {cosine("qv", "cv")} AS cos
   FROM c, a WHERE neighbor_id <> anchor_id),
-pos AS (SELECT anchor_id, MAX(cos) AS pos_cos
-        FROM scored WHERE nlabel = alabel GROUP BY 1),
-negk AS (
-  SELECT anchor_id, neighbor_id, cos,
-         ROW_NUMBER() OVER (PARTITION BY anchor_id
-                            ORDER BY cos DESC, neighbor_id) AS rank
-  FROM scored WHERE nlabel <> alabel)
-SELECT n.anchor_id, n.neighbor_id, n.rank,
-       ROUND(n.cos, 4) AS neg_sim, ROUND(p.pos_cos, 4) AS best_positive_sim,
-       CASE WHEN p.pos_cos IS NULL THEN NULL
-            ELSE (n.cos > p.pos_cos)::INT END AS is_hard
-FROM negk n LEFT JOIN pos p USING (anchor_id) WHERE n.rank <= 5
-"""
+{_mine_tail("scored")}"""
 
 
 @query(
@@ -191,37 +195,18 @@ WITH pos_i AS (SELECT unnest(range(1, 65)) AS i),
 m AS (
   SELECT label AS cell, i, AVG(embedding[i]::DOUBLE) AS mval
   FROM embeddings CROSS JOIN pos_i GROUP BY 1, 2),
-cents AS (SELECT cell, LIST(mval ORDER BY i) AS cv FROM m GROUP BY cell),
+{CENTS},
 vecs AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
-assign AS (
-  SELECT vec_id, cell,
-         ROW_NUMBER() OVER (
-           PARTITION BY vec_id
-           ORDER BY ROUND(list_dot_product(v, cv)
-                          / (sqrt(list_dot_product(v, v)) * sqrt(list_dot_product(cv, cv))), 6) DESC,
-                    cell) AS rk
-  FROM vecs CROSS JOIN cents),
+{assign()},
 anch AS (SELECT v.vec_id AS anchor_id, v.label AS alabel, v.v AS qv, c.cell
          FROM vecs v JOIN assign c USING (vec_id)
          WHERE v.vec_id % 20 = 0 AND c.rk <= 2),
 nb AS (SELECT v.vec_id AS neighbor_id, v.label AS nlabel, v.v AS cv, c.cell
        FROM vecs v JOIN assign c USING (vec_id) WHERE c.rk = 1),
 cand AS (
-  SELECT anchor_id, alabel, neighbor_id, nlabel, {_COS_HN.replace('cv', 'nb.cv')} AS cos
+  SELECT anchor_id, alabel, neighbor_id, nlabel, {cosine('qv', 'nb.cv')} AS cos
   FROM anch JOIN nb USING (cell) WHERE neighbor_id <> anchor_id),
-pos AS (SELECT anchor_id, MAX(cos) AS pos_cos
-        FROM cand WHERE nlabel = alabel GROUP BY 1),
-negk AS (
-  SELECT anchor_id, neighbor_id, cos,
-         ROW_NUMBER() OVER (PARTITION BY anchor_id
-                            ORDER BY cos DESC, neighbor_id) AS rank
-  FROM cand WHERE nlabel <> alabel)
-SELECT n.anchor_id, n.neighbor_id, n.rank,
-       ROUND(n.cos, 4) AS neg_sim, ROUND(p.pos_cos, 4) AS best_positive_sim,
-       CASE WHEN p.pos_cos IS NULL THEN NULL
-            ELSE (n.cos > p.pos_cos)::INT END AS is_hard
-FROM negk n LEFT JOIN pos p USING (anchor_id) WHERE n.rank <= 5
-"""
+{_mine_tail("cand")}"""
 
 
 @query(

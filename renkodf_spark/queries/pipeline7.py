@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from renkodf_spark.operators import classifier
 from renkodf_spark.queries.pipeline import _docs
+from renkodf_spark.queries.ctes import WS_TOKENS
 from renkodf_spark.queries.registry import query
 
 # the "trusted target domain" of the CCNet recipe, deterministic from
@@ -33,7 +34,7 @@ def _positive():
 _NB_CTES = rf"""
 WITH pairs AS (
   SELECT CASE WHEN source = '{_TARGET}' THEN 1 ELSE 0 END AS pos,
-         unnest(string_split_regex(trim(text), '\s+')) AS term
+         unnest({WS_TOKENS}) AS term
   FROM documents),
 counts AS (
   SELECT term,
@@ -51,7 +52,7 @@ model AS (
 tf AS (
   SELECT doc_id, term, COUNT(*) AS tf
   FROM (SELECT doc_id,
-               unnest(string_split_regex(trim(text), '\s+')) AS term
+               unnest({WS_TOKENS}) AS term
         FROM documents)
   GROUP BY 1, 2),
 prior AS (

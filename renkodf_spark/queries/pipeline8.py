@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 from renkodf_spark.operators import dedup, similarity, text
 from renkodf_spark.queries.pipeline import _docs, _emb
 from renkodf_spark.queries.pipeline2 import _CENTROID_CTES, _IVF_DIM
+from renkodf_spark.queries.ctes import IVF_ROUTE, MEM, WS_TOKENS, cosine
 from renkodf_spark.queries.registry import query
 
 # the trusted target domain (the CCNet "train on Wikipedia" stand-in),
@@ -39,7 +40,7 @@ def _bigram_model(spark, sf_dir):
 # integer-derived doubles (BIGINT / BIGINT is true division in both).
 _BG_CTES = rf"""
 WITH ttoks AS (
-  SELECT doc_id, string_split_regex(trim(text), '\s+') AS t
+  SELECT doc_id, {WS_TOKENS} AS t
   FROM documents WHERE source = '{_TRUSTED}'),
 uni AS (SELECT unnest(t) AS term FROM ttoks),
 counts AS (SELECT term, CAST(COUNT(*) AS BIGINT) AS cnt FROM uni GROUP BY 1),
@@ -58,7 +59,7 @@ bmodel AS (
          CAST(ROUND(ln(cnt2 / cnt) * 1e6) AS BIGINT) AS tm
   FROM bcounts JOIN umodel ON w1 = term),
 atoks AS (
-  SELECT doc_id, string_split_regex(trim(text), '\s+') AS t FROM documents),
+  SELECT doc_id, {WS_TOKENS} AS t FROM documents),
 firsts AS (SELECT doc_id, t[1] AS term, CAST(len(t) AS BIGINT) AS n FROM atoks),
 apos AS (SELECT doc_id, unnest(range(1, len(t))) AS i, t FROM atoks),
 abi AS (SELECT doc_id, t[i] AS w1, t[i + 1] AS w2 FROM apos),
@@ -167,23 +168,11 @@ _KNN_K = 3
 _KNN_CTES = (
     _CENTROID_CTES
     + f""",
-cents AS (SELECT cell, LIST(mval ORDER BY i) AS cv FROM m GROUP BY cell),
-vecs AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-assign AS (
-  SELECT vec_id, cell,
-         ROW_NUMBER() OVER (
-           PARTITION BY vec_id
-           ORDER BY ROUND(list_dot_product(v, cv)
-                          / (sqrt(list_dot_product(v, v)) * sqrt(list_dot_product(cv, cv))), 6) DESC,
-                    cell) AS rk
-  FROM vecs CROSS JOIN cents),
-mem AS (
-  SELECT c.vec_id, c.cell, v.v
-  FROM (SELECT vec_id, cell FROM assign WHERE rk = 1) c JOIN vecs v USING (vec_id)),
+{IVF_ROUTE},
+{MEM},
 knnpairs AS (
   SELECT a.vec_id AS src, b.vec_id AS dst,
-         ROUND(list_dot_product(a.v, b.v)
-               / (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v))), 6) + 0.0
+         ROUND({cosine('a.v', 'b.v')}, 6) + 0.0
            AS cos_sim
   FROM mem a JOIN mem b ON a.cell = b.cell AND a.vec_id <> b.vec_id),
 knn AS (
@@ -363,10 +352,10 @@ from renkodf_spark.queries.pipeline import _PAIRS_CTES, _shared_pairs  # noqa: E
 
 _WJACC_ORACLE = (
     _PAIRS_CTES
-    + r""",
+    + rf""",
 dterms AS (
   SELECT doc_id,
-         unnest(list_distinct(string_split_regex(trim(text), '\s+'))) AS term
+         unnest(list_distinct({WS_TOKENS})) AS term
   FROM documents),
 dfreq AS (SELECT term, CAST(COUNT(*) AS BIGINT) AS dfq FROM dterms GROUP BY 1),
 nd AS (SELECT COUNT(*) AS n FROM documents),

@@ -21,6 +21,7 @@ from renkodf_spark.functions import quantiles as qsk
 from renkodf_spark.operators import setsim
 from renkodf_spark.plans.persist import persist_block
 from renkodf_spark.queries.pipeline import _docs
+from renkodf_spark.queries.ctes import COMPONENT_WALK, WS_TOKENS
 from renkodf_spark.queries.registry import query
 from renkodf_spark.sources.tables import load_table
 
@@ -31,7 +32,7 @@ _SS_TNUM, _SS_TDEN = 1, 2  # Jaccard threshold 1/2, exact rational
 # winnowing BIGINT convention, identical on both engines
 _SETSIM_CTES = rf"""
 WITH toks AS (
-  SELECT doc_id, string_split_regex(trim(text), '\s+') AS t FROM documents),
+  SELECT doc_id, {WS_TOKENS} AS t FROM documents),
 gr AS (
   SELECT doc_id,
          unnest([('0x' || substr(md5(concat_ws(' ', t[i + 1], t[i + 2], t[i + 3])), 1, 12))::BIGINT
@@ -102,8 +103,28 @@ _QK = 64  # 2^6 sub-buckets per octave: relative error <= 1/64
 _QB = 6
 _QS = [(1, 2), (19, 20), (99, 100)]
 
-# integer-cents values + the integer-exact log-linear bucket (e, m) —
-# the shift/bin primitives evaluate identically in both engines
+# the integer-exact log-linear bucket (e, m) of a BIGINT ``v`` — the
+# shift/bin primitives evaluate identically in both engines
+_BUCKET_EM = rf"""CASE WHEN v <= 0 THEN -1 ELSE length(bin(v)) - 1 END AS e,
+         CASE WHEN v <= 0 THEN CAST(0 AS BIGINT)
+              WHEN length(bin(v)) - 1 >= {_QB}
+                THEN (v - (CAST(1 AS BIGINT) << (length(bin(v)) - 1))) >> (length(bin(v)) - 1 - {_QB})
+              ELSE ((v - (CAST(1 AS BIGINT) << (length(bin(v)) - 1))) << {_QB})
+                   // (CAST(1 AS BIGINT) << (length(bin(v)) - 1)) END AS m"""
+# per-group running and total bucket counts of the sketch ``sk``
+_SK_CUM = """cum AS (
+  SELECT g, e, m, cnt,
+         SUM(cnt) OVER (PARTITION BY g ORDER BY e, m) AS cum,
+         SUM(cnt) OVER (PARTITION BY g) AS n
+  FROM sk)"""
+# the value estimate of bucket (e, m): its lower bound, rounded up
+_BUCKET_EST = rf"""CASE WHEN e < 0 THEN CAST(0 AS BIGINT)
+              WHEN e >= {_QB}
+                THEN (CAST(1 AS BIGINT) << e) + m * (CAST(1 AS BIGINT) << (e - {_QB}))
+              ELSE (CAST(1 AS BIGINT) << e)
+                   + ((m * (CAST(1 AS BIGINT) << e) + {_QK - 1}) >> {_QB}) END AS est"""
+
+# integer-cents values + their bucket
 _QSK_CTES = rf"""
 WITH v AS (
   SELECT l_returnflag AS g, l_linestatus AS s,
@@ -111,12 +132,7 @@ WITH v AS (
   FROM lineitem),
 bk AS (
   SELECT g, s,
-         CASE WHEN v <= 0 THEN -1 ELSE length(bin(v)) - 1 END AS e,
-         CASE WHEN v <= 0 THEN CAST(0 AS BIGINT)
-              WHEN length(bin(v)) - 1 >= {_QB}
-                THEN (v - (CAST(1 AS BIGINT) << (length(bin(v)) - 1))) >> (length(bin(v)) - 1 - {_QB})
-              ELSE ((v - (CAST(1 AS BIGINT) << (length(bin(v)) - 1))) << {_QB})
-                   // (CAST(1 AS BIGINT) << (length(bin(v)) - 1)) END AS m
+         {_BUCKET_EM}
   FROM v),
 fine AS (SELECT g, s, e, m, CAST(COUNT(*) AS BIGINT) AS cnt FROM bk GROUP BY 1, 2, 3, 4),
 sk AS (SELECT g, e, m, CAST(SUM(cnt) AS BIGINT) AS cnt FROM fine GROUP BY 1, 2, 3)
@@ -148,11 +164,7 @@ def quantile_sketch_buckets(spark, sf_dir):
     "quantile_sketch_estimates",
     oracle=_QSK_CTES
     + rf""",
-cum AS (
-  SELECT g, e, m, cnt,
-         SUM(cnt) OVER (PARTITION BY g ORDER BY e, m) AS cum,
-         SUM(cnt) OVER (PARTITION BY g) AS n
-  FROM sk),
+{_SK_CUM},
 qs AS (SELECT * FROM (VALUES (1, 2, 500), (19, 20, 950), (99, 100, 990)) t(qn, qd, qp)),
 sel AS (
   SELECT g, qp, n, (qn * n + qd - 1) // qd AS r, e, m,
@@ -161,11 +173,7 @@ sel AS (
   WHERE cum >= (qn * n + qd - 1) // qd),
 est AS (
   SELECT g, qp, n, r, e, m,
-         CASE WHEN e < 0 THEN CAST(0 AS BIGINT)
-              WHEN e >= {_QB}
-                THEN (CAST(1 AS BIGINT) << e) + m * (CAST(1 AS BIGINT) << (e - {_QB}))
-              ELSE (CAST(1 AS BIGINT) << e)
-                   + ((m * (CAST(1 AS BIGINT) << e) + {_QK - 1}) >> {_QB}) END AS est
+         {_BUCKET_EST}
   FROM sel WHERE rk = 1),
 ranked AS (
   SELECT g, v, ROW_NUMBER() OVER (PARTITION BY g ORDER BY v) AS rk FROM v),
@@ -244,6 +252,27 @@ from renkodf_spark.queries.pipeline8 import (  # noqa: E402
 _PR_ITERS = 3
 _PR_SCALE = 10**12
 _PR_DNUM, _PR_DDEN = 85, 100
+# the teleport term of every node's rank
+_PR_BASE = f"(({_PR_DDEN - _PR_DNUM} * (SELECT pr0 FROM pb)) // {_PR_DDEN})"
+
+
+def _pr_iters(base: str, *, contrib: str = "p.pr // o.od", cols: str = "n.id") -> str:
+    """The PageRank oracles' fixpoint over ``pnodes``/``pedges``/``outd``
+    from ``pr0``: ``_PR_ITERS`` integer iterations, each node's rank
+    ``base`` plus the damped sum of its in-edges' ``contrib``, then the
+    final ranks."""
+    iters = "".join(
+        f""",
+pr{t} AS (
+  SELECT {cols},
+         CAST({base} + ({_PR_DNUM} * COALESCE(s.c, 0)) // {_PR_DDEN} AS BIGINT) AS pr
+  FROM pnodes n LEFT JOIN (
+    SELECT e.dst, SUM({contrib}) AS c
+    FROM pedges e JOIN pr{t - 1} p ON p.id = e.src JOIN outd o ON o.src = e.src
+    GROUP BY 1) s ON s.dst = n.id)"""
+        for t in range(1, _PR_ITERS + 1)
+    )
+    return iters + f"\nSELECT id AS vec_id, pr FROM pr{_PR_ITERS}"
 
 
 def _pr_oracle() -> str:
@@ -256,19 +285,7 @@ pb AS (SELECT {_PR_SCALE} // COUNT(*) AS pr0 FROM pnodes),
 outd AS (SELECT src, CAST(COUNT(*) AS BIGINT) AS od FROM pedges GROUP BY 1),
 pr0 AS (SELECT id, (SELECT pr0 FROM pb) AS pr FROM pnodes)"""
     )
-    base = f"(({_PR_DDEN - _PR_DNUM} * (SELECT pr0 FROM pb)) // {_PR_DDEN})"
-    iters = "".join(
-        f""",
-pr{t} AS (
-  SELECT n.id,
-         CAST({base} + ({_PR_DNUM} * COALESCE(s.c, 0)) // {_PR_DDEN} AS BIGINT) AS pr
-  FROM pnodes n LEFT JOIN (
-    SELECT e.dst, SUM(p.pr // o.od) AS c
-    FROM pedges e JOIN pr{t - 1} p ON p.id = e.src JOIN outd o ON o.src = e.src
-    GROUP BY 1) s ON s.dst = n.id)"""
-        for t in range(1, _PR_ITERS + 1)
-    )
-    return head + iters + f"\nSELECT id AS vec_id, pr FROM pr{_PR_ITERS}"
+    return head + _pr_iters(_PR_BASE)
 
 
 @query(
@@ -286,14 +303,20 @@ pr{t} AS (
 def knn_pagerank(spark, sf_dir):
     emb = _emb(spark, sf_dir)
     edges = _shared_knn_edges(spark, sf_dir)
-    nodes = emb.select(F.col("vec_id").alias("id"))
+    return _knn_rank(edges.select("src", "dst"), emb)
+
+
+def _knn_rank(edges, emb, **kw):
+    """``graph.pagerank`` over kNN ``edges`` and ``emb``'s vectors at the
+    oracles' fixed-point settings, as ``(vec_id, pr)``."""
     pr = graph.pagerank(
-        edges.select("src", "dst"),
-        nodes,
+        edges,
+        emb.select(F.col("vec_id").alias("id")),
         iterations=_PR_ITERS,
         d_num=_PR_DNUM,
         d_den=_PR_DDEN,
         scale=_PR_SCALE,
+        **kw,
     )
     return pr.select(F.col("id").alias("vec_id"), "pr")
 
@@ -311,21 +334,7 @@ pb AS (SELECT {_PR_SCALE} // COUNT(*) AS pr0 FROM pnodes WHERE sd),
 outd AS (SELECT src, CAST(COUNT(*) AS BIGINT) AS od FROM pedges GROUP BY 1),
 pr0 AS (SELECT id, sd, CASE WHEN sd THEN (SELECT pr0 FROM pb) ELSE 0 END AS pr FROM pnodes)"""
     )
-    base = (
-        f"CASE WHEN n.sd THEN (({_PR_DDEN - _PR_DNUM} * (SELECT pr0 FROM pb)) // {_PR_DDEN}) ELSE 0 END"
-    )
-    iters = "".join(
-        f""",
-pr{t} AS (
-  SELECT n.id, n.sd,
-         CAST({base} + ({_PR_DNUM} * COALESCE(s.c, 0)) // {_PR_DDEN} AS BIGINT) AS pr
-  FROM pnodes n LEFT JOIN (
-    SELECT e.dst, SUM(p.pr // o.od) AS c
-    FROM pedges e JOIN pr{t - 1} p ON p.id = e.src JOIN outd o ON o.src = e.src
-    GROUP BY 1) s ON s.dst = n.id)"""
-        for t in range(1, _PR_ITERS + 1)
-    )
-    return head + iters + f"\nSELECT id AS vec_id, pr FROM pr{_PR_ITERS}"
+    return head + _pr_iters(f"CASE WHEN n.sd THEN {_PR_BASE} ELSE 0 END", cols="n.id, n.sd")
 
 
 @query(
@@ -342,20 +351,10 @@ pr{t} AS (
 def knn_trustrank(spark, sf_dir):
     emb = _emb(spark, sf_dir)
     edges = _shared_knn_edges(spark, sf_dir)
-    nodes = emb.select(F.col("vec_id").alias("id"))
     seeds = emb.filter(F.col("label") == _TR_SEED_LABEL).select(
         F.col("vec_id").alias("id")
     )
-    pr = graph.pagerank(
-        edges.select("src", "dst"),
-        nodes,
-        iterations=_PR_ITERS,
-        d_num=_PR_DNUM,
-        d_den=_PR_DDEN,
-        scale=_PR_SCALE,
-        seeds=seeds,
-    )
-    return pr.select(F.col("id").alias("vec_id"), "pr")
+    return _knn_rank(edges.select("src", "dst"), emb, seeds=seeds)
 
 
 _SS_SPLIT = 250  # docs >= split are "today's increment" (the dedup_incremental_lsh convention)
@@ -402,19 +401,10 @@ _QT_CTES = rf"""
 WITH v AS (SELECT source AS g, n_chars AS v, doc_id FROM documents),
 bk AS (
   SELECT g, doc_id, v,
-         CASE WHEN v <= 0 THEN -1 ELSE length(bin(v)) - 1 END AS e,
-         CASE WHEN v <= 0 THEN CAST(0 AS BIGINT)
-              WHEN length(bin(v)) - 1 >= {_QB}
-                THEN (v - (CAST(1 AS BIGINT) << (length(bin(v)) - 1))) >> (length(bin(v)) - 1 - {_QB})
-              ELSE ((v - (CAST(1 AS BIGINT) << (length(bin(v)) - 1))) << {_QB})
-                   // (CAST(1 AS BIGINT) << (length(bin(v)) - 1)) END AS m
+         {_BUCKET_EM}
   FROM v),
 sk AS (SELECT g, e, m, CAST(COUNT(*) AS BIGINT) AS cnt FROM bk GROUP BY 1, 2, 3),
-cum AS (
-  SELECT g, e, m, cnt,
-         SUM(cnt) OVER (PARTITION BY g ORDER BY e, m) AS cum,
-         SUM(cnt) OVER (PARTITION BY g) AS n
-  FROM sk),
+{_SK_CUM},
 qs AS (SELECT * FROM (VALUES (1, 20, 50), (19, 20, 950)) t(qn, qd, qp)),
 sel AS (
   SELECT g, qp, n, e, m,
@@ -423,11 +413,7 @@ sel AS (
   WHERE cum >= (qn * n + qd - 1) // qd),
 est AS (
   SELECT g, qp, n,
-         CASE WHEN e < 0 THEN CAST(0 AS BIGINT)
-              WHEN e >= {_QB}
-                THEN (CAST(1 AS BIGINT) << e) + m * (CAST(1 AS BIGINT) << (e - {_QB}))
-              ELSE (CAST(1 AS BIGINT) << e)
-                   + ((m * (CAST(1 AS BIGINT) << e) + {_QK - 1}) >> {_QB}) END AS est
+         {_BUCKET_EST}
   FROM sel WHERE rk = 1),
 bounds AS (
   SELECT g, MAX(n) AS n,
@@ -490,19 +476,7 @@ pb AS (SELECT {_PR_SCALE} // COUNT(*) AS pr0 FROM pnodes),
 outd AS (SELECT src, CAST(SUM(w) AS BIGINT) AS od FROM pedges GROUP BY 1),
 pr0 AS (SELECT id, (SELECT pr0 FROM pb) AS pr FROM pnodes)"""
     )
-    base = f"(({_PR_DDEN - _PR_DNUM} * (SELECT pr0 FROM pb)) // {_PR_DDEN})"
-    iters = "".join(
-        f""",
-pr{t} AS (
-  SELECT n.id,
-         CAST({base} + ({_PR_DNUM} * COALESCE(s.c, 0)) // {_PR_DDEN} AS BIGINT) AS pr
-  FROM pnodes n LEFT JOIN (
-    SELECT e.dst, SUM((p.pr * e.w) // o.od) AS c
-    FROM pedges e JOIN pr{t - 1} p ON p.id = e.src JOIN outd o ON o.src = e.src
-    GROUP BY 1) s ON s.dst = n.id)"""
-        for t in range(1, _PR_ITERS + 1)
-    )
-    return head + iters + f"\nSELECT id AS vec_id, pr FROM pr{_PR_ITERS}"
+    return head + _pr_iters(_PR_BASE, contrib="(p.pr * e.w) // o.od")
 
 
 @query(
@@ -524,17 +498,7 @@ def knn_pagerank_weighted(spark, sf_dir):
             F.round(F.col("cos_sim") * 1e6).cast("long"), F.lit(1)
         ).alias("w"),
     )
-    nodes = emb.select(F.col("vec_id").alias("id"))
-    pr = graph.pagerank(
-        edges,
-        nodes,
-        iterations=_PR_ITERS,
-        d_num=_PR_DNUM,
-        d_den=_PR_DDEN,
-        scale=_PR_SCALE,
-        weight_col="w",
-    )
-    return pr.select(F.col("id").alias("vec_id"), "pr")
+    return _knn_rank(edges, emb, weight_col="w")
 
 
 # exact near-dup clusters: the composition proof that the EXACT join
@@ -550,16 +514,7 @@ pairs AS (
   JOIN sz sa ON sa.doc_id = id_a
   JOIN sz sb ON sb.doc_id = id_b
   WHERE inter * {_SS_TDEN} >= {_SS_TNUM} * (sa.sz + sb.sz - inter)),
-edges AS (
-  SELECT id_a AS src, id_b AS dst FROM pairs
-  UNION
-  SELECT id_b AS src, id_a AS dst FROM pairs
-),
-walk(id, node) AS (
-  SELECT doc_id, doc_id FROM documents
-  UNION
-  SELECT w.id, e.dst FROM walk w JOIN edges e ON e.src = w.node
-)
+{COMPONENT_WALK}
 SELECT id, MIN(node) AS cluster_id FROM walk GROUP BY id
 """
 )
@@ -621,30 +576,17 @@ def setsim_containment_join(spark, sf_dir):
 WITH v AS (SELECT source AS g, n_chars AS v FROM documents),
 bk AS (
   SELECT g, v,
-         CASE WHEN v <= 0 THEN -1 ELSE length(bin(v)) - 1 END AS e,
-         CASE WHEN v <= 0 THEN CAST(0 AS BIGINT)
-              WHEN length(bin(v)) - 1 >= {_QB}
-                THEN (v - (CAST(1 AS BIGINT) << (length(bin(v)) - 1))) >> (length(bin(v)) - 1 - {_QB})
-              ELSE ((v - (CAST(1 AS BIGINT) << (length(bin(v)) - 1))) << {_QB})
-                   // (CAST(1 AS BIGINT) << (length(bin(v)) - 1)) END AS m
+         {_BUCKET_EM}
   FROM v),
 sk AS (SELECT g, e, m, CAST(SUM(v) AS BIGINT) AS cnt FROM bk GROUP BY 1, 2, 3),
-cum AS (
-  SELECT g, e, m, cnt,
-         SUM(cnt) OVER (PARTITION BY g ORDER BY e, m) AS cum,
-         SUM(cnt) OVER (PARTITION BY g) AS n
-  FROM sk),
+{_SK_CUM},
 sel AS (
   SELECT g, n, (1 * n + 1) // 2 AS r, e, m,
          ROW_NUMBER() OVER (PARTITION BY g ORDER BY e, m) AS rk
   FROM cum WHERE cum >= (1 * n + 1) // 2)
 SELECT g AS source, CAST(500 AS BIGINT) AS q_permille,
        CAST(n AS BIGINT) AS n, CAST(r AS BIGINT) AS r,
-       CASE WHEN e < 0 THEN CAST(0 AS BIGINT)
-            WHEN e >= {_QB}
-              THEN (CAST(1 AS BIGINT) << e) + m * (CAST(1 AS BIGINT) << (e - {_QB}))
-            ELSE (CAST(1 AS BIGINT) << e)
-                 + ((m * (CAST(1 AS BIGINT) << e) + {_QK - 1}) >> {_QB}) END AS est
+       {_BUCKET_EST}
 FROM sel WHERE rk = 1
 """,
     doc="mass-weighted quantiles off the sketch: value = doc length, "

@@ -744,6 +744,31 @@ def session_window_events(spark, sf_dir):
 
 # ---------------------------------------------------------------- as-of join
 
+def _purchase_asof(spark, sf_dir, name: str, **frame):
+    """Each click's as-of purchase of the same user (``frame`` picks
+    ``asof_join``'s strictness, direction and tolerance), exported as
+    ``{name}_ts`` and ``{name}_value``."""
+    ev = _t(spark, sf_dir, "events")
+    clicks = ev.filter(F.col("event_type") == "click").select("event_id", "user_id", "ts")
+    purchases = ev.filter(F.col("event_type") == "purchase").select("user_id", "ts", "value")
+    out = asof_join(
+        clicks,
+        purchases,
+        on="user_id",
+        left_time="ts",
+        right_time="ts",
+        right_payload=["ts", "value"],
+        **frame,
+    )
+    return out.select(
+        "event_id",
+        "user_id",
+        "ts",
+        F.col("ts_asof").alias(f"{name}_ts"),
+        F.round(F.col("value_asof"), 4).alias(f"{name}_value"),
+    )
+
+
 @query(
     "asof_purchase_before_click",
     oracle="""
@@ -756,25 +781,7 @@ def session_window_events(spark, sf_dir):
     doc="as-of join (latest purchase strictly before each click), union+window composition.",
 )
 def asof_purchase_before_click(spark, sf_dir):
-    ev = _t(spark, sf_dir, "events")
-    clicks = ev.filter(F.col("event_type") == "click").select("event_id", "user_id", "ts")
-    purchases = ev.filter(F.col("event_type") == "purchase").select("user_id", "ts", "value")
-    out = asof_join(
-        clicks,
-        purchases,
-        on="user_id",
-        left_time="ts",
-        right_time="ts",
-        right_payload=["ts", "value"],
-        strict=True,
-    )
-    return out.select(
-        "event_id",
-        "user_id",
-        "ts",
-        F.col("ts_asof").alias("purchase_ts"),
-        F.round(F.col("value_asof"), 4).alias("purchase_value"),
-    )
+    return _purchase_asof(spark, sf_dir, "purchase", strict=True)
 
 
 @query(
@@ -790,26 +797,7 @@ def asof_purchase_before_click(spark, sf_dir):
     "the mirrored frame of the union+window composition.",
 )
 def asof_next_purchase_after_click(spark, sf_dir):
-    ev = _t(spark, sf_dir, "events")
-    clicks = ev.filter(F.col("event_type") == "click").select("event_id", "user_id", "ts")
-    purchases = ev.filter(F.col("event_type") == "purchase").select("user_id", "ts", "value")
-    out = asof_join(
-        clicks,
-        purchases,
-        on="user_id",
-        left_time="ts",
-        right_time="ts",
-        right_payload=["ts", "value"],
-        strict=True,
-        direction="forward",
-    )
-    return out.select(
-        "event_id",
-        "user_id",
-        "ts",
-        F.col("ts_asof").alias("next_purchase_ts"),
-        F.round(F.col("value_asof"), 4).alias("next_purchase_value"),
-    )
+    return _purchase_asof(spark, sf_dir, "next_purchase", strict=True, direction="forward")
 
 
 @query(
@@ -835,26 +823,7 @@ def asof_next_purchase_after_click(spark, sf_dir):
     "compared in exact integer microseconds on both engines.",
 )
 def asof_nearest_purchase(spark, sf_dir):
-    ev = _t(spark, sf_dir, "events")
-    clicks = ev.filter(F.col("event_type") == "click").select("event_id", "user_id", "ts")
-    purchases = ev.filter(F.col("event_type") == "purchase").select("user_id", "ts", "value")
-    out = asof_join(
-        clicks,
-        purchases,
-        on="user_id",
-        left_time="ts",
-        right_time="ts",
-        right_payload=["ts", "value"],
-        strict=False,
-        direction="nearest",
-    )
-    return out.select(
-        "event_id",
-        "user_id",
-        "ts",
-        F.col("ts_asof").alias("nearest_ts"),
-        F.round(F.col("value_asof"), 4).alias("nearest_value"),
-    )
+    return _purchase_asof(spark, sf_dir, "nearest", strict=False, direction="nearest")
 
 
 @query(
@@ -879,26 +848,7 @@ def asof_nearest_purchase(spark, sf_dir):
 def asof_tolerance_purchase(spark, sf_dir):
     import datetime as dt
 
-    ev = _t(spark, sf_dir, "events")
-    clicks = ev.filter(F.col("event_type") == "click").select("event_id", "user_id", "ts")
-    purchases = ev.filter(F.col("event_type") == "purchase").select("user_id", "ts", "value")
-    out = asof_join(
-        clicks,
-        purchases,
-        on="user_id",
-        left_time="ts",
-        right_time="ts",
-        right_payload=["ts", "value"],
-        strict=True,
-        tolerance=dt.timedelta(minutes=30),
-    )
-    return out.select(
-        "event_id",
-        "user_id",
-        "ts",
-        F.col("ts_asof").alias("purchase_ts"),
-        F.round(F.col("value_asof"), 4).alias("purchase_value"),
-    )
+    return _purchase_asof(spark, sf_dir, "purchase", strict=True, tolerance=dt.timedelta(minutes=30))
 
 
 # ------------------------------------------------------- salted aggregation

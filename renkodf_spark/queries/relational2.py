@@ -7,6 +7,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from renkodf_spark.queries.ctes import WS_TOKENS
 from renkodf_spark.queries.registry import query
 from renkodf_spark.sources.tables import load_table
 
@@ -74,9 +75,9 @@ def union_all_actors(spark, sf_dir):
 
 @query(
     "top_words",
-    oracle=r"""
+    oracle=rf"""
     SELECT word, COUNT(*) AS n FROM (
-      SELECT unnest(string_split_regex(trim(text), '\s+')) AS word FROM documents)
+      SELECT unnest({WS_TOKENS}) AS word FROM documents)
     GROUP BY word ORDER BY n DESC, word LIMIT 20
     """,
     doc="explode(split) + count + deterministic top-k.",

@@ -30,6 +30,7 @@ from renkodf_spark.operators.rangejoin import (
     point_in_interval_join,
 )
 from renkodf_spark.operators.snapshot import snapshot_diff
+from renkodf_spark.queries.ctes import WS_TOKENS
 from renkodf_spark.queries.registry import query
 from renkodf_spark.sources.tables import load_table
 
@@ -484,10 +485,10 @@ def scd2_point_in_time_purchases(spark, sf_dir):
 
 from renkodf_spark.operators import search as search_ops  # noqa: E402
 
-_TOKS_CTE = r"""
+_TOKS_CTE = rf"""
 WITH toks AS (
   SELECT doc_id, t.toks[i + 1] AS term, i AS pos
-  FROM (SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks
+  FROM (SELECT doc_id, {WS_TOKENS} AS toks
         FROM documents) t,
   LATERAL (SELECT unnest(range(len(t.toks))) AS i))
 """
@@ -578,10 +579,10 @@ from renkodf_spark.operators import corpus as corpus_ops  # noqa: E402
 
 @query(
     "lang_token_budget_sample",
-    oracle=r"""
+    oracle=rf"""
     WITH d AS (
       SELECT doc_id, lang,
-             len(string_split_regex(trim(text), '\s+'))::BIGINT AS n_tokens,
+             len({WS_TOKENS})::BIGINT AS n_tokens,
              md5('tokbudget:' || CAST(doc_id AS VARCHAR)) AS key
       FROM documents),
     c AS (
@@ -909,52 +910,10 @@ def customer_7day_order_sum(spark, sf_dir):
     )
 
 
-@query(
-    "bm25_search_spark_vector",
-    oracle=_TOKS_CTE
-    + """,
-    postings AS (
-      SELECT term, doc_id, COUNT(*)::BIGINT AS tf
-      FROM toks GROUP BY term, doc_id),
-    doclen AS (SELECT doc_id, SUM(tf)::BIGINT AS dl FROM postings GROUP BY 1),
-    gstats AS (SELECT COUNT(DISTINCT doc_id)::BIGINT AS n,
-                    SUM(tf)::BIGINT AS total FROM postings),
-    dfreq AS (SELECT term, COUNT(*)::BIGINT AS df FROM postings
-              WHERE term IN ('spark', 'vector') GROUP BY 1),
-    contrib AS (
-      SELECT p.doc_id,
-             ROUND(
-               ln(1.0 + (g.n - f.df + 0.5) / (f.df + 0.5))
-               * (p.tf * 2.2) / (p.tf + 1.2 * (0.25 + 0.75 * d.dl * g.n / g.total))
-               * 1e6)::BIGINT AS c
-      FROM postings p
-      JOIN dfreq f ON f.term = p.term
-      JOIN doclen d ON d.doc_id = p.doc_id
-      CROSS JOIN gstats g
-      WHERE p.term IN ('spark', 'vector')),
-    scored AS (SELECT doc_id, SUM(c)::BIGINT AS score_micros
-               FROM contrib GROUP BY 1)
-    SELECT doc_id, score_micros, rank FROM (
-      SELECT doc_id, score_micros,
-             ROW_NUMBER() OVER (ORDER BY score_micros DESC, doc_id) AS rank
-      FROM scored)
-    WHERE rank <= 20
-    """,
-    doc="BM25 ranked retrieval ('spark vector', top-20, k1=1.2 "
-    "b=0.75): per-term contributions ROUNDed once to integer "
-    "micro-units so per-doc scores are exact long sums in any "
-    "aggregation order; |D|/avgdl computed as dl*N/total from three "
-    "exact longs. The oracle replays the full formula.",
-)
-def bm25_search_spark_vector(spark, sf_dir):
-    docs = _t(spark, sf_dir, "documents")
-    idx = search_ops.build_inverted_index(docs)
-    return search_ops.bm25_topk(idx, ["spark", "vector"], k=20)
-
-
-# ------------------------------------------------------ hybrid retrieval
-
-_BM25_CTES = _TOKS_CTE + """,
+def _bm25_ctes(name: str) -> str:
+    """The BM25 oracle CTEs for 'spark vector' (k1=1.2, b=0.75): the
+    postings, their statistics, and per-doc scores in CTE ``name``."""
+    return _TOKS_CTE + f""",
 postings AS (
   SELECT term, doc_id, COUNT(*)::BIGINT AS tf
   FROM toks GROUP BY term, doc_id),
@@ -974,9 +933,39 @@ contrib AS (
   JOIN doclen d ON d.doc_id = p.doc_id
   CROSS JOIN gstats g
   WHERE p.term IN ('spark', 'vector')),
-bm25 AS (SELECT doc_id, SUM(c)::BIGINT AS score_micros
+{name} AS (SELECT doc_id, SUM(c)::BIGINT AS score_micros
          FROM contrib GROUP BY 1)
 """
+
+
+# the top-20 export of a `scored(doc_id, score_micros)` CTE
+_TOP20 = """
+SELECT doc_id, score_micros, rank FROM (
+  SELECT doc_id, score_micros,
+         ROW_NUMBER() OVER (ORDER BY score_micros DESC, doc_id) AS rank
+  FROM scored)
+WHERE rank <= 20
+"""
+
+
+@query(
+    "bm25_search_spark_vector",
+    oracle=_bm25_ctes("scored") + _TOP20,
+    doc="BM25 ranked retrieval ('spark vector', top-20, k1=1.2 "
+    "b=0.75): per-term contributions ROUNDed once to integer "
+    "micro-units so per-doc scores are exact long sums in any "
+    "aggregation order; |D|/avgdl computed as dl*N/total from three "
+    "exact longs. The oracle replays the full formula.",
+)
+def bm25_search_spark_vector(spark, sf_dir):
+    docs = _t(spark, sf_dir, "documents")
+    idx = search_ops.build_inverted_index(docs)
+    return search_ops.bm25_topk(idx, ["spark", "vector"], k=20)
+
+
+# ------------------------------------------------------ hybrid retrieval
+
+_BM25_CTES = _bm25_ctes("bm25")
 
 
 @query(

@@ -22,6 +22,10 @@ Usage: [SF=sf0.001] [SWEEP_JSON=out.json] python scripts/check_entry.py [query .
 SWEEP_JSON writes the per-query verdicts as a JSON object — the
 committed SWEEP_r{N}.json artifact that proves every registered query
 (not just the driver's bounded gate window) green in the same round.
+
+Each query's time is split in two: ``spark_sec`` (the builder plus
+``toPandas``) and ``oracle_sec`` (the DuckDB oracle plus the compare);
+``sec`` is their sum.
 """
 
 from __future__ import annotations
@@ -139,6 +143,16 @@ def compare(name: str, spark_pdf: pd.DataFrame, duck_pdf: pd.DataFrame) -> list[
     return problems
 
 
+def timing(spark_sec: float, oracle_sec: float) -> dict:
+    """A query's seconds: the Spark side apart from the oracle side,
+    and their sum as ``sec``."""
+    return {
+        "spark_sec": round(spark_sec, 2),
+        "oracle_sec": round(oracle_sec, 2),
+        "sec": round(spark_sec + oracle_sec, 1),
+    }
+
+
 def main():
     only = set(sys.argv[1:])
     from renkodf_spark.session import build_session
@@ -166,6 +180,7 @@ def main():
         t0 = time.time()
         try:
             sdf = builder(spark, SF_DIR).toPandas()
+            spark_sec = time.time() - t0
         except Exception as ex:
             failures.append(name)
             report[name] = {"status": "fail", "detail": f"spark {type(ex).__name__}"}
@@ -173,9 +188,10 @@ def main():
             continue
         if name not in oracles:
             rows_only += 1
-            report[name] = {"status": "rows_only", "rows": len(sdf), "sec": round(time.time() - t0, 1)}
-            print(f"rows  {name}: {len(sdf)} rows ({time.time()-t0:.1f}s) [no oracle]")
+            report[name] = {"status": "rows_only", "rows": len(sdf), **timing(spark_sec, 0.0)}
+            print(f"rows  {name}: {len(sdf)} rows (spark {spark_sec:.1f}s) [no oracle]")
             continue
+        t1 = time.time()
         try:
             rel = con.sql(oracles[name])
             lint = lint_oracle_types(rel)
@@ -191,14 +207,18 @@ def main():
             print(f"FAIL  {name}: duckdb error {str(ex)[:200]}")
             continue
         problems = compare(name, sdf, ddf)
+        oracle_sec = time.time() - t1
         if problems:
             failures.append(name)
             report[name] = {"status": "fail", "detail": "; ".join(problems)[:200]}
             print(f"FAIL  {name}: {'; '.join(problems)}")
         else:
             passed += 1
-            report[name] = {"status": "ok", "rows": len(sdf), "sec": round(time.time() - t0, 1)}
-            print(f"ok    {name}: {len(sdf)} rows ({time.time()-t0:.1f}s)")
+            report[name] = {"status": "ok", "rows": len(sdf), **timing(spark_sec, oracle_sec)}
+            print(
+                f"ok    {name}: {len(sdf)} rows "
+                f"(spark {spark_sec:.1f}s, oracle {oracle_sec:.1f}s)"
+            )
 
     print(f"\n{passed} oracle-matched, {rows_only} rows-only, {len(failures)} failed")
     out_path = os.environ.get("SWEEP_JSON")

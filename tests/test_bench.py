@@ -47,3 +47,28 @@ def test_sampler_profiles_each_visit_from_the_status_store(spark):
     prof = rec["profile"]
     assert prof["jobs"] >= 1 and prof["stages"] >= 1 and prof["tasks"] >= 1
     assert prof["jvm_cpu_s"] >= 0 and prof["write_mb"] > 0 and prof["read_mb"] > 0
+
+
+def test_builder_jobs_are_profiled_apart_from_the_action(spark):
+    """A headline visit runs ``action(build())``: a builder's eager jobs
+    land in the ``builder`` profile, never in the action's."""
+    def eager():
+        df = spark.range(50_000).repartition(2)
+        df.count()  # an eager sub-job, as a builder that persists fires
+        return df
+
+    def lazy():
+        return spark.range(50_000).repartition(2)
+
+    res = bench.sample(
+        spark, [("eager", eager, bench.materialize), ("lazy", lazy, bench.materialize)], passes=1
+    )
+    for name in ("eager", "lazy"):
+        rec = res[name]
+        assert rec["value"] == 50_000 and rec["sec"] >= rec["profile"]["builder"]["sec"] >= 0
+    eager_p, lazy_p = res["eager"]["profile"], res["lazy"]["profile"]
+    assert eager_p["builder"]["jobs"] >= 1 and eager_p["builder"]["stages"] >= 1
+    assert lazy_p["builder"]["jobs"] == 0 and lazy_p["builder"]["stages"] == 0
+    # the action's own jobs are the same whether or not the builder ran any
+    assert eager_p["jobs"] == lazy_p["jobs"] >= 1
+    assert eager_p["stages"] == lazy_p["stages"] >= 1

@@ -84,3 +84,8 @@ def test_values_still_compared_after_kinds_match():
     duck_pdf = pd.DataFrame({"n": pd.array([1, 3], dtype="int64")})
     problems = check_entry.compare("scratch", spark_pdf, duck_pdf)
     assert problems and "differs" in problems[0]
+
+
+def test_timing_keeps_spark_apart_from_oracle():
+    t = check_entry.timing(0.54, 12.91)
+    assert t == {"spark_sec": 0.54, "oracle_sec": 12.91, "sec": 13.4}

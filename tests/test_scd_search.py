@@ -507,3 +507,32 @@ def test_ql_indexed_parity(spark, tmp_path):
     got = sorted(map(tuple, ql_topk_indexed(spark, path, ["x", "b"], k=10, mu=7).collect()))
     want = sorted(map(tuple, ql_topk(idx, ["x", "b"], k=10, mu=7).collect()))
     assert got == want
+
+
+@pytest.mark.parametrize("ranker", ["bm25", "ql"])
+def test_ranked_search_equals_indexed_twin_through_ties(spark, tmp_path, ranker):
+    """bm25_topk / ql_topk and their ``_indexed`` twins share one scorer:
+    equal rows on a corpus whose top-k cut runs through a score tie,
+    with a repeated and an absent query term."""
+    from renkodf_spark.operators import search
+
+    docs = spark.createDataFrame(
+        [(1, "a b c"), (2, "a b"), (3, "b a"), (4, "c c c a"), (5, "d"), (6, "a b")],
+        "doc_id long, text string",
+    )
+    idx = search.build_inverted_index(docs)
+    path = str(tmp_path / "twin")
+    search.write_search_index(idx, path, n_buckets=4)
+    terms = ["b", "a", "b", "nosuch"]
+    mem = getattr(search, f"{ranker}_topk")(idx, terms, k=3)
+    disk = getattr(search, f"{ranker}_topk_indexed")(spark, path, terms, k=3)
+    got, want = sorted(map(tuple, disk.collect())), sorted(map(tuple, mem.collect()))
+    assert got == want
+    # (doc_id, score_micros, rank) in rank order: scores fall, ties to the smaller id
+    ranked = sorted(want, key=lambda r: r[2])
+    assert [r[2] for r in ranked] == [1, 2, 3]
+    assert ranked == sorted(ranked, key=lambda r: (-r[1], r[0]))
+    # docs 2, 3 and 6 hold the same two terms at the same length: one score
+    scores = {r[0]: r[1] for r in mem.unionByName(
+        getattr(search, f"{ranker}_topk")(idx, terms, k=6)).collect()}
+    assert scores[2] == scores[3] == scores[6]
