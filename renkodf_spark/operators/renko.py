@@ -19,8 +19,10 @@ guard and `scan_group`):
   ``(symbol, __time, __price)`` projection and the null/NaN filter;
   `slim_ticks` adds the batch hosts' ``__seq``.
 - `sorted_ticks`: one group's ticks in the canonical stable
-  ``(__time, __seq)`` order; `partition_bricks`, renko()'s body, sorts
-  a whole shuffle partition by symbol first, then scans each symbol.
+  ``(__time, __seq)`` order; `symbol_runs` sorts a whole partition by
+  symbol first and yields each symbol's (or sub-chunk's) run in that
+  order: it is the walk of renko()'s body `partition_bricks` and of
+  the sub-chunk spec pass.
 - `scan_group`: seed or resume, `kernel.scan`, first-brick label drop;
   returns the surviving brick columns and the next carry.
 - `bricks_table` / `carry_table` / `read_carry`: Arrow output in any
@@ -190,12 +192,25 @@ def renko(
 
 def partition_bricks(batches, schema: T.StructType, brick: float, drop_first: bool):
     """renko()'s host body: the bricks of every symbol in one shuffle
-    partition of `slim_ticks` rows, as ``schema`` record batches.
+    partition of `slim_ticks` rows, as ``schema`` record batches. The
+    shuffle only co-locates a symbol's ticks; `symbol_runs` orders them,
+    so the plan has no Sort, and each run is one `scan_group`."""
+    for sym, _, times, prices, ts_type in symbol_runs(batches):
+        bricks, _ = scan_group(times, prices, brick, drop_first)
+        yield from bricks_table(schema, sym, bricks, ts_type).to_batches()
 
-    The shuffle only co-locates a symbol's ticks; the body orders them
-    itself with one lexsort on (symbol code, ``__time``, ``__seq``), so
-    the plan has no Sort, and the order does not depend on the order in
-    which batches arrive. Each symbol's slice then runs `scan_group`."""
+
+def symbol_runs(batches, split_col: str | None = None):
+    """The sorted tick runs of one partition of `slim_ticks` rows:
+    ``(symbol, split, times, prices, ts_type)`` for each symbol, or for
+    each (symbol, ``split_col`` value) when ``split_col`` names a column
+    that is constant over time-contiguous stretches of a symbol (the
+    sub-chunk id); ``split`` is that value (None without ``split_col``)
+    and ``ts_type`` the session's Arrow timestamp type.
+
+    One lexsort on (symbol code, ``__time``, ``__seq``) orders the whole
+    partition, so the order does not depend on the order in which
+    batches arrive."""
     batches = [b for b in batches if b.num_rows]
     if not batches:
         return
@@ -208,13 +223,17 @@ def partition_bricks(batches, schema: T.StructType, brick: float, drop_first: bo
     order = np.lexsort((tbl.column("__seq").to_numpy(), times.view("int64"), codes))
     codes, times = codes[order], times[order]
     prices = tbl.column("__price").to_numpy()[order]
+    change = np.diff(codes) != 0
+    split = None
+    if split_col is not None:
+        split = tbl.column(split_col).to_numpy()[order]
+        change |= np.diff(split) != 0
     symbols = enc.chunks[0].dictionary
     ts_type = tbl.schema.field("__time").type
-    cuts = np.flatnonzero(np.diff(codes)) + 1
+    cuts = np.flatnonzero(change) + 1
     for lo, hi in zip((0, *cuts), (*cuts, len(codes))):
-        bricks, _ = scan_group(times[lo:hi], prices[lo:hi], brick, drop_first)
         sym = symbols[codes[lo]].as_py()
-        yield from bricks_table(schema, sym, bricks, ts_type).to_batches()
+        yield sym, None if split is None else split[lo], times[lo:hi], prices[lo:hi], ts_type
 
 
 def slim_ticks(

@@ -53,7 +53,10 @@ write per window.
 The window body is the shared Arrow host of ``operators/renko.py``:
 `scan_group` resumes each symbol from its carry (see the carry protocol
 there) and its output packs the bricks and the next carry into one
-table (`PACKED_SCHEMA`, split on ``__row_kind``).
+table (`PACKED_SCHEMA`, split on ``__row_kind``). Every window runs one
+step: that cogroup for every symbol that is not hot in the window,
+plus, only when the window has hot symbols, their sub-chunk pass
+(`renko_subchunk`), under the same two checkpoints.
 
 Output is bit-identical to the one-shot `renko()` (asserted in tests).
 """
@@ -160,8 +163,7 @@ def renko_chunked(
                 instrument["hot_plan_sec"] = round(time.perf_counter() - t0, 3)
                 instrument["hot_pairs"] = len(hot_plan)
         return _run_windows(
-            spark, staged, windows, brick_size, drop_first,
-            instrument=instrument, hot_plan=hot_plan,
+            spark, staged, windows, brick_size, drop_first, hot_plan, instrument=instrument
         )
     finally:
         _delete_path(spark, stage_path)
@@ -178,29 +180,20 @@ def _delete_path(spark, path: str) -> None:
 
 def _hot_plan(spark, staged, threshold: int, target: int) -> dict:
     """Identify (window, symbol) groups whose tick count exceeds the
-    serial-task budget and compute their sub-chunk time boundaries plus
-    collision-free sub-chunk ids.
+    serial-task budget and compute their sub-chunk time boundaries.
 
-    Three small jobs over the staged (already slim, partition-pruned)
-    copy: a count aggregation, approximate time quantiles for the hot
-    pairs only, and one tiny hash probe. Returns
-    ``{(win, symbol): {"bnds": [...micros], "ids": [...]}}`` with
-    ``len(ids) == len(bnds) + 1``; n_sub = ceil(count / max(target,
-    count // 24)), i.e. chunks of ~``target`` ticks, levelling off at
-    ~24 chunks so one group can't swamp the scheduler.
-
-    Why chosen ids: the sub-chunks are few and individually HEAVY, so
-    leaving their shuffle placement to murmur3(symbol, 0..n-1) % P
-    routinely lands several on one reducer and serializes exactly the
-    work this operator exists to parallelize (measured: 3 of 6 chunks
-    on one partition -> parallelism 1.1). The ids are arbitrary labels,
-    so we probe Spark's own hash for a set of candidate ids and pick an
-    ascending subset whose partitions are pairwise distinct per window
-    — deterministic task placement, zero collisions by construction."""
+    Two small jobs over the staged (already slim, partition-pruned)
+    copy: a count aggregation, and approximate time quantiles for the
+    hot pairs only. Returns ``{(win, symbol): [boundary micros...]}``;
+    n_sub = ceil(count / max(target, count // 24)), i.e. chunks of
+    ~``target`` ticks, levelling off at ~24 chunks so one group can't
+    swamp the scheduler. A NULL symbol is never hot: it stays in the
+    window's cogroup, which groups it like any other symbol."""
     import math
 
     counts = (
-        staged.groupBy("__win", "symbol")
+        staged.filter(F.col("symbol").isNotNull())
+        .groupBy("__win", "symbol")
         .count()
         .filter(F.col("count") > threshold)
         .collect()
@@ -224,58 +217,27 @@ def _hot_plan(spark, staged, threshold: int, target: int) -> dict:
         )
         .collect()
     )
-    # one probe of Spark's murmur3 per distinct hot symbol x candidate id
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    syms = sorted({s for (_, s) in want})
-    cand = spark.createDataFrame(
-        [(s, i) for s in syms for i in range(256)], ["symbol", "__sub"]
-    ).select(
-        "symbol",
-        "__sub",
-        F.pmod(F.hash("symbol", F.col("__sub").cast("long")), F.lit(n_part)).alias("p"),
-    )
-    pmap: dict = {}
-    for r in cand.collect():
-        pmap.setdefault(r["symbol"], []).append((r["__sub"], r["p"]))
-
     plan: dict = {}
-    used_by_win: dict = {}
     for r in rows:
         key = (r["__win"], r["symbol"])
         n_sub = want[key]
         qs = r["qs"]
         idx = sorted({round(64 * k / n_sub) - 1 for k in range(1, n_sub)})
         bnds = sorted({int(qs[i]) for i in idx if 0 <= i < len(qs)})
-        if not bnds:
-            continue
-        used = used_by_win.setdefault(r["__win"], set())
-        ids = []
-        for i, p in pmap[r["symbol"]]:
-            if p not in used:
-                used.add(p)
-                ids.append(i)
-                if len(ids) == len(bnds) + 1:
-                    break
-        # partitions exhausted (many hot symbols x chunks in one
-        # window): pad with remaining candidates, accepting collisions
-        k = 0
-        while len(ids) < len(bnds) + 1:
-            i = pmap[r["symbol"]][k][0]
-            if i not in ids:
-                ids.append(i)
-            k += 1
-        plan[key] = {"bnds": bnds, "ids": sorted(ids)}
+        if bnds:
+            plan[key] = bnds
     return plan
 
 
 def _run_windows(
-    spark, staged, windows, brick_size: float, drop_first: bool,
-    instrument: dict | None = None, hot_plan: dict | None = None,
+    spark, staged, windows, brick_size: float, drop_first: bool, hot_plan: dict,
+    instrument: dict | None = None,
 ) -> DataFrame:
     # worker-side phase accumulators (only wired when instrumenting —
     # the closure must not capture driver-only objects otherwise)
-    acc_py = spark.sparkContext.accumulator(0.0) if instrument is not None else None
-    acc_kernel = spark.sparkContext.accumulator(0.0) if instrument is not None else None
+    sc = spark.sparkContext
+    acc_py = sc.accumulator(0.0) if instrument is not None else None
+    acc_kernel = sc.accumulator(0.0) if instrument is not None else None
     scan_k = timed(scan_group, acc_kernel)
 
     # cogroup body: one symbol's window ticks x its carry row (absent on
@@ -292,55 +254,52 @@ def _run_windows(
         ])
 
     run = timed(body, acc_py)
-
-    # skew-aware sub-chunking machinery (only paid when a hot (window,
-    # symbol) pair exists — see module renko_subchunk for the design)
-    hot_plan = hot_plan or {}
-    rep_accs = None
-    if hot_plan:
-        rep_accs = {
-            "converged": spark.sparkContext.accumulator(0),
-            "fallback": spark.sparkContext.accumulator(0),
-            "repair_ticks": spark.sparkContext.accumulator(0),
-        }
+    # the sub-chunk repair counters (see module renko_subchunk)
+    rep_accs = {}
+    if instrument is not None:
+        rep_accs = {k: sc.accumulator(0) for k in ("converged", "fallback", "repair_ticks")}
+        instrument["windows"] = []
 
     state_df = spark.createDataFrame([], PACKED_SCHEMA).select("symbol", *CARRY_COLS)
     chunks: list[DataFrame] = []
-    if instrument is not None:
-        instrument["windows"] = []
     for win in windows:
         t_w0 = time.perf_counter()
         py0 = acc_py.value if acc_py is not None else 0.0
         k0 = acc_kernel.value if acc_kernel is not None else 0.0
+        rep0 = {k: a.value for k, a in rep_accs.items()}
         wticks = staged.filter(F.col("__win") == F.lit(win)).drop("__win")
-        hot_syms = sorted(s for (w, s) in hot_plan if w == win)
-
-        if not hot_syms:
-            part = (
-                wticks.groupBy("symbol")
-                .cogroup(state_df.groupBy("symbol"))
-                .applyInArrow(run, PACKED_SCHEMA)
-                .persist()
+        plans = {s: bnds for (w, s), bnds in hot_plan.items() if w == win}
+        # null-safe: a NULL symbol is never hot, so it stays on this side
+        is_hot = F.coalesce(F.col("symbol").isin(sorted(plans)), F.lit(False))
+        part = (
+            wticks.filter(~is_hot)
+            .groupBy("symbol")
+            .cogroup(state_df.filter(~is_hot).groupBy("symbol"))
+            .applyInArrow(run, PACKED_SCHEMA)
+            .persist()
+        )
+        bricks, carries, cached = _bricks_of(part), _carries_of(part), [part]
+        if plans:
+            hot_bricks, hot_carries, hot_cached = _hot_pass(
+                spark, wticks.filter(is_hot), state_df.filter(is_hot), plans,
+                brick_size, drop_first, acc_py, acc_kernel, rep_accs,
             )
-            # The eager checkpoint materializes bricks + carry state
-            # (computing the cogroup exactly once, from the persisted
-            # `part`) and severs their lineage from both the cogroup and
-            # the staged files — so the window's cache is released right
-            # here and the staged copy can be deleted before the caller
-            # ever materializes the union. local = executor blocks
-            # (fast, not executor-loss-safe); reliable = the SparkContext
-            # checkpoint dir (see module docstring caveat).
-            bricks = persist_block(_bricks_of(part), eager=True)
-            t_bricks = time.perf_counter()
-            state_df = persist_block(_carries_of(part), eager=True)
-            part.unpersist()
-            hot_stats = None
-        else:
-            bricks, state_df, t_bricks, hot_stats = _run_hot_window(
-                spark, wticks, state_df, win, hot_syms, hot_plan, brick_size,
-                drop_first, run, rep_accs, acc_py, acc_kernel,
-            )
-        chunks.append(bricks)
+            bricks = bricks.unionByName(hot_bricks)
+            carries = carries.unionByName(hot_carries)
+            cached += hot_cached
+        # The eager checkpoint materializes bricks + carry state
+        # (computing the cogroups exactly once, from the persisted
+        # frames) and severs their lineage from both the cogroups and
+        # the staged files — so the window's caches are released right
+        # here and the staged copy can be deleted before the caller
+        # ever materializes the union. local = executor blocks (fast,
+        # not executor-loss-safe); reliable = the SparkContext
+        # checkpoint dir (see module docstring caveat).
+        chunks.append(persist_block(bricks, eager=True))
+        t_bricks = time.perf_counter()
+        state_df = persist_block(carries, eager=True)
+        for df in cached:
+            df.unpersist()
         if instrument is not None:
             entry = {
                 "win": int(win),
@@ -354,8 +313,12 @@ def _run_windows(
                 "py_sec": round(acc_py.value - py0, 3),
                 "kernel_sec": round(acc_kernel.value - k0, 3),
             }
-            if hot_stats is not None:
-                entry["hot"] = hot_stats
+            if plans:
+                entry["hot"] = {
+                    "symbols": len(plans),
+                    "chunks": sum(len(b) + 1 for b in plans.values()),
+                    **{k: a.value - rep0[k] for k, a in rep_accs.items()},
+                }
             instrument["windows"].append(entry)
 
     out = chunks[0]
@@ -372,21 +335,14 @@ def _carries_of(packed: DataFrame) -> DataFrame:
     return packed.filter(F.col("__row_kind") == KIND_CARRY).select("symbol", *CARRY_COLS)
 
 
-def _run_hot_window(
-    spark, wticks, state_df, win, hot_syms, hot_plan, brick_size,
-    drop_first, run, rep_accs, acc_py, acc_kernel,
+def _hot_pass(
+    spark, hot_ticks, hot_state, plans, brick_size, drop_first, acc_py, acc_kernel, rep_accs,
 ):
-    """One window with sub-chunked hot symbols: the normal cogroup runs
-    unchanged for everyone else; hot symbols take the three-step
-    spec-scan / sequential-repair / declarative-splice path (design and
-    bit-exactness argument in operators/renko_subchunk.py). Everything
-    is assembled lazily and materialized by the same two checkpoints as
-    the normal path, so staging cleanup semantics are unchanged.
-
-    The spec inputs are explicitly repartitioned on the chosen
-    (symbol, chunk-id) keys: the ids were picked so each chunk owns its
-    own reducer (see _hot_plan) — an explicit N also keeps AQE from
-    coalescing this deliberately wide, bytes-small/CPU-heavy exchange."""
+    """The window's sub-chunked symbols: the spec-scan /
+    sequential-repair / declarative-splice path (design and
+    bit-exactness argument in operators/renko_subchunk.py). Returns the
+    lazy bricks and carries, for the window's checkpoints, and the
+    frames it persisted."""
     from renkodf_spark.operators.renko_subchunk import (
         KIND_DECISION,
         KIND_SUMMARY,
@@ -395,71 +351,27 @@ def _run_hot_window(
         make_spec_runner,
     )
 
-    plans_by_sym = {s: hot_plan[(win, s)] for s in hot_syms}
-    first_ids = {s: int(p["ids"][0]) for s, p in plans_by_sym.items()}
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    is_hot = F.col("symbol").isin(hot_syms)
-    conv0 = rep_accs["converged"].value
-    fb0 = rep_accs["fallback"].value
-    rt0 = rep_accs["repair_ticks"].value
-
-    part = (
-        wticks.filter(~is_hot)
-        .groupBy("symbol")
-        .cogroup(state_df.filter(~is_hot).groupBy("symbol"))
-        .applyInArrow(run, PACKED_SCHEMA)
-        .persist()
-    )
-
-    hot_ticks = wticks.filter(is_hot)
-    hot_state = state_df.filter(is_hot)
-
-    # __sub = ids[count(boundaries <= t)]: ticks with equal timestamps
-    # land in the same chunk, so chunk order == the stable
-    # (__time, __seq) scan order. The repair task re-derives the
-    # identical cuts with searchsorted on the same boundary values.
-    sub_expr = F.lit(0).cast("long")
-    state_sub_expr = F.lit(0).cast("long")
-    for s, p in plans_by_sym.items():
-        bnd_arr = F.array(*[F.lit(int(b)).cast("long") for b in p["bnds"]])
-        id_arr = F.array(*[F.lit(int(i)).cast("long") for i in p["ids"]])
-        cnt = F.size(F.filter(bnd_arr, lambda b: F.unix_micros(F.col("__time")) >= b))
-        sym_match = F.col("symbol") == F.lit(s)
-        sub_expr = F.when(sym_match, F.element_at(id_arr, cnt + F.lit(1))).otherwise(sub_expr)
-        state_sub_expr = F.when(sym_match, F.lit(first_ids[s]).cast("long")).otherwise(
-            state_sub_expr
-        )
-
-    spec_run = make_spec_runner(brick_size, drop_first, first_ids, acc_py, acc_kernel)
     spec = (
-        hot_ticks.withColumn("__sub", sub_expr)
-        .repartition(n_part, "symbol", "__sub")
-        .groupBy("symbol", "__sub")
-        .cogroup(
-            hot_state.withColumn("__sub", state_sub_expr)
-            .repartition(n_part, "symbol", "__sub")
-            .groupBy("symbol", "__sub")
-        )
-        .applyInArrow(spec_run, SUB_SCHEMA)
+        _placed_chunks(spark, hot_ticks, plans)
+        .mapInArrow(make_spec_runner(brick_size, acc_py, acc_kernel), SUB_SCHEMA)
         .persist()
     )
-
-    side2 = spec.filter(F.col("__row_kind") == KIND_SUMMARY).unionByName(
+    side = spec.filter(F.col("__row_kind") == KIND_SUMMARY).unionByName(
         hot_state.withColumn("__row_kind", F.lit(KIND_CARRY)), allowMissingColumns=True
     )
     repair_run = make_repair_runner(
         brick_size,
         drop_first,
-        plans_by_sym,
+        plans,
         acc_py=acc_py,
         acc_kernel=acc_kernel,
-        acc_converged=rep_accs["converged"],
-        acc_fallback=rep_accs["fallback"],
-        acc_repair_ticks=rep_accs["repair_ticks"],
+        acc_converged=rep_accs.get("converged"),
+        acc_fallback=rep_accs.get("fallback"),
+        acc_repair_ticks=rep_accs.get("repair_ticks"),
     )
     rep = (
         hot_ticks.groupBy("symbol")
-        .cogroup(side2.groupBy("symbol"))
+        .cogroup(side.groupBy("symbol"))
         .applyInArrow(repair_run, SUB_SCHEMA)
         .persist()
     )
@@ -488,20 +400,34 @@ def _run_hot_window(
         )
         .select(*WIDE_COLUMN_NAMES)
     )
+    return _bricks_of(rep).unionByName(spec_kept), _carries_of(rep), [spec, rep]
 
-    bricks = _bricks_of(part).unionByName(_bricks_of(rep)).unionByName(spec_kept)
-    bricks = persist_block(bricks, eager=True)
-    t_bricks = time.perf_counter()
-    new_state = _carries_of(part).unionByName(_carries_of(rep))
-    new_state = persist_block(new_state, eager=True)
-    part.unpersist()
-    spec.unpersist()
-    rep.unpersist()
-    hot_stats = {
-        "symbols": len(hot_syms),
-        "chunks": sum(len(p["ids"]) for p in plans_by_sym.values()),
-        "converged": rep_accs["converged"].value - conv0,
-        "fallback": rep_accs["fallback"].value - fb0,
-        "repair_ticks": rep_accs["repair_ticks"].value - rt0,
-    }
-    return bricks, new_state, t_bricks, hot_stats
+
+def _placed_chunks(spark, hot_ticks, plans) -> DataFrame:
+    """The spec pass's input: hot ticks tagged with their chunk
+    ``__sub`` and placed by chunk.
+
+    ``__sub = count(boundaries <= t)``: ticks with equal timestamps land
+    in the same chunk, so chunk order == the stable (__time, __seq) scan
+    order; the repair task re-derives the identical cuts with
+    searchsorted on the same boundary values. Chunk ``k`` of the i-th
+    hot symbol (sorted) has the slot ``base_i + k``, its running number
+    across the window's hot symbols, and ``repartitionById`` sends it to
+    partition ``slot mod P`` with ``P = min(slots, shuffle
+    partitions)``: one chunk per reducer while they fit, whole chunks
+    round-robin beyond that. The explicit P also keeps AQE from
+    coalescing this bytes-small, CPU-heavy exchange."""
+    sub_expr = F.lit(0)
+    base_expr = F.lit(0)
+    n_slots = 0
+    for s, bnds in sorted(plans.items()):
+        bnd_arr = F.array(*[F.lit(b).cast("long") for b in bnds])
+        cnt = F.size(F.filter(bnd_arr, lambda b: F.unix_micros(F.col("__time")) >= b))
+        sym_match = F.col("symbol") == F.lit(s)
+        sub_expr = F.when(sym_match, cnt).otherwise(sub_expr)
+        base_expr = F.when(sym_match, F.lit(n_slots)).otherwise(base_expr)
+        n_slots += len(bnds) + 1
+    n_part = min(n_slots, int(spark.conf.get("spark.sql.shuffle.partitions", "200")))
+    return hot_ticks.withColumn("__sub", sub_expr).repartitionById(
+        n_part, (base_expr + F.col("__sub")).cast("int")
+    )

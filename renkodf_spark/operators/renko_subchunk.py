@@ -7,27 +7,33 @@ a 24 s window — VERDICT r8 item 3).  This module breaks that serial
 floor with *speculative* sub-chunk scans plus a cheap sequential
 stitch, while keeping the output bit-identical to the one-shot scan:
 
-1. **Spec pass** (parallel, one task per (symbol, sub-chunk)): the hot
-   symbol's window is split into time-contiguous sub-chunks (quantile
-   boundaries, so ticks with equal timestamps never straddle a cut).
-   Sub-chunk 0 scans from the true incoming state — its bricks are
-   final.  Sub-chunks i>0 scan speculatively from a cold grid-anchored
-   state; besides their (provisional) bricks they emit a compact
-   summary: the final kernel state plus a *sync blob* — for each of the
-   first ``SYNC_CAP`` emitting ticks, the post-tick
-   ``(tick, last_close, last_dir, is_reversal, cum_bricks)``.
+1. **Spec pass** (parallel): the hot symbol's window is split into
+   time-contiguous sub-chunks ``__sub = k`` (quantile boundaries, so
+   ticks with equal timestamps never straddle a cut). Each chunk has a
+   running number across the window's hot symbols, its *slot*, and
+   ``repartitionById`` sends it to partition ``slot mod P``: one chunk
+   per partition while the chunks fit the shuffle partitions, whole
+   chunks spread round-robin beyond that. Every chunk scans
+   speculatively from a cold grid-anchored state (`make_spec_runner`);
+   besides its (provisional) bricks it emits a compact summary: the
+   final kernel state plus a *sync blob* — for each of the first
+   ``SYNC_CAP`` emitting ticks, the post-tick
+   ``(tick, last_close, last_dir, is_reversal, cum_bricks)``. No carry
+   crosses this pass.
 
 2. **Repair pass** (one task per hot symbol, receives the window's full
-   tick group = the built-in exact fallback): walks the boundaries
-   sequentially.  For sub-chunk i it rescans the chunk *prefix* from
-   the true state in growing blocks until the true post-emission state
-   matches a spec sync candidate **bitwise** (same tick, bit-equal
-   ``last_close``, same direction and reversal flag — the wick/volume/
-   tick_open components reset deterministically at every emission, so
+   tick group = the built-in exact fallback, plus the summaries and the
+   incoming carry): walks the chunks sequentially, chunk 0 included.
+   For chunk k it rescans the chunk *prefix* from the true state (the
+   incoming carry, or a cold start at the symbol's first tick) in
+   growing blocks until the true post-emission state matches a spec
+   sync candidate **bitwise** (same tick, bit-equal ``last_close``,
+   same direction and reversal flag — the wick/volume/tick_open
+   components reset deterministically at every emission, so
    bit-equality of those four implies bit-equality of the full state
-   and therefore of every subsequent brick).  It emits the prefix
+   and therefore of every subsequent brick). It emits the prefix
    bricks, a per-chunk splice decision ``(keep_from, seq_base,
-   tick_shift)``, and the symbol's final window state.  If no candidate
+   tick_shift)``, and the symbol's final window state. If no candidate
    matches within the spec horizon it simply keeps scanning to the
    chunk end — correct, serial for that chunk only.
 
@@ -36,10 +42,12 @@ stitch, while keeping the output bit-identical to the one-shot scan:
    brick_seq / tick indexes; union with the repair bricks.
 
 Both passes run on the shared Arrow host of ``operators/renko.py``: the
-spec scans are `scan_group` calls, the repair rescans `kernel.scan`
-calls (which pick the loop variant, as everywhere), and summaries,
-incoming and outgoing states are carries (its carry protocol) in rows of ``SUB_SCHEMA`` — the
-host's ``PACKED_SCHEMA`` plus the sub-chunk fields below.
+spec pass walks its partition with `symbol_runs` (renko()'s walk) and
+scans with `scan_group`, the repair rescans are `kernel.scan` calls
+(which pick the loop variant, as everywhere), and summaries, incoming
+and outgoing states are carries (its carry protocol) in rows of
+``SUB_SCHEMA`` — the host's ``PACKED_SCHEMA`` plus the sub-chunk fields
+below.
 
 Why bitwise convergence is the right test: grid levels are built by the
 reference's own sequential FP accumulation ``L += (dir*mult)*brick``
@@ -56,8 +64,9 @@ reference proves in test_ws_ext.py:39-58, except the *entire* scalar
 state crosses the splice, so there is no one-bar wick/volume
 discrepancy to forgive.
 
-Memory bound (VERDICT r9 item 7): a SPEC task holds one sub-chunk —
-O(``subchunk_target``) ticks — but a REPAIR task receives the hot
+Memory bound (VERDICT r9 item 7): a SPEC task holds the sub-chunks of
+its partition — one, O(``subchunk_target``) ticks, while the window's
+chunks fit the shuffle partitions — but a REPAIR task receives the hot
 symbol's ENTIRE window group (it is the built-in exact fallback, so it
 must be able to scan to any chunk's end), i.e. per-repair-task input =
 O(ticks of that symbol in that window) as Arrow columns (~16 B/tick)
@@ -89,6 +98,7 @@ from renkodf_spark.operators.renko import (
     read_carry,
     scan_group,
     sorted_ticks,
+    symbol_runs,
     timed,
 )
 
@@ -151,51 +161,29 @@ def _unpack_sync(tbl, i: int):
     )
 
 
-def make_spec_runner(
-    brick: float, drop_first: bool, first_ids: dict, acc_py=None, acc_kernel=None
-):
-    """Cogroup body for the parallel pass over (symbol, __sub) groups.
-
-    The first chunk (``first_ids[symbol]`` — sub-chunk ids are chosen
-    for collision-free shuffle placement, see renko_chunked._hot_plan —
-    cogrouped with the carry row) is the exact `scan_group` resume,
-    rebased to chunk-LOCAL brick_seq / tick indexes (seq 0, offset 0;
-    the repair pass renumbers). Later chunks run speculatively from a
-    cold grid anchor and additionally pack the sync blob. Each chunk
-    emits its bricks plus a KIND_SUMMARY row holding its final carry.
-    """
+def make_spec_runner(brick: float, acc_py=None, acc_kernel=None):
+    """mapInArrow body of the parallel pass: each (symbol, ``__sub``)
+    run of its partition (`symbol_runs`) scans speculatively from a cold
+    grid anchor at its first price, and emits its bricks plus a
+    KIND_SUMMARY row holding its final carry and its sync blob. Bricks
+    number from 0 and index ticks chunk-locally; the repair pass
+    renumbers. The body returns its whole output at once, so ``acc_py``
+    times the work, not a generator's creation."""
     scan_k = timed(scan_group, acc_kernel)
 
-    def run(tick_tbl, state_tbl):
-        ts_type = tick_tbl.schema.field("__time").type
-        if tick_tbl.num_rows == 0:
-            # the first chunk of a warm symbol can be empty (quantile
-            # boundary tie): its carry row arrives alone; the repair
-            # pass reads the carry itself
-            return padded_table(SUB_SCHEMA, ts_type, 0, {})
-        sub = tick_tbl.column("__sub")[0].as_py()
-        sym = tick_tbl.column("symbol")[0].as_py()
-        times, prices = sorted_ticks(tick_tbl)
-        summary = {"__row_kind": KIND_SUMMARY, "__sub": sub}
-        if sub == first_ids.get(sym, 0):
-            carry = read_carry(state_tbl) if state_tbl.num_rows else None
-            if carry is not None:
-                carry = carry._replace(
-                    tick_open=carry.tick_open - carry.tick_offset, next_seq=0, tick_offset=0
-                )
-            bricks, carry = scan_k(times, prices, brick, drop_first, carry)
-        else:
-            # speculative: in exact FP regimes this lattice is
-            # bit-identical to the true one, so the repair pass can
-            # verify convergence bitwise
+    def run(batches):
+        tables = []
+        for sym, sub, times, prices, ts_type in symbol_runs(batches, "__sub"):
+            # in exact FP regimes this lattice is bit-identical to the
+            # true one, so the repair pass can verify convergence bitwise
             cold = new_state(float(prices[0]), brick)
             bricks, carry = scan_k(times, prices, brick, False, Carry(*cold[:5], 0, 0, 0, None))
-            summary.update(_pack_sync(*_emission_sync(bricks, 0, len(bricks["brick_seq"]))))
-        brick_cols = {"__row_kind": KIND_BRICK, "__sub": sub}
-        return pa.concat_tables([
-            bricks_table(SUB_SCHEMA, sym, bricks, ts_type, brick_cols),
-            carry_table(carry, sym, ts_type, SUB_SCHEMA, summary),
-        ])
+            sync = _pack_sync(*_emission_sync(bricks, 0, len(bricks["brick_seq"])))
+            tables += [
+                bricks_table(SUB_SCHEMA, sym, bricks, ts_type, {"__row_kind": KIND_BRICK, "__sub": sub}),
+                carry_table(carry, sym, ts_type, SUB_SCHEMA, {"__row_kind": KIND_SUMMARY, "__sub": sub, **sync}),
+            ]
+        return iter(pa.concat_tables(tables).to_batches() if tables else [])
 
     return timed(run, acc_py)
 
@@ -214,15 +202,11 @@ def make_repair_runner(
     FULL window tick group (the universal exact fallback), right = the
     spec summaries plus the incoming carry row.
 
-    ``plans_by_symbol``: {symbol: {"bnds": [boundary micros...],
-    "ids": [chunk ids...]}} — the same quantile cuts and chosen chunk
-    ids the Spark-side ``__sub`` expression used, so ``searchsorted``
-    on the boundaries reproduces the assignment and ``ids[k]`` keys the
-    k-th chunk's spec summary and splice decision."""
-    plans_plain = {
-        s: ([int(b) for b in p["bnds"]], [int(i) for i in p["ids"]])
-        for s, p in plans_by_symbol.items()
-    }
+    ``plans_by_symbol``: {symbol: [boundary micros...]}, the same
+    quantile cuts the Spark-side ``__sub`` expression used, so
+    ``searchsorted`` on them reproduces the assignment and chunk ``k``'s
+    spec summary and splice decision carry ``__sub = k``."""
+    plans_plain = {s: np.asarray(b, dtype=np.int64) for s, b in plans_by_symbol.items()}
     scan_k = timed(scan, acc_kernel)
 
     def run(tick_tbl, side_tbl):
@@ -232,20 +216,17 @@ def make_repair_runner(
         sym = tick_tbl.column("symbol")[0].as_py()
         times, prices = sorted_ticks(tick_tbl)
         n = len(prices)
-        bnds_l, ids = plans_plain.get(sym, ([], [0]))
-        bnds = np.asarray(bnds_l, dtype=np.int64)
         t_us = times.astype("datetime64[us]").view("int64")
         # chunk spans: [cut[i], cut[i+1]) — identical to the Spark-side
         # size(filter(boundaries <= t)) assignment
-        cuts = [0] + [int(np.searchsorted(t_us, b, side="left")) for b in bnds] + [n]
+        cuts = [0, *np.searchsorted(t_us, plans_plain[sym], side="left").tolist(), n]
 
         side = side_tbl.combine_chunks()
         summaries = {}
         incoming = None
         for i, kind in enumerate(side.column("__row_kind").to_pylist()):
             if kind == KIND_SUMMARY:
-                sub_id = side.column("__sub")[i].as_py()
-                summaries[sub_id] = (read_carry(side, i), _unpack_sync(side, i))
+                summaries[side.column("__sub")[i].as_py()] = (read_carry(side, i), _unpack_sync(side, i))
             elif kind == KIND_CARRY:
                 incoming = read_carry(side, i)
 
@@ -263,32 +244,21 @@ def make_repair_runner(
             lo, hi = cuts[sub], cuts[sub + 1]
             if hi <= lo:
                 continue
-            sub_id = ids[sub]
-            assert sub_id in summaries, f"missing spec summary for {sym} sub={sub_id}"
-            summ, (s_ticks, s_close, s_dir, s_rev, s_cum) = summaries[sub_id]
+            assert sub in summaries, f"missing spec summary for {sym} sub={sub}"
+            summ, (s_ticks, s_close, s_dir, s_rev, s_cum) = summaries[sub]
             shift = win_offset + lo
             # spec scans number from 0 and index ticks chunk-locally, so
             # the summary's next_seq is the chunk's spec brick count
             n_spec = summ.next_seq
             spec_final = [*summ[:5], summ.tick_open + shift]  # -> global
 
-            if sub == 0:
-                # chunk 0 ran exactly in the spec pass: adopt its output
-                decisions.append((sub_id, 0, running_seq, shift))
-                running_seq += n_spec
-                cur = spec_final
-                if first_ts is None:
-                    first_ts = summ.first_ts
-                continue
-
             # ---- repair scan of chunk `sub` from the true state
             ct = times[lo:hi]
             cp = prices[lo:hi]
             if cur is None:
-                # cold symbol whose sub-0 span was empty (boundary tie at
-                # the min timestamp): this chunk IS the cold start — same
-                # seeding as the one-shot scan; the spec scan of this
-                # chunk remains splice-able via convergence
+                # the symbol's first non-empty chunk with no incoming
+                # carry IS the cold start: same seeding as the one-shot
+                # scan; its spec scan stays splice-able via convergence
                 kstate, pos0 = new_state(float(cp[0]), brick), 1
             else:
                 kstate, pos0 = [*cur[:5], cur[5] - shift], 0
@@ -379,7 +349,7 @@ def make_repair_runner(
                 )
             running_seq += n_true - drop_lo
 
-            decisions.append((sub_id, keep_from + drop_spec, running_seq, shift))
+            decisions.append((sub, keep_from + drop_spec, running_seq, shift))
             running_seq += n_spec - keep_from - drop_spec
             cur = final_state
 

@@ -32,62 +32,16 @@ from renkodf_spark.queries import pipeline11  # noqa: F401
 
 # Rotation rule: first the queries whose builders reach code the latest
 # change touched, then the renko_* product surface. The latest change
-# moved the operators' top-k rankings onto `operators/topk.top_k`
-# (similarity, pq, search, text, graph, dedup and corpus sampling),
-# shared the BM25/QL scorers, the ANN miners' sides and the ADC
-# ranking, and folded repeated builder code in the recall, PageRank and
-# as-of queries; those 40 builders come first (found by tracing every
-# builder's calls at sf0.001), then the first ten renko_* names, the
-# sub-chunk splice first, to stay within the 50-name cap.
+# placed the sub-chunk spec pass by partition id and ran every chunked
+# window through one step, so the two chunked builders come first; then
+# every other renko_* builder, each of which runs renko(), whose body
+# now walks its partition through the walk it shares with the spec pass
+# (`operators/renko.symbol_runs`). That is the whole renko_* surface.
 _PRIORITY = [
-    # cosine / ANN top-k
-    "similarity_cosine_topk",
-    "similarity_ivf_topk",
-    "similarity_ivf_probe2_topk",
-    "similarity_lsh_ann_topk",
-    "jl_projected_topk",
-    "jl_recall_report",
-    "quantized_cosine_topk",
-    "hamming_topk",
-    "pq_adc_topk",
-    "similarity_ivfpq_topk",
-    "ann_recall_report",
-    "ann_recall_planted",
-    "ann_recall_planted_unlabeled",
-    "hard_negative_pairs",
-    "hard_negative_pairs_ann",
-    "hard_negative_pairs_ann_shuffle",
-    # kNN graph, communities and centrality
-    "knn_graph_edges",
-    "mutual_knn_cluster_labels",
-    "knn_communities",
-    "knn_communities_indexed",
-    "knn_pagerank",
-    "knn_pagerank_indexed",
-    "knn_pagerank_weighted",
-    "knn_trustrank",
-    "knn_trustrank_indexed",
-    # ranked text retrieval
-    "bm25_search_spark_vector",
-    "ql_search_spark_vector",
-    "hybrid_rrf_fusion",
-    "hybrid_search_rerank",
-    "tfidf_top_terms",
-    # dedup banding and corpus sampling
-    "dedup_minhash_lsh",
-    "dedup_ngram_jaccard",
-    "lang_quota_sample",
-    "lang_weighted_sample",
-    "curation_end_to_end",
-    "pretrain_end_to_end",
-    # as-of joins
-    "asof_purchase_before_click",
-    "asof_next_purchase_after_click",
-    "asof_nearest_purchase",
-    "asof_tolerance_purchase",
-    # the renko_* surface
+    # the chunked windows and the sub-chunk splice
     "renko_subchunked_wide",
     "renko_chunked_wide",
+    # renko() and its projections
     "renko_wicks",
     "renko_normal",
     "renko_nongap",
@@ -96,6 +50,12 @@ _PRIORITY = [
     "renko_fake_r_wicks",
     "renko_fake_r_nongap",
     "renko_wide_bricks",
+    "renko_small_brick_smoke",
+    "renko_wide_bricks_b25",
+    "renko_wicks_projected",
+    "renko_summary_stats",
+    "renko_state_export",
+    "renko_direction_runs",
 ]
 
 _ordered = {n: REGISTRY[n] for n in _PRIORITY}

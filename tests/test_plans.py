@@ -65,6 +65,28 @@ def test_renko_plan_is_one_exchange_and_one_map(spark, sf_dir):
     assert "Sort" not in plan and "FlatMapGroupsInArrow" not in plan
 
 
+def test_subchunk_spec_pass_is_one_id_exchange_and_one_map(spark, sf_dir):
+    """The sub-chunk spec pass: one exchange that places rows by their
+    chunk slot (`repartitionById`) feeding one partition-level
+    MapInArrow; no Sort, no grouped-map node and no carry side."""
+    from pyspark.sql import functions as F
+
+    from renkodf_spark.operators.renko import slim_ticks
+    from renkodf_spark.operators.renko_chunked import _placed_chunks
+    from renkodf_spark.operators.renko_subchunk import SUB_SCHEMA, make_spec_runner
+    from renkodf_spark.sources.tables import ticks_from_events
+
+    slim = slim_ticks(ticks_from_events(spark, sf_dir), 5.0, "symbol", "event_time", "close")
+    syms = [r[0] for r in slim.select("symbol").distinct().orderBy("symbol").limit(2).collect()]
+    plans = {s: [1_700_000_000_000_000] for s in syms}
+    hot = slim.filter(F.col("symbol").isin(syms))
+    plan = _executed(_placed_chunks(spark, hot, plans).mapInArrow(make_spec_runner(5.0), SUB_SCHEMA))
+    assert plan.count("Exchange") == 1 and "Exchange shufflepartitionidpassthrough(" in plan
+    assert plan.count("MapInArrow") == 1
+    assert "Sort" not in plan and "FlatMapGroupsInArrow" not in plan
+    assert "FlatMapCoGroupsInArrow" not in plan
+
+
 def test_sessions_bound_arrow_batches_by_rows(spark, monkeypatch):
     """`build_session` and the test session set the same Arrow batch
     byte bound, the one value at which Spark skips its per-row size

@@ -17,6 +17,7 @@ every splice, so equality is exact on all 21 columns.
 
 import numpy as np
 import pandas as pd
+import pytest
 
 from renkodf_spark.operators.renko import renko
 from renkodf_spark.operators.renko_chunked import renko_chunked
@@ -299,31 +300,61 @@ def test_subchunk_disabled_by_default_on_small_groups(spark):
     assert all("hot" not in w for w in inst["windows"])
 
 
-def test_hot_plan_probe_matches_actual_shuffle_placement(spark):
-    """_hot_plan elects collision-free sub-chunk ids by probing
-    F.pmod(F.hash(symbol, __sub), n) and ASSUMES repartition(n,
-    "symbol", "__sub") places rows on exactly that partition (ADVICE
-    r9: an unpinned implementation coupling — HashPartitioning could
-    drift from the F.hash expression in a future Spark). Pin it: for a
-    spread of symbols and candidate ids, the partition a row actually
-    lands on after the operator's own repartition call must equal the
-    probed prediction. A failure here means placement silently degrades
-    to hash collisions (performance, not correctness) — fix _hot_plan's
-    probe to whatever hash the shuffle now uses."""
+def test_subchunk_null_symbol_beside_hot_symbol(spark):
+    """A NULL symbol is one group, as in renko(). Its ticks and its carry
+    must stay on the window cogroup's side in a window that has a hot
+    symbol: a hot test that is NULL for it would drop it from both
+    sides."""
+    pdf = _dense_ticks(n_hot=6000, n_cold=1500, seed=41)
+    pdf.loc[pdf["symbol"] == "S1", "symbol"] = None
+    ticks = spark.createDataFrame(pdf, "symbol string, event_time timestamp, close double")
+    oneshot = renko(ticks, 5.0).orderBy("symbol", "brick_seq").toPandas()
+    inst: dict = {}
+    chunked = (
+        renko_chunked(
+            ticks, 5.0, window="2 days", subchunk_threshold=1000, subchunk_target=400,
+            instrument=inst,
+        )
+        .orderBy("symbol", "brick_seq")
+        .toPandas()
+    )
+    assert oneshot["symbol"].isna().sum() > 0
+    assert any("hot" in w for w in inst["windows"])
+    _assert_bitexact(oneshot, chunked, "null-symbol")
+
+
+@pytest.mark.parametrize(
+    "counts",
+    [
+        {"HOT": 3, "S2": 4},  # 7 chunks, 8 shuffle partitions
+        {"A": 5, "B": 5, "C": 6},  # 16 chunks over 8
+    ],
+)
+def test_spec_pass_places_whole_chunks_by_slot(spark, counts):
+    """The spec pass places chunk k of the i-th hot symbol (sorted) on
+    partition (base_i + k) mod P, P = min(chunks, shuffle partitions):
+    one (symbol, chunk) per partition while the chunks fit the shuffle
+    partitions, and whole chunks spread round-robin beyond that."""
     from pyspark.sql import functions as F
 
-    n_part = 16
-    rows = [(s, i) for s in ("HOT", "S1", "zz-9", "") for i in range(32)]
-    df = spark.createDataFrame(rows, "symbol string, __sub long")
-    predicted = df.select(
-        "symbol",
-        "__sub",
-        F.pmod(F.hash("symbol", F.col("__sub").cast("long")), F.lit(n_part)).alias("pred"),
-    )
-    landed = (
-        predicted.repartition(n_part, "symbol", "__sub")
-        .withColumn("actual", F.spark_partition_id())
+    from renkodf_spark.operators.renko_chunked import _placed_chunks
+
+    t0 = pd.Timestamp("2024-01-01", tz="UTC")
+    rows, plans = [], {}
+    for sym, n_sub in counts.items():
+        times = [(t0 + pd.Timedelta(seconds=i)).to_pydatetime() for i in range(50 * n_sub)]
+        rows += [(sym, t, 10.0, i) for i, t in enumerate(times)]
+        plans[sym] = [(t0 + pd.Timedelta(seconds=50 * k)).value // 1000 for k in range(1, n_sub)]
+    hot = spark.createDataFrame(rows, "symbol string, __time timestamp, __price double, __seq long")
+    placed = (
+        _placed_chunks(spark, hot, plans)
+        .select("symbol", "__sub", F.spark_partition_id().alias("p"))
+        .distinct()
         .collect()
     )
-    bad = [(r["symbol"], r["__sub"], r["pred"], r["actual"]) for r in landed if r["pred"] != r["actual"]]
-    assert not bad, f"hash probe no longer predicts shuffle placement: {bad[:5]}"
+    n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    n_slots = sum(counts.values())
+    slots = [(s, k) for s in sorted(counts) for k in range(counts[s])]
+    want = [(s, k, i % min(n_slots, n_shuffle)) for i, (s, k) in enumerate(slots)]
+    # one row per (symbol, chunk): no chunk is split across partitions
+    assert sorted((r["symbol"], r["__sub"], r["p"]) for r in placed) == sorted(want)
