@@ -473,11 +473,8 @@ def to_rws(wide: DataFrame, brick_size: float, use_iloc: int | None = None) -> D
         F.unix_micros(F.col("event_time")).alias("timestamp"),
     ).drop("event_time")
     if use_iloc is not None:
-        w = Window.partitionBy("symbol")
-        if use_iloc < 0:
-            rn = F.row_number().over(w.orderBy(F.desc("brick_seq")))
-            out = out.withColumn("__rn", rn).filter(F.col("__rn") <= -use_iloc).drop("__rn")
-        else:
-            rn = F.row_number().over(w.orderBy(F.asc("brick_seq")))
-            out = out.withColumn("__rn", rn).filter(F.col("__rn") <= use_iloc).drop("__rn")
+        # iloc[:n] keeps the first n bricks per symbol, iloc[-n:] the last n
+        order = F.desc("brick_seq") if use_iloc < 0 else F.asc("brick_seq")
+        rn = F.row_number().over(Window.partitionBy("symbol").orderBy(order))
+        out = out.withColumn("__rn", rn).filter(F.col("__rn") <= abs(use_iloc)).drop("__rn")
     return out

@@ -32,12 +32,13 @@ from renkodf_spark.queries import pipeline11  # noqa: F401
 
 # Rotation rule: first the queries whose builders reach code the latest
 # change touched, then the renko_* product surface. The latest change
-# placed the sub-chunk spec pass by partition id and ran every chunked
-# window through one step, so the two chunked builders come first; then
-# every other renko_* builder, each of which runs renko(), whose body
-# now walks its partition through the walk it shares with the spec pass
-# (`operators/renko.symbol_runs`). That is the whole renko_* surface.
+# folded `operators/renko.to_rws`'s two slice branches into one, so
+# renko_state_export (its only registered caller) comes first; then
+# every other renko_* builder. The change's streaming writers back no
+# registered query.
 _PRIORITY = [
+    # to_rws's one slice
+    "renko_state_export",
     # the chunked windows and the sub-chunk splice
     "renko_subchunked_wide",
     "renko_chunked_wide",
@@ -54,7 +55,6 @@ _PRIORITY = [
     "renko_wide_bricks_b25",
     "renko_wicks_projected",
     "renko_summary_stats",
-    "renko_state_export",
     "renko_direction_runs",
 ]
 

@@ -486,8 +486,6 @@ def nb_model_writer(
     positive_col: str,
     *,
     text_col: str = "text",
-    n_buckets: int | None = None,
-    compact_every: int | None = None,
 ):
     """Streaming trainer for the Naive-Bayes quality filter
     (``operators/classifier.py``): maintain the model's sufficient
@@ -508,31 +506,16 @@ def nb_model_writer(
     labeling rule is applied upstream, e.g.
     ``df.withColumn("is_target", F.col("source") == "src0")``).
 
-    Cost honesty / the two state layouts (both are generation stores,
-    :mod:`renkodf_spark.streaming.generations`):
+    State layout: a snapshot store
+    (:mod:`renkodf_spark.streaming.generations`), ONE cumulative
+    snapshot per trigger REWRITTEN whole — O(vocabulary) per trigger,
+    O(vocab) latest-only reads.  Natural-language vocabularies plateau
+    (Heaps' law) so the snapshot stays far smaller than the corpus.
 
-    * default (``n_buckets=None``): a snapshot store, ONE cumulative
-      snapshot per trigger REWRITTEN whole — O(vocabulary) per trigger,
-      O(vocab) latest-only reads.  Natural-language vocabularies plateau
-      (Heaps' law) so the snapshot stays far smaller than the corpus.
-    * ``n_buckets=K``: delta stores — each trigger writes only its OWN
-      counts under ``<path>/terms/batch_id=N/tb=...`` (term-hash
-      sub-partitioned) + a one-row ``<path>/docs`` generation, so the
-      trigger cost is O(batch vocabulary) no matter how large the
-      lifetime vocabulary grows (high-cardinality term streams: URLs,
-      ids).  Reads fold all generations with an exact sum;
-      ``compact_every=K`` bounds the generation count via the shared
-      compactor.
-
-    Derive the scoring model with :func:`read_nb_model` — it
-    auto-detects the layout and yields identical (exact) models.
+    Derive the scoring model with :func:`read_nb_model`.
     """
-    if compact_every is not None and n_buckets is None:
-        raise ValueError("compact_every requires the bucketed layout (n_buckets)")
-    terms_path = posixpath.join(model_path, "terms")
-    docs_path = posixpath.join(model_path, "docs")
 
-    def _batch_counts(batch: DataFrame):
+    def write_batch(batch: DataFrame, batch_id: int) -> None:
         toks = F.split(F.trim(F.col(text_col)), r"\s+")
         pairs = batch.select(
             F.col(positive_col).alias("__pos"), F.explode(toks).alias("term")
@@ -540,8 +523,10 @@ def nb_model_writer(
         term_counts = pairs.groupBy("term").agg(
             F.sum(F.when(F.col("__pos"), 1).otherwise(0)).cast("long").alias("cnt_pos"),
             F.sum(F.when(F.col("__pos"), 0).otherwise(1)).cast("long").alias("cnt_neg"),
-        )
+        ).select(F.lit("term").alias("kind"), "term", "cnt_pos", "cnt_neg")
         doc_counts = batch.agg(
+            F.lit("docs").alias("kind"),
+            F.lit(None).cast("string").alias("term"),
             # coalesce: an empty micro-batch sums to NULL
             F.coalesce(F.sum(F.when(F.col(positive_col), 1).otherwise(0)), F.lit(0))
             .cast("long")
@@ -550,39 +535,7 @@ def nb_model_writer(
             .cast("long")
             .alias("cnt_neg"),
         )
-        return term_counts, doc_counts
-
-    def write_batch_bucketed(batch: DataFrame, batch_id: int) -> None:
-        if gens.compaction_due(compact_every, batch_id):
-            gens.compact_index_generations(
-                batch.sparkSession, terms_path, batch_id, partition_by="tb"
-            )
-            gens.compact_index_generations(batch.sparkSession, docs_path, batch_id)
-        term_counts, doc_counts = _batch_counts(batch)
-        gens.write_gen(
-            _bucketed_delta(term_counts, batch_id, F.col("term"), n_buckets),
-            terms_path,
-            batch_id,
-            partition_by="tb",
-        )
-        gens.write_gen(
-            doc_counts.withColumn("src_batch", F.lit(batch_id).cast("long")),
-            docs_path,
-            batch_id,
-        )
-
-    def write_batch(batch: DataFrame, batch_id: int) -> None:
-        term_counts, doc_counts = _batch_counts(batch)
-        cur = term_counts.select(
-            F.lit("term").alias("kind"), "term", "cnt_pos", "cnt_neg"
-        ).unionByName(
-            doc_counts.select(
-                F.lit("docs").alias("kind"),
-                F.lit(None).cast("string").alias("term"),
-                "cnt_pos",
-                "cnt_neg",
-            )
-        )
+        cur = term_counts.unionByName(doc_counts)
         prior = gens.read_latest(batch.sparkSession, model_path, before=batch_id)
         merged = cur if prior is None else (
             prior.unionByName(cur)
@@ -594,46 +547,27 @@ def nb_model_writer(
         )
         gens.write_snapshot(merged, model_path, batch_id)
 
-    return write_batch_bucketed if n_buckets is not None else write_batch
+    return write_batch
 
 
 def read_nb_model(spark, model_path: str, *, alpha: int = 1):
-    """Derive the scoring model from the persisted trainer state:
-    returns ``(model_df, prior_micros)`` where ``model_df`` has the
-    exact :func:`classifier.nb_train` shape/arithmetic
-    ``(term, cnt_pos, cnt_neg, llr_micros)`` (same round-once integer
-    micro-nat convention, so stream-trained == batch-trained is exact
+    """Derive the scoring model from the persisted trainer state (the
+    latest cumulative snapshot): returns ``(model_df, prior_micros)``
+    where ``model_df`` has the exact :func:`classifier.nb_train`
+    shape/arithmetic ``(term, cnt_pos, cnt_neg, llr_micros)`` (same
+    round-once integer micro-nat convention and Spark HALF_UP rounding,
+    not Python banker's, so stream-trained == batch-trained is exact
     equality, not approximate), and ``prior_micros`` is the class prior
     ``round(ln(N_pos / N_neg) * 1e6)`` for
     ``classifier.nb_score(..., prior_micros=...)``.
-
-    Auto-detects the layout: the bucketed delta form (a ``docs/``
-    store, which holds a row per trigger) folds every generation with
-    an exact sum, while the default form reads the latest cumulative
-    snapshot only.
     """
     if alpha <= 0:
         raise ValueError(f"alpha must be positive, got {alpha}")
-    docs = gens.read_store(spark, posixpath.join(model_path, "docs"))
-    if docs is not None:
-        terms = spark.read.parquet(posixpath.join(model_path, "terms"))
-        counts = gens.fold(terms, ["term"], ["cnt_pos", "cnt_neg"])
-        (drow,) = gens.fold(docs, [], ["cnt_pos", "cnt_neg"]).collect()
-        return _derive_nb_model(spark, counts, drow, alpha)
     state = gens.read_latest(spark, model_path)
     if state is None:
         raise FileNotFoundError(f"no committed NB model under {model_path}")
     counts = state.filter(F.col("kind") == "term").select("term", "cnt_pos", "cnt_neg")
-    docs = state.filter(F.col("kind") == "docs").select("cnt_pos", "cnt_neg").collect()
-    (drow,) = docs  # exactly one docs row per snapshot
-    return _derive_nb_model(spark, counts, drow, alpha)
-
-
-def _derive_nb_model(spark, counts: DataFrame, drow, alpha: int):
-    """Shared LLR + prior derivation from the summed sufficient
-    statistics — the exact expressions of ``classifier.nb_train`` /
-    ``nb_score``'s labeled-frame path (Spark HALF_UP rounding, not
-    Python banker's), so both state layouts yield bit-equal models."""
+    (drow,) = state.filter(F.col("kind") == "docs").collect()  # one docs row per snapshot
     totals = counts.agg(
         F.sum("cnt_pos").alias("__Tp"),
         F.sum("cnt_neg").alias("__Tn"),
@@ -683,11 +617,11 @@ def bigram_lm_writer(
     statistics of the concatenated stream and the derived model is
     bit-equal to batch training (pinned by test).
 
-    State layout: the delta stores of :func:`nb_model_writer`
-    ``(n_buckets=K)`` (:mod:`renkodf_spark.streaming.generations`),
-    applied from the start because n-gram vocabularies are the
-    high-cardinality case the snapshot layout is wrong for — each
-    trigger writes ONLY its own counts, term-hash-bucketed, under
+    State layout: delta stores (:mod:`renkodf_spark.streaming.
+    generations`), because n-gram vocabularies are the high-cardinality
+    case a cumulative snapshot (the :func:`nb_model_writer` layout) is
+    wrong for — each trigger writes ONLY its own counts,
+    term-hash-bucketed, under
     ``<path>/uni`` (bucket on ``term``) and ``<path>/bi`` (bucket on
     ``w1``, so a context's transitions stay co-located), O(batch
     vocabulary) per trigger regardless of lifetime vocabulary size;

@@ -1,7 +1,16 @@
-"""The ``batch_id=N`` generation store behind every ``foreachBatch``
-state writer of this package (the curation, merge, near-dup and ANN
-stream modules), the bucketed key-state layout of ``merge_stream``
-included: its generations are ``batch_id=N/kb=B`` partitioned writes.
+"""The ``batch_id=N`` generation store behind the ``foreachBatch``
+state writers of this package (the curation, merge, near-dup and ANN
+stream modules).
+
+Four writers also keep one store that does not write generations:
+``ann_stream.knn_graph_writer`` (``edges``),
+``ann_stream.knn_centrality_writer`` (``ranks``),
+``ann_stream.knn_communities_writer`` (``communities``) and
+``neardup_stream.cluster_labels_writer`` (``labels``) overwrite the
+``cell=``/``bucket=`` partitions a trigger touches in place, with
+``partitionOverwriteMode=dynamic``. Spark commits that overwrite one
+partition at a time, deleting the old directory and then renaming the
+new one in, so the replay rule below does not cover these stores.
 
 Protocol:
 
@@ -36,9 +45,7 @@ Protocol:
   picks for a replay of it, so the store holds two. A writer compacts
   first, before it reads or writes anything (a lazy read planned
   before the fold would list files the fold deletes), so a fold that
-  cannot read its sources fails the trigger with nothing landed. A
-  bucketed key-state store is bounded by its manifests instead
-  (``merge_stream.vacuum_state_generations``).
+  cannot read its sources fails the trigger with nothing landed.
 
 Listing, rename and delete go through one Hadoop FileSystem handle
 (``sources.lakehouse.hadoop_fs``); no data is read for them.

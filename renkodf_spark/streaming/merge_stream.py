@@ -12,42 +12,12 @@ are the batch keys' episodes or funnel rows recomputed from the whole
 appended log. Keys match null-safely everywhere, as in ``merge_into``,
 so a NULL key is one key, never a row that silently drops out.
 
-State layout (the ``batch_id=N`` store of :mod:`renkodf_spark.streaming.
-generations`), in one of two forms:
-
-* ``n_key_buckets=None`` (default): a snapshot store, one full table
-  per trigger, written through ``generations.write_snapshot`` so the
-  store holds two generations; the state read is O(table).
-* ``n_key_buckets=n``: the state is hash-bucketed by key
-  (``kb = pmod(xxhash64(keys), n)``) and a trigger rewrites ONLY the
-  buckets its batch touches, as ``<dir>/batch_id=N/kb=B/`` (a partition
-  overwrite of its own generation, so at-least-once replays stay
-  idempotent; untouched buckets keep their older generations).
-  ``<dir>/_manifest/batch_id=N/`` is a snapshot store of tiny full
-  ``(kb, gen)`` maps, one per trigger, naming the generation that is
-  current for every bucket (the ``_`` prefix keeps it out of partition
-  discovery over ``<dir>``). A bucket whose rows were all deleted maps
-  to a generation with no files for it: the manifest is what tells
-  "empty" from "unchanged". Bucketed state written in the older
-  ``<dir>/gen=N/kb=B/`` layout is not read.
-
-Whole-table is the default: on a 700-row table a bucketed
-``merge_writer`` trigger cost about three times a whole-table one
-(local[4], 4-core box), since it adds a manifest read and publish per
-trigger. Bucketing bounds a trigger's rewrite by the batch's key spread
-instead of the table.
-
-Readers use :func:`read_current_state`, which turns the latest
-manifest's ``(kb, gen)`` pairs into a static partition-pruning filter,
-or reads the latest snapshot (both layouts).
-
-Superseded bucket generations are vacuumed after every trigger:
-:func:`vacuum_state_generations` deletes the generations referenced by
-none of the last ``vacuum_keep`` manifests (and the manifests older
-than that window), so disk holds O(keep + live buckets) generations
-instead of O(triggers) while at-least-once replays keep every manifest
-and generation they can reach. Pass ``vacuum_keep=None`` to a writer to
-retain everything.
+State layout: each keyed state directory is a snapshot store of
+:mod:`renkodf_spark.streaming.generations`, one full table per trigger
+under ``batch_id=N``, written through ``generations.write_snapshot`` so
+the store holds two generations. A trigger's state read is the latest
+committed snapshot before it, O(table). Read the current table with
+:func:`read_current_state`.
 """
 
 from __future__ import annotations
@@ -58,90 +28,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from renkodf_spark.streaming import generations as gens
-
-
-def _bucket_expr(keys: list[str], n_buckets: int):
-    return F.pmod(F.xxhash64(*[F.col(k) for k in keys]), F.lit(n_buckets)).cast("int")
-
-
-def _read_manifest(spark, man_path: str, before_batch: int | None) -> dict[int, int] | None:
-    """Latest ``(kb -> gen)`` map (strictly before ``before_batch`` if
-    given) — ``None`` when no such manifest exists. Bounded by
-    n_key_buckets rows; replays of batch N only ever see manifests < N."""
-    man = gens.read_latest(spark, man_path, before=before_batch)
-    return None if man is None else {r["kb"]: r["gen"] for r in man.collect()}
-
-
-def _bucket_filter(pairs: dict[int, int]):
-    """OR-of-(kb AND batch_id) predicate over PARTITION columns —
-    statically prunable, built driver-side from the (bounded) manifest
-    map."""
-    cond = F.lit(False)
-    for kb, gen in pairs.items():
-        cond = cond | ((F.col("kb") == F.lit(kb)) & (F.col("batch_id") == F.lit(gen)))
-    return cond
-
-
-def _write_manifest(
-    spark, man_path: str, batch_id: int, mapping: dict[int, int]
-) -> None:
-    rows = [(int(k), int(g)) for k, g in sorted(mapping.items())]
-    gens.write_gen(
-        spark.createDataFrame(rows, "kb int, gen int").coalesce(1), man_path, batch_id
-    )
-
-
-def vacuum_state_generations(
-    spark, state_dir: str, current_batch_id: int, *, keep_last: int = 3
-) -> dict:
-    """Delete superseded generations of a bucket-partitioned state: a
-    bucket rewritten at trigger N leaves its older generation on disk
-    forever — reads stay correct (manifest-pruned) but storage and file
-    count grow O(triggers).
-
-    Retention rule: keep every generation referenced by any of the last
-    ``keep_last`` published manifests, plus any generation id >= the
-    oldest of those manifests (covers a just-written generation whose
-    manifest publish crashed — its batch will replay). Everything older
-    and unreferenced was superseded >= ``keep_last`` triggers ago; an
-    at-least-once replay can only be of a batch whose prior manifest is
-    among the kept ones, so the deleted generations are unreachable.
-    Manifest snapshots older than the kept window are pruned with the
-    same rule. Listing cost is O(#generations); no data is read.
-
-    Concurrent readers: ``keep_last`` is also the tolerated READER
-    staleness, in triggers. A reader that resolved a manifest and is
-    still scanning its generations after ``keep_last`` further triggers
-    have published can find them deleted mid-scan — the writer's replay
-    safety does not cover it. Raise ``keep_last`` above the longest
-    reader's trigger-count lifetime when long-running readers share the
-    state dir.
-
-    Returns ``{"deleted_gens": [...], "deleted_manifests": [...]}``.
-    """
-    man_dir = posixpath.join(state_dir, "_manifest")
-    man_ids = gens.list_gens(spark, man_dir)
-    recent = [m for m in man_ids if m <= current_batch_id][-keep_last:]
-    if not recent:
-        return {"deleted_gens": [], "deleted_manifests": []}
-    floor = recent[0]
-    referenced = {
-        r["gen"]
-        for r in gens.read_store(spark, man_dir)
-        .filter(F.col("batch_id").isin(recent))
-        .select("gen")
-        .distinct()
-        .collect()
-    }
-    out = {
-        "deleted_gens": [
-            g for g in gens.list_gens(spark, state_dir) if g not in referenced and g < floor
-        ],
-        "deleted_manifests": [m for m in man_ids if m < floor],
-    }
-    gens.delete_gens(spark, state_dir, out["deleted_gens"])
-    gens.delete_gens(spark, man_dir, out["deleted_manifests"])
-    return out
 
 
 def _match_keys(df: DataFrame, keys_df: DataFrame, key_cols: list[str], how: str) -> DataFrame:
@@ -162,69 +48,26 @@ def _log_through(log: DataFrame, state_path: str, batch_id: int) -> DataFrame:
 
 
 def _affected_rewrite(
-    spark,
-    dir_path: str,
-    batch_id: int,
-    keys_df: DataFrame,
-    key_cols: list[str],
-    n_buckets: int | None,
-    recomputed: DataFrame,
-    cols: list[str],
-    vacuum_keep: int | None,
+    dir_path: str, batch_id: int, keys_df: DataFrame, recomputed: DataFrame, cols: list[str]
 ) -> None:
     """The one keyed-state step of the MERGE, SCD2 and funnel writers:
-    carry the prior rows of the keys the batch does not touch (a
-    null-safe anti-join on ``keys_df``) and union ``recomputed``, the
-    new rows of the keys it does. With ``n_buckets=None`` the prior is
-    the latest snapshot and the result the next one. Bucketed, only the
-    AFFECTED buckets are read and rewritten (as ``batch_id=N/kb=B``) and
-    the updated manifest is published; untouched buckets keep their old
-    generations — trigger cost is O(affected buckets), never O(table)."""
-    if n_buckets is None:
-        prior = gens.read_latest(spark, dir_path, before=batch_id)
-    else:
-        man_dir = posixpath.join(dir_path, "_manifest")
-        affected = sorted(
-            r["kb"]
-            for r in keys_df.withColumn("kb", _bucket_expr(key_cols, n_buckets))
-            .select("kb")
-            .distinct()
-            .collect()
-        )
-        manifest = _read_manifest(spark, man_dir, batch_id) or {}
-        pairs = {b: manifest[b] for b in affected if b in manifest}
-        store = gens.read_store(spark, dir_path) if pairs else None
-        prior = None if store is None else store.filter(_bucket_filter(pairs))
+    carry the latest snapshot's rows of the keys the batch does not
+    touch (a null-safe anti-join on ``keys_df``), union ``recomputed``,
+    the new rows of the keys it does, and write the result as the next
+    snapshot."""
     merged = recomputed.select(*cols)
+    prior = gens.read_latest(recomputed.sparkSession, dir_path, before=batch_id)
     if prior is not None:
-        carried = _match_keys(prior.select(*cols), keys_df, key_cols, "left_anti")
+        carried = _match_keys(prior.select(*cols), keys_df, keys_df.columns, "left_anti")
         merged = carried.unionByName(merged)
-    if n_buckets is None:
-        gens.write_snapshot(merged, dir_path, batch_id)
-        return
-    gens.write_gen(
-        merged.withColumn("kb", _bucket_expr(key_cols, n_buckets)),
-        dir_path,
-        batch_id,
-        partition_by="kb",
-    )
-    manifest.update({b: batch_id for b in affected})
-    _write_manifest(spark, man_dir, batch_id, manifest)
-    if vacuum_keep is not None:
-        vacuum_state_generations(spark, dir_path, batch_id, keep_last=vacuum_keep)
+    gens.write_snapshot(merged, dir_path, batch_id)
 
 
 def read_current_state(spark, state_dir: str) -> DataFrame:
-    """Current table from a keyed writer's state directory, for BOTH
-    layouts: bucketed (``<dir>/_manifest`` exists → the latest
-    manifest's (kb, gen) pairs become a static partition-pruning
-    filter) and whole-table (the latest committed ``batch_id=N``
-    generation, empty or not).
-    Pass the same directory the writer received (for the scd2/funnel
-    writers, their ``dim``/``state`` subdirectory)."""
-    pairs = _read_manifest(spark, posixpath.join(state_dir, "_manifest"), None)
-    if pairs is not None:
-        return spark.read.parquet(state_dir).filter(_bucket_filter(pairs)).drop("batch_id", "kb")
+    """Current table from a keyed writer's state directory: the latest
+    committed ``batch_id=N`` snapshot, empty or not. Pass the same
+    directory the writer received (for the scd2/funnel writers, their
+    ``dim``/``state`` subdirectory)."""
     snap = gens.read_latest(spark, state_dir)
     if snap is None:
         raise FileNotFoundError(f"no committed snapshot under {state_dir}")
@@ -236,8 +79,6 @@ def merge_writer(
     *,
     keys: list[str],
     delete_col: str | None = None,
-    n_key_buckets: int | None = None,
-    vacuum_keep: int | None = 3,
 ):
     """``foreachBatch`` writer maintaining a keyed current-state table.
 
@@ -250,13 +91,8 @@ def merge_writer(
     The collapsed batch then goes through the module's keyed-state step:
     prior rows of the batch's keys are dropped (null-safely) and the
     batch's non-deleted rows take their place, which is
-    ``merge_into``'s MERGE over the prior state.
-
-    ``n_key_buckets=None`` keeps the one-full-snapshot-per-trigger
-    layout; setting it switches to the bucket-partitioned layout
-    (module docstring): each trigger rewrites ONLY the key buckets its
-    batch touches — O(batch's buckets), not O(table) — plus a tiny full
-    manifest. Read either layout with :func:`read_current_state`.
+    ``merge_into``'s MERGE over the prior state. Read the table with
+    :func:`read_current_state`.
     """
 
     def write_batch(batch: DataFrame, batch_id: int) -> None:
@@ -277,15 +113,11 @@ def merge_writer(
         )
         kept = src.filter(~F.coalesce(F.col(delete_col), F.lit(False))) if delete_col else src
         _affected_rewrite(
-            batch.sparkSession,
             state_path,
             batch_id,
             src.select(*keys),
-            keys,
-            n_key_buckets,
             kept,
             [c for c in src.columns if c != delete_col],
-            vacuum_keep,
         )
 
     return write_batch
@@ -298,8 +130,6 @@ def scd2_writer(
     ts_col: str,
     attr_cols: list[str],
     seq_col: str | None = None,
-    n_key_buckets: int | None = None,
-    vacuum_keep: int | None = 3,
 ):
     """``foreachBatch`` writer maintaining an SCD Type-2 dimension from
     a change-log stream: the persisted state is the full episode table
@@ -319,13 +149,11 @@ def scd2_writer(
       episodes.  Late rows are handled exactly: a row older than a
       key's current episodes simply re-derives that key's history.
 
-    State reads per trigger: the latest dim snapshot (O(table) in the
-    whole-table layout; O(affected buckets) with ``n_key_buckets`` set
-    — the module-docstring bucket-partitioned layout under ``/dim``)
-    plus the affected keys' log rows (a key-filtered scan of the
-    appended log — prunable by key-partitioning the log when key
-    cardinality allows).  Read the current dimension with
-    :func:`read_current_state` over ``path + "/dim"`` (both layouts).
+    State reads per trigger: the latest dim snapshot (O(table)) plus
+    the affected keys' log rows (a key-filtered scan of the appended
+    log — prunable by key-partitioning the log when key cardinality
+    allows).  Read the current dimension with
+    :func:`read_current_state` over ``path + "/dim"``.
     """
     from renkodf_spark.operators.scd import scd2_from_changelog
 
@@ -342,17 +170,7 @@ def scd2_writer(
         )
         dim_cols = [*key_cols, *attr_cols, "effective_from", "effective_to",
                     "is_current"]
-        _affected_rewrite(
-            batch.sparkSession,
-            posixpath.join(state_path, "dim"),
-            batch_id,
-            keys,
-            key_cols,
-            n_key_buckets,
-            recomputed,
-            dim_cols,
-            vacuum_keep,
-        )
+        _affected_rewrite(posixpath.join(state_path, "dim"), batch_id, keys, recomputed, dim_cols)
 
     return write_batch
 
@@ -365,8 +183,6 @@ def funnel_writer(
     type_col: str,
     steps: list[str],
     horizon=None,
-    n_key_buckets: int | None = None,
-    vacuum_keep: int | None = 3,
 ):
     """``foreachBatch`` writer maintaining per-user funnel state
     (``operators/funnel.funnel_steps`` output) from an event stream —
@@ -379,10 +195,7 @@ def funnel_writer(
     (``<path>/state``, written by the module's keyed-state step; users
     match null-safely).  Late and out-of-order events are handled
     exactly — a late step-1 event re-derives the user's whole chain.
-    ``n_key_buckets`` switches ``<path>/state`` to the bucket-
-    partitioned layout (module docstring): a trigger rewrites only the
-    user buckets its batch touches. Read with
-    :func:`read_current_state` over ``path + "/state"`` (both layouts).
+    Read with :func:`read_current_state` over ``path + "/state"``.
     """
     from renkodf_spark.operators.funnel import funnel_steps
 
@@ -398,15 +211,7 @@ def funnel_writer(
             horizon=horizon,
         )
         _affected_rewrite(
-            batch.sparkSession,
-            posixpath.join(state_path, "state"),
-            batch_id,
-            users,
-            [user_col],
-            n_key_buckets,
-            recomputed,
-            recomputed.columns,
-            vacuum_keep,
+            posixpath.join(state_path, "state"), batch_id, users, recomputed, recomputed.columns
         )
 
     return write_batch

@@ -428,7 +428,6 @@ def _corrupt_case(name, tmp_path):
         quantile_sketch_writer,
         quota_cap_writer,
     )
-    from renkodf_spark.streaming.merge_stream import merge_writer
 
     a, b = str(tmp_path / "a"), str(tmp_path / "b")
     if name == "quota_cap":  # all prior generations
@@ -436,16 +435,13 @@ def _corrupt_case(name, tmp_path):
         return w, os.path.join(b, "batch_id=0"), [a, b]
     if name == "cms_rollup":  # latest snapshot
         return cms_rollup_writer(a, "lang"), os.path.join(a, "batch_id=0"), [a]
-    if name == "merge_manifest":  # latest manifest
-        w = merge_writer(a, keys=["doc_id"], n_key_buckets=2)
-        return w, os.path.join(a, "_manifest", "batch_id=0"), [a, os.path.join(a, "_manifest")]
     # compaction fold: trigger 1 is the compaction trigger
     w = quantile_sketch_writer(a, "lang", "doc_id", k=32, n_buckets=4, compact_every=2)
     return w, os.path.join(a, "batch_id=0"), [a]
 
 
 @pytest.mark.parametrize(
-    "case", ["quota_cap", "cms_rollup", "merge_manifest", "quantile_compaction"]
+    "case", ["quota_cap", "cms_rollup", "quantile_compaction"]
 )
 def test_corrupt_generation_fails_trigger(spark, tmp_path, case):
     """A generation that exists but cannot be read must FAIL the trigger
@@ -483,17 +479,6 @@ def _empty_store_case(name, spark, path):
         data = spark.createDataFrame([("a", 1.0), ("a", 2.5), ("b", 10.0)], "g string, v double")
         w = cs.quantile_sketch_writer(path, "g", "v", k=32, n_buckets=4, compact_every=2)
         return w, data, lambda: rows(cs.read_quantile_sketch(spark, path, "g"))
-    if name == "nb_model":
-        data = spark.createDataFrame(
-            [("good doc here", True), ("bad doc", False)], "text string, pos boolean"
-        )
-        w = cs.nb_model_writer(path, "pos", n_buckets=4, compact_every=2)
-
-        def read():
-            model, prior = cs.read_nb_model(spark, path)
-            return rows(model), prior
-
-        return w, data, read
     if name == "bigram_lm":
         data = spark.createDataFrame([("the cat sat",), ("the dog sat",)], "text string")
         w = cs.bigram_lm_writer(path, n_buckets=4, compact_every=2)
@@ -520,7 +505,7 @@ def _empty_store_case(name, spark, path):
 
 
 @pytest.mark.parametrize(
-    "case", ["quantile_sketch", "nb_model", "bigram_lm", "search_index", "ivf_index"]
+    "case", ["quantile_sketch", "bigram_lm", "search_index", "ivf_index"]
 )
 def test_empty_partitioned_store_does_not_wedge_compaction(spark, tmp_path, case):
     """Two empty micro-batches leave a store of empty ``partitionBy``
@@ -925,107 +910,6 @@ def test_nb_model_stream_equals_batch_train(spark, tmp_path):
         .collect()
     }
     assert set(per_batch.values()) == {1} and len(per_batch) >= 2
-
-
-def test_nb_model_bucketed_deltas_equal_batch_train(spark, tmp_path):
-    """Bucketed delta layout: per-trigger generations carry ONLY that
-    batch's vocabulary (O(batch) writes), compaction bounds the
-    generation count, the folded model equals batch nb_train exactly,
-    and the reader's distinct absorbs a compaction crash that leaves a
-    delta visible twice."""
-    import shutil
-
-    from renkodf_spark.operators import classifier
-    from renkodf_spark.streaming.curation_stream import nb_model_writer, read_nb_model
-
-    schema = "doc_id long, text string, is_target boolean"
-    src = str(tmp_path / "src")
-    os.makedirs(src)
-    batches = [
-        [(0, "alpha beta alpha", True), (1, "junk spam", False)],
-        [(2, "gamma beta", True), (3, "spam spam junk", False)],
-        [(4, "delta epsilon alpha", True), (5, "noise junk", False)],
-    ]
-
-    def _w(name, rows):
-        write_source(src, name, rows, ["doc_id", "text", "is_target"])
-
-    _w("b1.parquet", batches[0])
-    stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(src)
-    )
-    model_path = str(tmp_path / "nbmodel")
-    writer = nb_model_writer(model_path, "is_target", n_buckets=8, compact_every=2)
-    q = (
-        stream.writeStream.foreachBatch(writer)
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        _w("b2.parquet", batches[1])
-        q.processAllAvailable()
-        _w("b3.parquet", batches[2])
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    # delta-ness: a generation holds only its own batch's vocabulary
-    gens = sorted(
-        d for d in os.listdir(os.path.join(model_path, "terms"))
-        if d.startswith("batch_id=")
-    )
-    last_gen = os.path.join(model_path, "terms", f"batch_id={len(batches) - 1}")
-    if os.path.exists(last_gen):
-        got_terms = {
-            r.term for r in spark.read.parquet(last_gen).select("term").collect()
-        }
-        want_terms = set()
-        for _, text, _ in batches[2]:
-            want_terms |= set(text.split())
-        assert got_terms == want_terms
-    # compaction ran (compact_every=2) at batch 1: the sources older
-    # than that trigger were folded into the negative generation and
-    # deleted.  Steady-state bound is compact_every + 1 generations
-    # (the compacted gen + up to compact_every fresh deltas) because
-    # the shared compactor never folds the current trigger's own
-    # generation (it must stay visible for overwrite-on-replay).
-    assert len(gens) <= 3, gens
-    assert "batch_id=-2" in gens, gens  # the folded generation
-    assert "batch_id=0" not in gens, gens  # its source was deleted
-
-    all_docs = spark.createDataFrame(sum(batches, []), schema)
-    batch_model = classifier.nb_train(all_docs, positive=F.col("is_target"))
-    model, prior = read_nb_model(spark, model_path)
-    assert sorted(map(tuple, model.collect())) == sorted(
-        map(tuple, batch_model.collect())
-    )
-    batch_scores = sorted(
-        map(
-            tuple,
-            classifier.nb_score(
-                all_docs, batch_model, positive=F.col("is_target")
-            ).collect(),
-        )
-    )
-    stream_scores = sorted(
-        map(tuple, classifier.nb_score(all_docs, model, prior_micros=prior).collect())
-    )
-    assert stream_scores == batch_scores
-
-    # crash absorption: duplicate a visible generation under another id
-    # (a compaction that died mid-delete) — the reader must be unchanged
-    dup_src = os.path.join(model_path, "terms", gens[0])
-    shutil.copytree(dup_src, os.path.join(model_path, "terms", "batch_id=97"))
-    model2, prior2 = read_nb_model(spark, model_path)
-    assert sorted(map(tuple, model2.collect())) == sorted(
-        map(tuple, batch_model.collect())
-    )
-    assert prior2 == prior
-
-    # contract: compact_every without the bucketed layout is an error
-    with pytest.raises(ValueError, match="n_buckets"):
-        nb_model_writer(str(tmp_path / "x"), "is_target", compact_every=2)
 
 
 def test_bigram_lm_stream_equals_batch_train(spark, tmp_path):

@@ -61,6 +61,31 @@ def test_mode_projection_and_to_rws(spark):
     assert (out.groupby("symbol").size() == 5).all()
 
 
+def test_to_rws_slice_matches_compat(spark):
+    """``use_iloc`` slices each symbol like the reference's to_rws:
+    ``iloc[:n]`` for n > 0, ``iloc[n:]`` for n < 0, nothing for 0."""
+    from renkodf_spark.compat import Renko
+
+    pdf = _multi_symbol_ticks()
+    wide = renko(spark.createDataFrame(pdf), 1.0)
+    for use_iloc in (5, -5, 0):
+        got = to_rws(wide, 1.0, use_iloc=use_iloc).orderBy("symbol", "brick_seq").toPandas()
+        for sym in ["AAA", "BBB", "CCC"]:
+            ticks = pdf[pdf["symbol"] == sym].drop(columns="symbol")
+            ticks = ticks.sort_values("event_time", kind="mergesort")
+            want = Renko(ticks.rename(columns={"event_time": "datetime"}), 1.0).to_rws(use_iloc)
+            mine = got[got["symbol"] == sym]
+            assert len(mine) == len(want) == abs(use_iloc), (use_iloc, sym)
+            for col in want.columns.drop("timestamp"):
+                np.testing.assert_array_equal(
+                    mine[col].to_numpy(), want[col].to_numpy(), err_msg=f"{use_iloc} {sym}.{col}"
+                )
+            # Spark exports microseconds, the pandas layer the index's ns
+            np.testing.assert_array_equal(
+                mine["timestamp"].to_numpy(), want.index.as_unit("us").asi8
+            )
+
+
 def test_plan_prunes_unused_variants(spark):
     """Mode projection must prune: the 'wicks' plan should not carry the
     other modes' columns past the kernel boundary."""
